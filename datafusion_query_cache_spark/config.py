@@ -134,17 +134,6 @@ class QueryCacheConfig:
     #: budget — the 100 TB case — the distributed lite/template tiers run
     #: unconditionally. 0 disables the tier.
     nano_refresh_max_bytes: int = 256 << 20
-    #: Byte budget under which the templated/lite refresh job narrows its
-    #: merge shuffle to 2 reduce tasks with AQE off (pure scheduling-
-    #: overhead removal, measured −40% on the sf0.1 lite dyn refresh).
-    #: The gate is the summed on-disk size of the query's source tables,
-    #: and ONLY sources registered through ``register_parquet_view`` (so
-    #: the size is knowable driver-side) ever qualify — an unregistered or
-    #: over-budget source keeps the session's own shuffle settings and
-    #: AQE coalescing, which is what survives a 100× scale-up (the r9
-    #: width-2 pin applied unconditionally DOUBLED the x1000 dyn warm
-    #: refresh). 0 disables narrowing entirely.
-    refresh_narrow_max_bytes: int = 64 << 20
     #: ``x IN (SELECT …)`` fold cap: the inner cached aggregate's result
     #: column is collected driver-side and folded into the outer predicate
     #: as an IN-list of literals — sound only while the list stays small.

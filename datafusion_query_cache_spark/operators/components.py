@@ -38,7 +38,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .spread import aqe_off_scope, exec_session, is_small_input, on_session
+from .spread import exec_session, is_small_input, on_session
 
 
 def connected_components(
@@ -102,19 +102,16 @@ def connected_components(
     # advice). The returned label frame is rebound to the CALLER's
     # session, so downstream plans keep the caller's configuration.
     spark = edges.sparkSession
-    small_graph = is_small_input(sym)
     run = spark
-    if small_graph:
+    if is_small_input(sym):
         try:
             clone = exec_session(spark)
             if clone is not None:
-                sym = on_session(sym, clone)
-                labels = on_session(labels, clone)
+                sym, labels = on_session(sym, clone), on_session(labels, clone)
                 run = clone
         except Exception:
-            run = spark
-    with aqe_off_scope(spark, small_graph and run is spark):
-        labels = _propagate(sym, labels, max_iter)
+            run = spark  # the loop runs on the caller's session, AQE on
+    labels = _propagate(sym, labels, max_iter)
     if run is not spark:
         labels = on_session(labels, spark)
     if nodes is not None:

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from .dedup import _span_trimmed
 from .incremental_dedup import ConcurrentIndexWriter
-from .spread import aqe_off_scope, exec_session, is_small_input, on_session
+from .spread import exec_session, is_small_input, on_session
 
 
 class _ClaimedDigestIndex:
@@ -283,57 +283,56 @@ class ParagraphDedupIndex(_ClaimedDigestIndex):
         )
         oname = f"out-{uuid.uuid4().hex[:12]}"
         sname = f"seen-{uuid.uuid4().hex[:12]}"
-        # small-delta ingests commit with AQE off (clone session; conf-
-        # scope fallback) and one claims file per part (see
-        # SubstringDedupIndex.update / spread.py): stage-job scheduling
-        # and tiny-file fan-in dominate a small delta's ingest cost; big
-        # deltas keep AQE + natural partitioning
+        # small-delta ingests commit with AQE off (clone session) and one
+        # claims file per part (see SubstringDedupIndex.update /
+        # spread.py): stage-job scheduling and tiny-file fan-in dominate a
+        # small delta's ingest cost; big deltas keep AQE + natural
+        # partitioning
         try:
-            with aqe_off_scope(spark, small and run is spark):
-                # claims FIRST: materializes the persisted winner fold
-                # that the output write then reuses
-                cl = winners.select("h")
-                (cl.coalesce(1) if small else cl).write.parquet(
-                    os.path.join(self.path, sname)
+            # claims FIRST: materializes the persisted winner fold
+            # that the output write then reuses
+            cl = winners.select("h")
+            (cl.coalesce(1) if small else cl).write.parquet(
+                os.path.join(self.path, sname)
+            )
+            keep_pos = winners.groupBy(
+                F.col(f"w.{self.id_col}").alias(self.id_col)
+            ).agg(F.collect_set(F.col("w.pos")).alias("__keep_pos"))
+            kp = F.coalesce(
+                F.col("__keep_pos"), F.array().cast("array<int>")
+            )
+            if self.min_chars > 0:
+                kept_arr = F.filter(
+                    arr,
+                    lambda x, i: F.array_contains(kp, i)
+                    | (F.length(x) < F.lit(self.min_chars)),
                 )
-                keep_pos = winners.groupBy(
-                    F.col(f"w.{self.id_col}").alias(self.id_col)
-                ).agg(F.collect_set(F.col("w.pos")).alias("__keep_pos"))
-                kp = F.coalesce(
-                    F.col("__keep_pos"), F.array().cast("array<int>")
+            else:
+                kept_arr = F.filter(
+                    arr, lambda x, i: F.array_contains(kp, i)
                 )
-                if self.min_chars > 0:
-                    kept_arr = F.filter(
-                        arr,
-                        lambda x, i: F.array_contains(kp, i)
-                        | (F.length(x) < F.lit(self.min_chars)),
-                    )
-                else:
-                    kept_arr = F.filter(
-                        arr, lambda x, i: F.array_contains(kp, i)
-                    )
-                obs = Observation()
-                # two-step select (r17 hardening) — see paragraph_dedup
-                out_rows = (
-                    fresh.join(keep_pos, [self.id_col], "left")
-                    .select(
-                        did,
-                        kept_arr.alias("__kept"),
-                        F.size(arr).cast("long").alias("n_paras"),
-                    )
-                    .select(
-                        self.id_col,
-                        F.array_join("__kept", self.sep).alias(
-                            self.text_col
-                        ),
-                        "n_paras",
-                        F.size("__kept").cast("long").alias("n_kept"),
-                    )
-                    # the new watermark rides the write — no extra job
-                    .observe(obs, F.max(F.col(self.id_col)).alias("hi"))
+            obs = Observation()
+            # two-step select (r17 hardening) — see paragraph_dedup
+            out_rows = (
+                fresh.join(keep_pos, [self.id_col], "left")
+                .select(
+                    did,
+                    kept_arr.alias("__kept"),
+                    F.size(arr).cast("long").alias("n_paras"),
                 )
-                out_rows.write.parquet(os.path.join(self.path, oname))
-                hi = obs.get["hi"]
+                .select(
+                    self.id_col,
+                    F.array_join("__kept", self.sep).alias(
+                        self.text_col
+                    ),
+                    "n_paras",
+                    F.size("__kept").cast("long").alias("n_kept"),
+                )
+                # the new watermark rides the write — no extra job
+                .observe(obs, F.max(F.col(self.id_col)).alias("hi"))
+            )
+            out_rows.write.parquet(os.path.join(self.path, oname))
+            hi = obs.get["hi"]
         finally:
             winners.unpersist()
         if hi is None:
@@ -405,7 +404,7 @@ class SubstringDedupIndex(_ClaimedDigestIndex):
         the delta is tokenized exactly once), the claims write then
         reads nothing but the cache — and the new watermark rides an
         ``observe()`` on the output write instead of a separate max()
-        job. Small deltas commit under an AQE-off scope with single-file
+        job. Small deltas commit on the AQE-off clone with single-file
         claims parts and a shuffled span-fold join. Steady-state ingest
         is 5 Spark jobs (r16: 13, r17 build: 8); the bench gate pins
         jobs <= 6 AND strictly fewer than the batch recompute. The
@@ -446,7 +445,7 @@ class SubstringDedupIndex(_ClaimedDigestIndex):
                     fresh = on_session(fresh, clone)
                     run = clone
             except Exception:
-                run = spark  # fall back to the conf-scope path below
+                run = spark  # commits run on the caller's session, AQE on
         # tokenize ONCE into a materialized `__tk` column (see
         # substring_dedup: inlining the split into the transform lambda
         # re-splits the whole text per window position)
@@ -501,82 +500,81 @@ class SubstringDedupIndex(_ClaimedDigestIndex):
         oname = f"out-{uuid.uuid4().hex[:12]}"
         sname = f"seen-{uuid.uuid4().hex[:12]}"
         # small-delta ingests commit with AQE OFF (on the clone session;
-        # conf-scope fallback if cloning failed): every exchange otherwise
+        # the caller's session if cloning failed): every exchange otherwise
         # materializes as its own stage-job — measured ~0.15s scheduling
         # each for a few hundred new docs. Big deltas (many scan
         # partitions) keep AQE.
         try:
-            with aqe_off_scope(spark, small and run is spark):
-                # OUTPUT first (r17 opt): this action computes the
-                # tokenized delta exactly ONCE — it both materializes the
-                # persisted window pass (through `occ`) and feeds the
-                # trim's token arrays. The pre-r17 claims-first order paid
-                # the delta's tokenize + window-hash scan in BOTH commits
-                # (the output action re-derived `fbase` from the raw text
-                # because only post-window `tagged` is cached): measured
-                # ~0.3-0.5s of duplicated scan-side work per sf0.1 ingest.
-                # The claims commit below then reads only the cache.
-                losers = tagged.filter(
-                    (F.col("__w.__src") == 0)
-                    | (F.col(self.id_col) != F.col(f"__w.{self.id_col}"))
-                    | (F.col("pos") != F.col("__w.pos"))
+            # OUTPUT first (r17 opt): this action computes the
+            # tokenized delta exactly ONCE — it both materializes the
+            # persisted window pass (through `occ`) and feeds the
+            # trim's token arrays. The pre-r17 claims-first order paid
+            # the delta's tokenize + window-hash scan in BOTH commits
+            # (the output action re-derived `fbase` from the raw text
+            # because only post-window `tagged` is cached): measured
+            # ~0.3-0.5s of duplicated scan-side work per sf0.1 ingest.
+            # The claims commit below then reads only the cache.
+            losers = tagged.filter(
+                (F.col("__w.__src") == 0)
+                | (F.col(self.id_col) != F.col(f"__w.{self.id_col}"))
+                | (F.col("pos") != F.col("__w.pos"))
+            )
+            rm = losers.groupBy(self.id_col).agg(
+                F.collect_set("pos").alias("__rm")
+            )
+            kept_arr = _span_trimmed(
+                "__tk",
+                "size(__tk)",
+                "coalesce(__rm, cast(array() AS array<int>))",
+                Wn,
+            )
+            # two-step select — see substring_dedup: prevents
+            # lateral-alias capture of text_col inside the trim's HOF
+            # lambdas, and computes the kept array once
+            obs = Observation()
+            # small scope: hint the span fold to a SHUFFLED hash join
+            # — a broadcast build materializes as its OWN Spark job
+            # (the dominant remaining ingest overhead); the shuffled
+            # join runs inside the write job. Big deltas keep the
+            # planner's (broadcast) choice.
+            rm_side = rm.hint("shuffle_hash") if small else rm
+            out_rows = (
+                fbase.join(rm_side, [self.id_col], "left")
+                .select(
+                    F.col(self.id_col),
+                    kept_arr.alias("__kept"),
+                    nt.cast("long").alias("n_tokens"),
                 )
-                rm = losers.groupBy(self.id_col).agg(
-                    F.collect_set("pos").alias("__rm")
+                .select(
+                    self.id_col,
+                    F.array_join("__kept", " ").alias(self.text_col),
+                    "n_tokens",
+                    F.size("__kept").cast("long").alias("n_kept"),
                 )
-                kept_arr = _span_trimmed(
-                    "__tk",
-                    "size(__tk)",
-                    "coalesce(__rm, cast(array() AS array<int>))",
-                    Wn,
-                )
-                # two-step select — see substring_dedup: prevents
-                # lateral-alias capture of text_col inside the trim's HOF
-                # lambdas, and computes the kept array once
-                obs = Observation()
-                # small scope: hint the span fold to a SHUFFLED hash join
-                # — a broadcast build materializes as its OWN Spark job
-                # (the dominant remaining ingest overhead); the shuffled
-                # join runs inside the write job. Big deltas keep the
-                # planner's (broadcast) choice.
-                rm_side = rm.hint("shuffle_hash") if small else rm
-                out_rows = (
-                    fbase.join(rm_side, [self.id_col], "left")
-                    .select(
-                        F.col(self.id_col),
-                        kept_arr.alias("__kept"),
-                        nt.cast("long").alias("n_tokens"),
-                    )
-                    .select(
-                        self.id_col,
-                        F.array_join("__kept", " ").alias(self.text_col),
-                        "n_tokens",
-                        F.size("__kept").cast("long").alias("n_kept"),
-                    )
-                    # the new watermark rides the write — no separate job
-                    .observe(obs, F.max(F.col(self.id_col)).alias("hi"))
-                )
-                out_rows.write.parquet(os.path.join(self.path, oname))
-                hi = obs.get["hi"]
+                # the new watermark rides the write — no separate job
+                .observe(obs, F.max(F.col(self.id_col)).alias("hi"))
+            )
+            out_rows.write.parquet(os.path.join(self.path, oname))
+            hi = obs.get["hi"]
 
-                # claims SECOND, from the cache alone. A fresh-won hash's
-                # WINNER ROW is unique per h by construction (min over the
-                # h-partition), so selecting the winner occurrence itself
-                # replaces the old `.distinct()` — same claimed set, one
-                # fewer exchange per ingest (r17 opt).
-                claims = tagged.filter(
-                    (F.col("__w.__src") == 1)
-                    & (F.col(self.id_col) == F.col(f"__w.{self.id_col}"))
-                    & (F.col("pos") == F.col("__w.pos"))
-                ).select("h")
-                if small:
-                    # a small delta's claims are a few MB: one file per
-                    # part instead of shuffle.partitions tiny ones — every
-                    # LATER ingest unions all claim parts into its window
-                    # exchange, so part file count is a standing read tax
-                    # (guide §6 small-files). Narrow coalesce, no shuffle.
-                    claims = claims.coalesce(1)
-                claims.write.parquet(os.path.join(self.path, sname))
+            # claims SECOND, from the cache alone. A fresh-won hash's
+            # WINNER ROW is unique per h by construction (min over the
+            # h-partition), so selecting the winner occurrence itself
+            # replaces the old `.distinct()` — same claimed set, one
+            # fewer exchange per ingest (r17 opt).
+            claims = tagged.filter(
+                (F.col("__w.__src") == 1)
+                & (F.col(self.id_col) == F.col(f"__w.{self.id_col}"))
+                & (F.col("pos") == F.col("__w.pos"))
+            ).select("h")
+            if small:
+                # a small delta's claims are a few MB: one file per
+                # part instead of shuffle.partitions tiny ones — every
+                # LATER ingest unions all claim parts into its window
+                # exchange, so part file count is a standing read tax
+                # (guide §6 small-files). Narrow coalesce, no shuffle.
+                claims = claims.coalesce(1)
+            claims.write.parquet(os.path.join(self.path, sname))
         finally:
             tagged.unpersist()
         if hi is None:

@@ -11,7 +11,7 @@ of the raw rows immediately after the read, which unlocks full-width scan
 stages for everything downstream.
 
 At scale this is a NO-OP by construction: any input whose optimizer size
-estimate exceeds the smallness threshold (default 256 MB, i.e. at most a
+estimate exceeds the smallness threshold (256 MB, i.e. at most a
 couple of scan splits) is returned unchanged, so a 100 TB table never pays
 the extra exchange. The gate reads ``optimizedPlan().stats().sizeInBytes``
 — driver-side metadata, no Spark job and (unlike a ``df.rdd`` partition
@@ -25,25 +25,19 @@ pipeline does).
 
 from __future__ import annotations
 
-import os
 import threading as _threading
 import weakref as _weakref
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
-
-#: set to "0" to disable everywhere (e.g. to A/B the effect)
-_ENV_FLAG = "QC_SPREAD_SMALL_INPUTS"
 
 #: inputs whose optimizer size estimate is at or below this are "small":
 #: their scan runs on a handful of tasks at the default 128 MB split size,
 #: so per-row-heavy work deserves a spread (and standing-ingest commits
-#: deserve the AQE-off scope). Estimates propagate conservatively — a
+#: deserve the AQE-off clone). Estimates propagate conservatively — a
 #: filtered slice of a huge table keeps the table's size, which errs
-#: toward NOT treating big-table derivatives as small.
-_SMALL_BYTES = int(
-    os.environ.get("QC_SPREAD_MAX_BYTES", str(256 << 20))
-)
+#: toward NOT treating big-table derivatives as small. A LIMIT caps the
+#: estimate, so gate on the frame BEFORE any LIMIT.
+_SMALL_BYTES = 256 << 20
 
 
 def _plan_size_bytes(df: DataFrame) -> int:
@@ -55,10 +49,7 @@ def _plan_size_bytes(df: DataFrame) -> int:
 
 def is_small_input(df: DataFrame) -> bool:
     """True when ``df`` is estimated at or under the smallness threshold
-    (see module doc). False for streaming inputs, estimate failures, or
-    when QC_SPREAD_SMALL_INPUTS=0."""
-    if os.environ.get(_ENV_FLAG, "1").lower() in ("0", "false"):
-        return False
+    (see module doc). False for streaming inputs or estimate failures."""
     try:
         if df.sparkSession.sparkContext.defaultParallelism <= 1:
             return False
@@ -82,10 +73,9 @@ def spread_input(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
-#: per-parent-session AQE-off execution clones (see :func:`exec_session`).
-#: WeakKeyDictionary — a GC'd parent drops its clone entry, so a reused
-#: id() can never alias a dead session's clone (the id()-keyed hazard the
-#: r17 advice flagged for the scope state below).
+#: AQE-off execution clones, per parent session and shuffle width (see
+#: :func:`exec_session`). WeakKeyDictionary — a GC'd parent drops its
+#: clones, so a reused id() can never alias a dead session's clone.
 _CLONE_LOCK = _threading.Lock()
 _EXEC_CLONES: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
 
@@ -105,30 +95,36 @@ _CLONE_PIN_CONFS = (
 )
 
 
-def exec_session(spark):
-    """The per-parent AQE-OFF execution session for small-delta commits
-    and tiny-graph loops.
+def exec_session(spark, width=None):
+    """The AQE-OFF execution session for ``spark`` at shuffle ``width`` —
+    the one way the engine runs a plan with AQE off.
 
-    Why a CLONE and not a runtime-conf flip: ``spark.conf`` is session-
-    global, so the r17 ``aqe_off_scope`` silently disabled AQE (skew
-    splitting, partition coalescing) for any UNRELATED query planned on
-    the same session while an ingest commit was open — a real hazard on
-    a shared 100 TB session with concurrent driver threads
-    (``ConcurrentIndexWriter`` is a supported pattern). A
-    ``spark.newSession()`` clone shares the SparkContext, cached data
-    and external catalog but has its OWN SQLConf, so pinning
-    ``spark.sql.adaptive.enabled=false`` there can never leak into the
-    caller's plans. Small-delta programs are rebound onto the clone via
-    :func:`on_session` (a logical-plan transfer — no data moves) and
-    their actions run with AQE off; everything else about the parent
-    session is untouched.
+    Why: AQE materializes every exchange as its own Spark stage-job
+    (~0.15 s scheduling each), pure overhead on a plan that carries a few
+    hundred rows; with AQE off the same program runs as ONE job per
+    action. Why a CLONE and not a runtime-conf flip: ``spark.conf`` is
+    session-global, so a flip strips AQE (skew splitting, partition
+    coalescing) from any UNRELATED query planned concurrently on the
+    caller's session. A ``spark.newSession()`` clone shares the
+    SparkContext, cached data and external catalog but has its OWN
+    SQLConf. Small programs are rebound onto it via :func:`on_session`
+    (a logical-plan transfer — no data moves).
 
-    Returns ``None`` when cloning is unavailable (callers fall back to
-    :func:`aqe_off_scope` on the parent — the pre-r18 behavior).
+    ``width=None`` keeps the parent's ``spark.sql.shuffle.partitions``:
+    the small-delta ingest commits and tiny-graph loops behind the
+    ``op_*`` rows (``op_incr_substr_update``, ``op_dedup_cluster_keep``).
+    ``width=2`` serves the narrowed warm-refresh collects
+    (``tiers._narrow_refresh_ok``) behind the small_dashboard refresh
+    row, whose merge shuffle carries O(state) rows. One clone is cached
+    per (parent, width).
+
+    Returns ``None`` when cloning is unavailable; callers then run the
+    plan on the caller's session, AQE on.
     """
     try:
         with _CLONE_LOCK:
-            clone = _EXEC_CLONES.get(spark)
+            clones = _EXEC_CLONES.setdefault(spark, {})
+            clone = clones.get(width)
             if clone is None:
                 clone = spark.newSession()
                 for k in _CLONE_PIN_CONFS:
@@ -138,8 +134,10 @@ def exec_session(spark):
                             clone.conf.set(k, v)
                     except Exception:
                         pass
+                if width is not None:
+                    clone.conf.set("spark.sql.shuffle.partitions", str(width))
                 clone.conf.set("spark.sql.adaptive.enabled", "false")
-                _EXEC_CLONES[spark] = clone
+                clones[width] = clone
         return clone
     except Exception:
         return None
@@ -166,55 +164,3 @@ def on_session(df: DataFrame, target) -> DataFrame:
         target._jsparkSession, df._jdf.queryExecution().analyzed()
     )
     return DataFrame(jdf, target)
-
-
-#: reentrancy state for :func:`aqe_off_scope`, keyed by id(spark):
-#: (depth, original value). Guarded by a lock so overlapping scopes on
-#: one session (e.g. driver threads running concurrent ingests) restore
-#: the ORIGINAL conf exactly once, at depth zero — naive save/restore
-#: could otherwise re-save "false" mid-overlap and leave AQE off forever.
-_AQE_LOCK = _threading.Lock()
-_AQE_STATE: dict = {}
-
-
-@contextmanager
-def aqe_off_scope(spark, off: bool):
-    """Scope ``spark.sql.adaptive.enabled=false`` when ``off`` — the
-    caller has already decided smallness (see :func:`is_small_input`).
-
-    Why: AQE materializes every exchange as its own Spark stage-job. For a
-    standing-index ingest whose delta is small BY DESIGN, those stage jobs
-    are pure scheduler overhead — measured ~0.15s each on jobs that carry a
-    few hundred rows, several per commit. With AQE off the same program
-    runs as ONE job per action (fixed ``spark.sql.shuffle.partitions``
-    reducers, fine for a small delta). Big deltas keep AQE — and its
-    skew/coalescing value — untouched. The conf is restored on exit
-    (reentrancy-safe across overlapping scopes; note that UNRELATED
-    queries submitted to the same session while a scope is open do plan
-    without AQE — the session conf is global, the standard caveat of any
-    runtime conf).
-    """
-    key = "spark.sql.adaptive.enabled"
-    entered = False
-    if off:
-        try:
-            with _AQE_LOCK:
-                depth, was = _AQE_STATE.get(id(spark), (0, None))
-                if depth == 0:
-                    was = spark.conf.get(key, "true")
-                    spark.conf.set(key, "false")
-                _AQE_STATE[id(spark)] = (depth + 1, was)
-            entered = True
-        except Exception:
-            entered = False
-    try:
-        yield
-    finally:
-        if entered:
-            with _AQE_LOCK:
-                depth, was = _AQE_STATE[id(spark)]
-                if depth <= 1:
-                    del _AQE_STATE[id(spark)]
-                    spark.conf.set(key, was)
-                else:
-                    _AQE_STATE[id(spark)] = (depth - 1, was)

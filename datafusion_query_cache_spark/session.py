@@ -165,12 +165,6 @@ class CachedSparkSession(RefreshTiers):
         #: so every sub-plan and the fresh anti side agree on now() —
         #: otherwise the halves could disagree near bound edges
         self._now_pin: Optional[int] = None
-        # re-entrant scope state for _refresh_confs (see its docstring)
-        import threading as _threading
-
-        self._conf_lock = _threading.Lock()
-        self._conf_depth = 0
-        self._conf_saved: Dict[str, str] = {}
         #: parquet path → (on-disk bytes, monotonic stamp): 60s memo for
         #: the refresh-narrowing byte gate (tiers._narrow_refresh_ok)
         self._src_bytes_memo: Dict[str, tuple] = {}
@@ -3448,7 +3442,7 @@ class CachedSparkSession(RefreshTiers):
         # user's action materialized ~6 AQE stage-jobs (~0.15 s
         # scheduling each) over frames of a few hundred rows. Big states
         # or a big dim fall through to the lazy plan below, where AQE
-        # earns its stages. Disable with QC_FO_EAGER_MERGE=0 (A/B hook).
+        # earns its stages.
         eager = self._fo_eager_merge(df, sort_cols, spec)
         if eager is not None:
             df = eager
@@ -3486,14 +3480,10 @@ class CachedSparkSession(RefreshTiers):
         so a global range sort would only add its sampling pass — and
         OFFSET/LIMIT apply to the sorted single partition, preserving the
         lazy plan's semantics exactly. Returns None when the merge is not
-        provably small or anything fails (caller keeps the lazy plan)."""
-        import os as _os
+        provably small or anything fails (caller keeps the lazy plan).
 
-        if _os.environ.get("QC_FO_EAGER_MERGE", "1").lower() in (
-            "0",
-            "false",
-        ):
-            return None
+        Row it serves: ``qc_fo_x1000_warm`` (the FULL-composite warm
+        refresh over the x1000 fact table)."""
         try:
             from .operators.spread import (
                 exec_session,

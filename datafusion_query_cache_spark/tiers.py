@@ -29,7 +29,6 @@ Reference provenance: the tier ladder realizes the reference's single
 from __future__ import annotations
 
 import time
-from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Dict, List, Optional
 
@@ -39,6 +38,12 @@ from pyspark.sql import functions as F
 from .cache import StateCardinalityExceeded, arrow_to_spark
 from .functions.compile import to_column
 from .plans.ir import AggSpec, Col, Lit, Unsupported
+
+#: Summed on-disk source bytes under which a refresh collect narrows its
+#: merge shuffle to 2 reduce tasks with AQE off (see
+#: ``_narrow_refresh_ok``; measured −40% on the sf0.1 lite dyn refresh).
+REFRESH_NARROW_MAX_BYTES = 64 << 20
+
 
 def _push_time_bounds(
     df: DataFrame,
@@ -489,7 +494,7 @@ class RefreshTiers:
 
         Only when the TOTAL on-disk size of every source table is known
         driver-side (registered through ``register_parquet_view``) and fits
-        ``config.refresh_narrow_max_bytes``. Below the gate the refresh
+        ``REFRESH_NARROW_MAX_BYTES``. Below the gate the refresh
         scan is tiny and 8+ reduce tasks plus AQE re-planning rounds are
         pure scheduling overhead (sf0.1 A/B: width 8 → 2 cut the lite dyn
         refresh −40%). Above it — or for any source whose size we cannot
@@ -499,8 +504,7 @@ class RefreshTiers:
         1.03s@2), so the session's own shuffle settings and AQE coalescing
         stay in charge. Sizes are memoized per path for 60s — the walk is
         O(files) driver-side and sources grow over time."""
-        gate = getattr(self.config, "refresh_narrow_max_bytes", 0)
-        if not gate or spec is None:
+        if spec is None:
             return False
         from .nano import _source_bytes
         from .sources.tables import LOCAL_PARQUET_SOURCES
@@ -520,97 +524,45 @@ class RefreshTiers:
                     return False
                 self._src_bytes_memo[path] = memo
             total += memo[0]
-            if total > gate:
+            if total > REFRESH_NARROW_MAX_BYTES:
                 return False
         return True
 
-    @contextmanager
-    def _refresh_confs(self, spec=None):
-        """Scope down shuffle width for the one templated-refresh job: its
-        merge shuffle carries O(state-cardinality) rows (the template gate
-        only admits driver-local-small state — the refresh output is
-        collected to the driver regardless, so 2 reduce tasks always
-        suffice for the volume), and 8+ reduce tasks plus AQE's per-stage
-        re-planning rounds are pure scheduling overhead at refresh time
-        (measured at sf0.1: width 8 → 2 cuts the lite dyn refresh from
-        ~0.43s to ~0.26s per refresh, −40%). Gated by source size — see
-        ``_narrow_refresh_ok``: big or unknown-size sources keep the
-        session settings (AQE on), because a constant width calibrated at
-        sf0.1 does not survive a 100× scale-up. Re-entrant (the streaming
-        maintainer may refresh on another thread): only the outermost
-        scope saves/restores, so a race can't leave the session pinned to
-        the refresh settings.
+    def _refresh_frame(self, df: DataFrame, spec) -> DataFrame:
+        """``df`` rebound onto the session its refresh collect runs on.
 
-        Known interference window: the conf mutation is session-global, so
-        an unrelated query PLANNED concurrently on the same SparkSession
-        during a narrowed refresh inherits width 2 + AQE off for that
-        plan. The window is one short driver-collected job over a
-        byte-gated source; sessions that interleave heavy ad-hoc queries
-        with refreshes on other threads can set
-        ``refresh_narrow_max_bytes=0`` to opt out entirely."""
-        if not self._narrow_refresh_ok(spec):
-            yield False
-            return
-        want = {
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": "2",
-        }
-        with self._conf_lock:
-            self._conf_depth += 1
-            if self._conf_depth == 1:
-                saved = {}
-                for k, v in want.items():
-                    try:
-                        saved[k] = self.spark.conf.get(k)
-                        self.spark.conf.set(k, v)
-                    except Exception:
-                        pass
-                self._conf_saved = saved
+        AQE materializes every exchange of a refresh plan as its own Spark
+        stage-job (~0.15 s scheduling each — 3 per collect on the x1000
+        FULL-composite halves), so small refreshes run on an AQE-off
+        execution clone (``spread.exec_session``), never by flipping the
+        caller's session conf:
+
+        - the width-2 clone when ``_narrow_refresh_ok`` passes (small
+          registered sources: the merge shuffle carries O(state) rows);
+        - the parent-width clone when ``df``'s optimized plan is estimated
+          small (``is_small_input`` — pruned-partition bytes, driver
+          metadata, no job). ``df`` must be the frame BEFORE the collect
+          LIMIT: Catalyst caps a LIMIT's estimate, so any plan looks small
+          through one;
+        - the caller's session, AQE on, otherwise — the 100 TB case — or
+          when cloning or the plan transfer fails."""
+        from .operators.spread import exec_session, is_small_input, on_session
+
         try:
-            yield True
-        finally:
-            with self._conf_lock:
-                self._conf_depth -= 1
-                if self._conf_depth == 0:
-                    for k, v in self._conf_saved.items():
-                        try:
-                            self.spark.conf.set(k, v)
-                        except Exception:
-                            pass
-                    self._conf_saved = {}
+            if self._narrow_refresh_ok(spec):
+                clone = exec_session(df.sparkSession, width=2)
+            elif is_small_input(df):
+                clone = exec_session(df.sparkSession)
+            else:
+                return df
+            return on_session(df, clone)
+        except Exception:
+            return df
 
-    def _refresh_to_arrow(self, ldf: DataFrame, narrowed: bool):
-        """Collect a refresh frame via Arrow, with AQE stage-jobs elided
-        when the PLAN is provably small.
-
-        ``_narrow_refresh_ok`` gates on whole-SOURCE bytes, so a refresh
-        over a big table keeps AQE even though its watermark-pruned fresh
-        window is tiny: the optimizer's PruneFileSourcePartitions has
-        already shrunk the scan to the tail partitions, and AQE then
-        materializes every exchange of that small plan as its own Spark
-        stage-job (~0.15 s scheduling each — 3 jobs per refresh collect
-        on the x1000 FULL-composite halves). When the narrow scope did
-        NOT engage but the optimized plan's size estimate is small
-        (``is_small_input`` — pruned-partition bytes, driver metadata,
-        no job), run the collect on the AQE-off execution clone: one job,
-        identical rows. Big pruned windows — the 100 TB case — keep the
-        session's AQE untouched. Falls back to a plain collect on any
-        clone/transfer failure."""
-        if not narrowed:
-            try:
-                from .operators.spread import (
-                    exec_session,
-                    is_small_input,
-                    on_session,
-                )
-
-                if is_small_input(ldf):
-                    clone = exec_session(ldf.sparkSession)
-                    if clone is not None:
-                        return on_session(ldf, clone).toArrow()
-            except Exception:
-                pass
-        return ldf.toArrow()
+    def _refresh_to_arrow(self, df: DataFrame, cap: int, spec):
+        """Collect at most ``cap + 1`` rows of the refresh frame ``df`` via
+        Arrow, on the session ``_refresh_frame`` picks."""
+        return self._refresh_frame(df, spec).limit(cap + 1).toArrow()
 
     def _run_warm_template(
         self,
@@ -673,13 +625,10 @@ class RefreshTiers:
             # and the observe-under-limit argument from ``cache.put``
             # doesn't even arise (the rider rides the rows themselves).
             cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
-            with self._refresh_confs(spec) as narrowed:
-                df = self.spark.sql(sql)
-                self.last_refresh_df = df
-                aug_fields = list(df.schema.fields)
-                tbl = self._refresh_to_arrow(
-                    df.limit(cap + 1), narrowed
-                )  # the ONE job
+            df = self.spark.sql(sql)
+            self.last_refresh_df = df
+            aug_fields = list(df.schema.fields)
+            tbl = self._refresh_to_arrow(df, cap, spec)  # the ONE job
         except Exception as e:
             # poison this template (wrong render, unregistered function,
             # ...) and fall back to the classic DataFrame program
@@ -1210,13 +1159,10 @@ class RefreshTiers:
             # (bounded store, distributed spill), never materializes
             # driver-side first
             cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
-            with self._refresh_confs(spec) as narrowed:
-                df = self.spark.sql(sql)
-                self.last_refresh_df = df
-                aug_fields = list(df.schema.fields)
-                tbl = self._refresh_to_arrow(
-                    df.limit(cap + 1), narrowed
-                )  # the ONE job
+            df = self.spark.sql(sql)
+            self.last_refresh_df = df
+            aug_fields = list(df.schema.fields)
+            tbl = self._refresh_to_arrow(df, cap, spec)  # the ONE job
         except Exception as e:
             self._tpl_cache[tpl["key"]] = None
             self.config.log.warn(
@@ -1518,15 +1464,12 @@ class RefreshTiers:
             decision.dynamic_lower = rhs_sql
             sql = tpl["sql"].replace("__QC_RHS__", rhs_sql)
             sql = self._sub_time_tokens(sql, "F", wm_ns, now_ns)
-            with self._refresh_confs(spec) as narrowed:
-                df = self.spark.sql(sql)
-                self.last_refresh_df = df
-                # burst bound (same contract as the template tiers):
-                # overflow falls through to the next tier, no poisoning
-                cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
-                scan_tbl = self._refresh_to_arrow(
-                    df.limit(cap + 1), narrowed
-                )
+            df = self.spark.sql(sql)
+            self.last_refresh_df = df
+            # burst bound (same contract as the template tiers):
+            # overflow falls through to the next tier, no poisoning
+            cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
+            scan_tbl = self._refresh_to_arrow(df, cap, spec)
             if scan_tbl.num_rows > cap:
                 self.config.log.warn(
                     decision.fingerprint or "",
@@ -2047,15 +1990,12 @@ class RefreshTiers:
         the fresh window, driver merge, finalize over the whole state."""
         try:
             sql = self._sub_time_tokens(tpl["sql"], "F", wm_ns, now_ns)
-            with self._refresh_confs(spec) as narrowed:
-                df = self.spark.sql(sql)
-                self.last_refresh_df = df
-                # burst bound (same contract as the template tiers):
-                # overflow falls through to the next tier, no poisoning
-                cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
-                scan_tbl = self._refresh_to_arrow(
-                    df.limit(cap + 1), narrowed
-                )
+            df = self.spark.sql(sql)
+            self.last_refresh_df = df
+            # burst bound (same contract as the template tiers):
+            # overflow falls through to the next tier, no poisoning
+            cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
+            scan_tbl = self._refresh_to_arrow(df, cap, spec)
             if scan_tbl.num_rows > cap:
                 self.config.log.warn(
                     decision.fingerprint or "",

@@ -849,10 +849,10 @@ def test_nano_left_join_null_keys(spark, tmp_path):
 
 def test_concurrent_refreshes_restore_confs(spark, tmp_path):
     """Two threads refreshing different entries concurrently (one on a
-    Spark-job tier whose _refresh_confs scopes AQE/shuffle down, one on
-    nano) must both stay exact, and the session confs must be restored
-    afterward — the re-entrant conf scope cannot leave the session
-    pinned to refresh settings."""
+    Spark-job tier whose collect runs on the AQE-off width-2 clone, one
+    on nano) must both stay exact, and the caller's session confs must
+    read their own values afterward — no refresh pins the session to
+    refresh settings."""
     import threading
 
     from pyspark.sql import functions as F
@@ -863,7 +863,7 @@ def test_concurrent_refreshes_restore_confs(spark, tmp_path):
     }
     mx_ns = int(spark.table("events").agg(F.max("ts_ns")).collect()[0][0])
     day = 24 * 3600 * 1_000_000_000
-    # stddev keeps qA on the fused template (Spark job + conf scope)
+    # stddev keeps qA on the fused template (Spark job on the clone)
     sql_a = (
         "SELECT CAST(date_trunc('day', ts) AS DATE) AS d, "
         "round(stddev_samp(value), 4) AS sd FROM events GROUP BY 1 ORDER BY 1"

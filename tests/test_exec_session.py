@@ -105,28 +105,34 @@ def test_refresh_to_arrow_small_plan_one_nonadaptive_job(qc, spark):
     """A refresh collect whose PLAN is provably small must run as ONE
     Spark job (AQE-off clone), not one stage-job per exchange — and
     return exactly the rows the parent-session collect returns."""
-    df = (
-        spark.table("events")
-        .groupBy("event_type")
-        .count()
-        .limit(1001)
-    )
+    df = spark.table("events").groupBy("event_type").count()
     expect = sorted(map(tuple, df.collect()))
     tbl, jobs = _group_job_stats(
-        spark, "rta-small", lambda: qc._refresh_to_arrow(df, narrowed=False)
+        spark, "rta-small", lambda: qc._refresh_to_arrow(df, 1000, None)
     )
     assert sorted(tuple(r.values()) for r in tbl.to_pylist()) == expect
     assert len(jobs) == 1
 
 
-def test_refresh_to_arrow_big_plan_keeps_session_aqe(qc, spark, monkeypatch):
-    """When the plan is NOT provably small the collect stays on the
-    caller's session (AQE and all) — the 100 TB fallthrough."""
-    monkeypatch.setenv("QC_SPREAD_SMALL_INPUTS", "0")  # force not-small
-    df = spark.table("events").groupBy("event_type").count().limit(1001)
-    expect = sorted(map(tuple, df.collect()))
-    tbl = qc._refresh_to_arrow(df, narrowed=False)
-    assert sorted(tuple(r.values()) for r in tbl.to_pylist()) == expect
-    # execution stayed on the caller's session: the plan keeps AQE
-    plan = df._jdf.queryExecution().executedPlan().toString()
+def test_refresh_gate_keeps_aqe_for_big_plan(qc, spark, monkeypatch):
+    """A plan estimated big stays on the caller's session, AQE on — decided
+    by the gate itself, with no env switch. The big frame is only planned;
+    the caller-session collect returns the parent-session rows."""
+    from datafusion_query_cache_spark.operators import spread
+
+    big = spark.range(10**13).groupBy(F.col("id") % 7).count()
+    # the premise: a LIMIT caps Catalyst's estimate, so gating on the
+    # limited frame would call this plan small
+    assert not spread.is_small_input(big)
+    assert spread.is_small_input(big.limit(500_001))
+    chosen = qc._refresh_frame(big, None)
+    assert chosen.sparkSession is spark
+    plan = chosen._jdf.queryExecution().executedPlan().toString()
     assert "AdaptiveSparkPlan" in plan
+
+    monkeypatch.setattr(spread, "_SMALL_BYTES", 0)  # every plan is big
+    df = spark.table("events").groupBy("event_type").count()
+    assert qc._refresh_frame(df, None) is df
+    expect = sorted(map(tuple, df.collect()))
+    tbl = qc._refresh_to_arrow(df, 1000, None)
+    assert sorted(tuple(r.values()) for r in tbl.to_pylist()) == expect

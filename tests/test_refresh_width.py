@@ -1,21 +1,27 @@
 """Refresh-shuffle narrowing must be gated by source size (r9 verdict #1).
 
-The r9 regression: ``_refresh_confs`` pinned ``spark.sql.shuffle.partitions=2``
+The r9 regression: the refresh pinned ``spark.sql.shuffle.partitions=2``
 + AQE off unconditionally — an sf0.1-calibrated constant that DOUBLED the
 x1000 dynamic warm refresh (A/B: 0.53s at width 8 vs 1.03s at width 2).
 The fix gates narrowing on the summed on-disk bytes of the query's source
 tables, knowable only for sources registered through
 ``register_parquet_view``; everything else keeps the session's own shuffle
 settings and AQE coalescing — the plan that survives a 100× scale-up.
+A narrowed refresh collects on the width-2 AQE-off clone session, never by
+changing the caller's session conf.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 from dataclasses import dataclass
 from typing import Tuple
 
 import pytest
+
+from datafusion_query_cache_spark import tiers
+from tests.conftest import rows_set
 
 SF_DIR = os.environ.get("QC_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -28,7 +34,7 @@ class _FakeSpec:
 
 def test_narrow_ok_registered_small_source(qc_mem):
     # `events` is registered through register_parquet_view by conftest and
-    # is far under the 64 MB default gate at sf0.001
+    # is far under the 64 MB gate at sf0.001
     assert qc_mem._narrow_refresh_ok(_FakeSpec("events")) is True
 
 
@@ -39,42 +45,105 @@ def test_no_narrow_unregistered_source(spark, qc_mem):
     assert qc_mem._narrow_refresh_ok(_FakeSpec("qc_unregistered_v")) is False
 
 
-def test_no_narrow_over_byte_gate(qc_mem):
-    qc_mem.config.refresh_narrow_max_bytes = 1  # everything is "too big"
+def test_no_narrow_over_byte_gate(qc_mem, monkeypatch):
+    monkeypatch.setattr(tiers, "REFRESH_NARROW_MAX_BYTES", 1)  # all too big
     qc_mem._src_bytes_memo.clear()
     assert qc_mem._narrow_refresh_ok(_FakeSpec("events")) is False
 
 
-def test_no_narrow_when_disabled(qc_mem):
-    qc_mem.config.refresh_narrow_max_bytes = 0
+def test_no_narrow_when_disabled(qc_mem, monkeypatch):
+    monkeypatch.setattr(tiers, "REFRESH_NARROW_MAX_BYTES", 0)
     assert qc_mem._narrow_refresh_ok(_FakeSpec("events")) is False
 
 
-def test_join_spec_sums_all_tables(qc_mem):
+def test_join_spec_sums_all_tables(qc_mem, monkeypatch):
     # multi-table (star-join) spec: gate applies to the SUM of all sources
     spec = _FakeSpec("events", tables=("events", "nation"))
     assert qc_mem._narrow_refresh_ok(spec) is True
     ev = os.path.getsize(os.path.join(SF_DIR, "events.parquet"))
-    qc_mem.config.refresh_narrow_max_bytes = ev + 1  # nation tips it over
+    # nation tips it over
+    monkeypatch.setattr(tiers, "REFRESH_NARROW_MAX_BYTES", ev + 1)
     qc_mem._src_bytes_memo.clear()
     assert qc_mem._narrow_refresh_ok(spec) is False
 
 
-def test_refresh_confs_scope(spark, qc_mem):
-    """Inside a narrowed scope the confs are pinned; inside a non-narrowed
-    scope (unregistered source) they are untouched; both restore."""
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    with qc_mem._refresh_confs(_FakeSpec("events")):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
+def test_narrowed_refresh_never_changes_caller_conf(spark, tmp_path, monkeypatch):
+    """A narrowed lite refresh on `events` collects on the width-2 AQE-off
+    clone, while the caller's session reads its own confs throughout."""
+    from pyspark.sql import functions as F
 
-    spark.range(10).createOrReplaceTempView("qc_unregistered_v2")
-    with qc_mem._refresh_confs(_FakeSpec("qc_unregistered_v2")):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == before
-        assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
+    from datafusion_query_cache_spark import (
+        CachedSparkSession,
+        ParquetQueryCache,
+        QueryCacheConfig,
+    )
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    own = {k: spark.conf.get(k) for k in keys}
+    sql = (
+        "SELECT CAST(date_trunc('day', ts) AS DATE) AS d, count(*) AS n "
+        "FROM events WHERE ts > now() - INTERVAL 10 DAY GROUP BY 1"
+    )
+    # nano off: the refresh takes the Spark-job lite tier
+    qc = CachedSparkSession(
+        spark,
+        QueryCacheConfig(
+            cache=ParquetQueryCache(str(tmp_path / "qc")),
+            default_temporal_column="ts",
+            nano_refresh_max_bytes=0,
+        ),
+    )
+    mx_ns = int(spark.table("events").agg(F.max("ts_ns")).collect()[0][0])
+    day = 24 * 3600 * 1_000_000_000
+    qc.config.override_now_ns = mx_ns - 3 * day
+    qc.sql(sql).collect()
+
+    collects = []
+    inside = []
+    frame_cls = type(spark.range(1))  # the classic DataFrame implementation
+    real_to_arrow = frame_cls.toArrow
+    real_refresh = qc._refresh_to_arrow
+
+    def spy_to_arrow(df):
+        if inside:
+            collects.append(
+                (
+                    {k: spark.conf.get(k) for k in keys},
+                    df.sparkSession is spark,
+                    {k: df.sparkSession.conf.get(k) for k in keys},
+                )
+            )
+        return real_to_arrow(df)
+
+    def spy_refresh(*a, **kw):
+        inside.append(1)
+        try:
+            return real_refresh(*a, **kw)
+        finally:
+            inside.pop()
+
+    monkeypatch.setattr(frame_cls, "toArrow", spy_to_arrow)
+    monkeypatch.setattr(qc, "_refresh_to_arrow", spy_refresh)
+    now_ns = mx_ns - day
+    qc.config.override_now_ns = now_ns
+    got = qc.sql(sql)
+    assert qc.last_decision.refresh_tier == "lite"
+    assert len(collects) == 1
+    parent_confs, on_parent, run_confs = collects[0]
+    assert parent_confs == own
+    assert not on_parent
+    assert run_confs == {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "2",
+    }
+    assert {k: spark.conf.get(k) for k in keys} == own
+
+    lit_dt = dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=now_ns // 1000)
+    lit = f"TIMESTAMP '{lit_dt.isoformat(sep=' ')}'"
+    plain = spark.sql(
+        sql.replace("now()", lit).replace("WHERE ", f"WHERE ts < {lit} AND ", 1)
+    )
+    assert rows_set(got) == rows_set(plain)
 
 
 def test_strict_errors_mode_raises(spark, qc_mem, monkeypatch):
