@@ -24,9 +24,18 @@ distributed tiers (lite → fused template → classic):
   normalization over raw parquet files — is KNOWN; arbitrary user views
   never qualify), and the files' total size fits
   ``config.nano_refresh_max_bytes`` (bytes, not rows);
-* single table, no joins, no residual predicate, session timezone UTC
-  (the data axis is tz-free µs/ns; UTC makes the Python calendar mirror
-  of ``date_trunc``/interval arithmetic exact);
+* session timezone UTC (the data axis is tz-free µs/ns; UTC makes the
+  Python calendar mirror of ``date_trunc``/interval arithmetic exact);
+* joins are left-deep inner/left equi-joins against other registered
+  sources inside the same byte budget;
+* a residual predicate is a conjunction of column-vs-literal comparisons,
+  ``IS [NOT] NULL`` and ``NOT`` (``_parse_pred``). A literal compared
+  against the temporal column (``TIMESTAMP '…'``, ``DATE '…'``,
+  ``CAST('…' AS TIMESTAMP)``, or a bare ``'…'`` that Spark casts
+  implicitly) arrives folded to an exact µs ``Instant``: Spark evaluates
+  the cast once per program build
+  (``tiers.RefreshTiers._fold_temporal_literals``), and only µs sources
+  admit it;
 * group keys are bare columns or ``date_trunc`` buckets of the temporal
   column; aggregate arguments are bare columns (count/sum/min/max/avg);
 * the dynamic bound is ``now()/current_date() ± INTERVAL`` shapes the
@@ -54,6 +63,18 @@ _EPOCH = dt.datetime(1970, 1, 1)
 
 class NanoUnsupported(Exception):
     """Shape outside the nano contract → distributed tiers."""
+
+
+@dataclass(frozen=True)
+class Instant(Expr):
+    """A temporal literal folded to its exact epoch-µs instant by Spark
+    (``tiers.RefreshTiers._fold_temporal_literals``); ``_parse_pred``
+    accepts it only against the source's µs temporal column."""
+
+    us: int
+
+    def canon(self) -> str:
+        return f"instant({self.us})"
 
 
 # ---------------------------------------------------------------------------
@@ -269,20 +290,25 @@ def _source_bytes(p: str) -> int:
     )
 
 
-def _parse_pred(e: Expr):
+def _parse_pred(e: Expr, ts_col: str, ts_kind: str):
     """Compile a residual predicate into a pyarrow mask builder, or raise.
 
     Supported: conjunctions of comparisons between a bare column and a
     numeric/string/bool literal, IS [NOT] NULL, and NOT — shapes whose
     SQL semantics pyarrow reproduces exactly (a NULL comparison yields a
     null mask entry, and ``Table.filter`` drops null-mask rows just as
-    SQL WHERE does)."""
+    SQL WHERE does). The temporal column ``ts_col`` compares only against
+    a folded ``Instant`` (an unfolded string would reach pyarrow as
+    timestamp-vs-string and fail at run time), and only on a µs source:
+    an ns-long source's view reads ``floor(ns / 1000)`` µs while pyarrow
+    compares the raw ns, so a row at ``L·1000 + 500`` ns reads ``> L``
+    here and not in Spark."""
     from .plans.ir import InList, IsNull, Not
 
     if isinstance(e, BinOp):
         if e.op in ("and",):
-            lf, lc = _parse_pred(e.left)
-            rf, rc = _parse_pred(e.right)
+            lf, lc = _parse_pred(e.left, ts_col, ts_kind)
+            rf, rc = _parse_pred(e.right, ts_col, ts_kind)
 
             def _and(tbl, _lf=lf, _rf=rf):
                 import pyarrow.compute as pc
@@ -293,12 +319,24 @@ def _parse_pred(e: Expr):
         if e.op in (">", ">=", "<", "<=", "=", "!="):
             col, lit, op = None, None, e.op
             flip = {">": "<", ">=": "<=", "<": ">", "<=": ">="}
-            if isinstance(e.left, Col) and isinstance(e.right, Lit):
-                col, lit = e.left.name, e.right.value
-            elif isinstance(e.right, Col) and isinstance(e.left, Lit):
-                col, lit, op = e.right.name, e.left.value, flip.get(op, op)
-            if col is None or not isinstance(lit, (int, float, str, bool)):
+            if isinstance(e.left, Col) and isinstance(e.right, (Lit, Instant)):
+                col, lit = e.left.name, e.right
+            elif isinstance(e.right, Col) and isinstance(e.left, (Lit, Instant)):
+                col, lit, op = e.right.name, e.left, flip.get(op, op)
+            if col is None:
                 raise NanoUnsupported(f"predicate comparison {e!r}")
+            if col == ts_col or isinstance(lit, Instant):
+                if col != ts_col or not isinstance(lit, Instant):
+                    raise NanoUnsupported(f"temporal comparison {e!r}")
+                if ts_kind != "us":
+                    raise NanoUnsupported("temporal literal on an ns-long source")
+                import pyarrow as pa
+
+                lit = pa.scalar(lit.us, pa.timestamp("us"))
+            else:
+                lit = lit.value
+                if not isinstance(lit, (int, float, str, bool)):
+                    raise NanoUnsupported(f"predicate comparison {e!r}")
             if isinstance(lit, float) and math.isnan(lit):
                 # Spark: NaN = NaN is TRUE, NaN uniquely ordered — IEEE
                 # disagrees on every operator; don't mirror NaN literals
@@ -324,7 +362,7 @@ def _parse_pred(e: Expr):
 
             return _cmp, {col}
     if isinstance(e, Not):
-        f, cols = _parse_pred(e.child)
+        f, cols = _parse_pred(e.child, ts_col, ts_kind)
 
         def _not(tbl, _f=f):
             import pyarrow.compute as pc
@@ -1011,7 +1049,7 @@ def build_nano_program(
     recipes, nan_check = _parse_aggs(plans, ts_col)
     pred_fn, pred_cols = (None, set())
     if pred_expr is not None:
-        pred_fn, pred_cols = _parse_pred(pred_expr)
+        pred_fn, pred_cols = _parse_pred(pred_expr, ts_col, ts_kind)
 
     fact_columns: Optional[List[str]] = None
     dims: Optional[List[_DimJoin]] = None
@@ -1183,8 +1221,8 @@ class NanoTopKProgram:
             else:
                 raise NanoUnsupported(f"column {src} not in parquet files")
         for c in pred_cols:
-            if c in (ts_col, shadow):
-                raise NanoUnsupported("predicate on the temporal axis")
+            if c == shadow:
+                raise NanoUnsupported("predicate on the ns shadow column")
             if c not in names:
                 raise NanoUnsupported(f"predicate column {c} not in parquet files")
             scan.add(c)
@@ -1331,7 +1369,7 @@ def build_nano_topk_program(
         )
     pred_fn, pred_cols = (None, set())
     if pred_expr is not None:
-        pred_fn, pred_cols = _parse_pred(pred_expr)
+        pred_fn, pred_cols = _parse_pred(pred_expr, ts_col, ts_kind)
     return NanoTopKProgram(
         path, ts_col, ts_kind, projection, pred_fn, pred_cols, sort_spec,
         limit,

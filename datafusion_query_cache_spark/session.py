@@ -1033,7 +1033,8 @@ class CachedSparkSession(RefreshTiers):
                         for n, o in sort_items()
                     ]
                     prog = build_nano_topk_program(
-                        spec.table, ts_col, projection, spec.predicate,
+                        spec.table, ts_col, projection,
+                        self._fold_temporal_literals(spec.predicate, ts_col),
                         sspec, spec.limit, cfg.nano_refresh_max_bytes,
                     )
                 except Exception as e:

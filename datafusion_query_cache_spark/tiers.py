@@ -44,6 +44,10 @@ from .plans.ir import AggSpec, Col, Lit, Unsupported
 #: ``_narrow_refresh_ok``; measured −40% on the sf0.1 lite dyn refresh).
 REFRESH_NARROW_MAX_BYTES = 64 << 20
 
+#: cast targets (duckdb type ids) that make a literal an instant on the
+#: temporal axis (``RefreshTiers._fold_temporal_literals``)
+_INSTANT_CASTS = frozenset({"TIMESTAMP", "TIMESTAMP WITH TIME ZONE", "DATE"})
+
 
 def _push_time_bounds(
     df: DataFrame,
@@ -1691,7 +1695,8 @@ class RefreshTiers:
             prog = build_nano_program(
                 tables[0], ts_col, state_group, plans, bucket_name,
                 bucket_gran, dyn_op, dyn_rhs, ltpl["bucket_is_date"],
-                self.config.nano_refresh_max_bytes, pred_expr=pred_expr,
+                self.config.nano_refresh_max_bytes,
+                pred_expr=self._fold_temporal_literals(pred_expr, ts_col),
                 join_steps=spec.join_steps,
             )
             tpl = dict(ltpl)
@@ -1726,6 +1731,70 @@ class RefreshTiers:
             f"nano tier bypassed: session timezone {tz!r} (needs UTC)",
         )
         return False
+
+    def _fold_temporal_literals(self, pred_expr, ts_col: str):
+        """Fold every literal compared against the temporal column into an
+        exact epoch-µs ``nano.Instant`` before ``pred_expr`` reaches a nano
+        builder: ``TIMESTAMP '…'``, ``DATE '…'``, ``CAST('…' AS
+        TIMESTAMP)``, and a bare ``'…'`` string, which Spark casts
+        implicitly. Spark computes the instants itself, all in ONE one-row
+        ``unix_micros(CAST(lit AS TIMESTAMP))`` eval (the
+        ``_eval_bound_value`` pattern), so no Python mirror of its
+        string→timestamp cast exists; a NULL instant raises (nano refused).
+        Callers run it once per program build, inside the memoized
+        template. Other shapes pass through unchanged, and
+        ``nano._parse_pred`` refuses them on the temporal column."""
+        from pyspark.sql.types import TimestampType
+
+        from .nano import Instant
+        from .plans.ir import BinOp, Cast, Not
+
+        if pred_expr is None:
+            return None
+
+        def foldable(x) -> bool:
+            if isinstance(x, Cast):
+                return x.to_type.upper() in _INSTANT_CASTS and foldable(x.child)
+            return isinstance(x, Lit) and (
+                isinstance(x.value, str) or x.dtype in _INSTANT_CASTS
+            )
+
+        def rewrite(e, sub):
+            if isinstance(e, Not):
+                return Not(rewrite(e.child, sub))
+            if isinstance(e, BinOp) and e.op == "and":
+                return BinOp("and", rewrite(e.left, sub), rewrite(e.right, sub))
+            if isinstance(e, BinOp) and e.op in (">", ">=", "<", "<=", "=", "!="):
+                left, right = e.left, e.right
+                if left == Col(ts_col) and foldable(right):
+                    right = sub(right)
+                elif right == Col(ts_col) and foldable(left):
+                    left = sub(left)
+                return BinOp(e.op, left, right)
+            return e
+
+        sites: Dict = {}  # foldable literal -> its column in the eval row
+
+        def note(x):
+            sites.setdefault(x, len(sites))
+            return x
+
+        rewrite(pred_expr, note)
+        if not sites:
+            return pred_expr
+        row = (
+            self.spark.range(0, 1, 1, 1)
+            .select(
+                *[
+                    F.unix_micros(to_column(x).cast(TimestampType()))
+                    for x in sites
+                ]
+            )
+            .collect()[0]
+        )
+        if any(v is None for v in row):
+            raise Unsupported("temporal literal casts to NULL")
+        return rewrite(pred_expr, lambda x: Instant(int(row[sites[x]])))
 
     def _run_dyn_nano(
         self,
@@ -1882,11 +1951,15 @@ class RefreshTiers:
     ) -> Optional[dict]:
         """Memoized STATIC nano-tier program: the static lite driver merge
         with the Spark job replaced by a bytes-gated pyarrow scan of the
-        fresh window. Beyond the dynamic nano contract it admits simple
-        residual predicates (conjunctions of column-vs-literal
-        comparisons, IS [NOT] NULL — mirrored exactly by pyarrow masks)
-        and ltz time-bucket groups (UTC session gate: the aware instants
-        equal the naive UTC floor)."""
+        fresh window. It admits simple residual predicates (conjunctions
+        of column-vs-literal comparisons, IS [NOT] NULL — mirrored exactly
+        by pyarrow masks), including static bounds on the temporal column
+        such as the paper's ``ts > '2000-01-01'``, whose literals
+        ``_fold_temporal_literals`` folds once per build; and ltz
+        time-bucket groups (UTC session gate: the aware instants equal the
+        naive UTC floor). Bench row it wins: the ``small_dashboard``
+        ``flagship`` refresh (``… AND ts > TIMESTAMP '…'``), which
+        otherwise pays the lite tier's Spark job."""
         key = ("snano", *pkey, state_schema.simpleString())
         if not self._nano_tz_ok(fingerprint):
             return None  # bypass (memo untouched: resumes if tz → UTC)
@@ -1914,7 +1987,8 @@ class RefreshTiers:
             prog = build_nano_program(
                 tables[0], ts_col, state_group, plans, None, None, ">",
                 None, False, self.config.nano_refresh_max_bytes,
-                pred_expr=pred_expr, group_ltz=group_ltz, static=True,
+                pred_expr=self._fold_temporal_literals(pred_expr, ts_col),
+                group_ltz=group_ltz, static=True,
                 join_steps=spec.join_steps,
             )
             tpl = dict(sltpl)

@@ -247,6 +247,71 @@ def test_nano_ns_long_source(spark, tmp_path, now_points):
             assert qc.last_decision.refresh_tier == "nano"
 
 
+def test_nano_ns_long_source_temporal_literal_exact(spark, tmp_path):
+    """A static ``ts > TIMESTAMP L`` on an epoch-ns source: the view reads
+    ``floor(ns / 1000)`` µs, so a row at ``L·1000 + 500`` ns is NOT
+    ``> L`` in Spark, while a raw-ns pyarrow comparison would admit it.
+    The nano builders refuse the folded literal on such a source; the
+    answer must be exact on whichever tier serves it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datafusion_query_cache_spark.sources.tables import register_parquet_view
+
+    base_ns = 1_709_251_200_000_000_000  # 2024-03-01 UTC
+    hour_ns = 3600 * 1_000_000_000
+    ts_ns = [base_ns + i * hour_ns + 777 for i in range(24 * 6)]
+    cut_us = (base_ns + 100 * hour_ns) // 1000 + 5  # L, in the fresh tail
+    ts_ns += [cut_us * 1000 + 500, cut_us * 1000, cut_us * 1000 + 1000]
+    tbl = pa.table(
+        {
+            "ts": pa.array(ts_ns, pa.timestamp("ns")),
+            "k": pa.array(["a", "b", "c"] * (len(ts_ns) // 3)),
+        }
+    )
+    p = str(tmp_path / "nslit.parquet")
+    pq.write_table(tbl, p)
+    register_parquet_view(spark, "nslit_events", p)
+    sql = (
+        "SELECT k, count(*) AS n FROM nslit_events "
+        f"WHERE ts > {_ts_lit(cut_us)} GROUP BY 1 ORDER BY 1"
+    )
+    pts = [base_ns + h * hour_ns for h in (90, 99, 101, 140)]
+    qc = _mk_qc(spark, tmp_path)
+    for i, now_ns in enumerate(pts):
+        qc.config.override_now_ns = now_ns
+        got = qc.sql(sql)
+        expect = spark.sql(
+            sql.replace("WHERE ", f"WHERE ts < {_ts_lit(now_ns // 1000)} AND ", 1)
+        )
+        assert rows_set(got) == rows_set(expect), f"refresh {i}"
+        if i > 0:
+            assert qc.last_decision.cache_hit
+
+
+def test_paper_headline_bare_string_bound_rides_nano(spark, tmp_path, now_points):
+    """The paper's headline query shape (``… WHERE symbol = 'AAPL' AND
+    timestamp > '2000-01-01'``): a BARE string bound on the temporal
+    column, which Spark casts implicitly. Folded to an exact instant, it
+    refreshes on the nano tier from the first refresh, with no failed
+    warm path behind it, and answers exactly."""
+    sql = (
+        "SELECT max(value) AS mx, count(*) AS n FROM events "
+        "WHERE event_type = 'click' AND ts > '2024-01-03'"
+    )
+    qc = _mk_qc(spark, tmp_path)
+    for i, now_ns in enumerate(now_points):
+        qc.config.override_now_ns = now_ns
+        got = qc.sql(sql)
+        assert rows_set(got) == rows_set(
+            _plain_static(spark, sql, now_ns)
+        ), f"refresh {i}"
+        if i > 0:
+            assert qc.last_decision.cache_hit
+            assert qc.last_decision.refresh_tier == "nano", f"refresh {i}"
+    assert not [m for m in qc.config.log.messages() if "warm path failed" in m]
+
+
 def test_nano_nan_minmax_falls_back(spark, tmp_path):
     """NaN under min/max orders differently in pyarrow than Spark's
     NaN-greatest — the nano scan must refuse and the ladder still answer
@@ -352,16 +417,74 @@ def _plain_static(spark, sql: str, now_ns: int):
     return spark.sql(s)
 
 
-def test_static_nano_matches_plain(spark, tmp_path, now_points):
+def _ts_str(us: int) -> str:
+    return (dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=us)).isoformat(
+        sep=" "
+    )
+
+
+def _ts_lit(us: int) -> str:
+    return f"TIMESTAMP '{_ts_str(us)}'"
+
+
+def _mid_window_us(pts) -> int:
+    """A µs instant inside the second refresh's fresh window [pts[1], pts[2])."""
+    return (pts[1] + pts[2]) // 2 // 1000 + 123
+
+
+def _upper_bound_sql(spark, pts):
+    return (
+        "SELECT date_trunc('hour', ts) AS h, count(*) AS n, "
+        "round(sum(value), 2) AS s FROM events "
+        f"WHERE ts < {_ts_lit(_mid_window_us(pts))} GROUP BY 1 ORDER BY 1"
+    )
+
+
+def _exact_row_bound_sql(spark, pts):
+    # the bound IS a row's timestamp (with a µs fraction) inside the second
+    # refresh's fresh window: `>=` keeps that row, an off-by-one µs drops it
+    us = F.unix_micros("ts")
+    row_us = (
+        spark.table("events")
+        .where((us > pts[1] // 1000) & (us < pts[2] // 1000) & (us % 1000 != 0))
+        .agg(F.min(us))
+        .collect()[0][0]
+    )
+    assert row_us is not None
+    return (
+        "SELECT event_type, count(*) AS n, min(value) AS mn FROM events "
+        f"WHERE ts >= {_ts_lit(row_us)} GROUP BY 1 ORDER BY 1"
+    )
+
+
+@pytest.mark.parametrize(
+    "make_sql",
+    [
+        lambda spark, pts: STATIC_SQL,
+        # the small_dashboard flagship panel (perfbench/workloads.py)
+        lambda spark, pts: (
+            "SELECT date_trunc('hour', ts) AS bucket, avg(value) AS avg_value, "
+            "min(value) AS min_value, max(value) AS max_value, count(*) AS n "
+            "FROM events WHERE event_type = 'click' "
+            "AND ts > TIMESTAMP '2024-01-03' GROUP BY bucket ORDER BY bucket DESC"
+        ),
+        _upper_bound_sql,
+        _exact_row_bound_sql,
+    ],
+    ids=["value_pred", "flagship", "ts_upper_in_window", "ts_ge_exact_row"],
+)
+def test_static_nano_matches_plain(spark, tmp_path, now_points, make_sql):
     """Static warm refreshes on a registered source: no Spark job, exact
-    results — incl. an ltz hour bucket and a residual predicate (both
-    beyond the dynamic nano contract)."""
+    results — incl. an ltz hour bucket (beyond the dynamic nano
+    contract), a residual predicate and static bounds on the temporal
+    column, whose literals fold to exact µs instants."""
+    sql = make_sql(spark, now_points)
     qc = _mk_qc(spark, tmp_path)
     for i, now_ns in enumerate(now_points):
         qc.config.override_now_ns = now_ns
-        got = qc.sql(STATIC_SQL)
+        got = qc.sql(sql)
         assert rows_set(got) == rows_set(
-            _plain_static(spark, STATIC_SQL, now_ns)
+            _plain_static(spark, sql, now_ns)
         ), f"refresh {i}"
         if i > 0:
             assert qc.last_decision.cache_hit
@@ -641,12 +764,23 @@ def test_static_pred_null_semantics(spark, tmp_path):
             assert qc.last_decision.refresh_tier == "nano"
 
 
-def test_dyn_nano_with_predicate(spark, tmp_path, now_points):
-    """Simple residual predicates ride the DYNAMIC nano tier too."""
+@pytest.mark.parametrize(
+    "make_pred",
+    [
+        lambda pts: "value > 10",
+        # bare-string static bound (Spark casts it implicitly) cutting rows
+        # inside the second refresh's fresh window
+        lambda pts: f"ts < '{_ts_str(_mid_window_us(pts))}'",
+    ],
+    ids=["value_pred", "ts_upper_bare_string"],
+)
+def test_dyn_nano_with_predicate(spark, tmp_path, now_points, make_pred):
+    """Simple residual predicates ride the DYNAMIC nano tier too,
+    including a static bound on the temporal column."""
     sql = (
         "SELECT CAST(date_trunc('day', ts) AS DATE) AS d, count(*) AS n, "
         "round(sum(value), 2) AS s FROM events "
-        "WHERE value > 10 AND ts > now() - INTERVAL 10 DAY "
+        f"WHERE {make_pred(now_points)} AND ts > now() - INTERVAL 10 DAY "
         "GROUP BY 1 ORDER BY 1"
     )
     qc = _mk_qc(spark, tmp_path)

@@ -339,17 +339,23 @@ def _plain_at(spark, sql: str, now_ns: int):
     return spark.sql(sql.replace("WHERE ", f"WHERE ts < {lit} AND ", 1))
 
 
-def test_topk_nano_tier_on_registered_source(spark, qc):
+@pytest.mark.parametrize(
+    "pred",
+    ["event_type = 'click'", "event_type = 'click' AND ts > TIMESTAMP '2024-01-10'"],
+    ids=["plain", "ts_lower"],
+)
+def test_topk_nano_tier_on_registered_source(spark, qc, pred):
     """Maintained top-k over a source registered through
     register_parquet_view refreshes on the DRIVER tier (zero Spark jobs,
     nano.NanoTopKProgram): tier pinned AND the ORDERED rows equal plain
-    Spark with now() pinned to the same literal."""
+    Spark with now() pinned to the same literal — also under a static
+    bound on the temporal column (folded to an exact µs instant)."""
     ev = spark.table("events")
     mx_ns = int(ev.agg(F.max("ts_ns")).collect()[0][0])
     day = 24 * 3600 * 10**9
     nows = [mx_ns - 3 * day, mx_ns - 2 * day, mx_ns - day, mx_ns + 1]
     sql = (
-        "SELECT event_id, value FROM events WHERE event_type = 'click' "
+        f"SELECT event_id, value FROM events WHERE {pred} "
         "ORDER BY value DESC, event_id LIMIT 10"
     )
     qc.config.override_now_ns = nows[0]

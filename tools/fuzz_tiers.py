@@ -91,6 +91,10 @@ PREDS = [
     # constants as 0/1 ints — regression axis for the Lit(bool) fix)
     "(value > 50) IS NOT FALSE",
     "(value > 120) IS TRUE",
+    # static bounds on the temporal column: the nano builders fold the
+    # literal (typed and bare-string spellings) to an exact µs instant
+    "ts > TIMESTAMP '2024-01-05'",
+    "ts < '2024-01-28 12:00:00'",
 ]
 WINDOWS = [
     None,
@@ -112,6 +116,8 @@ F_PREDS = [
     "value > 50",
     "event_type != 'view' AND value <= 90",
     "event_type IN ('click', 'purchase')",
+    "ts > TIMESTAMP '2024-01-05'",
+    "ts < '2024-01-28 12:00:00'",
 ]
 F_ORDERS = [
     "value DESC",
@@ -871,6 +877,9 @@ def main() -> int:
             and "FROM events " in sql
             and "event_type" in sql
             and "FROM (" not in sql
+            # Spark refuses grouping(meta.t) under an ordinal ROLLUP/CUBE
+            # (GROUPING_COLUMN_MISMATCH): the plain twin could not run it
+            and "grouping(" not in sql
         ):
             sql = sql.replace("FROM events ", "FROM events_st ").replace(
                 "event_type", "meta.t"
