@@ -45,14 +45,23 @@ class QueryCacheConfig:
     #: map-side combine alone can spill one reducer. Results are identical
     #: by the merge-associativity law (tests/test_robustness.py). 0 = off.
     salt_buckets: int = 0
-    #: Memoize finalized results per (fingerprint, watermark): a hot read
-    #: (empty refresh window) whose watermark matches a result this session
-    #: already produced returns that DataFrame with ZERO Spark work — the
-    #: dashboard-reload case. Sound because the result as-of a watermark is
-    #: deterministic: state is immutable per watermark and finalize is a
-    #: pure function of state. Any watermark advance (new data) changes the
-    #: key, so the memo can never serve stale data the hot path itself
-    #: wouldn't serve.
+    #: Memoize finalized, driver-local results per (fingerprint, watermark
+    #: — plus now for a dynamic bound —, post-finalize shape): a hot read
+    #: (empty refresh window) whose key matches a result this session
+    #: already produced returns that DataFrame with no Spark job — the
+    #: dashboard-reload case. Memoized shapes: every fused / template /
+    #: lite / nano tier result; a classic or dynamic-bound result with a
+    #: LIMIT at most the driver-collect cap and no OFFSET, collected to
+    #: Arrow once inside ``sql()`` (the ``big_state`` hot reload); the
+    #: driver top-k tier's result (``small_dashboard`` ``topk``); and a
+    #: derived table's outer shape over a driver-local inner with no joins
+    #: (``small_dashboard`` ``moving_avg``). A result without LIMIT stays
+    #: lazy and is not memoized. Sound because the result as-of a
+    #: watermark is deterministic: state is immutable per watermark and
+    #: finalize is a pure function of state. Any watermark advance (new
+    #: data) changes the key, so the memo can never serve stale data the
+    #: hot path itself wouldn't serve. False turns every memo path off
+    #: (and the in-call collect with it).
     result_memo: bool = True
     #: Bounded-staleness refresh policy (ns). When ``now - watermark`` is
     #: below this, the query is served as-of the stored watermark — no

@@ -178,8 +178,10 @@ class CachedSparkSession(RefreshTiers):
         #: aggregate fingerprints already tagged for the durable
         #: bucket-coarsening donor index
         self._agg_registry: set = set()
-        #: (fingerprint, watermark_ns) → finalized result DataFrame. See
-        #: QueryCacheConfig.result_memo; bounded LRU.
+        #: (fingerprint, wm-key, post) → finalized, driver-local result
+        #: DataFrame. wm-key is the state watermark, or ("dyn", watermark,
+        #: now) for a dynamic bound; post is the post-finalize shape (see
+        #: _memo_result). See QueryCacheConfig.result_memo; bounded LRU.
         self._result_memo: "OrderedDict[tuple, DataFrame]" = OrderedDict()
         #: fingerprints whose percentile histogram state exceeded
         #: config.percentile_max_distinct — permanently passthrough this
@@ -220,6 +222,38 @@ class CachedSparkSession(RefreshTiers):
         memo.move_to_end((fingerprint, wm_ns, post))
         while len(memo) > self._RESULT_MEMO_MAX:
             memo.popitem(last=False)
+
+    def _memo_get(self, fingerprint: str, wm_ns, post=None):
+        """The memoized result under ``(fingerprint, wm_ns, post)``, or None
+        (always None with ``result_memo`` off)."""
+        if not self.config.result_memo:
+            return None
+        key = (fingerprint, wm_ns, post)
+        df = self._result_memo.get(key)
+        if df is not None:
+            self._result_memo.move_to_end(key)
+        return df
+
+    def _memo_key_of(self, df: DataFrame) -> Optional[tuple]:
+        """The memo key ``df`` is stored under (identity match), or None."""
+        for key, val in reversed(self._result_memo.items()):
+            if val is df:
+                return key
+        return None
+
+    def _memo_collect(
+        self, fingerprint: str, wm_ns, df: DataFrame, post=None
+    ) -> DataFrame:
+        """Collect a bounded result to Arrow once, re-enter Spark as a
+        LocalRelation and memoize that: every re-read at the same key is
+        then served with no Spark job, and the caller's own action on the
+        returned frame runs none either. With ``result_memo`` off, ``df``
+        is returned as it is (lazy)."""
+        if not self.config.result_memo:
+            return df
+        out = arrow_to_spark(self.spark, df.toArrow(), schema=df.schema)
+        self._memo_result(fingerprint, wm_ns, out, post)
+        return out
 
     # -- public API ---------------------------------------------------------
 
@@ -783,18 +817,30 @@ class CachedSparkSession(RefreshTiers):
         "yy": "INTERVAL '1' YEAR",
     }
 
-    def _eval_bound_and_bucket(self, rhs_expr, now_ns: int, granularity: str):
-        """Bound value, its bucket truncation, their epoch-µs forms, and the
-        epoch-µs end of the boundary bucket — ONE driver-local job (the
-        dynamic warm path runs per refresh, so the tiny range(1) collects
-        are folded together). The epochs are computed JVM-side via
+    @staticmethod
+    def _wm_bucket_col(wm_ns: int, granularity: str) -> Column:
+        """A state watermark truncated to its bucket, JVM-side (session-
+        timezone calendar semantics, matching how state buckets are
+        computed)."""
+        return F.date_trunc(
+            granularity, F.timestamp_micros(F.lit(wm_ns // 1000))
+        ).alias("wb")
+
+    def _eval_bound_and_bucket(
+        self, rhs_expr, now_ns: int, granularity: str, wm_ns=None
+    ):
+        """Bound value, its bucket truncation, their epoch-µs forms, the
+        epoch-µs end of the boundary bucket, and (given ``wm_ns``) the old
+        watermark's bucket the tail store starts at — ONE driver-local job
+        (the dynamic warm path runs per refresh, so the tiny range(1)
+        collects are folded together). The epochs are computed JVM-side via
         ``unix_micros`` in the SESSION timezone; the CLASSIC dyn assembly
         binds them as its boundary-scan range (no Python-side timezone
         assumption, no DST slack — the bucket end is ``date_trunc +
         INTERVAL``, calendar-exact in any tz). The fused SQL template
         never calls this: it renders the bound as a constant-folded
-        expression instead. Returns
-        ``(value, bucket, value_us, bucket_us, bucket_end_us | None)``."""
+        expression instead. Returns ``(value, bucket, value_us, bucket_us,
+        bucket_end_us | None, wm_bucket | None)``."""
         col = to_column(self._pin_now(rhs_expr, now_ns))
         b = F.date_trunc(granularity, col)
         iv = self._BUCKET_INTERVAL.get(granularity.lower())
@@ -808,11 +854,14 @@ class CachedSparkSession(RefreshTiers):
             cols.append(
                 F.unix_micros((b + F.expr(iv)).cast("timestamp")).alias("be_us")
             )
+        if wm_ns is not None:
+            cols.append(self._wm_bucket_col(wm_ns, granularity))
         row = self.spark.range(0, 1, 1, 1).select(*cols).collect()[0]
         if row["v"] is None:
             raise Unsupported("dynamic bound evaluated to NULL")
         be_us = row["be_us"] if iv is not None else None
-        return row["v"], row["b"], row["v_us"], row["b_us"], be_us
+        wb = row["wb"] if wm_ns is not None else None
+        return row["v"], row["b"], row["v_us"], row["b_us"], be_us, wb
 
     def _plan_filter(self, spec, query: str):
         """Simple filter (non-aggregate) query caching — the reference's
@@ -1065,6 +1114,8 @@ class CachedSparkSession(RefreshTiers):
                 out = arrow_to_spark(self.spark, res, schema=st_schema)
                 if not entry.put_arrow(swm, res, st_schema):
                     return None
+                # the fingerprint carries ORDER BY and LIMIT: no post key
+                self._memo_result(fingerprint, swm, out)
                 return out
             except Exception as e:
                 # source drift / unmirrorable data (NaN in a sort column):
@@ -1082,9 +1133,15 @@ class CachedSparkSession(RefreshTiers):
             # already-stored rows into duplicates (same contract as the
             # aggregate path's hot read).
             wm_ns = entry.watermark_ns
-            stored = state if state is not None else entry.get(self.spark)
             decision.cache_hit = True
             decision.watermark_ns = wm_ns
+            memo = self._memo_get(fingerprint, wm_ns) if topk else None
+            if memo is not None:
+                # the driver top-k tier finalized this watermark already
+                decision.served_from_memo = True
+                cfg.log.info(fingerprint, "filter cache hit: result memo (no Spark work)")
+                return memo, decision
+            stored = state if state is not None else entry.get(self.spark)
             cfg.log.info(fingerprint, "filter cache hot read: empty window")
         elif hit:
             wm_ns = entry.watermark_ns
@@ -1870,9 +1927,7 @@ class CachedSparkSession(RefreshTiers):
         and the outer WHERE/SELECT/ORDER/LIMIT runs as DataFrame ops over
         the finalized result — O(state) rows, never touching the source.
         """
-        from .functions.compile import plain_agg_column, to_column
         from .plans.classify import VOLATILE_FNS, VOLATILE_TIME_FNS
-        from .plans.ir import AggCall as _AggCall
         from .plans.ir import Func as _Func
 
         # volatile time functions in the OUTER shape would be evaluated by
@@ -1937,6 +1992,38 @@ class CachedSparkSession(RefreshTiers):
             df, decision = self._plan_subquery(spec.inner, query)
         else:
             df, decision = self._plan_cached(query, spec.inner)
+        okey = None
+        if not corr_joins and not spec.join_steps and df.isLocal():
+            # driver-local inner (a memo hit or a driver tier's Arrow
+            # result) and no joins: the outer's rows are at most the
+            # inner's (the compiler admits no generator function), already
+            # on the driver. Replay it on one partition (no SinglePartition
+            # exchange stage for the window/ORDER BY) and memoize it keyed
+            # on the inner's memo key, so the outer runs once per
+            # watermark, not once per reload (small_dashboard moving_avg).
+            ikey = self._memo_key_of(df)
+            if ikey is not None:
+                okey = (ikey[0], ikey[1], ("derived", repr(spec), ikey[2]))
+                memo = self._memo_get(*okey)
+                if memo is not None:
+                    decision.served_from_memo = True
+                    self.config.log.info(
+                        ikey[0], "derived table: result memo (no Spark work)"
+                    )
+                    return memo, decision
+            df = df.coalesce(1)
+        df = self._replay_outer(spec, df, corr_joins, dim_frames)
+        if okey is not None:
+            df = self._memo_collect(okey[0], okey[1], df, okey[2])
+        return df, decision
+
+    def _replay_outer(self, spec, df: DataFrame, corr_joins, dim_frames):
+        """The derived table's outer shape (joins, WHERE, rollup or
+        projection, QUALIFY, ORDER BY, LIMIT) as plain DataFrame ops over
+        the finalized inner result ``df``."""
+        from .functions.compile import plain_agg_column, to_column
+        from .plans.ir import AggCall as _AggCall
+
         for j, key_pairs in corr_joins or ():
             # O(groups) build side by construction — explicit broadcast;
             # NULL outer keys never match (correlated equality semantics)
@@ -2046,7 +2133,7 @@ class CachedSparkSession(RefreshTiers):
                 )
                 if spec.limit is not None:
                     df = df.limit(spec.limit)
-                return df, decision
+                return df
             df = df.select(
                 *[to_column(i.expr).alias(i.name) for i in spec.items]
             )
@@ -2090,7 +2177,7 @@ class CachedSparkSession(RefreshTiers):
             df = df.orderBy(*cols)
         if spec.limit is not None:
             df = df.limit(spec.limit)
-        return df, decision
+        return df
 
     #: aggregate functions whose finalized value IS a mergeable state
     #: (count/sum/min/max), or decomposes into such (avg → sum+count) —
@@ -3811,6 +3898,13 @@ class CachedSparkSession(RefreshTiers):
             spec.offset,
         )
         now_ns = self._now_ns()
+
+        def memo_wm(wm_ns):
+            """Result-memo wm-key of a result as-of state watermark
+            ``wm_ns``: a dynamic bound is a pure function of the pinned
+            now, so (watermark, now) determines it exactly."""
+            return ("dyn", wm_ns, now_ns) if dyn_bound is not None else wm_ns
+
         entry = cfg.cache.entry(fingerprint)
         # temporal bucket key in the state schema (the date_trunc group-by
         # output, or the __qc_bucket column dynamic-bound state is kept at):
@@ -4103,32 +4197,17 @@ class CachedSparkSession(RefreshTiers):
             # as-of store time (no upper bound at all, SURVEY §4.4.2).
             decision.cache_hit = True
             decision.watermark_ns = entry.watermark_ns
-            if cfg.result_memo:
-                if dyn_bound is not None:
-                    # dynamic results depend on the pinned now too (a repeat
-                    # at the same now has the same boundary; an earlier now
-                    # would pick a different lower and must NOT serve the
-                    # memo) — the memo key carries (state watermark, now),
-                    # which determines the bound exactly
-                    memo = self._result_memo.get(
-                        (
-                            fingerprint,
-                            ("dyn", entry.watermark_ns, now_ns),
-                            post_key,
-                        )
-                    )
-                else:
-                    memo = self._result_memo.get(
-                        (fingerprint, entry.watermark_ns, post_key)
-                    )
-                if memo is not None:
-                    # this session already finalized a result at this exact
-                    # watermark: same state, same pure finalize → same rows.
-                    decision.served_from_memo = True
-                    cfg.log.info(
-                        fingerprint, "cache hit: result memo (no Spark work)"
-                    )
-                    return memo, decision
+            # dynamic results depend on the pinned now too (a repeat at
+            # the same now has the same boundary; an earlier now would pick
+            # a different lower and must NOT serve the memo) — the memo key
+            # carries (state watermark, now), which determines the bound
+            memo = self._memo_get(fingerprint, memo_wm(wm0), post_key)
+            if memo is not None:
+                # this session already finalized a result at this exact
+                # watermark: same state, same pure finalize → same rows.
+                decision.served_from_memo = True
+                cfg.log.info(fingerprint, "cache hit: result memo (no Spark work)")
+                return memo, decision
             cfg.log.info(fingerprint, "cache hit: fresh window empty, serving state")
             merged = None
             if cached_state is None:
@@ -4168,7 +4247,6 @@ class CachedSparkSession(RefreshTiers):
                 pc_col = cfg.temporal_partition_columns.get(ts_col)
                 pc_arg = pc_col if (pc_col and pc_col in base_cols) else None
                 res = None
-                memo_key = now_ns
                 if dyn_bound is None:
                     # static ladder: nano (driver pyarrow scan, bytes-
                     # gated) → lite (one plain-sized job + driver merge)
@@ -4251,10 +4329,6 @@ class CachedSparkSession(RefreshTiers):
                                 tpl, entry, cached_state, wm_ns, now_ns,
                                 dyn_bound.rhs, decision, spec, state_cols,
                             )
-                    if res is not None:
-                        # the bound is a pure function of the pinned now,
-                        # so (state watermark, now) keys the memo exactly
-                        memo_key = ("dyn", now_ns, now_ns)
                 if res is not None:
                     decision.cache_hit = True
                     decision.watermark_ns = wm_ns
@@ -4263,7 +4337,7 @@ class CachedSparkSession(RefreshTiers):
                         f"cache hit: incremental refresh from watermark {wm_ns}",
                     )
                     # entry watermark is now now_ns: memo for hot re-reads
-                    self._memo_result(fingerprint, memo_key, res, post_key)
+                    self._memo_result(fingerprint, memo_wm(now_ns), res, post_key)
                     return res, decision
             scan_hi, store_wm_ns = data_scan_wm(wm_ns)
             merged, obs = self._warm_merge(
@@ -4387,13 +4461,22 @@ class CachedSparkSession(RefreshTiers):
         if merged is not None:
             self.last_refresh_df = merged
         stored = None
-        if (
-            merged is not None
+        tail_wm = (
+            decision.watermark_ns
+            if merged is not None
             and decision.cache_hit
             and decision.semantic_donor is None
             and entry.bucket_col
-            and decision.watermark_ns is not None
-        ):
+            else None
+        )
+        if dyn_bound is not None:
+            # evaluate the bound once at plan time (reference captures "now"
+            # the same way, ``src/aggregate.rs:375-382``) — in the same
+            # one-row job as the old watermark's bucket the tail store needs
+            dyn_eval = self._eval_bound_and_bucket(
+                dyn_bound.rhs, now_ns, bucket_gran, tail_wm
+            )
+        if tail_wm is not None:
             # big-state warm refresh on this entry's own watermark: store
             # only the changed-bucket TAIL as a new layer (fresh rows have
             # ts >= wm, so only buckets >= trunc(wm) changed) — the write
@@ -4404,20 +4487,15 @@ class CachedSparkSession(RefreshTiers):
                 rows0 = entry.state_rows()
                 cap0 = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
                 if rows0 is not None and rows0 > cap0:
-                    # truncate the OLD watermark to the bucket JVM-side
+                    # the OLD watermark truncated to the bucket JVM-side
                     # (session-timezone calendar semantics, matching how
                     # the state buckets themselves were computed)
                     lo_val = (
-                        self.spark.range(0, 1, 1, 1)
-                        .select(
-                            F.date_trunc(
-                                bucket_gran,
-                                F.timestamp_micros(
-                                    F.lit(decision.watermark_ns // 1000)
-                                ),
-                            ).alias("b")
-                        )
-                        .collect()[0]["b"]
+                        dyn_eval[5]
+                        if dyn_eval is not None
+                        else self.spark.range(0, 1, 1, 1)
+                        .select(self._wm_bucket_col(tail_wm, bucket_gran))
+                        .collect()[0]["wb"]
                     )
                     stored = entry.put_bucket_tail(
                         store_wm_ns, merged, lo_val, self.spark
@@ -4502,12 +4580,6 @@ class CachedSparkSession(RefreshTiers):
             stored = acc
 
         if dyn_bound is not None:
-            # evaluate the bound once at plan time (reference captures "now"
-            # the same way, ``src/aggregate.rs:375-382``)
-            if dyn_eval is None:
-                dyn_eval = self._eval_bound_and_bucket(
-                    dyn_bound.rhs, now_ns, bucket_gran
-                )
             lower, boundary = dyn_eval[0], dyn_eval[1]
             decision.dynamic_lower = lower
             bucket_dtype = dict(stored.dtypes)[bucket_name]
@@ -4625,6 +4697,17 @@ class CachedSparkSession(RefreshTiers):
             out = stored.select(*final_select)
 
         out = self._apply_order_limit(out, spec)
+        if (
+            spec.limit is not None
+            and spec.limit <= getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
+            and not spec.offset
+        ):
+            # bounded result: collect it once here, so a hot re-read at the
+            # same key is a memo hit with no Spark job (the big_state hot
+            # reload). A result without LIMIT stays lazy: no driver collect
+            # of an unbounded result.
+            wm = store_wm_ns if merged is not None else decision.watermark_ns
+            out = self._memo_collect(fingerprint, memo_wm(wm), out, post_key)
         return out, decision
 
     def _finalize_fused(

@@ -15,6 +15,10 @@ re-associate fp sums — inherent to ANY incremental engine, reference
 included: its accumulator merge is the same re-association,
 ``src/aggregate.rs:402-409``).
 
+After each refresh the same SQL is re-issued at the same now (a hot
+reload) and compared with the same plain rows; the summary counts the hot
+reloads served from the result memo.
+
 Usage: python tools/fuzz_tiers.py [trials] [seed] [sf_dir]
 Exit 0 = every comparison on every refresh of every trial matched.
 """
@@ -570,6 +574,18 @@ def _close(a, b):
     return a == b
 
 
+def _mismatch(g_rows, p_rows):
+    """None when the sorted row lists match, else a short description."""
+    diff = [
+        (gr, pr)
+        for gr, pr in zip(g_rows, p_rows)
+        if not all(_close(a, b) for a, b in zip(gr, pr))
+    ]
+    if len(g_rows) == len(p_rows) and not diff:
+        return None
+    return f"MISMATCH {len(g_rows)}/{len(p_rows)} {diff[:2]}"
+
+
 def _norm_row(r):
     """Canonicalize signed zeros: repr(-0.0) != repr(0.0) makes the
     repr-keyed sort pair duplicate-key UNION ALL rows crosswise when a
@@ -690,6 +706,7 @@ def main() -> int:
     failures = []
     tiers_seen: dict = {}
     corruptions = 0
+    hot_reloads = memo_hits = 0
     for trial in range(TRIALS):
         mode_p = rng.random()
         filter_mode = mode_p < 0.22
@@ -1053,23 +1070,27 @@ def main() -> int:
             p_rows = sorted(
                 (_norm_row(r) for r in spark.sql(s).collect()), key=repr
             )
-            ok = len(g_rows) == len(p_rows) and all(
-                all(_close(a, b) for a, b in zip(gr, pr))
-                for gr, pr in zip(g_rows, p_rows)
-            )
-            if not ok:
-                diff = [
-                    (gr, pr)
-                    for gr, pr in zip(g_rows, p_rows)
-                    if not all(_close(a, b) for a, b in zip(gr, pr))
-                ][:2]
-                failures.append(
-                    (trial, i, sql, f"MISMATCH {len(g_rows)}/{len(p_rows)} {diff}")
-                )
+            bad = _mismatch(g_rows, p_rows)
+            if bad:
+                failures.append((trial, i, sql, bad))
                 break
             if i > 0:
                 t = qc.last_decision.refresh_tier
                 tiers_seen[t] = tiers_seen.get(t, 0) + 1
+            # hot reload: the same SQL at the same now reads the same rows
+            # (a result-memo hit wherever the shape is memoized)
+            try:
+                got = qc.sql(sql)
+                h_rows = sorted((_norm_row(r) for r in got.collect()), key=repr)
+            except Exception as e:  # noqa: BLE001 — report, keep fuzzing
+                failures.append((trial, i, sql, f"HOT RELOAD ENGINE ERROR {e}"))
+                break
+            hot_reloads += 1
+            memo_hits += qc.last_decision.served_from_memo
+            bad = _mismatch(h_rows, p_rows)
+            if bad:
+                failures.append((trial, i, sql, f"HOT RELOAD {bad}"))
+                break
         if trace:
             import time as _time
 
@@ -1085,6 +1106,7 @@ def main() -> int:
             )
 
     print(f"\ntiers exercised: {tiers_seen} corruptions={corruptions}")
+    print(f"hot reloads: {hot_reloads} memo hits={memo_hits}")
     if failures:
         print(f"{len(failures)} FAILURES:")
         for t, i, sql, msg in failures[:20]:
