@@ -133,15 +133,18 @@ class QueryCacheConfig:
     #: store a runaway state — ``approx_count_distinct`` (constant-size
     #: HLL state) is the scale path. ``None`` = unlimited.
     distinct_max_values: Optional[int] = 1_000_000
-    #: Byte budget for the driver-local "nano" dynamic-refresh tier
-    #: (``nano.py``): when the query's source is a locally registered
-    #: parquet table whose TOTAL file size fits this budget, the
-    #: per-refresh fresh-tail + boundary scan runs driver-side via pyarrow
-    #: (row-group pruning, vectorized group_by) instead of paying a Spark
-    #: job's per-refresh parse/optimize/codegen fixed cost (~0.3 s). Gated
-    #: in BYTES, not rows, per the r4/r5 driver-collect advice. Above the
-    #: budget — the 100 TB case — the distributed lite/template tiers run
-    #: unconditionally. 0 disables the tier.
+    #: Byte budget for the driver-local "nano" tier (``nano.py``): when
+    #: the query's source is a locally registered parquet table whose
+    #: TOTAL file size fits this budget, the per-refresh fresh-tail +
+    #: boundary scan runs driver-side via pyarrow (row-group pruning,
+    #: vectorized group_by) instead of paying a Spark job's per-refresh
+    #: parse/optimize/codegen fixed cost (~0.3 s). The same budget gates
+    #: a cache MISS: a cold load under it computes the state with one
+    #: pyarrow scan of the whole history instead of the classic
+    #: compute-and-store jobs. Gated in BYTES, not rows, per the r4/r5
+    #: driver-collect advice. Above the budget — the 100 TB case — the
+    #: distributed tiers run unconditionally. 0 disables the tier for
+    #: refreshes and misses alike.
     nano_refresh_max_bytes: int = 256 << 20
     #: ``x IN (SELECT …)`` fold cap: the inner cached aggregate's result
     #: column is collected driver-side and folded into the outer predicate

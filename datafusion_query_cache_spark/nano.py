@@ -1,4 +1,4 @@
-"""Driver-local dynamic-refresh scan tier ("nano").
+"""Driver-local scan tier ("nano"): serves warm refreshes and cold loads.
 
 The dynamic-bound warm path's floor cost in Spark is the per-refresh JVM
 query compilation: any job with fresh literal bounds pays parse + analyze
@@ -15,6 +15,15 @@ as the Spark scan), computes the partial aggregates with vectorized
 ``Table.group_by`` (no Python per-row loop), and hands the handful of
 partial rows to the same driver merge the lite tier uses
 (``functions/partial.py py_merge/py_finalize``).
+
+The same programs serve a cache MISS (``CachedSparkSession._plan_cached``
+and ``_plan_filter``): run with an empty starting state and no lower scan
+bound (``wm_ns=None``), the "fresh window" is the whole history below
+now, so the miss costs one pyarrow scan instead of the 3–4 Spark jobs of
+the classic compute-and-store (the reference's run 1 is likewise one
+in-process ``Final(Partial(scan))`` plus a store). A miss whose partial
+groups exceed the entry's driver-collect cap, or that hits any other
+refusal below, falls through to the classic miss.
 
 Admission is a strict contract, everything else falls through to the
 distributed tiers (lite → fused template → classic):
@@ -771,13 +780,16 @@ class NanoProgram:
 
     # -- temporal window mirrors (ints, exact) --------------------------
 
-    def _scan(self, wm_ns: int, now_ns: int, bound_us: int, bhi_us: int):
+    def _scan(self, wm_ns: Optional[int], now_ns: int, bound_us: int,
+              bhi_us: int):
         """Load admitted rows. The dataset filter is the same pushable
         OR-of-ranges the Spark scan uses — pyarrow prunes whole row groups
         by parquet statistics, so the read set is (fresh-tail row groups)
         ∪ (boundary-bucket row groups), NOT the envelope between them.
         The exact per-row window masks are applied after load, mirroring
-        the engine's ns/µs conjunctions exactly."""
+        the engine's ns/µs conjunctions exactly. ``wm_ns=None`` (a cold
+        load) drops the lower bound: the fresh window is the whole history
+        below now, pre-1970 rows included."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.dataset as pds
@@ -787,16 +799,20 @@ class NanoProgram:
         if raw_is_ns_ts:
             # the Spark view reads these as epoch-ns longs (nanosAsLong);
             # pyarrow reads the same parquet as timestamp[ns]
-            lo_f = pa.scalar(wm_ns // 1000 * 1000, pa.timestamp("ns"))
-            hi_f = pa.scalar(now_ns, pa.timestamp("ns"))
-            lo_b = pa.scalar(bound_us * 1000, pa.timestamp("ns"))
-            hi_b = pa.scalar(bhi_us * 1000, pa.timestamp("ns"))
+            unit = pa.timestamp("ns")
+            lo_f = None if wm_ns is None else pa.scalar(wm_ns // 1000 * 1000, unit)
+            hi_f = pa.scalar(now_ns, unit)
+            lo_b = pa.scalar(bound_us * 1000, unit)
+            hi_b = pa.scalar(bhi_us * 1000, unit)
         else:
-            lo_f = pa.scalar(_dt_of_us(wm_ns // 1000), pa.timestamp("us"))
-            hi_f = pa.scalar(_dt_of_us(-(-now_ns // 1000)), pa.timestamp("us"))
-            lo_b = pa.scalar(_dt_of_us(bound_us), pa.timestamp("us"))
-            hi_b = pa.scalar(_dt_of_us(bhi_us), pa.timestamp("us"))
-        flt = (f >= lo_f) & (f < hi_f)
+            unit = pa.timestamp("us")
+            lo_f = None if wm_ns is None else pa.scalar(_dt_of_us(wm_ns // 1000), unit)
+            hi_f = pa.scalar(_dt_of_us(-(-now_ns // 1000)), unit)
+            lo_b = pa.scalar(_dt_of_us(bound_us), unit)
+            hi_b = pa.scalar(_dt_of_us(bhi_us), unit)
+        flt = f < hi_f
+        if lo_f is not None:
+            flt = (f >= lo_f) & flt
         if not self.static:
             flt = flt | ((f >= lo_b) & (f < hi_b))
         tbl = self._ds.to_table(columns=self.columns, filter=flt)
@@ -825,7 +841,9 @@ class NanoProgram:
             ts_us_dt = pc.cast(us, pa.timestamp("us"))
             # fresh tail: ns ∈ [wm, now); the engine's extra µs bracket is
             # implied (floor/ceil of the same bounds)
-            f_mask = pc.and_(pc.greater_equal(ns, wm_ns), pc.less(ns, now_ns))
+            f_mask = pc.less(ns, now_ns)
+            if wm_ns is not None:
+                f_mask = pc.and_(pc.greater_equal(ns, wm_ns), f_mask)
             # boundary: the engine's exact conjunction — the ns range AND
             # the µs comparisons on the user-facing derived timestamp
             b_mask = pc.and_(
@@ -844,8 +862,10 @@ class NanoProgram:
             # µs/NTZ source: the derived ns shadow is ts*1000 exactly, so
             # the engine's ns∧µs conjunction reduces to ceil-µs bounds
             ts_us_dt = ts
-            lo = pa.scalar(_dt_of_us(-(-wm_ns // 1000)), pa.timestamp("us"))
-            f_mask = pc.and_(pc.greater_equal(ts, lo), pc.less(ts, hi_f))
+            f_mask = pc.less(ts, hi_f)
+            if wm_ns is not None:
+                lo = pa.scalar(_dt_of_us(-(-wm_ns // 1000)), unit)
+                f_mask = pc.and_(pc.greater_equal(ts, lo), f_mask)
             b_mask = pc.and_(
                 pc.greater(ts, lo_b)
                 if self.dyn_op == ">"
@@ -876,9 +896,13 @@ class NanoProgram:
                 out[g.name] = b
         return out
 
-    def _partials(self, tbl, garrs, mask) -> Tuple[Dict[tuple, dict], int]:
+    def _partials(
+        self, tbl, garrs, mask, max_groups: Optional[int] = None
+    ) -> Tuple[Dict[tuple, dict], int]:
         """Vectorized partial aggregation of the masked subset →
-        {group key tuple: {state col: value}}, plus the raw row count."""
+        {group key tuple: {state col: value}}, plus the raw row count.
+        More than ``max_groups`` groups raises before any row reaches
+        Python: the driver-collect cap the Spark tiers apply."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -934,6 +958,10 @@ class NanoProgram:
                 aggs.append((src_int[r.src], r.fn))
             outs.append(key)
         res = work.group_by(g_int).aggregate(aggs)
+        if max_groups is not None and res.num_rows > max_groups:
+            raise NanoUnsupported(
+                f"{res.num_rows} groups over the {max_groups}-row collect cap"
+            )
         # column layout varies across pyarrow versions (keys first vs
         # aggregates first); the reserved names identify the group block
         # exactly, and the aggregate block is positional in aggs order
@@ -959,15 +987,18 @@ class NanoProgram:
             parts[k] = st
         return parts, n
 
-    def run(self, wm_ns: int, now_ns: int, jvm_eval=None):
+    def run(self, wm_ns: Optional[int], now_ns: int, jvm_eval=None,
+            max_groups: Optional[int] = None):
         """One refresh: returns (fresh_parts, bnd_parts, boundary,
         fresh_rows, bound). Pure driver-side — no Spark job. In static
         mode there is no bound/boundary: only the fresh window scans and
-        bnd_parts/boundary/bound come back empty."""
+        bnd_parts/boundary/bound come back empty. ``wm_ns=None`` scans the
+        whole history (a cold load's state); ``max_groups`` caps the
+        fresh partial groups (see ``_partials``)."""
         if self.static:
             tbl, ts_us_dt, f_mask, _ = self._scan(wm_ns, now_ns, 0, 0)
             garrs = self._group_arrays(tbl, ts_us_dt)
-            fresh, fresh_rows = self._partials(tbl, garrs, f_mask)
+            fresh, fresh_rows = self._partials(tbl, garrs, f_mask, max_groups)
             return fresh, {}, None, fresh_rows, None
 
         if self.rhs_python:
@@ -985,7 +1016,7 @@ class NanoProgram:
             wm_ns, now_ns, bound_us, bhi_us
         )
         garrs = self._group_arrays(tbl, ts_us_dt)
-        fresh, fresh_rows = self._partials(tbl, garrs, f_mask)
+        fresh, fresh_rows = self._partials(tbl, garrs, f_mask, max_groups)
         bnd, _ = self._partials(tbl, garrs, b_mask)
         boundary = bucket.date() if self.bucket_is_date else bucket
         return fresh, bnd, boundary, fresh_rows, bound_dt
@@ -1253,25 +1284,31 @@ class NanoTopKProgram:
     _stat_sig = NanoProgram._stat_sig
     validate = NanoProgram.validate
 
-    def refresh(self, state_tbl, wm_ns: int, now_ns: int):
+    def refresh(self, state_tbl, wm_ns: Optional[int], now_ns: int):
         """topk(state ∪ fresh[wm, now)) as a pyarrow Table in the state
         schema. Window bounds mirror ``_push_time_bounds`` exactly: the
         ns range is binding (ns-long sources read raw ns; µs sources
-        reduce it to ceil-µs bounds)."""
+        reduce it to ceil-µs bounds). ``wm_ns=None`` with an empty
+        ``state_tbl`` is a cold load: no lower bound."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.dataset as pds
 
         f = pds.field(self.ts_col)
         if self.ts_kind == "ns_long":
-            lo_f = pa.scalar(wm_ns, pa.timestamp("ns"))
-            hi_f = pa.scalar(now_ns, pa.timestamp("ns"))
+            unit = pa.timestamp("ns")
+            lo_f = None if wm_ns is None else pa.scalar(wm_ns, unit)
+            hi_f = pa.scalar(now_ns, unit)
         else:
-            lo_f = pa.scalar(_dt_of_us(-(-wm_ns // 1000)), pa.timestamp("us"))
-            hi_f = pa.scalar(_dt_of_us(-(-now_ns // 1000)), pa.timestamp("us"))
-        tbl = self._ds.to_table(
-            columns=self.scan_columns, filter=(f >= lo_f) & (f < hi_f)
-        )
+            unit = pa.timestamp("us")
+            lo_f = None if wm_ns is None else pa.scalar(
+                _dt_of_us(-(-wm_ns // 1000)), unit
+            )
+            hi_f = pa.scalar(_dt_of_us(-(-now_ns // 1000)), unit)
+        flt = f < hi_f
+        if lo_f is not None:
+            flt = (f >= lo_f) & flt
+        tbl = self._ds.to_table(columns=self.scan_columns, filter=flt)
         if self.pred_fn is not None:
             tbl = tbl.filter(self.pred_fn(tbl))
 

@@ -51,6 +51,7 @@ from .plans.classify import (
 )
 from .plans.ir import AggSpec, Col, Lit, Unsupported
 from .plans.parser import parse_agg_query
+from .sources.tables import LOCAL_PARQUET_SOURCES
 from .tiers import (  # noqa: F401  (Decision re-exported)
     Decision,
     RefreshTiers,
@@ -309,8 +310,8 @@ class CachedSparkSession(RefreshTiers):
             *[c for c in state.columns if not c.startswith("__qc")]
         )
         base = self.spark.table(info["tables"][0])
-        if info["pred"] is not None:
-            base = base.filter(info["pred"])
+        if spec.predicate is not None:
+            base = base.filter(to_column(spec.predicate))
         ts_col = info["ts_col"]
         base = _push_time_bounds(base, ts_col, f"{ts_col}_ns", None, wm_ns)
         if spec.items is not None:
@@ -933,7 +934,6 @@ class CachedSparkSession(RefreshTiers):
         )
         now_ns = self._now_ns()
         entry = cfg.cache.entry(fingerprint)
-        pred = to_column(spec.predicate) if spec.predicate is not None else None
         shadow = f"{ts_col}_ns"
 
         # trust-but-verify hook: audit() recomputes hash-bucket counts of
@@ -943,7 +943,6 @@ class CachedSparkSession(RefreshTiers):
         self._audit_info[fingerprint] = {
             "kind": "filter",
             "spec": spec,
-            "pred": pred,
             "ts_col": ts_col,
             "tables": [spec.table],
             "out_names": out_names,
@@ -1021,6 +1020,20 @@ class CachedSparkSession(RefreshTiers):
                 hit = False
                 stale = True
 
+        hot = hit and entry.watermark_ns is not None and now_ns <= entry.watermark_ns
+        if hot and topk:
+            memo = self._memo_get(fingerprint, entry.watermark_ns)
+            if memo is not None:
+                # the driver top-k tier finalized this watermark already;
+                # looked up before the predicate and source frames are
+                # built, so the hit pays none of their py4j calls
+                decision.cache_hit = True
+                decision.watermark_ns = entry.watermark_ns
+                decision.served_from_memo = True
+                cfg.log.info(fingerprint, "filter cache hit: result memo (no Spark work)")
+                return memo, decision
+
+        pred = to_column(spec.predicate) if spec.predicate is not None else None
         src = base if pred is None else base.filter(pred)
 
         def store_wm(lo_ns: Optional[int]) -> int:
@@ -1048,15 +1061,19 @@ class CachedSparkSession(RefreshTiers):
                 return int(mx) + 1
             return lo_ns if lo_ns is not None else 0
 
-        def topk_nano_stored(wm_ns: int, swm: int):
+        def topk_nano_stored(wm_ns: Optional[int], swm: int, cold_schema=None):
             """Driver tier for the maintained top-k (zero Spark jobs):
             ``topk(state ∪ fresh)`` over ≤k state rows and a byte-gated
             fresh tail is a pyarrow scan + sort (``nano.NanoTopKProgram``)
             — the two small Spark jobs the distributed path pays per
-            refresh cost more than the scan at this size. Returns the
+            refresh cost more than the scan at this size. A cold load
+            passes ``wm_ns=None`` and the schema the classic miss would
+            store: empty starting state, whole history. Returns the
             stored-state LocalRelation, or None → Spark path."""
             from .nano import build_nano_topk_program
 
+            if not self._nano_sources_ok(fingerprint, {spec.table: base}):
+                return None
             if not self._nano_tz_ok(fingerprint):
                 return None
             key = ("topknano", fingerprint)
@@ -1098,8 +1115,14 @@ class CachedSparkSession(RefreshTiers):
                 return None
             try:
                 prog.validate(spec.table)
-                state_tbl = entry.get_arrow()
-                st_schema = entry.state_schema()
+                if wm_ns is None:
+                    from pyspark.sql.pandas.types import to_arrow_schema
+
+                    st_schema = cold_schema
+                    state_tbl = to_arrow_schema(st_schema).empty_table()
+                else:
+                    state_tbl = entry.get_arrow()
+                    st_schema = entry.state_schema()
                 if state_tbl is None or st_schema is None:
                     return None
                 res = prog.refresh(state_tbl, wm_ns, swm)
@@ -1124,7 +1147,7 @@ class CachedSparkSession(RefreshTiers):
                 cfg.log.info(fingerprint, f"top-k nano refresh degraded ({e})")
                 return None
 
-        if hit and entry.watermark_ns is not None and now_ns <= entry.watermark_ns:
+        if hot:
             # hot read: the refresh window [wm, now) is provably empty —
             # including a now BELOW the watermark (override_now_ns replay;
             # wall clocks are monotone). Serve stored rows as-of the
@@ -1135,12 +1158,6 @@ class CachedSparkSession(RefreshTiers):
             wm_ns = entry.watermark_ns
             decision.cache_hit = True
             decision.watermark_ns = wm_ns
-            memo = self._memo_get(fingerprint, wm_ns) if topk else None
-            if memo is not None:
-                # the driver top-k tier finalized this watermark already
-                decision.served_from_memo = True
-                cfg.log.info(fingerprint, "filter cache hit: result memo (no Spark work)")
-                return memo, decision
             stored = state if state is not None else entry.get(self.spark)
             cfg.log.info(fingerprint, "filter cache hot read: empty window")
         elif hit:
@@ -1228,8 +1245,19 @@ class CachedSparkSession(RefreshTiers):
                 swm = store_wm(None)
                 rows = project_store(bounds(src, hi_ns=swm))
                 if topk:
-                    rows = rows.orderBy(*sort_cols()).limit(spec.limit)
-                    stored = entry.put(swm, rows, self.spark)
+                    if (
+                        spec.table in LOCAL_PARQUET_SOURCES
+                        and cfg.nano_refresh_max_bytes
+                        and cfg.watermark_mode == "now"
+                    ):
+                        # typed by the frame the classic miss stores (its
+                        # sort and limit keep the schema): analysis only
+                        stored = topk_nano_stored(None, swm, rows.schema)
+                    if stored is not None:
+                        decision.refresh_tier = "nano"
+                    else:
+                        rows = rows.orderBy(*sort_cols()).limit(spec.limit)
+                        stored = entry.put(swm, rows, self.spark)
                 else:
                     stored = entry.append(
                         swm,
@@ -4104,6 +4132,39 @@ class CachedSparkSession(RefreshTiers):
         hit = entry.occupied
         state_is_local = False
         cached_state = None
+        pc_col = cfg.temporal_partition_columns.get(ts_col)
+        pc_arg = pc_col if (pc_col and pc_col in base_cols) else None
+        # the gates the nano/lite/template programs share, warm or cold
+        driver_tiers_ok = (
+            not spec.grouping_sets
+            and spec.offset is None  # pagination: classic path only
+            and not cfg.salt_buckets  # salted program is classic-only
+            # data-watermark mode needs the max-ts job the templates
+            # don't carry: classic path only
+            and cfg.watermark_mode == "now"
+        )
+
+        def run_nano(state_frame: DataFrame, wm_ns: Optional[int]):
+            """The nano rung of the tier ladder (driver pyarrow scan of a
+            bytes-gated registered source, no Spark job), shared by the
+            warm refresh (``state_frame`` = the stored state) and the cold
+            load (``wm_ns=None``: no stored state, no lower scan bound;
+            ``state_frame`` = the frame the classic miss would store).
+            Returns the result, or None → the caller's next tier."""
+            if not self._nano_sources_ok(fingerprint, frames):
+                return None
+            tpl = self._nano_template(
+                pkey, fingerprint, spec, plans, state_group, group_names,
+                state_cols, merge_aggs, state_frame, tables, ts_col,
+                state_pred_expr, dyn_bound, bucket_name, bucket_gran,
+            )
+            if tpl is None:
+                return None
+            return self._run_nano(
+                tpl, entry, state_frame, wm_ns, now_ns,
+                dyn_bound.rhs if dyn_bound is not None else None,
+                decision, spec,
+            )
 
         def data_scan_wm(lo_ns: Optional[int]):
             """``watermark_mode='data'``: collect max event time over
@@ -4174,6 +4235,7 @@ class CachedSparkSession(RefreshTiers):
                 hit = False
 
         store_wm_ns = now_ns  # overridden per-branch by data_scan_wm
+        cold_res = None  # a miss served by run_nano
         wm0 = entry.watermark_ns if hit else None
         if hit and wm0 is not None and (
             now_ns <= wm0
@@ -4229,39 +4291,18 @@ class CachedSparkSession(RefreshTiers):
                     state_is_local = rows is not None and rows <= cap
                 else:
                     _local_state()
-            if (
-                state_is_local
-                and not spec.grouping_sets
-                and spec.offset is None  # pagination: classic path only
-                and not cfg.salt_buckets  # salted program is classic-only
-                # data-watermark mode needs the max-ts job the template
-                # doesn't carry: classic path only
-                and cfg.watermark_mode == "now"
-            ):
+            if state_is_local and driver_tiers_ok:
                 # SQL-template fast path: the whole refresh program as ONE
                 # JVM-parsed SQL string (built once per query shape) — the
                 # resulting physical plan is identical to the DataFrame
                 # program below, minus ~600 py4j round-trips per call. The
                 # dynamic-bound variant additionally folds the boundary
                 # recompute + final re-aggregate into the same program.
-                pc_col = cfg.temporal_partition_columns.get(ts_col)
-                pc_arg = pc_col if (pc_col and pc_col in base_cols) else None
-                res = None
+                # tier ladder: nano (driver pyarrow scan, bytes-gated) →
+                # lite (one plain-sized job + driver merge) → fused
+                # one-job template; each falls through on inadmission
+                res = run_nano(cached_state, wm_ns)
                 if dyn_bound is None:
-                    # static ladder: nano (driver pyarrow scan, bytes-
-                    # gated) → lite (one plain-sized job + driver merge)
-                    # → fused template; each falls through
-                    sntpl = self._static_nano_template(
-                        pkey, fingerprint, spec, plans, state_group,
-                        group_names, state_cols, partial_aggs, merge_aggs,
-                        pred, state_pred_expr, ts_col, shadow in base_cols,
-                        pc_arg, cached_state.schema, tables,
-                    )
-                    if sntpl is not None:
-                        res = self._run_static_nano(
-                            sntpl, entry, cached_state, wm_ns, now_ns,
-                            decision, spec,
-                        )
                     if res is None:
                         sltpl = self._static_lite_template(
                             pkey, fingerprint, spec, plans, state_group,
@@ -4287,22 +4328,6 @@ class CachedSparkSession(RefreshTiers):
                                 decision, spec, state_cols,
                             )
                 else:
-                    # tier ladder: nano (driver pyarrow scan, bytes-gated)
-                    # → lite (plain-sized job + driver merge) → fused
-                    # one-job template; each falls through on inadmission
-                    ntpl = self._dyn_nano_template(
-                        pkey, fingerprint, spec, plans, state_group,
-                        group_names, state_cols, partial_aggs, merge_aggs,
-                        pred, ts_col, shadow in base_cols, pc_arg,
-                        cached_state.schema, tables,
-                        bucket_name, bucket_gran, dyn_bound.op,
-                        dyn_bound.rhs, pred_expr=state_pred_expr,
-                    )
-                    if ntpl is not None:
-                        res = self._run_dyn_nano(
-                            ntpl, entry, cached_state, wm_ns, now_ns,
-                            dyn_bound.rhs, decision, spec,
-                        )
                     if res is None:
                         ltpl = self._dyn_lite_template(
                             pkey, fingerprint, spec, plans, state_group,
@@ -4387,7 +4412,24 @@ class CachedSparkSession(RefreshTiers):
                 df = get_base() if pred is None else get_base().filter(pred)
                 df = time_bounds(df, hi_ns=scan_hi)
                 merged = partial_agg(df)
-                cfg.log.info(fingerprint, "cache miss: computing and storing state")
+                if (
+                    # pure-Python gates: a plain temp view pays no py4j
+                    # call and no program build
+                    tables[0] in LOCAL_PARQUET_SOURCES
+                    and cfg.nano_refresh_max_bytes
+                    and driver_tiers_ok
+                ):
+                    # typed by the frame the classic miss would store
+                    # (analysis only): the stored state schema is exactly
+                    # a classic cold load's
+                    cold_res = run_nano(merged, None)
+                if cold_res is None:
+                    cfg.log.info(fingerprint, "cache miss: computing and storing state")
+                else:
+                    cfg.log.info(
+                        fingerprint,
+                        "cache miss: state computed on the driver (nano)",
+                    )
 
         if (
             tgb is not None
@@ -4420,6 +4462,10 @@ class CachedSparkSession(RefreshTiers):
                 )
             except Exception:
                 pass
+
+        if cold_res is not None:
+            self._memo_result(fingerprint, memo_wm(now_ns), cold_res, post_key)
+            return cold_res, decision
 
         # watermark to STORE: query time ("now" mode, reference behavior) or
         # max-event-time-seen + 1 ("data" mode, late-data safety — SURVEY §7

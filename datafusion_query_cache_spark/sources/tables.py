@@ -27,8 +27,9 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
-#: view name → {"path": parquet path, "ts_kinds": {ts col: "us" | "ns_long"}}
-#: for views registered through ``register_parquet_view``. This is the
+#: view name → {"path": parquet path, "ts_kinds": {ts col: "us" | "ns_long"},
+#: "plan_hash": the view's ``semanticHash``} for views registered through
+#: ``register_parquet_view``. This is the
 #: admission contract for the driver-local "nano" dynamic-refresh tier
 #: (``nano.py``): only sources registered through THIS api — whose exact
 #: view derivation (ns-shadow normalization) is therefore known — qualify
@@ -110,6 +111,10 @@ def register_parquet_view(spark: SparkSession, name: str, path: str) -> DataFram
         "ts_kinds": {
             c: ("ns_long" if c in ns_cols else "us") for c in ts_cols
         },
+        # the view's canonical plan: a later createOrReplaceTempView under
+        # the same name (a filtered subset, say) changes it, and the nano
+        # tier, which reads ``path`` itself, must then stand aside
+        "plan_hash": df.semanticHash(),
     }
     return df
 

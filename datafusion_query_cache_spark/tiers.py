@@ -14,8 +14,8 @@ into a result —
   group-count state rows (``_build_dyn_lite_template`` / ``_run_dyn_lite``,
   static twin ``_static_lite_template`` / ``_run_static_lite``);
 * **nano** — zero-Spark-job driver refresh via pyarrow over a byte-gated
-  fresh tail (``_dyn_nano_template`` / ``_run_dyn_nano``, static twin
-  ``_static_nano_template`` / ``_run_static_nano``; programs in ``nano.py``).
+  fresh tail (``_nano_template`` / ``_run_nano``; programs in ``nano.py``),
+  which also serves a cold load's whole-history scan.
 
 Also home to the shared planning helpers (``_push_time_bounds``,
 ``_order_col``) and the :class:`Decision` observability record, imported
@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from .cache import StateCardinalityExceeded, arrow_to_spark
 from .functions.compile import to_column
 from .plans.ir import AggSpec, Col, Lit, Unsupported
+from .sources.tables import LOCAL_PARQUET_SOURCES
 
 #: Summed on-disk source bytes under which a refresh collect narrows its
 #: merge shuffle to 2 reduce tasks with AQE off (see
@@ -138,7 +139,9 @@ class Decision:
     #: pyarrow scan), "lite" (one plain-sized job + driver merge),
     #: "template" (fused one-job SQL), or "classic" (DataFrame assembly);
     #: filter queries — "nano" (driver top-k), "topk" (Spark-path top-k
-    #: union+sort+limit), or "rowset" (appended row sets)
+    #: union+sort+limit), or "rowset" (appended row sets). On a miss
+    #: (``cache_hit`` False): "nano" when the nano program computed the
+    #: state, None for the classic compute-and-store
     refresh_tier: Optional[str] = None
     #: exact fresh-row count when the SQL-template warm path ran (it counts
     #: via a rider aggregate instead of an Observation)
@@ -511,7 +514,6 @@ class RefreshTiers:
         if spec is None:
             return False
         from .nano import _source_bytes
-        from .sources.tables import LOCAL_PARQUET_SOURCES
 
         total = 0
         now = time.monotonic()
@@ -1305,10 +1307,7 @@ class RefreshTiers:
         ``state_is_local`` gate); the scan stays fully distributed with
         parquet pushdown/pruning, only O(state) rows cross the driver.
         """
-        from pyspark.sql.types import DateType
-
-        rg = [g.name for g in spec.group_by]
-        if bucket_name not in rg:
+        if bucket_name not in [g.name for g in spec.group_by]:
             return None  # cross-bucket merge needed: fused template's job
         # dyn rejects ltz timestamps: the boundary compare / trunc
         # arithmetic driver-side assumes tz-free values (static lite allows
@@ -1319,6 +1318,7 @@ class RefreshTiers:
         )
         if base is None:
             return None
+        self._add_dyn_bucket(base, group_names, bucket_name, bucket_gran)
         core = base.pop("__core")
         q = core["q"]
 
@@ -1340,11 +1340,17 @@ class RefreshTiers:
             f"FROM ({sc['inner_sql']}) __qc_s WHERE {qif} OR {qib} "
             f"GROUP BY {core['gb_exprs']}, {cell}"
         )
-        st_fields = {f.name: f.dataType for f in state_schema.fields}
+        return base
+
+    @staticmethod
+    def _add_dyn_bucket(base: dict, group_names, bucket_name, bucket_gran):
+        """The dynamic-bound driver merge's bucket fields, in place."""
+        from pyspark.sql.types import DateType
+
+        st_fields = {f.name: f.dataType for f in base["state_schema"].fields}
         base["bucket_idx"] = group_names.index(bucket_name)
         base["bucket_gran"] = bucket_gran
         base["bucket_is_date"] = isinstance(st_fields[bucket_name], DateType)
-        return base
 
     def _lite_base(
         self,
@@ -1361,10 +1367,46 @@ class RefreshTiers:
         tables: List[str],
         allow_ltz: bool,
     ) -> Optional[dict]:
-        """Shared driver-merge scaffolding of the lite/nano tiers: the
-        Python merge program, the partial select items, and the
-        output/state Arrow schemas (a zero-row schema probe — analysis
-        only, no job). None ⇔ some shape has no exact Python mirror."""
+        """The lite tier's scaffolding: the driver merge base plus the
+        SQL core and partial select items its one Spark job runs. None ⇔
+        some shape has no exact Python mirror or SQL template."""
+        base = self._driver_base(
+            spec, plans, group_names, state_cols, merge_aggs, state_schema,
+            allow_ltz,
+        )
+        if base is None:
+            return None
+        core = self._tpl_core(
+            spec, plans, state_group, group_names, state_cols, partial_aggs,
+            merge_aggs, pred, ts_col, state_schema, tables,
+        )
+        if core is None:
+            return None
+        q = core["q"]
+        g_sql = core["g_sql"]
+        base["__core"] = core
+        base["__items"] = [f"{g_sql[n]} AS {q(n)}" for n in group_names] + [
+            f"{self._sql_of(partial_aggs[n])} AS {q(n)}"
+            for n in base["partial_cols"]
+        ]
+        return base
+
+    def _driver_base(
+        self,
+        spec: AggSpec,
+        plans,
+        group_names: List[str],
+        state_cols: List[str],
+        merge_aggs: Dict[str, Column],
+        state_schema,
+        allow_ltz: bool,
+        state_frame: Optional[DataFrame] = None,
+    ) -> Optional[dict]:
+        """Driver-merge scaffolding shared by the lite and nano tiers: the
+        Python merge/finalize program and the output/state Arrow schemas,
+        from a schema probe over ``state_frame`` (any frame of schema
+        ``state_schema``; a zero-row one when None) — analysis only, no
+        job. None ⇔ some shape has no exact Python mirror."""
         from pyspark.sql.pandas.types import to_arrow_schema
         from pyspark.sql.types import (
             ArrayType,
@@ -1379,18 +1421,13 @@ class RefreshTiers:
 
         if spec.grouping_sets:
             return None
+        layout = self._fused_layout(spec)
+        if layout is None:
+            return None
+        out_names, order_names, extra_names = layout
         lp = lite_plan(plans)
         if lp is None:
             return None
-        core = self._tpl_core(
-            spec, plans, state_group, group_names, state_cols, partial_aggs,
-            merge_aggs, pred, ts_col, state_schema, tables,
-        )
-        if core is None:
-            return None
-        q = core["q"]
-        g_sql = core["g_sql"]
-        sql_of = self._sql_of
 
         st_fields = {f.name: f.dataType for f in state_schema.fields}
         for g in group_names:
@@ -1403,18 +1440,14 @@ class RefreshTiers:
                 if isinstance(f.dataType, TimestampType):
                     return None  # ltz: tz-dependent driver arithmetic
 
-        partial_cols = [n for n in state_cols if n not in g_sql]
-        items = [f"{g_sql[n]} AS {q(n)}" for n in group_names]
-        items += [f"{sql_of(partial_aggs[n])} AS {q(n)}" for n in partial_cols]
-
-        # output dtypes via a zero-row schema probe (analysis only, no job)
-        st0 = self.spark.createDataFrame([], state_schema)
+        # output dtypes via a schema probe (analysis only, no job)
+        st0 = state_frame
+        if st0 is None:
+            st0 = self.spark.createDataFrame([], state_schema)
         merged0 = st0.groupBy(*[F.col(n) for n in group_names]).agg(
             *[c.alias(n) for n, c in merge_aggs.items()]
         )
         fin_by = {p.name: p.finalize for p in plans}
-        out_names = core["out_names"]
-        extra_names = core["extra_names"]
         res_names = out_names + extra_names
         out0 = merged0.select(
             *[fin_by[nm] if nm in fin_by else F.col(nm) for nm in res_names]
@@ -1428,15 +1461,13 @@ class RefreshTiers:
         state_arrow = to_arrow_schema(state_schema)
 
         return {
-            "__core": core,
-            "__items": items,
             "group_names": group_names,
-            "partial_cols": partial_cols,
+            "partial_cols": [n for n in state_cols if n not in group_names],
             "merges": lp["merges"],
             "fins": lp["fins"],
             "out_names": out_names,
             "extra_names": extra_names,
-            "order_names": core["order_names"],
+            "order_names": order_names,
             "res_names": res_names,
             "name_to_group": {g: i for i, g in enumerate(group_names)},
             "out_fields": out_fields,
@@ -1627,7 +1658,9 @@ class RefreshTiers:
         )
 
         try:
-            if fresh or not entry.advance_watermark(now_ns):
+            # an empty starting state (a cold load) always writes: the
+            # entry may hold stale state that advancing would keep
+            if fresh or not state or not entry.advance_watermark(now_ns):
                 state_rows = []
                 for k, st in new_state.items():
                     d = {g: k[i] for i, g in enumerate(gnames)}
@@ -1649,7 +1682,7 @@ class RefreshTiers:
             )
         return res
 
-    def _dyn_nano_template(
+    def _nano_template(
         self,
         pkey,
         fingerprint: str,
@@ -1658,62 +1691,185 @@ class RefreshTiers:
         state_group,
         group_names: List[str],
         state_cols: List[str],
-        partial_aggs: Dict[str, Column],
         merge_aggs: Dict[str, Column],
-        pred: Optional[Column],
-        ts_col: str,
-        shadow_ok: bool,
-        part_col: Optional[str],
-        state_schema,
+        state_frame: DataFrame,
         tables: List[str],
-        bucket_name: str,
-        bucket_gran: str,
-        dyn_op: str,
-        dyn_rhs,
-        pred_expr=None,
+        ts_col: str,
+        pred_expr,
+        dyn_bound=None,
+        bucket_name: Optional[str] = None,
+        bucket_gran: Optional[str] = None,
     ) -> Optional[dict]:
-        """Memoized nano-tier program: the lite tier's driver merge plus a
-        bytes-gated pyarrow scan replacing the Spark job (``nano.py``).
-        Simple residual predicates ride as exact pyarrow mask mirrors."""
-        key = ("dynnano", *pkey, state_schema.simpleString())
+        """Memoized nano-tier program: the driver merge base plus a
+        bytes-gated pyarrow scan in place of a Spark job (``nano.py``).
+        Simple residual predicates ride as exact pyarrow mask mirrors,
+        including static bounds on the temporal column such as the paper's
+        ``ts > '2000-01-01'``, whose literals ``_fold_temporal_literals``
+        folds once per build. Static programs admit ltz time-bucket groups
+        (UTC session gate: the aware instants equal the naive UTC floor);
+        dynamic-bound ones (``dyn_bound``) need the bucket among the
+        query's groups. ``state_frame`` is any frame of the state schema
+        (the stored state, or the frame a classic miss would store): the
+        output-schema probe runs over it. Bench rows it wins: every
+        ``small_dashboard`` refresh and cold load, which otherwise pay the
+        lite tier's or the classic miss's Spark jobs."""
+        from pyspark.sql.types import TimestampType
+
+        from .nano import build_nano_program
+
+        state_schema = state_frame.schema
+        kind = "static" if dyn_bound is None else "dyn"
+        key = (kind + "nano", *pkey, state_schema.simpleString())
         if not self._nano_tz_ok(fingerprint):
             return None  # bypass (memo untouched: resumes if tz → UTC)
         if key in self._tpl_cache:
             return self._tpl_cache[key]
         tpl = None
         try:
-            ltpl = self._dyn_lite_template(
-                pkey, fingerprint, spec, plans, state_group, group_names,
-                state_cols, partial_aggs, merge_aggs, pred, ts_col,
-                shadow_ok, part_col, state_schema, tables, bucket_name,
-                bucket_gran, dyn_op,
+            if dyn_bound is not None and bucket_name not in [
+                g.name for g in spec.group_by
+            ]:
+                raise Unsupported("cross-bucket merge (bucket not grouped)")
+            tpl = self._driver_base(
+                spec, plans, group_names, state_cols, merge_aggs,
+                state_schema, allow_ltz=dyn_bound is None,
+                state_frame=state_frame,
             )
-            if ltpl is None:
-                raise Unsupported("lite driver-merge base unavailable")
-            from .nano import build_nano_program
-
-            prog = build_nano_program(
-                tables[0], ts_col, state_group, plans, bucket_name,
-                bucket_gran, dyn_op, dyn_rhs, ltpl["bucket_is_date"],
-                self.config.nano_refresh_max_bytes,
-                pred_expr=self._fold_temporal_literals(pred_expr, ts_col),
-                join_steps=spec.join_steps,
-            )
-            tpl = dict(ltpl)
+            if tpl is None:
+                raise Unsupported("no exact driver merge for this shape")
+            folded = self._fold_temporal_literals(pred_expr, ts_col)
+            if dyn_bound is None:
+                group_ltz = {
+                    f.name
+                    for f in state_schema.fields
+                    if f.name in group_names
+                    and isinstance(f.dataType, TimestampType)
+                }
+                prog = build_nano_program(
+                    tables[0], ts_col, state_group, plans, None, None, ">",
+                    None, False, self.config.nano_refresh_max_bytes,
+                    pred_expr=folded, group_ltz=group_ltz, static=True,
+                    join_steps=spec.join_steps,
+                )
+            else:
+                self._add_dyn_bucket(tpl, group_names, bucket_name, bucket_gran)
+                prog = build_nano_program(
+                    tables[0], ts_col, state_group, plans, bucket_name,
+                    bucket_gran, dyn_bound.op, dyn_bound.rhs,
+                    tpl["bucket_is_date"], self.config.nano_refresh_max_bytes,
+                    pred_expr=folded, join_steps=spec.join_steps,
+                )
             tpl["nano"] = prog
             tpl["table"] = tables[0]
+            tpl["key"] = key
         except Exception as e:
             self.config.log.info(
                 fingerprint,
-                f"dyn nano tier not available ({e}); trying lite/template",
+                f"{kind} nano tier not available ({e}); trying lite/template",
             )
             tpl = None
-        if tpl is not None:
-            tpl["key"] = key
         if len(self._tpl_cache) >= self._MEMO_MAX:
             self._tpl_cache.clear()
         self._tpl_cache[key] = tpl
         return tpl
+
+    def _run_nano(
+        self,
+        tpl: dict,
+        entry,
+        state_frame: DataFrame,
+        wm_ns: Optional[int],
+        now_ns: int,
+        dyn_rhs,
+        decision: Decision,
+        spec: AggSpec,
+    ) -> Optional[DataFrame]:
+        """Execute a nano program: NO Spark job — a pyarrow row-group-
+        pruned scan of the bytes-gated local source, vectorized partial
+        aggregation, and the shared driver merge/finalize/store tail.
+        ``dyn_rhs`` is the dynamic bound's right side (None: static).
+
+        ``wm_ns=None`` is a cold load: no stored state, no lower scan
+        bound, and the partial groups — the whole state — must fit the
+        entry's driver-collect cap. Its refusals (that cap, a pre-1970 ns
+        row) concern the whole-history scan only, so unlike a refresh's
+        they leave the memoized program for later refreshes."""
+        import datetime as _dt
+
+        kind = "static" if dyn_rhs is None else "dyn"
+        fp = decision.fingerprint or ""
+        try:
+            tpl["nano"].validate(tpl["table"])
+        except Exception as e:
+            # source drifted: drop the memo so the NEXT call rebuilds
+            # against the current files; this one takes the Spark tiers,
+            # which resolve the view per call
+            self._tpl_cache.pop(tpl["key"], None)
+            self.config.log.info(
+                fp, f"{kind} nano program stale ({e}); rebuilding next refresh"
+            )
+            return None
+        try:
+            if wm_ns is None:
+                state = {}
+                max_groups = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
+            else:
+                state = self._load_driver_state(tpl, entry, state_frame)
+                max_groups = None  # state_is_local already bounds it
+
+            def jvm_eval():
+                v = self._eval_bound_value(dyn_rhs, now_ns)
+                if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
+                    return _dt.datetime(v.year, v.month, v.day)
+                return v
+
+            fresh, bnd, boundary, fresh_rows, bound_v = tpl["nano"].run(
+                wm_ns, now_ns, jvm_eval=jvm_eval, max_groups=max_groups
+            )
+            if wm_ns is None and not fresh and not tpl["group_names"]:
+                # a global aggregate's state over no rows is ONE row
+                # (count 0, sum NULL), which only the Spark partial
+                # aggregate produces
+                raise Unsupported("global aggregate over no rows")
+            if dyn_rhs is not None:
+                decision.dynamic_lower = bound_v
+            decision.fresh_rows_value = int(fresh_rows)
+            res = self._finish_dyn_driver(
+                tpl, entry, now_ns, decision, spec, state, fresh, bnd,
+                boundary,
+            )
+            decision.refresh_tier = "nano"
+            return res
+        except StateCardinalityExceeded:
+            raise  # cap trip: sql() registers the denial (cap contract)
+        except Exception as e:
+            if wm_ns is None:
+                self.config.log.info(
+                    fp, f"{kind} nano cold load not served ({e}); classic miss"
+                )
+            else:
+                self._tpl_cache[tpl["key"]] = None
+                self.config.log.warn(
+                    fp, f"{kind} nano warm path failed ({e}); falling back"
+                )
+            return None
+
+    def _nano_sources_ok(self, fingerprint: str, frames: Dict[str, DataFrame]) -> bool:
+        """Every source frame is still the view ``register_parquet_view``
+        made. The nano programs read the registered parquet files; a view
+        later replaced under the same name (``createOrReplaceTempView`` of
+        a filtered subset, say) has another canonical plan, and then only
+        the Spark tiers, which resolve the view per call, answer it. One
+        py4j call per table."""
+        for t, fr in frames.items():
+            src = LOCAL_PARQUET_SOURCES.get(t)
+            if src is None or fr.semanticHash() != src.get("plan_hash"):
+                self.config.log.info(
+                    fingerprint,
+                    f"nano tier bypassed: {t} is not its registered parquet view",
+                )
+                return False
+        return True
 
     def _nano_tz_ok(self, fingerprint: str) -> bool:
         """The nano programs evaluate date_trunc buckets and window bounds
@@ -1796,64 +1952,6 @@ class RefreshTiers:
             raise Unsupported("temporal literal casts to NULL")
         return rewrite(pred_expr, lambda x: Instant(int(row[sites[x]])))
 
-    def _run_dyn_nano(
-        self,
-        tpl: dict,
-        entry,
-        cached_state: DataFrame,
-        wm_ns: int,
-        now_ns: int,
-        dyn_rhs,
-        decision: Decision,
-        spec: AggSpec,
-    ) -> Optional[DataFrame]:
-        """Execute the nano refresh: NO Spark job — a pyarrow row-group-
-        pruned scan of the bytes-gated local source, vectorized partial
-        aggregation, and the shared driver merge/finalize/store tail."""
-        import datetime as _dt
-
-        try:
-            tpl["nano"].validate(tpl["table"])
-        except Exception as e:
-            # source drifted: drop the memo so the NEXT refresh rebuilds
-            # against the current files; this one takes the lite/template
-            # tiers, which resolve the view per call
-            self._tpl_cache.pop(tpl["key"], None)
-            self.config.log.info(
-                decision.fingerprint or "",
-                f"dyn nano program stale ({e}); rebuilding next refresh",
-            )
-            return None
-        try:
-            state = self._load_driver_state(tpl, entry, cached_state)
-
-            def jvm_eval():
-                v = self._eval_bound_value(dyn_rhs, now_ns)
-                if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
-                    return _dt.datetime(v.year, v.month, v.day)
-                return v
-
-            fresh, bnd, boundary, fresh_rows, bound_v = tpl["nano"].run(
-                wm_ns, now_ns, jvm_eval=jvm_eval
-            )
-            decision.dynamic_lower = bound_v
-            decision.fresh_rows_value = int(fresh_rows)
-            res = self._finish_dyn_driver(
-                tpl, entry, now_ns, decision, spec, state, fresh, bnd,
-                boundary,
-            )
-            decision.refresh_tier = "nano"
-            return res
-        except StateCardinalityExceeded:
-            raise  # cap trip: sql() registers the denial (cap contract)
-        except Exception as e:
-            self._tpl_cache[tpl["key"]] = None
-            self.config.log.warn(
-                decision.fingerprint or "",
-                f"dyn nano warm path failed ({e}); falling back",
-            )
-            return None
-
     def _static_lite_template(
         self,
         pkey,
@@ -1929,126 +2027,6 @@ class RefreshTiers:
             self._tpl_cache.clear()
         self._tpl_cache[key] = tpl
         return tpl
-
-    def _static_nano_template(
-        self,
-        pkey,
-        fingerprint: str,
-        spec: AggSpec,
-        plans,
-        state_group,
-        group_names: List[str],
-        state_cols: List[str],
-        partial_aggs: Dict[str, Column],
-        merge_aggs: Dict[str, Column],
-        pred: Optional[Column],
-        pred_expr,
-        ts_col: str,
-        shadow_ok: bool,
-        part_col: Optional[str],
-        state_schema,
-        tables: List[str],
-    ) -> Optional[dict]:
-        """Memoized STATIC nano-tier program: the static lite driver merge
-        with the Spark job replaced by a bytes-gated pyarrow scan of the
-        fresh window. It admits simple residual predicates (conjunctions
-        of column-vs-literal comparisons, IS [NOT] NULL — mirrored exactly
-        by pyarrow masks), including static bounds on the temporal column
-        such as the paper's ``ts > '2000-01-01'``, whose literals
-        ``_fold_temporal_literals`` folds once per build; and ltz
-        time-bucket groups (UTC session gate: the aware instants equal the
-        naive UTC floor). Bench row it wins: the ``small_dashboard``
-        ``flagship`` refresh (``… AND ts > TIMESTAMP '…'``), which
-        otherwise pays the lite tier's Spark job."""
-        key = ("snano", *pkey, state_schema.simpleString())
-        if not self._nano_tz_ok(fingerprint):
-            return None  # bypass (memo untouched: resumes if tz → UTC)
-        if key in self._tpl_cache:
-            return self._tpl_cache[key]
-        tpl = None
-        try:
-            sltpl = self._static_lite_template(
-                pkey, fingerprint, spec, plans, state_group, group_names,
-                state_cols, partial_aggs, merge_aggs, pred, ts_col,
-                shadow_ok, part_col, state_schema, tables,
-            )
-            if sltpl is None:
-                raise Unsupported("static lite driver-merge base unavailable")
-            from pyspark.sql.types import TimestampType
-
-            from .nano import build_nano_program
-
-            group_ltz = {
-                f.name
-                for f in state_schema.fields
-                if f.name in group_names
-                and isinstance(f.dataType, TimestampType)
-            }
-            prog = build_nano_program(
-                tables[0], ts_col, state_group, plans, None, None, ">",
-                None, False, self.config.nano_refresh_max_bytes,
-                pred_expr=self._fold_temporal_literals(pred_expr, ts_col),
-                group_ltz=group_ltz, static=True,
-                join_steps=spec.join_steps,
-            )
-            tpl = dict(sltpl)
-            tpl["nano"] = prog
-            tpl["table"] = tables[0]
-        except Exception as e:
-            self.config.log.info(
-                fingerprint,
-                f"static nano tier not available ({e}); trying lite/template",
-            )
-            tpl = None
-        if tpl is not None:
-            tpl["key"] = key
-        if len(self._tpl_cache) >= self._MEMO_MAX:
-            self._tpl_cache.clear()
-        self._tpl_cache[key] = tpl
-        return tpl
-
-    def _run_static_nano(
-        self,
-        tpl: dict,
-        entry,
-        cached_state: DataFrame,
-        wm_ns: int,
-        now_ns: int,
-        decision: Decision,
-        spec: AggSpec,
-    ) -> Optional[DataFrame]:
-        """Execute the static nano refresh: NO Spark job — pyarrow scan of
-        the fresh window, vectorized partials, shared driver merge."""
-        try:
-            tpl["nano"].validate(tpl["table"])
-        except Exception as e:
-            # source drifted: drop the memo so the NEXT refresh rebuilds
-            self._tpl_cache.pop(tpl["key"], None)
-            self.config.log.info(
-                decision.fingerprint or "",
-                f"static nano program stale ({e}); rebuilding next refresh",
-            )
-            return None
-        try:
-            state = self._load_driver_state(tpl, entry, cached_state)
-            fresh, _bnd, _boundary, fresh_rows, _bound = tpl["nano"].run(
-                wm_ns, now_ns
-            )
-            decision.fresh_rows_value = int(fresh_rows)
-            res = self._finish_dyn_driver(
-                tpl, entry, now_ns, decision, spec, state, fresh, {}, None,
-            )
-            decision.refresh_tier = "nano"
-            return res
-        except StateCardinalityExceeded:
-            raise  # cap trip: sql() registers the denial (cap contract)
-        except Exception as e:
-            self._tpl_cache[tpl["key"]] = None
-            self.config.log.warn(
-                decision.fingerprint or "",
-                f"static nano warm path failed ({e}); falling back",
-            )
-            return None
 
     def _run_static_lite(
         self,

@@ -17,7 +17,11 @@ included: its accumulator merge is the same re-association,
 
 After each refresh the same SQL is re-issued at the same now (a hot
 reload) and compared with the same plain rows; the summary counts the hot
-reloads served from the result memo.
+reloads served from the result memo, and the tier mix of the misses
+(``none`` = the classic miss) and of the refreshes.
+
+One shape family (``gen_nano_sql``) keeps to what the nano tier admits, so
+its literal fold and its cold-load path are fuzzed too.
 
 Usage: python tools/fuzz_tiers.py [trials] [seed] [sf_dir]
 Exit 0 = every comparison on every refresh of every trial matched.
@@ -32,7 +36,7 @@ import random
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TRIALS = int(sys.argv[1]) if len(sys.argv) > 1 else 100
 SEED = int(sys.argv[2]) if len(sys.argv) > 2 else 20260814
@@ -241,6 +245,79 @@ def gen_full_sql(rng: random.Random) -> str:
     return (
         f"SELECT {g} AS g, {', '.join(ags)} {frm}{where} "
         f"GROUP BY 1{hv} ORDER BY 1"
+    )
+
+
+#: nano-admissible vocabulary: bare-column or date_trunc groups,
+#: count/sum/min/max/avg over a bare column, column-vs-literal predicates,
+#: and a static temporal literal or a now() - INTERVAL bound
+N_TRUNCS = [
+    "CAST(date_trunc('day', ts) AS DATE) AS d",
+    "date_trunc('hour', ts) AS h",
+    "date_trunc('week', ts) AS w",
+    "date_trunc('month', ts) AS mo",
+]
+N_COLS = ["event_type", "user_id"]
+N_AGGS = [
+    "count(*) AS n",
+    "count(value) AS nv",
+    "sum(value) AS s",
+    "min(value) AS mn",
+    "max(value) AS mx",
+    "avg(value) AS av",
+    "max(user_id) AS mu",
+]
+N_PREDS = [
+    "value > 5",
+    "event_type = 'click'",
+    "event_type != 'view'",
+    "value IS NOT NULL",
+    "user_id <= 50",
+]
+N_STATIC = [
+    "ts > TIMESTAMP '2024-01-05'",
+    "ts >= '2024-01-03 06:00:00'",
+    "ts < TIMESTAMP '2024-01-28 12:00:00'",
+    "ts > DATE '2024-01-10'",
+]
+N_DYN = [
+    "ts > now() - INTERVAL 9 DAY",
+    "ts >= now() - INTERVAL 30 HOUR",
+    "ts > now() - INTERVAL 2 WEEK",
+]
+
+
+def gen_nano_sql(rng: random.Random) -> str:
+    """A shape the nano tier admits, cold and warm: an aggregate with a
+    static temporal literal or a dynamic bound on its own date_trunc
+    bucket, or a top-k filter."""
+    preds = rng.sample(N_PREDS, rng.randint(0, 2))
+    if rng.random() < 0.25:
+        preds.append(rng.choice(N_STATIC))
+        cols = rng.choice([["event_id", "value"], ["event_id", "ts", "value"]])
+        order = rng.choice(["value DESC", "value ASC NULLS LAST", "ts DESC"])
+        return (
+            f"SELECT {', '.join(cols)} FROM events WHERE {' AND '.join(preds)} "
+            f"ORDER BY {order}, event_id LIMIT {rng.choice([5, 10, 50])}"
+        )
+    trunc = rng.choice(N_TRUNCS)
+    if rng.random() < 0.5:
+        # dynamic bound: its state bucket must be a group of the query, and
+        # a DATE one mostly (a timestamp bucket is ltz: dynamic nano
+        # refuses it, the template serves)
+        if rng.random() < 0.75:
+            trunc = N_TRUNCS[0]
+        gs = [trunc] + rng.sample(N_COLS, rng.randint(0, 1))
+        preds.append(rng.choice(N_DYN))
+    else:
+        gs = rng.sample([trunc] + N_COLS, rng.randint(1, 2))
+        preds.append(rng.choice(N_STATIC))
+    ags = rng.sample(N_AGGS, rng.randint(1, 3))
+    gb = ", ".join(str(i + 1) for i in range(len(gs)))
+    order = f" ORDER BY {gb}" if rng.random() < 0.5 else ""
+    return (
+        f"SELECT {', '.join(gs + ags)} FROM events "
+        f"WHERE {' AND '.join(preds)} GROUP BY {gb}{order}"
     )
 
 
@@ -643,14 +720,28 @@ def main() -> int:
         _tmp.gettempdir(), f"qc-fuzz-events-part-{_os.path.basename(SF_DIR)}"
     )
     if not _os.path.exists(_os.path.join(part_path, "_SUCCESS")):
+        # written into a private dir, then renamed into place whole: two
+        # runs started together never see each other's _temporary files
+        stage_dir = _tmp.mkdtemp(prefix="qc-fuzz-stage-")
+        stage = _os.path.join(stage_dir, "events-part")
         (
             spark.table("events")
             .drop("ts_ns")
             .withColumn("d", F.to_date(F.col("ts")))
             .write.mode("overwrite")
             .partitionBy("d")
-            .parquet(part_path)
+            .parquet(stage)
         )
+        try:
+            _os.replace(stage, part_path)
+        except OSError:
+            pass  # another run put its copy there first
+        if _os.path.exists(_os.path.join(part_path, "_SUCCESS")):
+            import shutil as _sh
+
+            _sh.rmtree(stage_dir, ignore_errors=True)
+        else:
+            part_path = stage  # an incomplete copy is in the way: use ours
     register_parquet_view(spark, "events_part", part_path)
 
     # catalog-qualified managed twin (r13): identical rows under
@@ -705,6 +796,7 @@ def main() -> int:
 
     failures = []
     tiers_seen: dict = {}
+    miss_tiers: dict = {}
     corruptions = 0
     hot_reloads = memo_hits = 0
     for trial in range(TRIALS):
@@ -719,6 +811,7 @@ def main() -> int:
         distinct_mode = 0.71 <= mode_p < 0.75
         corrsel_mode = 0.75 <= mode_p < 0.79
         fullj_mode = 0.79 <= mode_p < 0.85
+        nano_mode = 0.85 <= mode_p < 0.93
         if filter_mode:
             sql, topk = gen_filter_sql(rng)
         elif join_mode:
@@ -737,6 +830,8 @@ def main() -> int:
             sql = gen_dimjoin_sql(rng)
         elif fullj_mode:
             sql = gen_full_sql(rng)
+        elif nano_mode:
+            sql = gen_nano_sql(rng)
         elif union_mode:
             # UNION [ALL] of two cacheable branches (r10 UnionSpec): same
             # select shape (positional arity), different predicates. Every
@@ -824,6 +919,7 @@ def main() -> int:
             and not corrsel_mode
             and not dimjoin_mode
             and not fullj_mode
+            and not nano_mode
         ):
             gb_clause = f"GROUP BY {gb}"
             sel = gs + ags
@@ -1074,8 +1170,12 @@ def main() -> int:
             if bad:
                 failures.append((trial, i, sql, bad))
                 break
+            d = qc.last_decision
+            if d.cached and not d.cache_hit:
+                t = d.refresh_tier or "none"
+                miss_tiers[t] = miss_tiers.get(t, 0) + 1
             if i > 0:
-                t = qc.last_decision.refresh_tier
+                t = d.refresh_tier
                 tiers_seen[t] = tiers_seen.get(t, 0) + 1
             # hot reload: the same SQL at the same now reads the same rows
             # (a result-memo hit wherever the shape is memoized)
@@ -1101,11 +1201,12 @@ def main() -> int:
         if (trial + 1) % 20 == 0:
             print(
                 f"[{trial + 1}/{TRIALS}] failures={len(failures)} "
-                f"tiers={tiers_seen}",
+                f"tiers={tiers_seen} miss tiers={miss_tiers}",
                 flush=True,
             )
 
     print(f"\ntiers exercised: {tiers_seen} corruptions={corruptions}")
+    print(f"miss tiers: {miss_tiers}")
     print(f"hot reloads: {hot_reloads} memo hits={memo_hits}")
     if failures:
         print(f"{len(failures)} FAILURES:")
