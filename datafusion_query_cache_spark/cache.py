@@ -43,6 +43,11 @@ from pyspark.sql import DataFrame, SparkSession
 #: naming contract (``__qc{i}_{kind}``).
 _HIST_COL_RE = re.compile(r"^__qc\d+_hist$")
 
+#: file-name prefixes of a Spark write that are not data files: hidden
+#: files and the commit markers. (A bare ``_`` would hide hive dirs of a
+#: ``__qc_bucket`` partition column.)
+_SPARK_MARKERS = [".", "_SUCCESS", "_committed", "_started"]
+
 #: exact count(DISTINCT) set-state columns (``functions/partial.py`` names
 #: them ``__qc{i}_dset``) — capped at store time by ``_check_set_*`` below
 _DSET_COL_RE = re.compile(r"^__qc\d+_dset$")
@@ -186,9 +191,10 @@ class CacheEntry(ABC):
     #: Set by the session when the query carries percentile histogram state:
     #: max distinct values per group the store will accept before raising
     #: :class:`HistogramCardinalityExceeded`. ``None`` = unlimited. Enforced
-    #: on the driver-collect store paths (where the state is in hand anyway);
-    #: the >500k-row distributed spill path skips the check — at that point
-    #: the row cap, not per-cell cardinality, is the operative bound.
+    #: wherever the store holds the state in Arrow (the driver-collect
+    #: paths, and a distributed write read back under the row cap); a
+    #: >500k-row distributed state skips the check — at that point the row
+    #: cap, not per-cell cardinality, is the operative bound.
     hist_cap: Optional[int] = None
 
     #: Set by the session when the query carries exact count(DISTINCT) set
@@ -896,71 +902,131 @@ class _ParquetEntry(CacheEntry):
     #: batches into memory (``src/aggregate.rs:595``) — is strictly faster:
     #: one Spark job, parquet written driver-side via Arrow, and the
     #: returned DataFrame is a LocalRelation (finalize needs no extra scan).
+    #: When the state's size is unknown (a first put), :meth:`_big_state`
+    #: bounds it by the input's parquet footer row count before any row
+    #: moves, so a big cold aggregate runs once, straight into the
+    #: distributed write.
     DRIVER_COLLECT_MAX_ROWS = 500_000
+
+    def _big_state(self, state: DataFrame) -> bool:
+        """Whether a put of ``state`` skips the driver collect: the stored
+        row count decides when known; on a first put, the row count in the
+        parquet footers of ``state.inputFiles()`` bounds the group count
+        (one py4j call plus local footer reads, stopping once the sum
+        passes the cap). An aggregate or filter has at most as many rows as
+        its input. A join or generator can have more, but then the bound
+        only keeps the bounded driver attempt, which overflows safely.
+
+        Inputs with no parquet files (``range``, ``createDataFrame``), a
+        footer that does not read, or a plan whose own row bound fits the
+        cap (a top-k, a global aggregate) keep the bounded driver attempt.
+
+        Wins perfbench ``big_state`` ``cold_vs_plain``: without the gate
+        its cold load collected 500,001 Arrow rows, dropped them at the
+        overflow and ran the scan and aggregate again for the distributed
+        write. With it the median fell from 3.42 to 2.30 (4-core VM, 10
+        interleaved pairs), and the traced cold load from 7 Spark jobs to
+        5."""
+        cap = self.DRIVER_COLLECT_MAX_ROWS
+        prev_rows = (self._meta or {}).get("rows")
+        if prev_rows is not None:
+            return prev_rows > cap
+        from urllib.parse import unquote, urlparse
+
+        import pyarrow.parquet as pq
+        from py4j.protocol import Py4JError
+
+        try:
+            plan_rows = state._jdf.queryExecution().analyzed().maxRows()
+            if plan_rows.isDefined() and plan_rows.get() <= cap:
+                return False
+            total = 0
+            for uri in state.inputFiles():
+                url = urlparse(uri)
+                if url.scheme not in ("", "file"):
+                    return False
+                total += pq.ParquetFile(unquote(url.path)).metadata.num_rows
+                if total > cap:
+                    return True
+        except (OSError, ValueError, Py4JError):
+            pass  # unreadable footer or plan: keep the bounded driver attempt
+        return False
+
+    def _written_arrow(self, path: str, sch, bcol: Optional[str], tz: str):
+        """Read the state a distributed write just left at ``path`` into
+        Arrow, typed as the Spark schema ``sch``. A ``partitionBy(bcol)``
+        layout keeps the bucket only in its directory names, which Spark
+        renders in the session time zone ``tz``. Returns None when a value
+        does not parse back (a fixed-offset zone, an ambiguous local time);
+        the caller then reads the files through Spark."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as _ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        try:
+            target = to_arrow_schema(sch)
+            part = (
+                _ds.HivePartitioning(pa.schema([(bcol, pa.string())]))
+                if bcol
+                else None
+            )
+            tbl = _ds.dataset(
+                path,
+                format="parquet",
+                partitioning=part,
+                ignore_prefixes=_SPARK_MARKERS,
+            ).to_table()
+            if bcol:
+                want = target.field(bcol).type
+                vals = tbl.column(bcol)
+                if pa.types.is_timestamp(want):
+                    vals = vals.cast(pa.timestamp(want.unit))
+                    if want.tz is not None:
+                        vals = pc.assume_timezone(vals, tz)
+                tbl = tbl.set_column(
+                    tbl.schema.get_field_index(bcol), bcol, vals
+                )
+            return dense_arrow(tbl.select(target.names).cast(target))
+        except (pa.ArrowException, KeyError, TypeError):
+            return None
 
     def put(self, watermark_ns: int, state: DataFrame, spark: SparkSession) -> DataFrame:
         os.makedirs(self._dir, exist_ok=True)
         txid = f"state-{uuid.uuid4().hex[:12]}"
         path = os.path.join(self._dir, txid)
-        prev_rows = (self._meta or {}).get("rows")
-        use_driver = (
-            prev_rows is None or prev_rows <= self.DRIVER_COLLECT_MAX_ROWS
-        )
+        cap = self.DRIVER_COLLECT_MAX_ROWS
         result: Optional[DataFrame] = None
         n_rows: Optional[int] = None
-        if use_driver:
+        if not self._big_state(state):
             try:
                 import pyarrow.parquet as pq
 
-                if prev_rows is None:
-                    # FIRST put: the state's group cardinality is unknown,
-                    # so bound the ACTUAL collect like the tail write
-                    # (r15) — a giant-cardinality cold aggregate must
-                    # spill to the distributed store, not OOM the driver.
-                    # Safe to limit here: a first put is always the COLD
-                    # path, which carries no Observation that truncation
-                    # could corrupt (observations ride warm merges only).
-                    raw = state.limit(
-                        self.DRIVER_COLLECT_MAX_ROWS + 1
-                    ).toArrow()
-                    if raw.num_rows > self.DRIVER_COLLECT_MAX_ROWS:
-                        raise _DriverPutOverflow()
-                else:
-                    # refresh of a KNOWN-small state (prev_rows <= cap):
-                    # bound the ACTUAL collect all the same — a refresh
-                    # window that explodes group cardinality (small prev
-                    # state, 50M-group burst) must spill to the
-                    # distributed store, not OOM the driver (r15 verdict,
-                    # last burst-class member). The limit is SAFE for the
-                    # fresh-rows Observation riding the plan: the observe
-                    # sits BELOW the warm merge's groupBy (a pipeline
-                    # breaker), so the map stage — scan + CollectMetrics —
-                    # always runs to completion and the metric reports the
-                    # full fresh count regardless of how few OUTPUT groups
-                    # the limit retains (verified empirically: limit(101)
-                    # over a 50k-group aggregate still observes all rows).
-                    raw = state.limit(
-                        self.DRIVER_COLLECT_MAX_ROWS + 1
-                    ).toArrow()
-                    if raw.num_rows > self.DRIVER_COLLECT_MAX_ROWS:
-                        raise _DriverPutOverflow()
+                # bound the ACTUAL collect: an unknown state, or a refresh
+                # window that explodes a small state's group count,
+                # must spill to the distributed store, not OOM the driver.
+                # The limit is safe for the fresh-rows Observation a warm
+                # merge carries: the observe sits below the merge's groupBy
+                # (a pipeline breaker), so the map stage always runs to
+                # completion and the metric counts every fresh row however
+                # few output groups the limit keeps.
+                raw = state.limit(cap + 1).toArrow()
+                if raw.num_rows > cap:
+                    raise _DriverPutOverflow()
                 tbl = _check_set_arrow(
                     _compact_hist_arrow(raw, self.hist_cap, self._fp),
                     self.set_cap, self._fp,
                 )
                 n_rows = tbl.num_rows
-                if n_rows <= self.DRIVER_COLLECT_MAX_ROWS:
-                    os.makedirs(path, exist_ok=True)
-                    pq.write_table(tbl, os.path.join(path, "part-0.parquet"))
-                    # arrow direct — NOT via pandas, whose NaN-as-missing
-                    # sentinel would null out NaN aggregate values
-                    result = arrow_to_spark(spark, tbl, schema=state.schema)
-                else:  # guessed wrong: state grew past the cap — spill path
-                    shutil.rmtree(path, ignore_errors=True)
-                    result = None
-            except HistogramCardinalityExceeded:
+                os.makedirs(path, exist_ok=True)
+                pq.write_table(tbl, os.path.join(path, "part-0.parquet"))
+                # arrow direct — NOT via pandas, whose NaN-as-missing
+                # sentinel would null out NaN aggregate values
+                result = arrow_to_spark(spark, tbl, schema=state.schema)
+            except StateCardinalityExceeded:
                 raise  # must NOT fall through to an unchecked distributed store
             except Exception:
+                shutil.rmtree(path, ignore_errors=True)
                 result = None
         if result is None:
             # Distributed write — the 100 TB path. When the state carries a
@@ -970,8 +1036,8 @@ class _ParquetEntry(CacheEntry):
             # bucket directories. Otherwise fall back to the reference's
             # CoalescePartitions-before-store shape
             # (``src/aggregate.rs:510-527``) — a single part file.
-            bcol = self.bucket_col
-            if bcol and bcol in state.columns:
+            bcol = self.bucket_col if self.bucket_col in state.columns else None
+            if bcol:
                 from pyspark.sql import functions as _F
 
                 (
@@ -983,26 +1049,40 @@ class _ParquetEntry(CacheEntry):
             else:
                 state.coalesce(1).write.mode("overwrite").parquet(path)
             # row count from parquet footers (local metadata read, no Spark
-            # job): recording it keeps the NEXT refresh off the driver-collect
-            # attempt — without it, prev_rows=None would re-collect the whole
-            # big state through the driver before bailing to this path again.
+            # job): recording it lets the NEXT put choose its path on the
+            # stored count alone, with no footer gate over its inputs.
             try:
                 import pyarrow.dataset as _ds
 
                 n_rows = _ds.dataset(
-                    path,
-                    format="parquet",
-                    ignore_prefixes=[".", "_SUCCESS", "_committed", "_started"],
+                    path, format="parquet", ignore_prefixes=_SPARK_MARKERS
                 ).count_rows()
             except Exception:
                 n_rows = None
-            # schema-pinned read: a hive-partitioned layout would otherwise
-            # re-infer the bucket column's type from directory strings; the
-            # select restores state-column order (partition columns surface
-            # last even under an explicit schema)
-            result = spark.read.schema(state.schema).parquet(path)
-            if result.columns != state.schema.fieldNames():
-                result = result.select(*state.schema.fieldNames())
+            if n_rows is not None and n_rows <= cap:
+                # the state fits the driver after all (a selective filter
+                # over a big input): return a LocalRelation, as the driver
+                # path does, so finalize does not rescan the files
+                tz = spark.conf.get("spark.sql.session.timeZone")
+                tbl = self._written_arrow(path, state.schema, bcol, tz)
+                if tbl is not None:
+                    try:
+                        tbl = _check_set_arrow(
+                            _compact_hist_arrow(tbl, self.hist_cap, self._fp),
+                            self.set_cap, self._fp,
+                        )
+                    except StateCardinalityExceeded:
+                        shutil.rmtree(path, ignore_errors=True)
+                        raise
+                    result = arrow_to_spark(spark, tbl, schema=state.schema)
+            if result is None:
+                # schema-pinned read: a hive-partitioned layout would
+                # otherwise re-infer the bucket column's type from directory
+                # strings; the select restores state-column order (partition
+                # columns surface last even under an explicit schema)
+                result = spark.read.schema(state.schema).parquet(path)
+                if result.columns != state.schema.fieldNames():
+                    result = result.select(*state.schema.fieldNames())
         self._swap_meta(watermark_ns, txid, state.schema.json(), n_rows)
         return result
 
@@ -1234,10 +1314,7 @@ class _ParquetEntry(CacheEntry):
         import pyarrow.dataset as _ds
 
         path = os.path.join(self._dir, part)
-        kw = dict(
-            format="parquet",
-            ignore_prefixes=[".", "_SUCCESS", "_committed", "_started"],
-        )
+        kw = dict(format="parquet", ignore_prefixes=_SPARK_MARKERS)
         try:
             dset = _ds.dataset(path, partitioning="hive", **kw)
             dset.schema.field(bcol)
@@ -1379,9 +1456,8 @@ class _ParquetEntry(CacheEntry):
         spark: SparkSession,
         fresh_rows_cb=None,
     ):
-        prev_rows = (self._meta or {}).get("rows")
-        if prev_rows is not None and prev_rows > self.DRIVER_COLLECT_MAX_ROWS:
-            return None  # known-big state: stay on the distributed path
+        if self._big_state(augmented):
+            return None  # big state, known or footer-bounded: distributed put
         import pyarrow.parquet as pq
 
         # the ONE job over the data — bounded: a cardinality burst must
@@ -1520,7 +1596,7 @@ class _ParquetEntry(CacheEntry):
                 return _ds.dataset(
                     os.path.join(self._dir, p),
                     format="parquet",
-                    ignore_prefixes=[".", "_SUCCESS", "_committed", "_started"],
+                    ignore_prefixes=_SPARK_MARKERS,
                 ).count_rows()
 
             if txid in parts and _count(txid) == 0 and len(parts) > 1:
