@@ -32,7 +32,7 @@ from abc import ABC, abstractmethod
 from dataclasses import dataclass
 from typing import Dict, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 #: percentile/median histogram state columns (functions/partial.py): an
 #: array<struct<v,c>> counted multiset kept UNcompacted through the
@@ -319,13 +319,31 @@ class CacheEntry(ABC):
         return False
 
     def put_bucket_tail(
-        self, watermark_ns: int, merged: DataFrame, lo_value, spark: SparkSession
-    ) -> Optional[DataFrame]:
+        self,
+        watermark_ns: int,
+        merged: DataFrame,
+        lo_value,
+        spark: SparkSession,
+        fin_cols: Optional[List[Column]] = None,
+        ride: Optional[DataFrame] = None,
+    ):
         """Incremental big-state store-back: persist only the merged tail
         (buckets ``>= lo_value``) as a new layer over the existing
         bucket-partitioned state. Returns the full layered state, or None
         when unsupported/inapplicable — the caller must fall back to
-        :meth:`put`. File-backed stores override."""
+        :meth:`put`. With ``fin_cols`` (finalize columns over the state
+        columns), a tail collected through the driver is returned instead
+        as a pyarrow Table: the state columns, then ``fin_cols``, then a
+        boolean ``__qc_ride`` marking the rows of ``ride`` (frames with the
+        state's columns collected in the same job, never stored).
+        File-backed stores override."""
+        return None
+
+    def state_tag(self):
+        """Hashable identity of the stored layered state — it changes with
+        every write, by any session, and with every compaction — or None
+        when the state is not layered. Keys driver-side summaries of the
+        state (the session's bucketed top-k summaries)."""
         return None
 
     def append(
@@ -586,6 +604,9 @@ class _ParquetEntry(CacheEntry):
         self._fp = fingerprint
         self._dir = os.path.join(root, hashlib.sha256(fingerprint.encode()).hexdigest()[:24])
         self._meta: Optional[dict] = None
+        #: the last tail table _write_tail_driver collected, finalize
+        #: columns included (put_bucket_tail hands it to its caller)
+        self._tail_arrow = None
         meta_path = os.path.join(self._dir, "meta.json")
         if os.path.exists(meta_path):
             try:
@@ -884,12 +905,19 @@ class _ParquetEntry(CacheEntry):
             from pyspark.sql.pandas.types import to_arrow_schema
             from pyspark.sql.types import StructType
 
+            sch = StructType.fromJson(json.loads(self._meta["schema"]))
+            tz = self._meta.get("bucket_tz")
+            if tz is not None:
+                # partitionBy(bucket) layout: the bucket lives only in the
+                # directory names, rendered in the writer's session zone
+                return self._written_arrow(
+                    self._state_paths()[0], sch, self._meta["bucket_col"], tz
+                )
             tabs = [pq.read_table(p) for p in self._state_paths()]
             tbl = pa.concat_tables(tabs) if len(tabs) > 1 else tabs[0]
             # cast to the exact arrow twin of the Spark state schema:
             # distributed-written parquet may round-trip timestamps at a
             # different unit/annotation than the driver-side Arrow write.
-            sch = StructType.fromJson(json.loads(self._meta["schema"]))
             # dense: an empty part file would leave an interior empty
             # chunk that truncates a later createDataFrame (dense_arrow)
             return dense_arrow(tbl.cast(to_arrow_schema(sch)))
@@ -998,6 +1026,7 @@ class _ParquetEntry(CacheEntry):
         cap = self.DRIVER_COLLECT_MAX_ROWS
         result: Optional[DataFrame] = None
         n_rows: Optional[int] = None
+        bucket_tz: Optional[str] = None  # zone of a partitionBy(bucket) write
         if not self._big_state(state):
             try:
                 import pyarrow.parquet as pq
@@ -1040,6 +1069,7 @@ class _ParquetEntry(CacheEntry):
             if bcol:
                 from pyspark.sql import functions as _F
 
+                bucket_tz = spark.conf.get("spark.sql.session.timeZone")
                 (
                     state.repartition(_F.col(bcol))
                     .write.mode("overwrite")
@@ -1063,8 +1093,7 @@ class _ParquetEntry(CacheEntry):
                 # the state fits the driver after all (a selective filter
                 # over a big input): return a LocalRelation, as the driver
                 # path does, so finalize does not rescan the files
-                tz = spark.conf.get("spark.sql.session.timeZone")
-                tbl = self._written_arrow(path, state.schema, bcol, tz)
+                tbl = self._written_arrow(path, state.schema, bcol, bucket_tz)
                 if tbl is not None:
                     try:
                         tbl = _check_set_arrow(
@@ -1083,7 +1112,9 @@ class _ParquetEntry(CacheEntry):
                 result = spark.read.schema(state.schema).parquet(path)
                 if result.columns != state.schema.fieldNames():
                     result = result.select(*state.schema.fieldNames())
-        self._swap_meta(watermark_ns, txid, state.schema.json(), n_rows)
+        self._swap_meta(
+            watermark_ns, txid, state.schema.json(), n_rows, bucket_tz
+        )
         return result
 
     #: Layer cap for the incremental bucket-tail store: past this many
@@ -1092,9 +1123,21 @@ class _ParquetEntry(CacheEntry):
     #: — the append path's COMPACT_AT precedent).
     BPARTS_COMPACT_AT = 16
 
+    def state_tag(self):
+        m = self._meta
+        if m is None or not m.get("bparts"):
+            return None
+        return (m["watermark_ns"], tuple(m["bparts"]))
+
     def put_bucket_tail(
-        self, watermark_ns: int, merged: DataFrame, lo_value, spark: SparkSession
-    ) -> Optional[DataFrame]:
+        self,
+        watermark_ns: int,
+        merged: DataFrame,
+        lo_value,
+        spark: SparkSession,
+        fin_cols: Optional[List[Column]] = None,
+        ride: Optional[DataFrame] = None,
+    ):
         """Incremental store-back for BIG bucket-partitioned aggregate
         state: persist only the merged TAIL (buckets ``>= lo_value`` — the
         fresh window's buckets, since every fresh row has ``ts >= wm`` and
@@ -1107,8 +1150,14 @@ class _ParquetEntry(CacheEntry):
         Returns the full (layered) state DataFrame, or None when
         inapplicable — small/unknown state, no bucket, non-temporal bucket
         type, or the layer cap reached (the caller's full put then
-        compacts). The reference has no analogue: its store always rewrites
-        the whole entry (``src/cache.rs:109-114``)."""
+        compacts). With ``fin_cols``, the driver-side tail collect also
+        computes those finalize columns, and the collected table (state
+        columns, then ``fin_cols``, then ``__qc_ride``) is returned instead
+        of the layered re-read; ``ride`` rows join that collect, in the
+        same job, and are not stored. A tail that went to the distributed
+        write still returns the DataFrame. The reference has no analogue:
+        its store always rewrites the whole entry
+        (``src/cache.rs:109-114``)."""
         import datetime as _dt
 
         from pyspark.sql import functions as _F
@@ -1186,6 +1235,13 @@ class _ParquetEntry(CacheEntry):
         txid = f"bpart-{uuid.uuid4().hex[:12]}"
         path = os.path.join(self._dir, txid)
         tail = merged.filter(_F.col(bcol) >= _F.lit(lo_value))
+        collect = tail
+        if fin_cols:
+            collect = tail.select("*", *fin_cols, _F.lit(False).alias("__qc_ride"))
+            if ride is not None:
+                collect = collect.unionByName(
+                    ride.select("*", *fin_cols, _F.lit(True).alias("__qc_ride"))
+                )
         # small tail → driver-side Arrow write: the tail layer of a warm
         # refresh is O(changed buckets) rows even when the FULL state is
         # huge, and a toArrow collect + local hive-partitioned write skips
@@ -1210,7 +1266,7 @@ class _ParquetEntry(CacheEntry):
                 # long gap can dwarf it, so the write itself re-bounds
                 # the ACTUAL collect via limit(cap+1) and aborts to the
                 # distributed path when the tail outgrows the cap
-                wrote = self._write_tail_driver(tail, bcol, path, cap)
+                wrote = self._write_tail_driver(collect, bcol, path, cap)
         except Exception:
             wrote = False
         if not wrote:
@@ -1257,6 +1313,8 @@ class _ParquetEntry(CacheEntry):
         self._meta = new_meta
         for p in dropped:
             shutil.rmtree(os.path.join(self._dir, p), ignore_errors=True)
+        if fin_cols and wrote:
+            return self._tail_arrow
         return self.get(spark)
 
     def _write_tail_driver(
@@ -1268,8 +1326,11 @@ class _ParquetEntry(CacheEntry):
         the reader: :meth:`_read_paths` supplies the state schema explicitly,
         so Spark casts the ``bcol=...`` dir names back to the declared
         bucket type either way. Applies the same histogram/set state caps as
-        the driver-side full :meth:`put`. Returns False (caller falls back
-        to the distributed write) on any surprise.
+        the driver-side full :meth:`put`. Only the stored schema's columns
+        are written; any after them are finalize columns riding the same
+        collect, and rows marked ``__qc_ride`` are not written. The whole
+        collected table is left in ``_tail_arrow``. Returns False (caller
+        falls back to the distributed write) on any surprise.
 
         The collect is bounded by the ACTUAL tail, not the caller's
         estimate: ``limit(cap + 1)`` caps what ever reaches the driver
@@ -1281,9 +1342,15 @@ class _ParquetEntry(CacheEntry):
         the fallback to catch (r15 advice)."""
         import pyarrow.dataset as _ds
 
-        tbl = tail.limit(cap + 1).toArrow()
-        if tbl.num_rows > cap:
+        collected = tail.limit(cap + 1).toArrow()
+        if collected.num_rows > cap:
             return False  # tail outgrew the estimate: distributed write
+        n_state = len(json.loads(self._meta["schema"])["fields"])
+        tbl = collected.select(list(range(n_state)))
+        if "__qc_ride" in collected.column_names:
+            import pyarrow.compute as _pc
+
+            tbl = tbl.filter(_pc.invert(collected.column("__qc_ride")))
         tbl = _check_set_arrow(
             _compact_hist_arrow(tbl, self.hist_cap, self._fp),
             self.set_cap,
@@ -1301,6 +1368,7 @@ class _ParquetEntry(CacheEntry):
                 ),
                 existing_data_behavior="overwrite_or_ignore",
             )
+        self._tail_arrow = collected
         return True
 
     def _layer_count(self, part: str, bcol: str, lo_iso, hi_iso) -> int:
@@ -1420,7 +1488,12 @@ class _ParquetEntry(CacheEntry):
         return True
 
     def _swap_meta(
-        self, watermark_ns: int, txid: str, schema_json: str, n_rows: Optional[int]
+        self,
+        watermark_ns: int,
+        txid: str,
+        schema_json: str,
+        n_rows: Optional[int],
+        bucket_tz: Optional[str] = None,
     ) -> None:
         meta = {
             "fingerprint": self._fp,
@@ -1434,6 +1507,10 @@ class _ParquetEntry(CacheEntry):
             # recorded so the layered tail store (put_bucket_tail) and its
             # ranged read know the bucket column without re-arming
             meta["bucket_col"] = self.bucket_col
+        if bucket_tz is not None:
+            # the state dir is partitionBy(bucket_col): get_arrow parses
+            # its directory names back in the zone they were written in
+            meta["bucket_tz"] = bucket_tz
         tmp = os.path.join(self._dir, f".meta-{uuid.uuid4().hex[:8]}.tmp")
         with open(tmp, "w") as f:
             json.dump(meta, f)
@@ -1478,6 +1555,7 @@ class _ParquetEntry(CacheEntry):
                 self._meta["state"],
                 self._meta["schema"],
                 self._meta.get("rows"),
+                self._meta.get("bucket_tz"),
             )
             return tbl
         os.makedirs(self._dir, exist_ok=True)

@@ -242,3 +242,67 @@ def test_dynamic_count_distinct_set_state(spark, tmp_path, pinned):
             assert qc.last_decision.cache_hit
         now_dt = dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=now // 1000)
         assert rows_set(got) == rows_set(spark.sql(plain_sql(sql, now_dt)))
+
+
+@pytest.mark.parametrize("gran", ["day", "hour", "week", "month"])
+def test_python_bound_eval_matches_jvm(spark, qc, monkeypatch, gran):
+    """Under a UTC session the dynamic bound, its bucket, their epoch µs,
+    the bucket end and the old watermark's bucket are computed on the
+    driver (no job); each equals the one-row JVM evaluation, at month
+    ends, on a leap day and across a Sunday/Monday week edge."""
+    from datafusion_query_cache_spark.plans import classify as C
+    from datafusion_query_cache_spark.plans.parser import parse_agg_query
+
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    epoch = dt.datetime(1970, 1, 1)
+    instants = [
+        dt.datetime(2024, 1, 31, 23, 59, 59, 999999),  # month end
+        dt.datetime(2024, 2, 29, 12, 30, 0, 5),  # leap day
+        dt.datetime(2024, 3, 1, 0, 0),  # the day after it
+        dt.datetime(2024, 3, 31, 6, 0),  # minus a month clamps to Feb 29
+        dt.datetime(2024, 4, 7, 23, 59, 59),  # Sunday night
+        dt.datetime(2024, 4, 8, 0, 0, 0, 1),  # Monday morning
+    ]
+    rhss = [
+        "now() - INTERVAL 10 DAY",
+        "now() - INTERVAL 36 HOUR",
+        "now() - INTERVAL 1 MONTH",
+        "now() - INTERVAL 2 WEEK",
+        "current_date() - INTERVAL 5 DAY",
+    ]
+    jvm_only = []
+    for rhs_sql in rhss:
+        spec = parse_agg_query(f"SELECT count(*) AS n FROM events WHERE ts > {rhs_sql}")
+        rhs = C.classify(spec.predicate, frozenset({"ts"})).bound.rhs
+        for at in instants:
+            now_ns = (at - epoch) // dt.timedelta(microseconds=1) * 1000 + 789
+            wm_ns = now_ns - 7 * 3600 * 10**9
+            py = qc._py_bound_and_bucket(rhs, now_ns, gran, wm_ns)
+            assert py is not None, (rhs_sql, at)
+            with monkeypatch.context() as m:
+                m.setattr(qc, "_py_bound_and_bucket", lambda *a: None)
+                jvm = qc._eval_bound_and_bucket(rhs, now_ns, gran, wm_ns)
+                jvm_only.append(jvm)
+            v = jvm[0]
+            if isinstance(v, dt.date) and not isinstance(v, dt.datetime):
+                v = dt.datetime(v.year, v.month, v.day)
+            assert py == (v,) + tuple(jvm[1:]), (rhs_sql, at, py, jvm)
+    assert len(jvm_only) == len(rhss) * len(instants)
+
+
+def test_python_bound_eval_declines_non_utc(spark, qc):
+    """Outside a UTC session the driver-side mirror declines, so the JVM
+    job (session-zone calendar semantics) evaluates the bound."""
+    from datafusion_query_cache_spark.plans import classify as C
+    from datafusion_query_cache_spark.plans.parser import parse_agg_query
+
+    spec = parse_agg_query(
+        "SELECT count(*) AS n FROM events WHERE ts > now() - INTERVAL 1 DAY"
+    )
+    rhs = C.classify(spec.predicate, frozenset({"ts"})).bound.rhs
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Chicago")
+    try:
+        assert qc._py_bound_and_bucket(rhs, 1_706_659_165_261_702_001, "day") is None
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)

@@ -331,3 +331,37 @@ def test_read_back_keeps_state_cardinality_caps(
     assert "distinct_max_values" in (qc.last_decision.reason or "")
     assert rows_set(got) == rows_set(spark.sql(sql))
     assert _state_dirs(tmp_path / "c") == []
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/Los_Angeles"])
+def test_partitioned_small_state_reads_back_on_driver(spark, tmp_path, small_cap, tz):
+    """A small state the footer gate wrote ``partitionBy(bucket)`` (10 day
+    buckets over the 1,000-row ``events``) is read back on the driver by a
+    reopened entry: ``get_arrow`` parses the bucket directory names in the
+    zone recorded at write time, and equals the Spark read."""
+    from datafusion_query_cache_spark.cache import ParquetQueryCache
+
+    src = spark.table("events").filter(F.col("ts") < F.lit(dt.datetime(2024, 1, 11)))
+    state = src.groupBy(F.date_trunc("day", "ts").alias("b")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    cache = ParquetQueryCache(str(tmp_path / "c"))
+    entry = cache.entry("fp-hive-small")
+    entry.bucket_col = "b"
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        entry.put(1, state, spark)
+        reopened = cache.entry("fp-hive-small")
+        assert reopened._meta["bucket_tz"] == tz
+        assert any(
+            d.startswith("b=") for d in os.listdir(reopened._state_paths()[0])
+        )
+        tbl = reopened.get_arrow()
+        assert tbl is not None
+        want = reopened.get(spark).toArrow()
+        assert tbl.num_rows == 10
+        assert tbl.schema.types == want.schema.types
+        assert tbl.sort_by("b").to_pylist() == want.sort_by("b").to_pylist()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)

@@ -21,7 +21,10 @@ reloads served from the result memo, and the tier mix of the misses
 (``none`` = the classic miss) and of the refreshes.
 
 One shape family (``gen_nano_sql``) keeps to what the nano tier admits, so
-its literal fold and its cold-load path are fuzzed too.
+its literal fold and its cold-load path are fuzzed too. Another
+(``gen_bucket_topk_sql``) runs a day-bucketed, high-cardinality dynamic
+top-k under a lowered collect cap, so the layered store's bucketed top-k
+finalize and its refusals are fuzzed.
 
 Usage: python tools/fuzz_tiers.py [trials] [seed] [sf_dir]
 Exit 0 = every comparison on every refresh of every trial matched.
@@ -318,6 +321,57 @@ def gen_nano_sql(rng: random.Random) -> str:
     return (
         f"SELECT {', '.join(gs + ags)} FROM events "
         f"WHERE {' AND '.join(preds)} GROUP BY {gb}{order}"
+    )
+
+
+#: exact aggregates (no float re-association): an ORDER BY on them ranks
+#: the same rows in the engine and in plain Spark
+BK_AGGS = [
+    "count(*) AS n",
+    "count(value) AS nv",
+    "min(value) AS mn",
+    "max(value) AS mx",
+    "count(DISTINCT event_type) AS de",
+    "count_if(value > 50) AS ci",
+    "count(*) FILTER (WHERE value > 40) AS fcn",
+    "sum(DISTINCT user_id) AS sdu",
+]
+#: collect cap of the bucketed top-k family: the state (~30 groups a day
+#: over the whole history) is over it, a 1–2 day tail under half of it
+BK_CAP = 200
+
+
+def gen_bucket_topk_sql(rng: random.Random) -> str:
+    """A big-state dynamic top-k grouped on its own day bucket and a
+    high-cardinality key (the perfbench ``hicard_25d`` shape): run under
+    ``BK_CAP`` it reaches the layered store and the bucketed top-k
+    finalize. A quarter of the trials order non-totally (a group key
+    missing from ORDER BY), which the engine refuses to cut per bucket;
+    those take a LIMIT over every group of a 3-day window, so no tie is
+    cut and plain Spark picks the same rows."""
+    key = rng.choice(["event_id % 31", "event_id % 97", "user_id % 53"])
+    agg = rng.choice(BK_AGGS)
+    a = agg.split(" AS ")[-1]
+    extra = [x for x in AGGS if x != agg]
+    sel = ["CAST(date_trunc('day', ts) AS DATE) AS d", f"{key} AS k", agg]
+    if rng.random() < 0.4:
+        sel.append(rng.choice(extra))
+    having = rng.choice([None, None, "count(*) > 1", "min(value) >= 0"])
+    pred = rng.choice([None, None, "value > 5", "event_type != 'click'"])
+    days = rng.choice([3, 7, 12])
+    m = rng.choice([3, 5, 10])
+    if rng.random() < 0.25:
+        order = rng.choice([f"{a} DESC, d", f"k, {a} DESC", f"{a}"])
+        days, m = 3, 190
+    else:
+        order = rng.choice(
+            [f"{a} DESC, d, k", f"{a}, d DESC, k", f"d DESC, {a} DESC, k"]
+        )
+    conds = [c for c in (pred, f"ts > now() - INTERVAL {days} DAY") if c]
+    hv = f" HAVING {having}" if having else ""
+    return (
+        f"SELECT {', '.join(sel)} FROM events WHERE {' AND '.join(conds)} "
+        f"GROUP BY 1, 2{hv} ORDER BY {order} LIMIT {m}"
     )
 
 
@@ -812,6 +866,7 @@ def main() -> int:
         corrsel_mode = 0.75 <= mode_p < 0.79
         fullj_mode = 0.79 <= mode_p < 0.85
         nano_mode = 0.85 <= mode_p < 0.93
+        bucketk_mode = 0.93 <= mode_p < 0.97
         if filter_mode:
             sql, topk = gen_filter_sql(rng)
         elif join_mode:
@@ -832,6 +887,8 @@ def main() -> int:
             sql = gen_full_sql(rng)
         elif nano_mode:
             sql = gen_nano_sql(rng)
+        elif bucketk_mode:
+            sql = gen_bucket_topk_sql(rng)
         elif union_mode:
             # UNION [ALL] of two cacheable branches (r10 UnionSpec): same
             # select shape (positional arity), different predicates. Every
@@ -920,6 +977,7 @@ def main() -> int:
             and not dimjoin_mode
             and not fullj_mode
             and not nano_mode
+            and not bucketk_mode
         ):
             gb_clause = f"GROUP BY {gb}"
             sel = gs + ags
@@ -1043,7 +1101,7 @@ def main() -> int:
             )
         cache = (
             MemoryQueryCache()
-            if rng.random() < 0.3
+            if rng.random() < 0.3 and not bucketk_mode
             else ParquetQueryCache(tempfile.mkdtemp(prefix="qc-fuzz-"))
         )
         # big-state axis (r12): force the distributed partitioned store +
@@ -1051,7 +1109,9 @@ def main() -> int:
         # query shape and the corruption axis, by dropping the driver-
         # collect cap — every multi-row state becomes "big"
         _ParquetEntry.DRIVER_COLLECT_MAX_ROWS = (
-            5
+            BK_CAP
+            if bucketk_mode
+            else 5
             if isinstance(cache, ParquetQueryCache) and rng.random() < 0.15
             else _cap0
         )
