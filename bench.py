@@ -143,7 +143,7 @@ def main() -> None:
     # --- distributed-tier twin: nano byte gate CLOSED -------------------------
     # The warm rows above may be served by the driver-local nano tier, which
     # self-bypasses at 100 TB (256 MB byte gate). This row forces the tiers
-    # that WOULD serve at cluster scale (lite/template/classic — Spark jobs
+    # that WOULD serve at cluster scale (lite/classic — Spark jobs
     # that scan only the fresh tail) and proves THEY meet the ≤2x-of-plain
     # gate at sf0.1, not just the driver shortcut.
     def qc_dist_flow(timed_run: bool) -> None:
@@ -359,7 +359,7 @@ def main() -> None:
     )
 
     # distributed-tier twin for the dynamic flow (nano byte gate closed:
-    # the fused-template/lite Spark jobs that serve at 100 TB)
+    # the lite/classic Spark jobs that serve at 100 TB)
     def dyn_dist_flow(timed_run: bool) -> None:
         qcDd = CachedSparkSession(
             spark,

@@ -297,10 +297,9 @@ class CacheEntry(ABC):
         return None
 
     def put_arrow(self, watermark_ns: int, state_tbl, state_schema) -> bool:
-        """Store state from an ALREADY-COLLECTED pyarrow Table (the SQL-
-        template warm path collects state + result in one job and hands the
-        state part here). Returns False when unsupported; the caller must
-        re-store via :meth:`put`."""
+        """Store state from an ALREADY-COLLECTED pyarrow Table (the nano
+        and lite tiers merge state on the driver and hand it here). Returns
+        False when unsupported; the caller must re-store via :meth:`put`."""
         return False
 
     def advance_watermark(self, watermark_ns: int) -> bool:
@@ -873,10 +872,7 @@ class _ParquetEntry(CacheEntry):
 
     def state_parquet_paths(self) -> Optional[List[str]]:
         """Absolute parquet dirs holding the current state (None when
-        vacant). Lets the templated refresh inline ``parquet.`path``` in
-        its SQL instead of re-registering a temp view every refresh — the
-        state dir changes on every store-back swap, so a view would need
-        replacing each time anyway."""
+        vacant or layered)."""
         if self._meta is None:
             return None
         # layered state: raw path concat would double-count shadowed

@@ -49,8 +49,8 @@ class QueryCacheConfig:
     #: — plus now for a dynamic bound —, post-finalize shape): a hot read
     #: (empty refresh window) whose key matches a result this session
     #: already produced returns that DataFrame with no Spark job — the
-    #: dashboard-reload case. Memoized shapes: every fused / template /
-    #: lite / nano tier result; a classic or dynamic-bound result with a
+    #: dashboard-reload case. Memoized shapes: every fused / lite / nano
+    #: tier result; a classic or dynamic-bound result with a
     #: LIMIT at most the driver-collect cap and no OFFSET, collected to
     #: Arrow once inside ``sql()`` (the ``big_state`` hot reload); the
     #: driver top-k tier's result (``small_dashboard`` ``topk``); and a

@@ -1255,11 +1255,6 @@ class ItemPlan:
     partial: Dict[str, Column] = field(default_factory=dict)
     merge: Dict[str, Column] = field(default_factory=dict)
     finalize: Optional[Column] = None
-    #: same expression as ``finalize`` but WITHOUT the output alias — the
-    #: SQL-template warm path renders this to text and aliases textually
-    #: (rendering an aliased Column yields ``expr AS name``, which cannot be
-    #: re-aliased inside a SELECT item).
-    finalize_raw: Optional[Column] = None
     singleton: Optional[Dict[str, Column]] = field(default_factory=dict)
     #: histogram-typed state columns needing store-time compaction
     histogram_states: List[str] = field(default_factory=list)
@@ -1268,8 +1263,8 @@ class ItemPlan:
     #: count(DISTINCT) set-state columns, capped at store time
     set_states: List[str] = field(default_factory=list)
     #: the item's IR expression and its (AggCall, Decomposition) pairs —
-    #: retained so the dynamic-bound lite tier can compile a Python
-    #: finalize mirror of ``finalize_raw`` (see ``lite_plan``)
+    #: retained so the driver tiers can compile a Python finalize mirror
+    #: of ``finalize`` (see ``lite_plan``)
     expr: Optional[Expr] = None
     decs: List[Tuple[AggCall, Decomposition]] = field(default_factory=list)
 
@@ -1567,7 +1562,8 @@ def plan_items(
                     plan.singleton.update(dec.singleton)
                 plan.decs.append((a, dec))
             fin_map[a] = dec.finalize
-        plan.finalize_raw = _rewrite_with_finalize(item.expr, fin_map)
-        plan.finalize = plan.finalize_raw.alias(item.name)
+        plan.finalize = _rewrite_with_finalize(item.expr, fin_map).alias(
+            item.name
+        )
         plans.append(plan)
     return plans

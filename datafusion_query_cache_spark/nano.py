@@ -26,7 +26,7 @@ groups exceed the entry's driver-collect cap, or that hits any other
 refusal below, falls through to the classic miss.
 
 Admission is a strict contract, everything else falls through to the
-distributed tiers (lite → fused template → classic):
+distributed tiers (lite → classic):
 
 * the source view was registered through ``sources.tables
   .register_parquet_view`` (so its exact derivation — ns-shadow

@@ -113,10 +113,10 @@ def exec_session(spark, width=None):
     ``width=None`` keeps the parent's ``spark.sql.shuffle.partitions``:
     the small-delta ingest commits and tiny-graph loops behind the
     ``op_*`` rows (``op_incr_substr_update``, ``op_dedup_cluster_keep``).
-    ``width=2`` serves the narrowed warm-refresh collects
-    (``tiers._narrow_refresh_ok``) behind the small_dashboard refresh
-    row, whose merge shuffle carries O(state) rows. One clone is cached
-    per (parent, width).
+    ``width=2`` serves the lite tier's narrowed refresh collects over
+    small registered sources (``tiers._narrow_refresh_ok``; the
+    ``bench.py`` ``qc_warm_dist`` / ``qc_dyn_warm_dist`` rows), whose
+    shuffle carries O(state) rows. One clone is cached per (parent, width).
 
     Returns ``None`` when cloning is unavailable; callers then run the
     plan on the caller's session, AQE on.

@@ -370,6 +370,12 @@ def split_dynamic_bound(
     return remainder, bound
 
 
+#: date_trunc granularities finer than a day
+_SUB_DAY = frozenset(
+    {"microsecond", "millisecond", "second", "minute", "hour"}
+)
+
+
 @dataclass(frozen=True)
 class TemporalGroupBy:
     output_name: str
@@ -393,7 +399,9 @@ def find_temporal_group_by(
     found: Optional[TemporalGroupBy] = None
     for item in group_by:
         e = item.expr
+        to_date = False
         while isinstance(e, Cast):  # CAST(date_trunc(...) AS DATE) still buckets
+            to_date = to_date or e.to_type.upper() == "DATE"
             e = e.child
         if (
             isinstance(e, Func)
@@ -405,5 +413,11 @@ def find_temporal_group_by(
         ):
             if found is not None:
                 return None, False
-            found = TemporalGroupBy(item.name, str(e.args[0].value), e.args[1].name)
+            gran = str(e.args[0].value)
+            if to_date and gran.lower() in _SUB_DAY:
+                # a DATE cast of a sub-day truncation buckets by DAY: the
+                # boundary bucket, its end and the bucket compare must all
+                # be day-wide, or the recompute keeps one hour of the day
+                gran = "day"
+            found = TemporalGroupBy(item.name, gran, e.args[1].name)
     return found, True

@@ -56,6 +56,7 @@ from .tiers import (  # noqa: F401  (Decision re-exported)
     Decision,
     RefreshTiers,
     _order_col,
+    _partition_date_bounds,
     _push_time_bounds,
 )
 
@@ -78,7 +79,7 @@ class DecisionTrace:
     """Result of :meth:`CachedSparkSession.explain` — the full decision
     trace of one ``sql()`` call: the :class:`Decision` plus every decision-
     log line the planner emitted while handling it (tier choice, watermark,
-    fresh-window bounds, narrowing-gate verdicts, template availability).
+    fresh-window bounds, narrowing-gate verdicts, tier availability).
     ``str(trace)`` renders the human-readable form; ``trace.df`` is the
     planned result DataFrame (same object ``sql()`` would have returned)."""
 
@@ -148,19 +149,18 @@ class CachedSparkSession(RefreshTiers):
         self._col_cache: Dict[tuple, tuple] = {}
         self._spec_cache: Dict[str, object] = {}
         #: driver-memory hygiene for STANDING sessions serving ad-hoc SQL:
-        #: each distinct query string/shape adds a spec/plan/template memo
+        #: each distinct query string/shape adds a spec/plan/tier-program memo
         #: entry forever. Past this many entries a memo is cleared whole —
         #: a rare, cheap full re-derive beats an unbounded driver heap (the
         #: memos exist for REPEATED queries; an ad-hoc flood has no reuse
         #: to lose). The durable state cache is governed separately
         #: (ParquetQueryCache ttl/bytes, MemoryQueryCache max_entries).
         self._MEMO_MAX = 10_000
-        # (query, source schema, state schema) → warm-path SQL template (or
-        # None = shape not template-able). The template collapses the whole
-        # refresh program — fresh scan, singleton projection, union with the
-        # state view, merge, finalize — into ONE SQL string with watermark
-        # placeholders, so a standing query pays a single JVM parse instead
-        # of ~600 py4j round-trips of DataFrame program rebuilding.
+        # (tier, query, source schema, state schema) → memoized nano/lite
+        # refresh program (or None = the tier refuses this shape). A lite
+        # program's Spark job is ONE SQL string with watermark placeholders,
+        # so a standing query pays a single JVM parse instead of hundreds of
+        # py4j round-trips of DataFrame program rebuilding.
         self._tpl_cache: Dict[tuple, Optional[dict]] = {}
         #: composite planners (FULL OUTER) pin ONE evaluation instant here
         #: so every sub-plan and the fresh anti side agree on now() —
@@ -842,10 +842,10 @@ class CachedSparkSession(RefreshTiers):
         ``unix_micros`` in the SESSION timezone; the CLASSIC dyn assembly
         binds them as its boundary-scan range (no Python-side timezone
         assumption, no DST slack — the bucket end is ``date_trunc +
-        INTERVAL``, calendar-exact in any tz). The fused SQL template
-        never calls this: it renders the bound as a constant-folded
-        expression instead. Returns ``(value, bucket, value_us, bucket_us,
-        bucket_end_us | None, wm_bucket | None)``.
+        INTERVAL``, calendar-exact in any tz). The lite tier never calls
+        this for a non-empty refresh: it renders the bound as a
+        constant-folded expression instead. Returns ``(value, bucket,
+        value_us, bucket_us, bucket_end_us | None, wm_bucket | None)``.
 
         Under a UTC session, for the bound shapes and granularities nano's
         Python calendar mirror admits, the same tuple is computed on the
@@ -3843,9 +3843,9 @@ class CachedSparkSession(RefreshTiers):
         # The joined-source schema is the concatenation of the per-table
         # schemas (unique names enforced above; joins don't retype fields),
         # so it composes WITHOUT building the join. The joined DataFrame
-        # itself is built lazily: the SQL-template warm path names the
-        # tables in its own FROM clause and never needs the DataFrame form,
-        # so a standing templated refresh skips ~70 py4j calls of join
+        # itself is built lazily: the nano and lite tiers never need the
+        # DataFrame form (lite names the tables in its own FROM clause), so
+        # a standing driver-tier refresh skips ~70 py4j calls of join
         # rebuilding per run.
         from pyspark.sql.types import StructType as _StructType
 
@@ -3993,8 +3993,8 @@ class CachedSparkSession(RefreshTiers):
             entry.bucket_col = bucket_name
         # dynamic-bound evaluation (value, bucket, epochs) — computed at
         # most once per query, and ONLY by the classic dyn assembly below
-        # (the fused template renders the bound as SQL and never evaluates
-        # it driver-side)
+        # (the lite tier renders the bound as SQL and never evaluates it
+        # driver-side)
         dyn_eval = None
 
         # percentile/median histogram state guard (VERDICT r2 item 7): the
@@ -4167,14 +4167,10 @@ class CachedSparkSession(RefreshTiers):
             # prune before any file is opened (config.temporal_partition_columns)
             pc = cfg.temporal_partition_columns.get(ts_col)
             if pc and pc in base_cols:
-                import datetime as _dt
-
-                epoch = _dt.datetime(1970, 1, 1)
-                if lo_ns is not None:
-                    lo_d = (epoch + _dt.timedelta(microseconds=lo_ns // 1000)).date()
+                lo_d, hi_d = _partition_date_bounds(lo_ns, hi_ns)
+                if lo_d is not None:
                     df = df.filter(F.col(pc) >= F.lit(lo_d))
-                if hi_ns is not None:
-                    hi_d = (epoch + _dt.timedelta(microseconds=hi_ns // 1000)).date()
+                if hi_d is not None:
                     df = df.filter(F.col(pc) <= F.lit(hi_d))
             return df
 
@@ -4183,12 +4179,12 @@ class CachedSparkSession(RefreshTiers):
         cached_state = None
         pc_col = cfg.temporal_partition_columns.get(ts_col)
         pc_arg = pc_col if (pc_col and pc_col in base_cols) else None
-        # the gates the nano/lite/template programs share, warm or cold
+        # the gates the nano/lite programs share, warm or cold
         driver_tiers_ok = (
             not spec.grouping_sets
             and spec.offset is None  # pagination: classic path only
             and not cfg.salt_buckets  # salted program is classic-only
-            # data-watermark mode needs the max-ts job the templates
+            # data-watermark mode needs the max-ts job the driver tiers
             # don't carry: classic path only
             and cfg.watermark_mode == "now"
         )
@@ -4336,73 +4332,30 @@ class CachedSparkSession(RefreshTiers):
                     cached_state = sdf
                     rows = entry.state_rows()
                     cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
-                    # template gate: same small-state contract get_arrow had
+                    # driver-tier gate: same small-state contract get_arrow had
                     state_is_local = rows is not None and rows <= cap
                 else:
                     _local_state()
             if state_is_local and driver_tiers_ok:
-                # SQL-template fast path: the whole refresh program as ONE
-                # JVM-parsed SQL string (built once per query shape) — the
-                # resulting physical plan is identical to the DataFrame
-                # program below, minus ~600 py4j round-trips per call. The
-                # dynamic-bound variant additionally folds the boundary
-                # recompute + final re-aggregate into the same program.
                 # tier ladder: nano (driver pyarrow scan, bytes-gated) →
-                # lite (one plain-sized job + driver merge) → fused
-                # one-job template; each falls through on inadmission
+                # lite (one plain-sized job + driver merge) → the classic
+                # DataFrame program below; each falls through on
+                # inadmission, overflow or failure
                 res = run_nano(cached_state, wm_ns)
-                if dyn_bound is None:
-                    if res is None:
-                        sltpl = self._static_lite_template(
-                            pkey, fingerprint, spec, plans, state_group,
-                            group_names, state_cols, partial_aggs, merge_aggs,
-                            pred, ts_col, shadow in base_cols, pc_arg,
-                            cached_state.schema, tables,
+                if res is None:
+                    ltpl = self._lite_template(
+                        pkey, fingerprint, spec, plans, state_group,
+                        group_names, state_cols, partial_aggs, merge_aggs,
+                        pred, ts_col, shadow in base_cols, pc_arg,
+                        cached_state.schema, tables, dyn_bound, bucket_name,
+                        bucket_gran,
+                    )
+                    if ltpl is not None:
+                        res = self._run_lite(
+                            ltpl, entry, cached_state, wm_ns, now_ns,
+                            dyn_bound.rhs if dyn_bound is not None else None,
+                            decision, spec,
                         )
-                        if sltpl is not None:
-                            res = self._run_static_lite(
-                                sltpl, entry, cached_state, wm_ns, now_ns,
-                                decision, spec,
-                            )
-                    if res is None:
-                        tpl = self._warm_template(
-                            pkey, fingerprint, spec, plans, state_group,
-                            group_names, state_cols, partial_aggs, merge_aggs,
-                            pred, ts_col, shadow in base_cols, pc_arg,
-                            cached_state.schema, tables,
-                        )
-                        if tpl is not None:
-                            res = self._run_warm_template(
-                                tpl, entry, cached_state, wm_ns, now_ns,
-                                decision, spec, state_cols,
-                            )
-                else:
-                    if res is None:
-                        ltpl = self._dyn_lite_template(
-                            pkey, fingerprint, spec, plans, state_group,
-                            group_names, state_cols, partial_aggs, merge_aggs,
-                            pred, ts_col, shadow in base_cols, pc_arg,
-                            cached_state.schema, tables,
-                            bucket_name, bucket_gran, dyn_bound.op,
-                        )
-                        if ltpl is not None:
-                            res = self._run_dyn_lite(
-                                ltpl, entry, cached_state, wm_ns, now_ns,
-                                dyn_bound.rhs, decision, spec,
-                            )
-                    if res is None:
-                        tpl = self._dyn_warm_template(
-                            pkey, fingerprint, spec, plans, state_group,
-                            group_names, state_cols, partial_aggs, merge_aggs,
-                            pred, ts_col, shadow in base_cols, pc_arg,
-                            cached_state.schema, tables,
-                            bucket_name, bucket_gran, dyn_bound.op,
-                        )
-                        if tpl is not None:
-                            res = self._run_dyn_warm_template(
-                                tpl, entry, cached_state, wm_ns, now_ns,
-                                dyn_bound.rhs, decision, spec, state_cols,
-                            )
                 if res is not None:
                     decision.cache_hit = True
                     decision.watermark_ns = wm_ns
@@ -4413,6 +4366,10 @@ class CachedSparkSession(RefreshTiers):
                     # entry watermark is now now_ns: memo for hot re-reads
                     self._memo_result(fingerprint, memo_wm(now_ns), res, post_key)
                     return res, decision
+                # a driver tier that failed late may have set these; the
+                # classic program reports its own
+                decision.fresh_rows_value = None
+                decision.dynamic_lower = None
             scan_hi, store_wm_ns = data_scan_wm(wm_ns)
             merged, obs = self._warm_merge(
                 cached_state, wm_ns, scan_hi, get_base(), pred, time_bounds,
@@ -4930,10 +4887,6 @@ class CachedSparkSession(RefreshTiers):
             why = f"bucket type {btype}"
         elif tgb.granularity.lower() not in self._BUCKET_INTERVAL:
             why = f"bucket granularity {tgb.granularity}"
-        elif isinstance(btype, DateType) and tgb.granularity.lower() in (
-            "minute", "hour"
-        ):
-            why = f"a DATE bucket of a sub-day {tgb.granularity} truncation"
         elif spec.offset or spec.grouping_sets:
             why = "OFFSET or grouping sets"
         elif spec.limit > entry.DRIVER_COLLECT_MAX_ROWS:
@@ -5196,8 +5149,10 @@ class CachedSparkSession(RefreshTiers):
         return keys, placements.pop() if placements else "at_end"
 
     def _fused_layout(self, spec: AggSpec):
-        """Output-column layout shared by the fused and SQL-template paths:
-        (out_names, order_names, extra order-only ride-along names)."""
+        """Output-column layout of every finalize that builds its result
+        from an Arrow table — the classic fused finalize, the nano and lite
+        driver tiers, and the bucket top-k: (out_names, order_names, extra
+        order-only ride-along names). None on duplicate output names."""
         out_names = list(spec.select_order)
         if len(set(out_names)) != len(out_names):
             return None

@@ -73,7 +73,7 @@ class CacheMaintainer:
     def _session_for(self, batch_df: DataFrame) -> CachedSparkSession:
         # foreachBatch hands each batch to a CLONED SparkSession; the temp
         # view must be resolved THERE. The clone is stable across batches
-        # of one run, so the engine (and its plan/template memos) is kept
+        # of one run, so the engine (and its plan/tier-program memos) is kept
         # per batch-session.
         sess = batch_df.sparkSession
         if self._qc is None or self._qc.spark is not sess:

@@ -1,29 +1,33 @@
 """Refresh-tier machinery for :class:`.session.CachedSparkSession`.
 
-Extracted from ``session.py`` (zero behavior change): the four refresh-tier
-builders/runners that turn one cached aggregate's (state, fresh-tail) pair
-into a result —
+Three refresh tiers turn one cached aggregate's (state, fresh-tail) pair
+into a result. ``_plan_cached`` tries them in this order and takes the
+first that admits the shape:
 
-* **classic** — DataFrame program built per refresh (``_warm_merge`` stays in
-  ``session.py``; this module holds everything below it);
-* **template** — the whole refresh compiled ONCE to a single SQL string
-  (``_build_warm_template`` / ``_run_warm_template``; dynamic-bound variant
-  ``_build_dyn_warm_template`` / ``_run_dyn_warm_template``), so a warm
-  refresh is one ``spark.sql`` call instead of hundreds of py4j round-trips;
-* **lite** — fresh-tail scan in Spark, finalize on the driver over the <=
-  group-count state rows (``_build_dyn_lite_template`` / ``_run_dyn_lite``,
-  static twin ``_static_lite_template`` / ``_run_static_lite``);
-* **nano** — zero-Spark-job driver refresh via pyarrow over a byte-gated
-  fresh tail (``_nano_template`` / ``_run_nano``; programs in ``nano.py``),
-  which also serves a cold load's whole-history scan.
+* **nano** — no Spark job: a pyarrow scan of a bytes-gated registered
+  parquet source, vectorized partial aggregation, and an exact Python
+  merge/finalize on the driver (``_nano_template`` / ``_run_nano``;
+  programs in ``nano.py``). It also serves a cold load's whole-history
+  scan. Bench rows it wins: every ``perfbench`` ``small_dashboard``
+  refresh and cold load.
+* **lite** — one plain-sized Spark job (the fresh-window scan plus its
+  partial aggregate), then the same driver merge/finalize
+  (``_lite_template`` / ``_run_lite``). Bench rows it wins: the
+  ``bench.py`` warm rows over plain views or with nano off
+  (``qc_x1000_warm``, ``qc_dyn_x1000_warm``, ``qc_warm_dist``,
+  ``qc_dyn_warm_dist``).
+* **classic** — the DataFrame program built per refresh (``_warm_merge``
+  and the finalize in ``session.py``). It serves every shape the driver
+  tiers refuse (no exact Python mirror, a cross-bucket merge, big or
+  layered state) and every fallback, so the ladder always ends exact.
 
 Also home to the shared planning helpers (``_push_time_bounds``,
-``_order_col``) and the :class:`Decision` observability record, imported
-back into ``session.py`` for its own use.
+``_partition_date_bounds``, ``_order_col``) and the :class:`Decision`
+observability record, imported back into ``session.py`` for its own use.
 
 Reference provenance: the tier ladder realizes the reference's single
 ``Union[Cached, LowerBounded(partial)] -> Final`` physical plan
-(``src/aggregate.rs:386-409``) at four cost points; the reference has one.
+(``src/aggregate.rs:386-409``) at three cost points; the reference has one.
 """
 
 from __future__ import annotations
@@ -35,7 +39,7 @@ from typing import Dict, List, Optional
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .cache import StateCardinalityExceeded, arrow_to_spark
+from .cache import StateCardinalityExceeded
 from .functions.compile import to_column
 from .plans.ir import AggSpec, Col, Lit, Unsupported
 from .sources.tables import LOCAL_PARQUET_SOURCES
@@ -102,6 +106,46 @@ def _push_time_bounds(
     return df
 
 
+#: Java zone offsets lie within ±18 h (``ZoneOffset.MAX_SECONDS``)
+_MAX_TZ_OFFSET_NS = 18 * 3600 * 10**9
+
+
+def _partition_date_bounds(
+    lo_ns: Optional[int], hi_ns: Optional[int]
+) -> tuple:
+    """Inclusive ``(lo, hi)`` dates on a date-partition column that cover
+    the instants ``[lo_ns, hi_ns)`` (None for an open side). The partition
+    column's dates were materialized under SOME session time zone,
+    possibly not this session's: a row's date there is the UTC date of an
+    instant at most 18 h from the row's own, so the bounds are the UTC
+    dates of ``lo - 18 h`` and ``hi + 18 h`` and never exclude a qualifying
+    partition. Pruning is an optimization; the exact ts bounds still
+    filter rows. Found live: a Chicago-tz session over a UTC-built
+    partition layout dropped a boundary-bucket row, and a UTC session
+    over a Chicago-built one undercounted."""
+    import datetime as _dt
+
+    def utc_date(ns: int):
+        us = _dt.timedelta(microseconds=ns // 1000)
+        return (_dt.datetime(1970, 1, 1) + us).date()
+
+    return (
+        None if lo_ns is None else utc_date(lo_ns - _MAX_TZ_OFFSET_NS),
+        None if hi_ns is None else utc_date(hi_ns + _MAX_TZ_OFFSET_NS),
+    )
+
+
+def _merge_states(merges, a: Optional[dict], b: dict) -> dict:
+    """Merge partial state ``b`` into ``a`` (None: nothing yet) with the
+    driver tiers' Python merge mirrors."""
+    if a is None:
+        return dict(b)
+    out = dict(a)
+    for m in merges:
+        out.update(m(a, b))
+    return out
+
+
 def _order_col(name: str, o) -> Column:
     """ORDER BY item → Column with explicit direction AND null order.
 
@@ -129,22 +173,26 @@ class Decision:
     watermark_ns: Optional[int] = None
     now_ns: Optional[int] = None
     #: the dynamic lower bound this run used — DUAL FORM: the EVALUATED
-    #: f(now()) value (timestamp/date) on the classic path, or the
-    #: rendered pinned-now SQL expression (string) on the fused template
-    #: path, which never evaluates the bound driver-side (that would cost
-    #: a Spark job per refresh). Non-None ⇔ a dynamic bound was in play.
+    #: f(now()) value (timestamp/date) on the nano and classic paths, or
+    #: the rendered pinned-now SQL expression (string) on the lite path,
+    #: which never evaluates the bound driver-side (that would cost a
+    #: Spark job per refresh). Non-None ⇔ a dynamic bound was in play.
     dynamic_lower: Optional[object] = None
     observation: Optional[Observation] = None  # fresh-scan row count (hit only)
     #: which warm-refresh tier served a hit: aggregates — "nano" (driver
-    #: pyarrow scan), "lite" (one plain-sized job + driver merge),
-    #: "template" (fused one-job SQL), or "classic" (DataFrame assembly);
-    #: filter queries — "nano" (driver top-k), "topk" (Spark-path top-k
-    #: union+sort+limit), or "rowset" (appended row sets). On a miss
+    #: pyarrow scan; every perfbench small_dashboard refresh), "lite" (one
+    #: plain-sized job + driver merge; bench.py warm rows over plain views
+    #: or with nano off), "classic" (DataFrame assembly; every shape or
+    #: fallback the driver tiers refuse), or "bucket_topk" (a layered
+    #: big-state top-k finalized from per-bucket summaries; the perfbench
+    #: big_state refresh); filter queries — "nano" (driver top-k), "topk"
+    #: (Spark-path top-k union+sort+limit), or "rowset" (appended row
+    #: sets). On a miss
     #: (``cache_hit`` False): "nano" when the nano program computed the
     #: state, None for the classic compute-and-store
     refresh_tier: Optional[str] = None
-    #: exact fresh-row count when the SQL-template warm path ran (it counts
-    #: via a rider aggregate instead of an Observation)
+    #: exact fresh-row count when a driver tier (nano, lite) ran: both
+    #: count the rows their own scan admitted instead of via an Observation
     fresh_rows_value: Optional[int] = None
     #: fingerprint of the WEAKER filter entry a miss was served from
     #: (semantic-cache subsumption), when that happened
@@ -169,7 +217,7 @@ class Decision:
 
 
 class RefreshTiers:
-    """Mixin holding the template/lite/nano tier builders and runners.
+    """Mixin holding the nano/lite tier builders and runners.
 
     ``CachedSparkSession`` subclasses this; every method runs with ``self``
     being the live session wrapper (``self.spark``, ``self.config``,
@@ -178,95 +226,30 @@ class RefreshTiers:
 
     def _sql_of(self, col: Column) -> str:
         """Render a compiled Column back to parseable SQL text via the JVM
-        expression converter. Paid ONCE per template build; lets the whole
-        warm-path program run as a single ``spark.sql`` call instead of
-        hundreds of py4j DataFrame-building round-trips per refresh."""
+        expression converter. Paid ONCE per lite program build; lets its
+        Spark job run as a single ``spark.sql`` call instead of hundreds of
+        py4j DataFrame-building round-trips per refresh."""
         return self.spark._jsparkSession.expression(col._jc).sql()
-
-    def _warm_template(
-        self,
-        pkey,
-        fingerprint: str,
-        spec: AggSpec,
-        plans,
-        state_group,
-        group_names: List[str],
-        state_cols: List[str],
-        partial_aggs: Dict[str, Column],
-        merge_aggs: Dict[str, Column],
-        pred: Optional[Column],
-        ts_col: str,
-        shadow_ok: bool,
-        part_col: Optional[str],
-        state_schema,
-        tables: List[str],
-    ) -> Optional[dict]:
-        """Memoized SQL template for the incremental-refresh program.
-
-        The template is the textual twin of the classic warm plan —
-        ``finalize(merge(union(state_view, singleton(fresh))))`` — with the
-        watermark bounds as placeholder tokens, plus a rider aggregate
-        ``sum(__qc_isfresh)`` that reproduces the Observation row count for
-        free. None ⇒ this query shape can't be templated (stay classic)."""
-        key = (*pkey, state_schema.simpleString())
-        if key in self._tpl_cache:
-            return self._tpl_cache[key]
-        tpl = None
-        try:
-            tpl = self._build_warm_template(
-                fingerprint, spec, plans, state_group, group_names, state_cols,
-                partial_aggs, merge_aggs, pred, ts_col, shadow_ok, part_col,
-                state_schema, tables,
-            )
-        except Exception as e:
-            self.config.log.info(
-                fingerprint, f"sql-template not available ({e}); using classic plan"
-            )
-            tpl = None
-        if tpl is not None:
-            tpl["key"] = key
-        if len(self._tpl_cache) >= self._MEMO_MAX:
-            self._tpl_cache.clear()
-        self._tpl_cache[key] = tpl
-        return tpl
 
     def _tpl_core(
         self,
         spec: AggSpec,
-        plans,
         state_group,
         group_names: List[str],
-        state_cols: List[str],
-        partial_aggs: Dict[str, Column],
-        merge_aggs: Dict[str, Column],
         pred: Optional[Column],
         ts_col: str,
         state_schema,
         tables: List[str],
-    ) -> Optional[dict]:
-        """SQL fragments shared by the static and dynamic warm templates:
-        FROM clause, fresh/boundary partial select items, merge items, and
-        the finalize item list. None ⇒ this shape can't be templated."""
-        layout = self._fused_layout(spec)
-        if layout is None:
-            return None
-        out_names, order_names, extra_names = layout
+    ) -> dict:
+        """SQL fragments of the lite tier's one Spark job: the quoting
+        helper, group-key SQL, FROM clause (fact table + join steps),
+        predicate and GROUP BY text, rendered once per program build."""
         sql_of = self._sql_of
 
         def q(n: str) -> str:
             return "`" + n.replace("`", "``") + "`"
 
-        fin_raw = {p.name: p.finalize_raw for p in plans}
-        dtypes = {f.name: f.dataType for f in state_schema.fields}
         g_sql = {g.name: sql_of(to_column(g.expr)) for g in state_group}
-
-        singletons: Dict[str, Column] = {}
-        use_singleton = True
-        for p in plans:
-            if p.singleton is None:
-                use_singleton = False
-                break
-            singletons.update(p.singleton)
 
         # FROM: fact table, then the left-deep join steps (same static-dims
         # refresh contract as the DataFrame path)
@@ -282,45 +265,6 @@ class RefreshTiers:
                 kw = "LEFT JOIN" if step.how == "left" else "JOIN"
                 from_sql += f" {kw} {q(step.table)} ON {sql_of(to_column(step.on))}"
 
-        # partial select items: singleton row-states when every aggregate
-        # has one (the one-shuffle plan), else explicit partial aggregates
-        items = []
-        for n in state_cols:
-            if n in g_sql:
-                items.append(f"{g_sql[n]} AS {q(n)}")
-            elif use_singleton:
-                t = dtypes[n].simpleString()
-                items.append(f"CAST({sql_of(singletons[n])} AS {t}) AS {q(n)}")
-            else:
-                items.append(f"{sql_of(partial_aggs[n])} AS {q(n)}")
-
-        merge_items = [
-            f"{sql_of(merge_aggs[n])} AS {q(n)}"
-            for n in state_cols
-            if n not in g_sql
-        ]
-        # The central-moment merges (var/skew/kurt/corr families) are
-        # higher-order array folds; the JVM renderer emits them as
-        # `lambdafunction(...)`, which spark.sql cannot parse back. Flag it
-        # so the SQL-template builders (the only merge_items consumers)
-        # refuse and fall back to the classic DataFrame plan — the lite/
-        # nano tiers also build on this core but merge via py_merge, so
-        # they stay eligible.
-        merge_has_hof = any("lambdafunction(" in f for f in merge_items + items)
-
-        # finalize item list (output expressions + order ride-alongs + the
-        # hidden HAVING flag) — the layout _arrow_result expects
-        fin_exprs = []
-        for i, name in enumerate(out_names):
-            if name in fin_raw:
-                fin_exprs.append(f"{sql_of(fin_raw[name])} AS {q('__fin%d' % i)}")
-            else:
-                fin_exprs.append(f"{q(name)} AS {q('__fin%d' % i)}")
-        for nm in extra_names:
-            fin_exprs.append(f"{q(nm)} AS {q('__ord_' + nm)}")
-        if spec.having is not None:
-            fin_exprs.append(f"{sql_of(fin_raw['__qc_having'])} AS {q('__fin_hv')}")
-
         ts_is_ts = False
         try:
             from pyspark.sql.types import TimestampNTZType, TimestampType
@@ -334,167 +278,14 @@ class RefreshTiers:
             pass  # pushdown companion is an optimization, never required
 
         return {
-            "out_names": out_names,
-            "order_names": order_names,
-            "extra_names": extra_names,
             "q": q,
             "g_sql": g_sql,
-            "dtypes": dtypes,
-            "use_singleton": use_singleton,
+            "dtypes": {f.name: f.dataType for f in state_schema.fields},
             "from_sql": from_sql,
-            "items": items,
-            "merge_items": merge_items,
-            "merge_has_hof": merge_has_hof,
-            "fin_exprs": fin_exprs,
             "pred_sql": f"({sql_of(pred)})" if pred is not None else None,
             "gb_exprs": ", ".join(g_sql[n] for n in group_names),
-            "sel_groups": ", ".join(q(n) for n in group_names),
-            "state_sel": ", ".join(q(c) for c in state_cols),
             "ts_is_ts": ts_is_ts,
         }
-
-    def _build_warm_template(
-        self,
-        fingerprint: str,
-        spec: AggSpec,
-        plans,
-        state_group,
-        group_names: List[str],
-        state_cols: List[str],
-        partial_aggs: Dict[str, Column],
-        merge_aggs: Dict[str, Column],
-        pred: Optional[Column],
-        ts_col: str,
-        shadow_ok: bool,
-        part_col: Optional[str],
-        state_schema,
-        tables: List[str],
-    ) -> Optional[dict]:
-        import hashlib
-
-        core = self._tpl_core(
-            spec, plans, state_group, group_names, state_cols, partial_aggs,
-            merge_aggs, pred, ts_col, state_schema, tables,
-        )
-        if core is None:
-            return None
-        q = core["q"]
-
-        # WHERE: stable predicate + exact [wm, now) tiling + optional
-        # partition-column coarsening for partition pruning. Same shape as
-        # ``_push_time_bounds``: the ns shadow gives exactness; a REDUNDANT
-        # µs bound on the timestamp column itself gives scan pushdown when
-        # the shadow is a derived column (µs/NTZ sources) — floor the lower
-        # / ceil the upper so the superset never drops a row the ns bound
-        # admits.
-        conds = []
-        if core["pred_sql"] is not None:
-            conds.append(core["pred_sql"])
-        if shadow_ok:
-            shadow = q(f"{ts_col}_ns")
-            if core["ts_is_ts"]:
-                # µs-aligned watermarks make the pushable µs bounds EXACT
-                # (ts_ns ≥ 1000k ⟺ µs(ts) ≥ k for any integer ts_ns), so
-                # the per-row ns-shadow comparisons are guarded out at
-                # substitution time: __QC_NSG__ becomes `true` when both
-                # bounds are multiples of 1000 and BooleanSimplification
-                # erases the whole conjunct — the scan then evaluates only
-                # the native µs comparisons. Misaligned bounds keep the
-                # exact ns tiling (guard `false` folds to the ns conds).
-                conds.append(
-                    f"(__QC_NSG__ OR ({shadow} >= __QC_WM_NS__ "
-                    f"AND {shadow} < __QC_NOW_NS__))"
-                )
-                conds.append(
-                    f"{q(ts_col)} >= timestamp_micros(__QC_WM_US_FLOOR__)"
-                )
-                conds.append(f"{q(ts_col)} < timestamp_micros(__QC_NOW_US__)")
-            else:
-                conds.append(f"{shadow} >= __QC_WM_NS__")
-                conds.append(f"{shadow} < __QC_NOW_NS__")
-        else:
-            conds.append(f"{q(ts_col)} >= timestamp_micros(__QC_WM_US__)")
-            conds.append(f"{q(ts_col)} < timestamp_micros(__QC_NOW_US__)")
-        if part_col:
-            conds.append(f"{q(part_col)} >= DATE'__QC_LO_D__'")
-            conds.append(f"{q(part_col)} <= DATE'__QC_HI_D__'")
-        where_sql = " AND ".join(conds)
-
-        view = f"__qc_state_{hashlib.md5(fingerprint.encode()).hexdigest()[:12]}"
-        isf = q("__qc_isfresh")
-
-        # fresh side: singleton row-states when every aggregate has one (the
-        # one-shuffle plan), else an explicit partial sub-aggregate
-        items = core["items"]
-        if core["use_singleton"]:
-            fresh_sql = (
-                f"SELECT {', '.join(items)}, 1 AS {isf} "
-                f"FROM {core['from_sql']} WHERE {where_sql}"
-            )
-        else:
-            fresh_sql = (
-                f"SELECT {', '.join(items)}, count(1) AS {isf} "
-                f"FROM {core['from_sql']} WHERE {where_sql}"
-                + (f" GROUP BY {core['gb_exprs']}" if group_names else "")
-            )
-
-        state_sel = core["state_sel"]
-        union_sql = (
-            f"{fresh_sql} UNION ALL SELECT {state_sel}, 0 AS {isf} FROM {q(view)}"
-        )
-
-        # merge: one hash aggregate over the union — map-side combine of the
-        # singleton rows IS the partial aggregation (single shuffle)
-        if core.get("merge_has_hof"):
-            raise ValueError(
-                "merge uses a higher-order fold (not SQL-renderable)"
-            )
-        sel_groups = core["sel_groups"]
-        head = f"{sel_groups}, " if group_names else ""
-        m_sql = (
-            f"SELECT {head}{', '.join(core['merge_items'])}, "
-            f"sum({isf}) AS {q('__qc_fresh')} "
-            f"FROM ({union_sql}) __qc_u"
-            + (f" GROUP BY {sel_groups}" if group_names else "")
-        )
-
-        # finalize: state columns ride through for the store-back, followed
-        # by the output expressions — same layout _arrow_result expects,
-        # with the fresh-row counter as the (dropped) last column
-        fin_items = [q(n) for n in state_cols]
-        fin_items.extend(core["fin_exprs"])
-        fin_items.append(q("__qc_fresh"))
-        sql = f"SELECT {', '.join(fin_items)} FROM ({m_sql}) __qc_m"
-
-        if "lambdafunction(" in sql:
-            # higher-order-function lambdas (RLE-histogram percentile state)
-            # don't round-trip through Expression.sql() — the rendered
-            # lambdafunction(...) form is not parseable SQL. Stay classic.
-            return None
-
-        return {
-            "sql": sql,
-            "view": view,
-            "out_names": core["out_names"],
-            "order_names": core["order_names"],
-            "extra_names": core["extra_names"],
-        }
-
-
-    def _bind_state_source(self, tpl: dict, entry, cached_state: DataFrame,
-                           sql: str) -> str:
-        """Bind the template's state reference by (re-)registering the temp
-        view over the entry's current state DataFrame.
-
-        Measured alternative: inlining the entry's parquet path as
-        ``parquet.`path``` (``entry.state_parquet_paths()``) skips this
-        registration (~8ms) but pays footer schema-inference during
-        analysis (~60ms/refresh — the state dir changes on every
-        store-back swap, so nothing caches) — strictly worse. The view
-        carries the explicit meta-schema read, so analysis never touches
-        the parquet footer."""
-        cached_state.createOrReplaceTempView(tpl["view"])
-        return sql
 
     def _narrow_refresh_ok(self, spec) -> bool:
         """Should this refresh job narrow its merge shuffle to 2 tasks?
@@ -570,117 +361,6 @@ class RefreshTiers:
         Arrow, on the session ``_refresh_frame`` picks."""
         return self._refresh_frame(df, spec).limit(cap + 1).toArrow()
 
-    def _run_warm_template(
-        self,
-        tpl: dict,
-        entry,
-        cached_state: DataFrame,
-        wm_ns: int,
-        now_ns: int,
-        decision: Decision,
-        spec: AggSpec,
-        state_cols: List[str],
-    ) -> Optional[DataFrame]:
-        """Execute the templated refresh: ~4 py4j calls + one Spark job.
-
-        Store-back comes from the same collected Arrow table (no second
-        scan); a zero-row refresh window only advances the watermark."""
-        from pyspark.sql.types import StructType
-
-        try:
-            # non-negativity required for erasure: see _sub_time_tokens
-            aligned = wm_ns % 1000 == 0 and now_ns % 1000 == 0 and wm_ns >= 0
-            sql = (
-                tpl["sql"]
-                .replace("__QC_NSG__", "true" if aligned else "false")
-                .replace("__QC_WM_NS__", str(wm_ns))
-                .replace("__QC_NOW_NS__", str(now_ns))
-            )
-            if "__QC_WM_US__" in sql:
-                sql = sql.replace("__QC_WM_US__", str(-(-wm_ns // 1000)))
-            if "__QC_WM_US_FLOOR__" in sql:
-                # superset companion of the exact ns bound: floor, not ceil
-                sql = sql.replace("__QC_WM_US_FLOOR__", str(wm_ns // 1000))
-            if "__QC_NOW_US__" in sql:
-                sql = sql.replace("__QC_NOW_US__", str(-(-now_ns // 1000)))
-            if "__QC_LO_D__" in sql:
-                import datetime as _dt
-
-                # ±1-day widening: these dates derive from the instant in
-                # naive UTC while the partition column's dates were
-                # materialized in SOME session timezone (possibly a
-                # different one) — any fixed-offset skew moves a date by at
-                # most one day, so the widened bounds never exclude a
-                # qualifying partition (pruning is an optimization; the
-                # exact ts bounds still filter rows). Found live: a
-                # Chicago-tz session over a UTC-built partition layout
-                # dropped a boundary-bucket row (r12 vanilla fuzz).
-                epoch = _dt.datetime(1970, 1, 1)
-                one = _dt.timedelta(days=1)
-                lo_d = (epoch + _dt.timedelta(microseconds=wm_ns // 1000)).date() - one
-                hi_d = (epoch + _dt.timedelta(microseconds=now_ns // 1000)).date() + one
-                sql = sql.replace("__QC_LO_D__", lo_d.isoformat())
-                sql = sql.replace("__QC_HI_D__", hi_d.isoformat())
-            sql = self._bind_state_source(tpl, entry, cached_state, sql)
-            # bound the collect: a refresh window that explodes group
-            # cardinality (small prev state, huge fresh burst) must fall
-            # back to the classic program — whose store spills to the
-            # distributed path — not materialize driver-side first. The
-            # LIMIT cannot under-count the rider sum on the admitted path
-            # (overflow ⇒ fall back, the truncated table is discarded),
-            # and the observe-under-limit argument from ``cache.put``
-            # doesn't even arise (the rider rides the rows themselves).
-            cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
-            df = self.spark.sql(sql)
-            self.last_refresh_df = df
-            aug_fields = list(df.schema.fields)
-            tbl = self._refresh_to_arrow(df, cap, spec)  # the ONE job
-        except Exception as e:
-            # poison this template (wrong render, unregistered function,
-            # ...) and fall back to the classic DataFrame program
-            self._tpl_cache[tpl["key"]] = None
-            self.config.log.warn(
-                decision.fingerprint or "",
-                f"sql-template warm path failed ({e}); falling back",
-            )
-            return None
-        if tbl.num_rows > cap:
-            # transient burst, NOT a template defect: no poisoning — the
-            # classic program re-runs this refresh and stores distributed
-            self.config.log.warn(
-                decision.fingerprint or "",
-                f"template refresh grew past {cap} groups; classic fallback",
-            )
-            return None
-
-        import pyarrow.compute as pc
-
-        last = tbl.num_columns - 1
-        fresh = pc.sum(tbl.column(last)).as_py()
-        decision.fresh_rows_value = int(fresh or 0)
-        tbl = tbl.remove_column(last)
-        aug_fields = aug_fields[:-1]
-        base_idx = len(state_cols)
-        if decision.fresh_rows_value == 0 and entry.advance_watermark(now_ns):
-            pass  # merged state ≡ stored state: watermark swap only
-        else:
-            state_schema = StructType(
-                [f for f in aug_fields[:base_idx]]
-            )
-            state_part = tbl.select(list(range(base_idx)))
-            if not entry.put_arrow(now_ns, state_part, state_schema):
-                st_df = arrow_to_spark(
-                    self.spark, state_part, schema=state_schema
-                )
-                entry.put(now_ns, st_df, self.spark)
-        decision.refresh_tier = "template"
-        return self._arrow_result(
-            tbl, aug_fields, base_idx, spec,
-            tpl["out_names"], tpl["extra_names"], tpl["order_names"],
-        )
-
-    # -- dynamic-bound SQL-template warm path --------------------------------
-
     @staticmethod
     def _time_conds(
         q,
@@ -700,9 +380,12 @@ class RefreshTiers:
         if shadow_ok:
             shadow = q(f"{ts_col}_ns")
             if ts_is_ts:
-                # µs-aligned bounds make the pushable µs comparisons exact;
-                # the guard token then folds the per-row ns conds away
-                # (see the static template's __QC_NSG__ note)
+                # µs-aligned watermarks make the pushable µs bounds EXACT
+                # (ts_ns ≥ 1000k ⟺ µs(ts) ≥ k for any integer ts_ns), so
+                # the guard token becomes `true` at substitution time when
+                # both bounds are multiples of 1000 and BooleanSimplification
+                # erases the per-row ns conds; misaligned bounds keep the
+                # exact ns tiling (guard `false`)
                 conds.append(
                     f"(__QC_{p}NSG__ OR ({shadow} >= __QC_{p}LO_NS__ "
                     f"AND {shadow} < __QC_{p}HI_NS__))"
@@ -722,8 +405,6 @@ class RefreshTiers:
 
     @staticmethod
     def _sub_time_tokens(sql: str, p: str, lo_ns: int, hi_ns: int) -> str:
-        import datetime as _dt
-
         # guard erasure also requires NON-NEGATIVE bounds: ns sources derive
         # µs ts via `div 1000`, which truncates toward zero — for pre-1970
         # (negative-epoch) values trunc != floor, so the "µs bounds are
@@ -736,62 +417,10 @@ class RefreshTiers:
         sql = sql.replace(f"__QC_{p}LO_USC__", str(-(-lo_ns // 1000)))
         sql = sql.replace(f"__QC_{p}HI_USC__", str(-(-hi_ns // 1000)))
         if f"__QC_{p}LO_D__" in sql:
-            # ±1-day widening: UTC-naive dates vs a partition column whose
-            # dates were materialized in SOME session tz — skew moves a
-            # date by at most one day, so widened bounds never exclude a
-            # qualifying partition (the exact ts bounds still filter rows)
-            epoch = _dt.datetime(1970, 1, 1)
-            one = _dt.timedelta(days=1)
-            lo_d = (epoch + _dt.timedelta(microseconds=lo_ns // 1000)).date() - one
-            hi_d = (epoch + _dt.timedelta(microseconds=hi_ns // 1000)).date() + one
+            lo_d, hi_d = _partition_date_bounds(lo_ns, hi_ns)
             sql = sql.replace(f"__QC_{p}LO_D__", lo_d.isoformat())
             sql = sql.replace(f"__QC_{p}HI_D__", hi_d.isoformat())
         return sql
-
-    def _dyn_warm_template(
-        self,
-        pkey,
-        fingerprint: str,
-        spec: AggSpec,
-        plans,
-        state_group,
-        group_names: List[str],
-        state_cols: List[str],
-        partial_aggs: Dict[str, Column],
-        merge_aggs: Dict[str, Column],
-        pred: Optional[Column],
-        ts_col: str,
-        shadow_ok: bool,
-        part_col: Optional[str],
-        state_schema,
-        tables: List[str],
-        bucket_name: str,
-        bucket_gran: str,
-        dyn_op: str,
-    ) -> Optional[dict]:
-        """Memoized one-SQL template for the dynamic-bound refresh."""
-        key = ("dyn", *pkey, state_schema.simpleString())
-        if key in self._tpl_cache:
-            return self._tpl_cache[key]
-        tpl = None
-        try:
-            tpl = self._build_dyn_warm_template(
-                fingerprint, spec, plans, state_group, group_names, state_cols,
-                partial_aggs, merge_aggs, pred, ts_col, shadow_ok, part_col,
-                state_schema, tables, bucket_name, bucket_gran, dyn_op,
-            )
-        except Exception as e:
-            self.config.log.info(
-                fingerprint,
-                f"dyn sql-template not available ({e}); using classic plan",
-            )
-            tpl = None
-        if tpl is not None:
-            tpl["key"] = key
-        if len(self._tpl_cache) >= self._MEMO_MAX:
-            self._tpl_cache.clear()
-        self._tpl_cache[key] = tpl
-        return tpl
 
     def _dyn_scan_core(
         self,
@@ -803,11 +432,11 @@ class RefreshTiers:
         bucket_gran: str,
         dyn_op: str,
     ) -> dict:
-        """Combined fresh-tail + boundary-bucket scan, shared by the fused
-        dyn template and the lite tier.
+        """Combined fresh-tail + boundary-bucket scan of the dynamic lite
+        program.
 
-        ONE pass over the fact table replaces the former two scan branches
-        (fresh tail [wm, now) and boundary-bucket recompute): the WHERE
+        ONE pass over the fact table covers both the fresh tail [wm, now)
+        and the boundary-bucket recompute: the WHERE
         keeps a PUSHABLE OR-of-ranges conjunct — both ranges reach parquet
         row-group stats and partition pruning, so at scale the pruned set
         is exactly (fresh-tail partitions) ∪ (boundary-bucket partitions),
@@ -947,268 +576,7 @@ class RefreshTiers:
             "inner_sql": inner_sql,
         }
 
-    def _build_dyn_warm_template(
-        self,
-        fingerprint: str,
-        spec: AggSpec,
-        plans,
-        state_group,
-        group_names: List[str],
-        state_cols: List[str],
-        partial_aggs: Dict[str, Column],
-        merge_aggs: Dict[str, Column],
-        pred: Optional[Column],
-        ts_col: str,
-        shadow_ok: bool,
-        part_col: Optional[str],
-        state_schema,
-        tables: List[str],
-        bucket_name: str,
-        bucket_gran: str,
-        dyn_op: str,
-    ) -> Optional[dict]:
-        """One-SQL / one-shuffle dynamic-bound refresh program.
-
-        The classic dynamic warm path ran several driver-sequenced jobs per
-        refresh (fresh-tail merge, state store, boundary recompute, final
-        re-aggregate) — slower than a plain rescan at every recorded scale.
-        This template computes BOTH the refreshed state (for the store-back)
-        and the finished query result in ONE aggregate via a destination
-        tag:
-
-        * every input row is routed to ``dest=0`` (state maintenance, at
-          bucket granularity) and/or ``dest=1`` (the query result, at the
-          QUERY's granularity) — rows above the boundary bucket explode to
-          both, boundary-bucket recompute rows go only to the result;
-        * for result rows the synthetic bucket key is nulled out, so ONE
-          ``GROUP BY dest, <state groups>`` aggregates each destination at
-          its own granularity (merge associativity: re-aggregating merged
-          full buckets ≡ merging their raw parts);
-        * the whole program is one Spark job — ONE fact-table scan whose
-          pushable OR-of-ranges filter covers both the fresh tail
-          ``[wm, now)`` and the boundary bucket ``[lower, bucket_end)``
-          (both ranges reach parquet ``PushedFilters`` / partition
-          pruning), one tiny state-file scan, ONE shuffle — against
-          plain's full-window rescan.
-
-        ``bucket_end`` comes from a session-tz ``date_trunc + INTERVAL``,
-        so the boundary scan needs no DST slack; bound and boundary
-        literals bind as epoch-µs ``timestamp_micros`` tokens, so
-        session-timezone string reinterpretation can't shift them. The
-        driver splits the collected Arrow table on the kind column: kind=0
-        rows feed ``put_arrow`` (no second scan), kind=1 rows finish as
-        the LocalRelation result.
-        """
-        import hashlib
-
-        core = self._tpl_core(
-            spec, plans, state_group, group_names, state_cols, partial_aggs,
-            merge_aggs, pred, ts_col, state_schema, tables,
-        )
-        if core is None:
-            return None
-        q = core["q"]
-        g_sql = core["g_sql"]
-        if bucket_name not in g_sql:
-            return None  # no bucket column in state: not a dyn state shape
-
-        rg = [g.name for g in spec.group_by]
-        sc = self._dyn_scan_core(
-            core, ts_col, shadow_ok, part_col, bucket_name, bucket_gran,
-            dyn_op,
-        )
-        bucket_dt = sc["bucket_dt"]
-        bnd_lit = sc["bnd_lit"]
-        null_bucket = bucket_name not in rg  # synthetic bucket: result drops it
-        dest = q("__qc_dest")
-        isf = q("__qc_isfresh")
-        view = f"__qc_state_{hashlib.md5(fingerprint.encode()).hexdigest()[:12]}"
-
-        def dest_arr(bucket_expr: str) -> str:
-            """Explode source: state-maintenance always; the result too for
-            rows strictly above the boundary bucket (boundary-bucket rows
-            reach the result via the exact recompute branch instead)."""
-            return (
-                f"LATERAL VIEW explode(CASE WHEN {bucket_expr} > {bnd_lit} "
-                f"THEN array(0, 1) ELSE array(0) END) __qc_x AS {q('__qc_dest')}"
-            )
-
-        def bucket_out(bucket_expr: str, const_dest1: bool) -> str:
-            if not null_bucket:
-                return bucket_expr
-            if const_dest1:
-                return f"CAST(NULL AS {bucket_dt})"
-            return (
-                f"CASE WHEN {dest} = 1 THEN CAST(NULL AS {bucket_dt}) "
-                f"ELSE {bucket_expr} END"
-            )
-
-        # state rows: one tiny scan, exploded to their destination set
-        st_items = []
-        for n in state_cols:
-            if n == bucket_name:
-                st_items.append(f"{bucket_out(q(n), False)} AS {q(n)}")
-            else:
-                st_items.append(q(n))
-        state_branch = (
-            f"SELECT {', '.join(st_items)}, {dest}, 0 AS {isf} "
-            f"FROM {q(view)} {dest_arr(q(bucket_name))}"
-        )
-
-        qif, qib = sc["qif"], sc["qib"]
-        inner_sql = sc["inner_sql"]
-
-        def scan_items(const_dest1: bool) -> List[str]:
-            out = []
-            for s, n in zip(core["items"], state_cols):
-                if n == bucket_name:
-                    out.append(
-                        f"{bucket_out(g_sql[n], const_dest1)} AS {q(n)}"
-                    )
-                else:
-                    out.append(s)
-            return out
-
-        # destination routing: fresh rows always maintain state (0) and
-        # additionally feed the result (1) when their bucket is strictly
-        # above the boundary bucket OR they fall in the exact boundary
-        # recompute range; boundary-only rows feed the result alone
-        dest_case = (
-            f"CASE WHEN {qif} AND ({g_sql[bucket_name]} > {bnd_lit} "
-            f"OR {qib}) THEN array(0, 1) "
-            f"WHEN {qif} THEN array(0) ELSE array(1) END"
-        )
-        scan_src = (
-            f"({inner_sql}) __qc_s "
-            f"LATERAL VIEW explode({dest_case}) __qc_x AS {q('__qc_dest')}"
-        )
-        scan_where = f"{qif} OR {qib}"
-        if core["use_singleton"]:
-            scan_branch = (
-                f"SELECT {', '.join(scan_items(False))}, {dest}, "
-                f"CASE WHEN {dest} = 0 THEN 1 ELSE 0 END AS {isf} "
-                f"FROM {scan_src} WHERE {scan_where}"
-            )
-        else:
-            gb = [f"{bucket_out(g_sql[n], False)}" if n == bucket_name
-                  else g_sql[n] for n in group_names]
-            scan_branch = (
-                f"SELECT {', '.join(scan_items(False))}, {dest}, "
-                f"sum(CASE WHEN {dest} = 0 THEN 1 ELSE 0 END) AS {isf} "
-                f"FROM {scan_src} WHERE {scan_where}"
-                f" GROUP BY {dest}, {', '.join(gb)}"
-            )
-
-        # ONE aggregate over the tagged union: dest=0 groups merge at state
-        # (bucket) granularity, dest=1 groups at the query's granularity
-        if core.get("merge_has_hof"):
-            raise ValueError(
-                "merge uses a higher-order fold (not SQL-renderable)"
-            )
-        union_sql = f"{state_branch} UNION ALL {scan_branch}"
-        m_sql = (
-            f"SELECT {dest}, {core['sel_groups']}, "
-            f"{', '.join(core['merge_items'])}, "
-            f"sum({isf}) AS {q('__qc_fresh')} "
-            f"FROM ({union_sql}) __qc_u "
-            f"GROUP BY {dest}, {core['sel_groups']}"
-        )
-
-        # finalize: state columns ride through (kind=0 rows feed the
-        # store-back; their fin columns are computed but ignored), fins
-        # finish kind=1 rows — the layout _run_dyn_warm_template splits
-        fin_items = [q(n) for n in state_cols]
-        fin_items.extend(core["fin_exprs"])
-        fin_items.append(q("__qc_fresh"))
-        fin_items.append(f"{dest} AS {q('__qc_kind')}")
-        sql = f"SELECT {', '.join(fin_items)} FROM ({m_sql}) __qc_m"
-
-        if "lambdafunction(" in sql:
-            return None  # same non-parseable-render guard as the static path
-
-        return {
-            "sql": sql,
-            "view": view,
-            "out_names": core["out_names"],
-            "order_names": core["order_names"],
-            "extra_names": core["extra_names"],
-        }
-
-    def _run_dyn_warm_template(
-        self,
-        tpl: dict,
-        entry,
-        cached_state: DataFrame,
-        wm_ns: int,
-        now_ns: int,
-        dyn_rhs,
-        decision: Decision,
-        spec: AggSpec,
-        state_cols: List[str],
-    ) -> Optional[DataFrame]:
-        """Execute the templated dynamic refresh: one Spark job, one Arrow
-        collect, driver-side split into store-back state and result. The
-        bound never evaluates on the driver — the pinned rhs is rendered
-        into the SQL and Catalyst constant-folds it."""
-        from pyspark.sql.types import StructType
-
-        try:
-            rhs_sql = f"({self._sql_of(to_column(self._pin_now(dyn_rhs, now_ns)))})"
-            # the rendered pinned bound (classic paths carry the evaluated
-            # value; evaluating here would cost a driver-local Spark job)
-            decision.dynamic_lower = rhs_sql
-            sql = tpl["sql"].replace("__QC_RHS__", rhs_sql)
-            sql = self._sub_time_tokens(sql, "F", wm_ns, now_ns)
-            sql = self._bind_state_source(tpl, entry, cached_state, sql)
-            # burst bound — same contract as the static template: a
-            # cardinality explosion falls back to the classic program
-            # (bounded store, distributed spill), never materializes
-            # driver-side first
-            cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
-            df = self.spark.sql(sql)
-            self.last_refresh_df = df
-            aug_fields = list(df.schema.fields)
-            tbl = self._refresh_to_arrow(df, cap, spec)  # the ONE job
-        except Exception as e:
-            self._tpl_cache[tpl["key"]] = None
-            self.config.log.warn(
-                decision.fingerprint or "",
-                f"dyn sql-template warm path failed ({e}); falling back",
-            )
-            return None
-        if tbl.num_rows > cap:
-            self.config.log.warn(
-                decision.fingerprint or "",
-                f"dyn template refresh grew past {cap} rows; classic fallback",
-            )
-            return None
-
-        import pyarrow.compute as pc
-
-        kind = tbl.column(tbl.num_columns - 1)
-        state_tbl = tbl.filter(pc.equal(kind, 0))
-        res_tbl = tbl.filter(pc.equal(kind, 1))
-        fresh = pc.sum(state_tbl.column(tbl.num_columns - 2)).as_py()
-        decision.fresh_rows_value = int(fresh or 0)
-        base_idx = len(state_cols)
-        res_tbl = res_tbl.remove_column(res_tbl.num_columns - 1)
-        res_tbl = res_tbl.remove_column(res_tbl.num_columns - 1)
-        aug_res_fields = aug_fields[:-2]
-        if decision.fresh_rows_value == 0 and entry.advance_watermark(now_ns):
-            pass  # merged state ≡ stored state: watermark swap only
-        else:
-            state_schema = StructType([f for f in aug_fields[:base_idx]])
-            state_part = state_tbl.select(list(range(base_idx)))
-            if not entry.put_arrow(now_ns, state_part, state_schema):
-                st_df = arrow_to_spark(self.spark, state_part, schema=state_schema)
-                entry.put(now_ns, st_df, self.spark)
-        decision.refresh_tier = "template"
-        return self._arrow_result(
-            res_tbl, aug_res_fields, base_idx, spec,
-            tpl["out_names"], tpl["extra_names"], tpl["order_names"],
-        )
-
-    def _dyn_lite_template(
+    def _lite_template(
         self,
         pkey,
         fingerprint: str,
@@ -1225,122 +593,114 @@ class RefreshTiers:
         part_col: Optional[str],
         state_schema,
         tables: List[str],
-        bucket_name: str,
-        bucket_gran: str,
-        dyn_op: str,
+        dyn_bound=None,
+        bucket_name: Optional[str] = None,
+        bucket_gran: Optional[str] = None,
     ) -> Optional[dict]:
-        """Memoized lite-tier program for the dynamic-bound refresh."""
-        key = ("dynlite", *pkey, state_schema.simpleString())
+        """Memoized lite-tier program: a PLAIN-SIZED Spark job plus an
+        O(state) driver merge.
+
+        The job runs only the distributed part Spark is needed for — the
+        fresh-window scan with pushable watermark conds, partially
+        aggregated at the state groups — and the driver folds the handful
+        of returned partial rows into the state with exact Python mirrors
+        of the merge/finalize semantics (``partial.py`` ``lite_plan``; the
+        reference merges accumulator state in-engine the same way,
+        ``src/aggregate.rs:402-409``). One scan, one small shuffle, a plan
+        the size of plain's, and no second aggregate; the partial
+        aggregate stays in SQL, so any group keys, predicates, joins and
+        expression arguments qualify once merge and finalize have mirrors.
+
+        A static window's state granularity IS the query's, so the whole
+        refreshed state finalizes. A dynamic bound (``dyn_bound``) needs
+        the bucket among the query's groups: the refreshed state rows above
+        the boundary bucket ARE result rows, and the same job also
+        recomputes the boundary bucket (``_dyn_scan_core``'s one-pass
+        OR-of-ranges scan, split into disjoint range cells).
+
+        Admission, else None and the classic DataFrame program serves:
+        every aggregate and finalize shape has an exact Python mirror
+        (count/sum/min/max/avg over non-decimal input, the central-moment
+        families; bare calls, ``+ - * /``, HALF_UP round); no grouping
+        sets; no float-typed or nested group keys (Python dict keys must
+        hash like SQL equality); no ltz timestamps in a dynamic program's
+        state or output (the boundary compare assumes tz-free values). At
+        100 TB the scan stays distributed with parquet pushdown and
+        pruning; only O(state) rows cross the driver (the caller's
+        ``state_is_local`` gate)."""
+        kind = "static" if dyn_bound is None else "dyn"
+        key = (kind + "lite", *pkey, state_schema.simpleString())
         if key in self._tpl_cache:
             return self._tpl_cache[key]
         tpl = None
         try:
-            tpl = self._build_dyn_lite_template(
-                fingerprint, spec, plans, state_group, group_names,
-                state_cols, partial_aggs, merge_aggs, pred, ts_col,
-                shadow_ok, part_col, state_schema, tables, bucket_name,
-                bucket_gran, dyn_op,
+            if dyn_bound is not None and bucket_name not in [
+                g.name for g in spec.group_by
+            ]:
+                raise Unsupported("cross-bucket merge (bucket not grouped)")
+            tpl = self._driver_base(
+                spec, plans, group_names, state_cols, merge_aggs,
+                state_schema, allow_ltz=dyn_bound is None,
             )
+            if tpl is None:
+                raise Unsupported("no exact driver merge for this shape")
+            core = self._tpl_core(
+                spec, state_group, group_names, pred, ts_col, state_schema,
+                tables,
+            )
+            q = core["q"]
+            items = [f"{core['g_sql'][n]} AS {q(n)}" for n in group_names] + [
+                f"{self._sql_of(partial_aggs[n])} AS {q(n)}"
+                for n in tpl["partial_cols"]
+            ]
+            if dyn_bound is None:
+                conds = self._time_conds(
+                    q, ts_col, shadow_ok, core["ts_is_ts"], part_col, "F"
+                )
+                if core["pred_sql"]:
+                    conds.insert(0, core["pred_sql"])
+                tpl["sql"] = (
+                    f"SELECT {', '.join(items)}, count(1) AS {q('__qc_nr')} "
+                    f"FROM {core['from_sql']} WHERE {' AND '.join(conds)}"
+                    # global aggregate: no GROUP BY clause (an empty
+                    # expression list would be a ParseException that
+                    # permanently nulls this memo — a silent tier loss)
+                    + (f" GROUP BY {core['gb_exprs']}" if group_names else "")
+                )
+            else:
+                self._add_dyn_bucket(tpl, group_names, bucket_name, bucket_gran)
+                sc = self._dyn_scan_core(
+                    core, ts_col, shadow_ok, part_col, bucket_name,
+                    bucket_gran, dyn_bound.op,
+                )
+                qif, qib = sc["qif"], sc["qib"]
+                # disjoint range cells — no row is double-counted: 2 =
+                # fresh tail only, 1 = boundary recompute only, 3 = both.
+                # The driver folds {2,3} into the state update and {1,3}
+                # into the boundary result.
+                cell = (
+                    f"(CASE WHEN {qif} AND {qib} THEN 3 "
+                    f"WHEN {qif} THEN 2 ELSE 1 END)"
+                )
+                tpl["sql"] = (
+                    f"SELECT {', '.join(items)}, "
+                    f"count(1) AS {q('__qc_nr')}, "
+                    f"any_value({sc['bnd_lit']}) AS {q('__qc_bnd')}, "
+                    f"{cell} AS {q('__qc_cell')} "
+                    f"FROM ({sc['inner_sql']}) __qc_s WHERE {qif} OR {qib} "
+                    f"GROUP BY {core['gb_exprs']}, {cell}"
+                )
+            tpl["key"] = key
         except Exception as e:
             self.config.log.info(
                 fingerprint,
-                f"dyn lite tier not available ({e}); trying fused template",
+                f"{kind} lite tier not available ({e}); using classic plan",
             )
             tpl = None
-        if tpl is not None:
-            tpl["key"] = key
         if len(self._tpl_cache) >= self._MEMO_MAX:
             self._tpl_cache.clear()
         self._tpl_cache[key] = tpl
         return tpl
-
-    def _build_dyn_lite_template(
-        self,
-        fingerprint: str,
-        spec: AggSpec,
-        plans,
-        state_group,
-        group_names: List[str],
-        state_cols: List[str],
-        partial_aggs: Dict[str, Column],
-        merge_aggs: Dict[str, Column],
-        pred: Optional[Column],
-        ts_col: str,
-        shadow_ok: bool,
-        part_col: Optional[str],
-        state_schema,
-        tables: List[str],
-        bucket_name: str,
-        bucket_gran: str,
-        dyn_op: str,
-    ) -> Optional[dict]:
-        """Lite dynamic-bound refresh: a PLAIN-SIZED Spark job plus an
-        O(state) driver merge.
-
-        The fused template's one-job program is still a 4-stage plan
-        (state scan ∪ exploded fact scan → merge shuffle → finalize) whose
-        per-refresh analyze+codegen fixed cost (~0.3 s) dwarfs plain's
-        (~0.1 s) at small scale. When the query GROUPS BY its own time
-        bucket, no cross-bucket merge is needed at all: the refreshed
-        state rows ARE the result rows (plus the recomputed boundary
-        bucket). So this tier runs ONLY the distributed part Spark is
-        needed for — the fresh-tail + boundary scan with the same pushable
-        OR-of-ranges filter, partially aggregated at (state groups ×
-        disjoint range cell) — and folds the handful of returned partial
-        rows into the driver-resident state with exact Python mirrors of
-        the merge/finalize semantics (``partial.py py_merge/py_finalize``;
-        the reference merges accumulator state in-engine the same way,
-        ``src/aggregate.rs:402-409``). One scan, one small shuffle, a
-        plan the size of plain's, and no second aggregate.
-
-        Admission (anything else falls back to the fused template):
-        * the bucket is one of the query's GROUP BY columns;
-        * every aggregate + finalize shape has an exact Python mirror
-          (count/sum/min/max/avg over non-decimal input; bare calls,
-          ``+ - * /``, HALF_UP round);
-        * no grouping sets; no float-typed or nested group keys
-          (Python dict keys must hash like SQL equality);
-        * no ltz timestamps in state/output (tz-free Arrow round-trip).
-
-        At 100 TB the admission story is unchanged from the fused
-        template: both tiers require driver-small state (the caller's
-        ``state_is_local`` gate); the scan stays fully distributed with
-        parquet pushdown/pruning, only O(state) rows cross the driver.
-        """
-        if bucket_name not in [g.name for g in spec.group_by]:
-            return None  # cross-bucket merge needed: fused template's job
-        # dyn rejects ltz timestamps: the boundary compare / trunc
-        # arithmetic driver-side assumes tz-free values (static lite allows
-        # them — aware datetimes pass through as opaque keys there)
-        base = self._lite_base(
-            spec, plans, state_group, group_names, state_cols, partial_aggs,
-            merge_aggs, pred, ts_col, state_schema, tables, allow_ltz=False,
-        )
-        if base is None:
-            return None
-        self._add_dyn_bucket(base, group_names, bucket_name, bucket_gran)
-        core = base.pop("__core")
-        q = core["q"]
-
-        sc = self._dyn_scan_core(
-            core, ts_col, shadow_ok, part_col, bucket_name, bucket_gran,
-            dyn_op,
-        )
-        qif, qib = sc["qif"], sc["qib"]
-
-        # disjoint range cells — no row is double-counted: 2 = fresh tail
-        # only, 1 = boundary recompute only, 3 = both. Driver folds
-        # {2,3} into the state update and {1,3} into the boundary result.
-        cell = f"(CASE WHEN {qif} AND {qib} THEN 3 WHEN {qif} THEN 2 ELSE 1 END)"
-        base["sql"] = (
-            f"SELECT {', '.join(base.pop('__items'))}, "
-            f"count(1) AS {q('__qc_nr')}, "
-            f"any_value({sc['bnd_lit']}) AS {q('__qc_bnd')}, "
-            f"{cell} AS {q('__qc_cell')} "
-            f"FROM ({sc['inner_sql']}) __qc_s WHERE {qif} OR {qib} "
-            f"GROUP BY {core['gb_exprs']}, {cell}"
-        )
-        return base
 
     @staticmethod
     def _add_dyn_bucket(base: dict, group_names, bucket_name, bucket_gran):
@@ -1351,45 +711,6 @@ class RefreshTiers:
         base["bucket_idx"] = group_names.index(bucket_name)
         base["bucket_gran"] = bucket_gran
         base["bucket_is_date"] = isinstance(st_fields[bucket_name], DateType)
-
-    def _lite_base(
-        self,
-        spec: AggSpec,
-        plans,
-        state_group,
-        group_names: List[str],
-        state_cols: List[str],
-        partial_aggs: Dict[str, Column],
-        merge_aggs: Dict[str, Column],
-        pred: Optional[Column],
-        ts_col: str,
-        state_schema,
-        tables: List[str],
-        allow_ltz: bool,
-    ) -> Optional[dict]:
-        """The lite tier's scaffolding: the driver merge base plus the
-        SQL core and partial select items its one Spark job runs. None ⇔
-        some shape has no exact Python mirror or SQL template."""
-        base = self._driver_base(
-            spec, plans, group_names, state_cols, merge_aggs, state_schema,
-            allow_ltz,
-        )
-        if base is None:
-            return None
-        core = self._tpl_core(
-            spec, plans, state_group, group_names, state_cols, partial_aggs,
-            merge_aggs, pred, ts_col, state_schema, tables,
-        )
-        if core is None:
-            return None
-        q = core["q"]
-        g_sql = core["g_sql"]
-        base["__core"] = core
-        base["__items"] = [f"{g_sql[n]} AS {q(n)}" for n in group_names] + [
-            f"{self._sql_of(partial_aggs[n])} AS {q(n)}"
-            for n in base["partial_cols"]
-        ]
-        return base
 
     def _driver_base(
         self,
@@ -1476,7 +797,7 @@ class RefreshTiers:
             "state_schema": state_schema,
         }
 
-    def _run_dyn_lite(
+    def _run_lite(
         self,
         tpl: dict,
         entry,
@@ -1487,61 +808,64 @@ class RefreshTiers:
         decision: Decision,
         spec: AggSpec,
     ) -> Optional[DataFrame]:
-        """Execute the lite refresh: one plain-sized Spark job, then the
-        O(state) merge/finalize on the driver. Store-back happens only
-        after the result is safely built — a store failure leaves the old
-        state + watermark intact (the next refresh rescans from the old
-        watermark, exactly)."""
+        """Execute a lite program: one plain-sized Spark job, then the
+        O(state) merge/finalize on the driver. ``dyn_rhs`` is the dynamic
+        bound's right side (None: static — no boundary bucket, every
+        scanned row in the fresh cell). Bench rows it wins: ``bench.py``'s
+        ``qc_x1000_warm`` / ``qc_dyn_x1000_warm`` (plain views, which nano
+        cannot read) and ``qc_warm_dist`` / ``qc_dyn_warm_dist`` (nano
+        off), which the classic program would serve with a union, a merge
+        shuffle and a second aggregate. Overflow past the collect cap, an
+        inexact mirror or any failure returns None: the classic program
+        re-runs the refresh."""
         import datetime as _dt
 
+        kind = "static" if dyn_rhs is None else "dyn"
         try:
-            rhs_sql = f"({self._sql_of(to_column(self._pin_now(dyn_rhs, now_ns)))})"
-            decision.dynamic_lower = rhs_sql
-            sql = tpl["sql"].replace("__QC_RHS__", rhs_sql)
+            sql = tpl["sql"]
+            if dyn_rhs is not None:
+                rhs_sql = f"({self._sql_of(to_column(self._pin_now(dyn_rhs, now_ns)))})"
+                # the rendered pinned bound (evaluating it here would cost
+                # a driver-local Spark job; Catalyst constant-folds it)
+                decision.dynamic_lower = rhs_sql
+                sql = sql.replace("__QC_RHS__", rhs_sql)
             sql = self._sub_time_tokens(sql, "F", wm_ns, now_ns)
             df = self.spark.sql(sql)
             self.last_refresh_df = df
-            # burst bound (same contract as the template tiers):
-            # overflow falls through to the next tier, no poisoning
+            # burst bound: a refresh window that explodes group cardinality
+            # falls through to the classic program (whose store spills to
+            # the distributed path), no poisoning
             cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
             scan_tbl = self._refresh_to_arrow(df, cap, spec)
             if scan_tbl.num_rows > cap:
                 self.config.log.warn(
                     decision.fingerprint or "",
-                    f"lite refresh grew past {cap} rows; next tier",
+                    f"lite refresh grew past {cap} rows; classic fallback",
                 )
                 return None
-            scan = scan_tbl.to_pylist()
 
             state = self._load_driver_state(tpl, entry, cached_state)
             gnames = tpl["group_names"]
             pcols = tpl["partial_cols"]
             merges = tpl["merges"]
-
-            def merge2(a, b):
-                if a is None:
-                    return dict(b)
-                out = dict(a)
-                for m in merges:
-                    out.update(m(a, b))
-                return out
-
             fresh: dict = {}
             bnd: dict = {}
             boundary = None
             fresh_rows = 0
-            for r in scan:
+            for r in scan_tbl.to_pylist():
                 key = tuple(r[g] for g in gnames)
                 st = {c: r[c] for c in pcols}
-                boundary = r["__qc_bnd"]
-                if r["__qc_cell"] >= 2:  # cells 2, 3: fresh tail
-                    fresh[key] = merge2(fresh.get(key), st)
+                cell = r.get("__qc_cell", 2)
+                if cell >= 2:  # cells 2, 3: fresh tail
+                    fresh[key] = _merge_states(merges, fresh.get(key), st)
                     fresh_rows += r["__qc_nr"]
-                if r["__qc_cell"] in (1, 3):  # boundary recompute
-                    bnd[key] = merge2(bnd.get(key), st)
+                if cell in (1, 3):  # boundary recompute
+                    bnd[key] = _merge_states(merges, bnd.get(key), st)
+                if dyn_rhs is not None:
+                    boundary = r["__qc_bnd"]
             decision.fresh_rows_value = int(fresh_rows)
 
-            if boundary is None:
+            if dyn_rhs is not None and boundary is None:
                 # zero admitted rows: evaluate the boundary bucket directly
                 ev = self._eval_bound_and_bucket(
                     dyn_rhs, now_ns, tpl["bucket_gran"]
@@ -1562,7 +886,7 @@ class RefreshTiers:
             self._tpl_cache[tpl["key"]] = None
             self.config.log.warn(
                 decision.fingerprint or "",
-                f"dyn lite warm path failed ({e}); falling back",
+                f"{kind} lite warm path failed ({e}); classic fallback",
             )
             return None
 
@@ -1600,19 +924,9 @@ class RefreshTiers:
         import pyarrow as pa
 
         gnames = tpl["group_names"]
-        merges = tpl["merges"]
-
-        def merge2(a, b):
-            if a is None:
-                return dict(b)
-            out = dict(a)
-            for m in merges:
-                out.update(m(a, b))
-            return out
-
         new_state = dict(state)
         for k, st in fresh.items():
-            new_state[k] = merge2(new_state.get(k), st)
+            new_state[k] = _merge_states(tpl["merges"], new_state.get(k), st)
 
         fins = tpl["fins"]
         n2g = tpl["name_to_group"]
@@ -1765,7 +1079,7 @@ class RefreshTiers:
         except Exception as e:
             self.config.log.info(
                 fingerprint,
-                f"{kind} nano tier not available ({e}); trying lite/template",
+                f"{kind} nano tier not available ({e}); trying lite",
             )
             tpl = None
         if len(self._tpl_cache) >= self._MEMO_MAX:
@@ -1875,10 +1189,10 @@ class RefreshTiers:
         """The nano programs evaluate date_trunc buckets and window bounds
         with UTC Python/pyarrow mirrors, so they require a UTC session
         timezone at RUN time, not just when the memoized program was
-        built. Checked on every refresh (template builders run before the
-        memo lookup): a later ``SET spark.sql.session.timeZone`` bypasses
-        the tier — the view-resolving tiers serve correctly — and the
-        untouched memo resumes serving if the timezone returns to UTC."""
+        built. Checked on every refresh, before the memo lookup: a later
+        ``SET spark.sql.session.timeZone`` bypasses the tier — the
+        view-resolving tiers serve correctly — and the untouched memo
+        resumes serving if the timezone returns to UTC."""
         tz = self.spark.conf.get("spark.sql.session.timeZone", "")
         if tz == "UTC":
             return True
@@ -1898,7 +1212,7 @@ class RefreshTiers:
         ``_eval_bound_value`` pattern), so no Python mirror of its
         string→timestamp cast exists; a NULL instant raises (nano refused).
         Callers run it once per program build, inside the memoized
-        template. Other shapes pass through unchanged, and
+        program. Other shapes pass through unchanged, and
         ``nano._parse_pred`` refuses them on the temporal column."""
         from pyspark.sql.types import TimestampType
 
@@ -1951,147 +1265,6 @@ class RefreshTiers:
         if any(v is None for v in row):
             raise Unsupported("temporal literal casts to NULL")
         return rewrite(pred_expr, lambda x: Instant(int(row[sites[x]])))
-
-    def _static_lite_template(
-        self,
-        pkey,
-        fingerprint: str,
-        spec: AggSpec,
-        plans,
-        state_group,
-        group_names: List[str],
-        state_cols: List[str],
-        partial_aggs: Dict[str, Column],
-        merge_aggs: Dict[str, Column],
-        pred: Optional[Column],
-        ts_col: str,
-        shadow_ok: bool,
-        part_col: Optional[str],
-        state_schema,
-        tables: List[str],
-    ) -> Optional[dict]:
-        """Memoized STATIC lite-tier program.
-
-        Static warm refreshes are strictly simpler than dynamic ones —
-        the state granularity IS the query granularity and there is no
-        boundary bucket — so when every aggregate/finalize has an exact
-        Python mirror the whole refresh collapses to: ONE plain-sized
-        Spark job (fresh-window scan + partial aggregation, the same
-        pushable watermark conds as the fused template), a driver-side
-        O(state) merge, and finalize over ALL refreshed state rows. This
-        removes the fused template's state-scan ∪ union ∪ merge-shuffle
-        plan — roughly halving the per-refresh JVM compile+run floor —
-        for the most common dashboard shapes (any groups incl. ltz time
-        buckets, predicates, joins, expression agg args; the partial agg
-        stays in SQL so only MERGE/FINALIZE need Python mirrors).
-        """
-        key = ("slite", *pkey, state_schema.simpleString())
-        if key in self._tpl_cache:
-            return self._tpl_cache[key]
-        tpl = None
-        try:
-            base = self._lite_base(
-                spec, plans, state_group, group_names, state_cols,
-                partial_aggs, merge_aggs, pred, ts_col, state_schema,
-                tables, allow_ltz=True,
-            )
-            if base is not None:
-                core = base.pop("__core")
-                q = core["q"]
-                conds = list(
-                    self._time_conds(
-                        q, ts_col, shadow_ok, core["ts_is_ts"], part_col, "F"
-                    )
-                )
-                if core["pred_sql"]:
-                    conds.insert(0, core["pred_sql"])
-                base["sql"] = (
-                    f"SELECT {', '.join(base.pop('__items'))}, "
-                    f"count(1) AS {q('__qc_nr')} "
-                    f"FROM {core['from_sql']} WHERE {' AND '.join(conds)}"
-                    # global aggregate: no GROUP BY clause (an empty
-                    # expression list would be a ParseException that
-                    # permanently nulls this memo — a silent tier loss)
-                    + (f" GROUP BY {core['gb_exprs']}" if group_names else "")
-                )
-                tpl = base
-        except Exception as e:
-            self.config.log.info(
-                fingerprint,
-                f"static lite tier not available ({e}); using template",
-            )
-            tpl = None
-        if tpl is not None:
-            tpl["key"] = key
-        if len(self._tpl_cache) >= self._MEMO_MAX:
-            self._tpl_cache.clear()
-        self._tpl_cache[key] = tpl
-        return tpl
-
-    def _run_static_lite(
-        self,
-        tpl: dict,
-        entry,
-        cached_state: DataFrame,
-        wm_ns: int,
-        now_ns: int,
-        decision: Decision,
-        spec: AggSpec,
-    ) -> Optional[DataFrame]:
-        """Execute the static lite refresh: one plain-sized Spark job over
-        the fresh window, driver merge, finalize over the whole state."""
-        try:
-            sql = self._sub_time_tokens(tpl["sql"], "F", wm_ns, now_ns)
-            df = self.spark.sql(sql)
-            self.last_refresh_df = df
-            # burst bound (same contract as the template tiers):
-            # overflow falls through to the next tier, no poisoning
-            cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
-            scan_tbl = self._refresh_to_arrow(df, cap, spec)
-            if scan_tbl.num_rows > cap:
-                self.config.log.warn(
-                    decision.fingerprint or "",
-                    f"lite refresh grew past {cap} rows; next tier",
-                )
-                return None
-            scan = scan_tbl.to_pylist()
-
-            state = self._load_driver_state(tpl, entry, cached_state)
-            gnames = tpl["group_names"]
-            pcols = tpl["partial_cols"]
-            merges = tpl["merges"]
-
-            def merge2(a, b):
-                if a is None:
-                    return dict(b)
-                out = dict(a)
-                for m in merges:
-                    out.update(m(a, b))
-                return out
-
-            fresh: dict = {}
-            fresh_rows = 0
-            for r in scan:
-                key = tuple(r[g] for g in gnames)
-                st = {c: r[c] for c in pcols}
-                fresh[key] = merge2(fresh.get(key), st)
-                fresh_rows += r["__qc_nr"]
-            decision.fresh_rows_value = int(fresh_rows)
-
-            res = self._finish_dyn_driver(
-                tpl, entry, now_ns, decision, spec, state, fresh, {}, None,
-            )
-            decision.refresh_tier = "lite"
-            return res
-        except StateCardinalityExceeded:
-            raise  # cap trip: sql() registers the denial (cap contract)
-        except Exception as e:
-            self._tpl_cache[tpl["key"]] = None
-            self.config.log.warn(
-                decision.fingerprint or "",
-                f"static lite warm path failed ({e}); falling back",
-            )
-            return None
 
     def _apply_order_limit(self, out: DataFrame, spec: AggSpec) -> DataFrame:
         if spec.order_by:

@@ -2,7 +2,7 @@
 materialize more than DRIVER_COLLECT_MAX_ROWS (+1 probe row), even when
 the previous state was small and the refresh window explodes group
 cardinality — the r15 verdict's last burst-class member, now closed for
-the put() refresh branch, put_split, and the template/lite tiers alike.
+the put() refresh branch, put_split, and the lite tier alike.
 
 The burst must spill to the distributed store AND stay exact, and the
 fresh-rows Observation must still report the full count (the observe
@@ -135,9 +135,9 @@ def test_warm_refresh_burst_spills_distributed(spark, burst_qc, monkeypatch):
 
 
 def test_dyn_burst_spills_distributed(spark, burst_qc, monkeypatch):
-    """Same discipline on the dynamic-bound tier ladder (lite + dyn
-    template now bounded): a moving-window query whose refresh bursts
-    falls through to classic + distributed store, exactly."""
+    """Same discipline on the dynamic-bound tier ladder (lite bounded):
+    a moving-window query whose refresh bursts falls through to classic +
+    distributed store, exactly."""
     qc = burst_qc
     full = _mk_source(spark)
     cut_ns = CUT_US * 1000

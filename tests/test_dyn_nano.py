@@ -1,6 +1,6 @@
 """Nano + lite dynamic-refresh tier tests.
 
-The tier ladder (nano → lite → fused template → classic) must be
+The tier ladder (nano → lite → classic) must be
 invisible in RESULTS: every tier answers exactly what plain Spark SQL
 answers with now() pinned to the same literal. These tests pin the tier
 taken (``decision.refresh_tier``) AND the values, across agg shapes,
@@ -154,8 +154,8 @@ def test_byte_gate_forces_lite(spark, tmp_path, now_points):
     _drive(spark, qc, DAILY_SQL, now_points, "lite")
 
 
-def test_template_when_bucket_not_in_groups(spark, tmp_path, now_points):
-    """Global aggregate: cross-bucket merge needed → fused template."""
+def test_classic_when_bucket_not_in_groups(spark, tmp_path, now_points):
+    """Global aggregate: cross-bucket merge needed → classic program."""
     sql = (
         "SELECT count(*) AS n, min(value) AS mn, max(value) AS mx "
         "FROM events WHERE ts > now() - INTERVAL 6 DAY"
@@ -166,7 +166,29 @@ def test_template_when_bucket_not_in_groups(spark, tmp_path, now_points):
         got = qc.sql(sql)
         assert rows_set(got) == rows_set(_plain(spark, sql, now_ns))
         if i > 0:
-            assert qc.last_decision.refresh_tier == "template"
+            assert qc.last_decision.refresh_tier == "classic"
+
+
+@pytest.mark.parametrize("tier", ["nano", "lite", "classic"])
+def test_date_cast_of_sub_day_bucket(spark, tmp_path, now_points, monkeypatch, tier):
+    """A DATE cast of an hour truncation buckets by DAY. Its boundary
+    bucket must be recomputed day-wide on every tier: with the hour
+    granularity the recompute kept only the boundary hour's rows (the
+    boundary day read 2 instead of 13) and a refresh dropped a day."""
+    sql = (
+        "SELECT CAST(date_trunc('hour', ts) AS DATE) AS dd, count(*) AS n "
+        "FROM events WHERE ts > now() - INTERVAL 3 DAY GROUP BY 1"
+    )
+    kw = {}
+    if tier == "lite":
+        kw["nano_refresh_max_bytes"] = 0
+    elif tier == "classic":
+        from datafusion_query_cache_spark.cache import _ParquetEntry
+
+        # state over the collect cap: the driver tiers never admit it
+        monkeypatch.setattr(_ParquetEntry, "DRIVER_COLLECT_MAX_ROWS", 2)
+    qc = _mk_qc(spark, tmp_path, **kw)
+    _drive(spark, qc, sql, now_points, tier)
 
 
 def test_unregistered_source_falls_back(spark, tmp_path, now_points):
@@ -186,7 +208,7 @@ def test_unregistered_source_falls_back(spark, tmp_path, now_points):
         qc.config.override_now_ns = now_ns
         qc.sql(sql).collect()
         if i > 0:
-            assert qc.last_decision.refresh_tier in ("lite", "template")
+            assert qc.last_decision.refresh_tier == "lite"
     if saved is not None:
         LOCAL_PARQUET_SOURCES["events_anon"] = saved
 
@@ -665,8 +687,8 @@ def test_static_lite_on_division_args(spark, tmp_path, now_points):
             assert qc.last_decision.refresh_tier == "lite"
 
 
-def test_static_template_on_unsupported_agg(spark, tmp_path, now_points):
-    """min_by has no Python merge mirror: the fused template must run.
+def test_static_classic_on_unsupported_agg(spark, tmp_path, now_points):
+    """min_by has no Python merge mirror: the classic program must run.
     (var/stddev ride nano; corr/skew/kurt ride lite since the central
     co-moment state gained exact Python mirrors, round-11.)"""
     sql = (
@@ -680,7 +702,7 @@ def test_static_template_on_unsupported_agg(spark, tmp_path, now_points):
         got = qc.sql(sql)
         assert rows_set(got) == rows_set(_plain_static(spark, sql, now_ns))
         if i > 0:
-            assert qc.last_decision.refresh_tier == "template"
+            assert qc.last_decision.refresh_tier == "classic"
 
 
 def test_static_lite_corr_skew_kurt(spark, tmp_path, now_points):
@@ -883,7 +905,7 @@ def test_randomized_tier_equivalence(spark, tmp_path):
             ), f"trial {trial} refresh {i}: {sql}"
             if i > 0:
                 tiers_seen.add(qc.last_decision.refresh_tier)
-    # the sweep must actually exercise the driver tiers, not only templates
+    # the sweep must actually exercise the driver tiers, not only classic
     assert "nano" in tiers_seen or "lite" in tiers_seen, tiers_seen
 
 
@@ -982,9 +1004,9 @@ def test_nano_left_join_null_keys(spark, tmp_path):
 
 
 def test_concurrent_refreshes_restore_confs(spark, tmp_path):
-    """Two threads refreshing different entries concurrently (one on a
-    Spark-job tier whose collect runs on the AQE-off width-2 clone, one
-    on nano) must both stay exact, and the caller's session confs must
+    """Two threads refreshing different entries concurrently (one on the
+    lite tier, whose collect runs on the AQE-off width-2 clone, one on
+    nano) must both stay exact, and the caller's session confs must
     read their own values afterward — no refresh pins the session to
     refresh settings."""
     import threading
@@ -997,13 +1019,13 @@ def test_concurrent_refreshes_restore_confs(spark, tmp_path):
     }
     mx_ns = int(spark.table("events").agg(F.max("ts_ns")).collect()[0][0])
     day = 24 * 3600 * 1_000_000_000
-    # stddev keeps qA on the fused template (Spark job on the clone)
+    # nano off keeps qA on lite (its Spark job collects on the clone)
     sql_a = (
         "SELECT CAST(date_trunc('day', ts) AS DATE) AS d, "
         "round(stddev_samp(value), 4) AS sd FROM events GROUP BY 1 ORDER BY 1"
     )
     sql_b = DAILY_SQL
-    qa = _mk_qc(spark, tmp_path / "a")
+    qa = _mk_qc(spark, tmp_path / "a", nano_refresh_max_bytes=0)
     qb = _mk_qc(spark, tmp_path / "b")
     for q in (qa, qb):
         q.config.override_now_ns = mx_ns - 3 * day
@@ -1031,6 +1053,8 @@ def test_concurrent_refreshes_restore_confs(spark, tmp_path):
     tb = threading.Thread(target=drive, args=(qb, sql_b, pts_b))
     ta.start(); tb.start(); ta.join(); tb.join()
     assert not errs, errs
+    assert qa.last_decision.refresh_tier == "lite"
+    assert qb.last_decision.refresh_tier == "nano"
     after = {
         k: spark.conf.get(k)
         for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
@@ -1097,7 +1121,7 @@ def test_nano_source_drift_rebuild(spark, tmp_path):
     qc.config.override_now_ns = t2
     got = qc.sql(sql)
     # stale program dropped; this refresh is exact on a fallback tier
-    assert qc.last_decision.refresh_tier in ("lite", "template", "classic")
+    assert qc.last_decision.refresh_tier in ("lite", "classic")
     assert rows_set(got) == rows_set(plain(t2))
     # next refresh rebuilds nano over the new files
     t3 = t2 + day_ns
@@ -1217,7 +1241,7 @@ def test_nano_inplace_part_rewrite_invalidates(spark, tmp_path):
     qc.config.override_now_ns = t2
     got = qc.sql(sql)
     # stale program detected via per-file stats: exact on a fallback tier
-    assert qc.last_decision.refresh_tier in ("lite", "template", "classic")
+    assert qc.last_decision.refresh_tier in ("lite", "classic")
     assert rows_set(got) == rows_set(plain(t2))
     # next refresh rebuilds nano over the rewritten file
     t3 = t2 + day_ns
@@ -1269,7 +1293,7 @@ def test_static_lite_global_agg_when_nano_gated(spark, tmp_path, now_points):
 
 def test_decimal_round_falls_back_exact(spark, tmp_path):
     """round(max(decimal)) has no float-safe driver mirror: the refresh
-    must degrade to the Spark-side template and stay EXACT at full
+    must degrade to the classic program and stay EXACT at full
     decimal precision (ADVICE r6: the float round-trip loses digits)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -1315,8 +1339,8 @@ def test_decimal_round_falls_back_exact(spark, tmp_path):
         )
         assert rows_set(got) == rows_set(expect), f"refresh {i}"
         if i > 0:
-            # driver tiers raise _LiteUnsupported at finalize → template
-            assert qc.last_decision.refresh_tier == "template"
+            # driver tiers raise _LiteUnsupported at finalize → classic
+            assert qc.last_decision.refresh_tier == "classic"
 
 
 def test_nano_bucket_alias_collides_with_derived_name(spark, tmp_path):
@@ -1455,7 +1479,7 @@ def test_nano_nested_subdir_part_add_invalidates(spark, tmp_path):
     qc.config.override_now_ns = t2
     got = qc.sql(sql)
     # stale program dropped: exact on a view-resolving fallback tier
-    assert qc.last_decision.refresh_tier in ("lite", "template", "classic")
+    assert qc.last_decision.refresh_tier in ("lite", "classic")
     assert rows_set(got) == rows_set(plain(t2))
     # next refresh rebuilds nano over the grown file set
     t3 = t2 + day_ns
@@ -1469,7 +1493,7 @@ def test_decimal_having_compare_falls_back_exact(spark, tmp_path):
     """A HAVING compare over a decimal aggregate (min(dv) > 0.3) has no
     float-safe driver mirror: Spark compares after a decimal→double
     cast with its own rounding, Python would compare Decimal exactly —
-    the lite/nano finalize must degrade to the Spark-side template and
+    the lite/nano finalize must degrade to the classic program and
     stay EXACT at full decimal precision (ADVICE r8 guard
     functions/partial.py `_cmp`, pinned r9)."""
     import pyarrow as pa
@@ -1518,5 +1542,5 @@ def test_decimal_having_compare_falls_back_exact(spark, tmp_path):
         )
         assert rows_set(got) == rows_set(expect), f"refresh {i}"
         if i > 0:
-            # driver tiers raise _LiteUnsupported at the compare → template
-            assert qc.last_decision.refresh_tier == "template"
+            # driver tiers raise _LiteUnsupported at the compare → classic
+            assert qc.last_decision.refresh_tier == "classic"

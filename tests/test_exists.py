@@ -180,7 +180,7 @@ def test_exists_combines_with_in_and_scalar(spark, qc_mem):
 
 
 def test_having_variants_do_not_share_plans(spark, qc_mem):
-    """r11 regression: the plan/template memos are keyed on spec.canon(),
+    """r11 regression: the plan/tier-program memos are keyed on spec.canon(),
     which EXCLUDES having — two queries differing only in the HAVING
     literal must not reuse each other's compiled __qc_having finalize
     (found via a query with two EXISTS inners; it also hit back-to-back

@@ -89,56 +89,6 @@ def test_partitioned_results_exact_over_refreshes(spark, tmp_path, partitioned_e
         assert rows_set(got) == rows_set(expect)
 
 
-def test_dyn_template_pushes_or_of_ranges(spark, tmp_path):
-    """Regression pin for the one-scan dynamic template: the fused fact
-    scan's OR-of-ranges (fresh tail ∪ boundary bucket) must reach parquet
-    PushedFilters as a fully-translatable Or. The optimizer's distributive
-    rewrite `(A∨B)∧(A∨C)→A∨(B∧C)` silently kills pushdown for BOTH ranges
-    if any boundary-side atom (e.g. a date_trunc bucket equality) is left
-    in the exact conjunct — exactly what happened before the atoms were
-    made identity-equal (r6)."""
-    from datafusion_query_cache_spark import (
-        CachedSparkSession,
-        ParquetQueryCache,
-        QueryCacheConfig,
-    )
-
-    now1 = int(
-        dt.datetime(2024, 1, 26, tzinfo=dt.timezone.utc).timestamp() * 1e9
-    )
-    now2 = int(
-        dt.datetime(2024, 1, 29, tzinfo=dt.timezone.utc).timestamp() * 1e9
-    )
-    qc = CachedSparkSession(
-        spark,
-        QueryCacheConfig(
-            cache=ParquetQueryCache(str(tmp_path / "dp")),
-            override_now_ns=now1,
-        ),
-    )
-    # min_by has no Python merge mirror, so the nano/lite driver tiers
-    # reject and the FUSED TEMPLATE (this test's subject) must run
-    # (corr moved to the central co-moment state in r11: it now has a py
-    # mirror → lite, and its HOF merge is template-ineligible anyway)
-    sql = (
-        "SELECT CAST(date_trunc('day', ts) AS DATE) AS d, count(*) AS n, "
-        "min_by(event_id, value) AS lo "
-        "FROM events WHERE ts > now() - INTERVAL 10 DAY GROUP BY 1"
-    )
-    qc.sql(sql).collect()
-    qc.config.override_now_ns = now2
-    qc.sql(sql).collect()
-    assert qc.last_decision.cache_hit
-    assert qc.last_decision.refresh_tier == "template"
-    assert isinstance(qc.last_decision.dynamic_lower, str)  # template ran
-    plan = qc.last_refresh_df._jdf.queryExecution().executedPlan().toString()
-    pushed = [p.split("]", 1)[0] for p in plan.split("PushedFilters: [")[1:]]
-    ors = [s for s in pushed if "Or(" in s]
-    assert ors, f"OR-of-ranges not pushed to any scan: {pushed}"
-    # both sides of the pushed Or are range conjunctions on the ts column
-    assert any("And(" in s and s.count("ts") >= 3 for s in ors), ors
-
-
 def test_dyn_lite_pushes_or_of_ranges(spark, tmp_path):
     """Same pushdown pin for the LITE tier's plain-sized job (a predicate
     forces past nano; count/sum keep the lite driver merge eligible)."""
@@ -182,15 +132,16 @@ def test_dyn_lite_pushes_or_of_ranges(spark, tmp_path):
 
 
 def test_template_date_bounds_survive_tz_skew(spark, tmp_path):
-    """r12 vanilla-fuzz find: the dyn template's partition-date pruning
-    bounds derived dates in naive UTC (tokens) / the current session tz
-    (boundary-leg CASTs), but a partition layout may have been
+    """r12 vanilla-fuzz find: the lite program's SQL-template partition-
+    date pruning bounds derived dates in naive UTC (tokens) / the current
+    session tz (boundary-leg CASTs), but a partition layout may have been
     materialized under a DIFFERENT session timezone — a Chicago-tz
     session over this repo's UTC-built date partitions dropped a
-    boundary-bucket row (silent undercount). All date bounds are now
-    widened ±1 day, which is sound under any fixed-offset skew; the
-    exact ts bounds still filter rows. This test mirrors the failing
-    scenario inside the UTC session by checking the rendered SQL bounds
+    boundary-bucket row (silent undercount). The date bounds are now the
+    UTC dates of lo - 18 h and hi + 18 h (the widest Java zone offset),
+    which is sound under any zone the layout was written in; the exact
+    ts bounds still filter rows. This test mirrors the failing scenario
+    inside the UTC session by checking the rendered SQL bounds
     directly."""
     from datafusion_query_cache_spark.tiers import RefreshTiers
 
@@ -202,6 +153,75 @@ def test_template_date_bounds_survive_tz_skew(spark, tmp_path):
         "d >= DATE'__QC_FLO_D__' AND d <= DATE'__QC_FHI_D__'",
         "F", lo_ns, hi_ns,
     )
-    # UTC dates are Jan 28 / Jan 30; the widened bounds must be Jan 27 /
-    # Jan 31 so a session-tz date one day behind/ahead is never pruned
-    assert "DATE'2024-01-27'" in sql and "DATE'2024-01-31'" in sql, sql
+    # a row at or after 05:26 UTC on Jan 28 is on Jan 27 at the earliest
+    # in a zone up to 18 h behind UTC, so Jan 27 must stay; a row before
+    # 00:00 UTC on Jan 30 is on Jan 30 at the latest in any zone
+    assert "DATE'2024-01-27'" in sql and "DATE'2024-01-30'" in sql, sql
+
+
+@pytest.fixture(scope="module")
+def chicago_events(spark, tmp_path_factory):
+    """events written partitionBy(d = to_date(ts)) under an
+    America/Chicago session, read back in the suite's UTC session: a row
+    in the first six UTC hours of a day sits in the previous day's
+    partition."""
+    path = str(tmp_path_factory.mktemp("pe_chi") / "events_chi")
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Chicago")
+    try:
+        spark.table("events").withColumn("d", F.to_date("ts")).write.partitionBy(
+            "d"
+        ).parquet(path)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    spark.read.parquet(path).createOrReplaceTempView("events_chi")
+    return path
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT event_type, count(*) AS n FROM events_chi GROUP BY 1",
+        "SELECT CAST(date_trunc('day', ts) AS DATE) AS dd, count(*) AS n "
+        "FROM events_chi WHERE ts > now() - INTERVAL 3 DAY GROUP BY 1",
+    ],
+    ids=["static", "dynamic"],
+)
+def test_classic_date_bounds_survive_tz_skew(
+    spark, tmp_path, chicago_events, monkeypatch, sql
+):
+    """The classic program's partition-date bounds come from the same
+    widened helper as the lite program's: with the naive-UTC dates alone,
+    a refresh window starting at 02:00 UTC pruned the previous Chicago
+    date's partition and dropped its rows (silent undercount)."""
+    from datafusion_query_cache_spark import (
+        CachedSparkSession,
+        ParquetQueryCache,
+        QueryCacheConfig,
+    )
+    from datafusion_query_cache_spark.cache import _ParquetEntry
+
+    # state over the collect cap: the driver tiers never admit it
+    monkeypatch.setattr(_ParquetEntry, "DRIVER_COLLECT_MAX_ROWS", 2)
+    day = 24 * 3600 * 10**9
+    t0 = int(dt.datetime(2024, 1, 20, 2, tzinfo=dt.timezone.utc).timestamp()) * 10**9
+    qc = CachedSparkSession(
+        spark,
+        QueryCacheConfig(
+            cache=ParquetQueryCache(str(tmp_path / "chi")),
+            temporal_partition_columns={"ts": "d"},
+        ),
+    )
+    for i in range(4):
+        now_ns = t0 + i * day
+        qc.config.override_now_ns = now_ns
+        got = qc.sql(sql)
+        if i > 0:
+            assert qc.last_decision.cache_hit
+            assert qc.last_decision.refresh_tier == "classic"
+        lit_dt = dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=now_ns // 1000)
+        lit = f"TIMESTAMP '{lit_dt.isoformat(sep=' ')}'"
+        plain = sql.replace("now()", lit).replace(
+            " GROUP BY", f"{' AND' if 'WHERE' in sql else ' WHERE'} ts < {lit} GROUP BY", 1
+        )
+        assert rows_set(got) == rows_set(spark.sql(plain)), f"refresh {i}"

@@ -306,8 +306,8 @@ def gen_nano_sql(rng: random.Random) -> str:
     trunc = rng.choice(N_TRUNCS)
     if rng.random() < 0.5:
         # dynamic bound: its state bucket must be a group of the query, and
-        # a DATE one mostly (a timestamp bucket is ltz: dynamic nano
-        # refuses it, the template serves)
+        # a DATE one mostly (a timestamp bucket is ltz: the dynamic driver
+        # tiers refuse it, classic serves)
         if rng.random() < 0.75:
             trunc = N_TRUNCS[0]
         gs = [trunc] + rng.sample(N_COLS, rng.randint(0, 1))
@@ -742,8 +742,13 @@ def main() -> int:
         register_testdata,
     )
 
-    import os
+    import atexit
+    import shutil
 
+    # a private warehouse per run: the managed default.events_fz twin
+    # below never collides with another run started from the same dir
+    warehouse = tempfile.mkdtemp(prefix="qc-fuzz-wh-")
+    atexit.register(shutil.rmtree, warehouse, ignore_errors=True)
     if os.environ.get("QC_FUZZ_VANILLA"):
         # worst-case driver simulation (mirrors tools/check_oracle.py):
         # default session configs, non-UTC timezone
@@ -753,10 +758,11 @@ def main() -> int:
             SparkSession.builder.master("local[8]")
             .appName("fuzz-tiers-vanilla")
             .config("spark.sql.session.timeZone", "America/Chicago")
+            .config("spark.sql.warehouse.dir", warehouse)
             .getOrCreate()
         )
     else:
-        spark = get_session(app="fuzz-tiers", cpus="8")
+        spark = get_session(app="fuzz-tiers", cpus="8", warehouse=warehouse)
     spark.sparkContext.setLogLevel("ERROR")
     register_testdata(spark, SF_DIR)
 
@@ -801,18 +807,9 @@ def main() -> int:
     # catalog-qualified managed twin (r13): identical rows under
     # default.events_fz — qualified spellings must parse, cache, and
     # answer exactly like the bare view
-    if not spark.catalog.tableExists("default.events_fz"):
-        # a previous run's warehouse dir may survive without its metastore
-        # row (derby db is per-cwd) — clear the stale location first
-        import shutil as _sh
-
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).removeprefix("file:")
-        _sh.rmtree(_os.path.join(wh, "events_fz"), ignore_errors=True)
-        spark.table("events").write.mode("overwrite").saveAsTable(
-            "default.events_fz"
-        )
+    spark.table("events").write.mode("overwrite").saveAsTable(
+        "default.events_fz"
+    )
 
     # struct twin (r13): meta.t mirrors event_type for the field-path axis
     spark.table("events").withColumn(
