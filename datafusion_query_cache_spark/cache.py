@@ -296,6 +296,12 @@ class CacheEntry(ABC):
         backend has no file-backed form (in-memory caches)."""
         return None
 
+    def tail_state_df(self, spark: SparkSession, lo_value) -> Optional[DataFrame]:
+        """The stored state's buckets ``>= lo_value`` only, read without
+        the rest of the state; None when the backend has no bucket-ranged
+        layout. File-backed stores override."""
+        return None
+
     def put_arrow(self, watermark_ns: int, state_tbl, state_schema) -> bool:
         """Store state from an ALREADY-COLLECTED pyarrow Table (the nano
         and lite tiers merge state on the driver and hand it here). Returns
@@ -704,6 +710,22 @@ class _ParquetEntry(CacheEntry):
             return _dt.date.fromisoformat(iso[:10])
         return _dt.datetime.fromisoformat(iso)
 
+    def _ranged_read(self, spark: SparkSession, part: str, lo, hi, sch) -> DataFrame:
+        """One layer dir read with its bucket range ``[lo, hi)`` (None: open
+        side) as ONE filter on the bucket column — a PartitionFilter, so
+        only the range's bucket dirs are listed and read."""
+        from pyspark.sql import functions as _F
+
+        df = self._read_paths(spark, [os.path.join(self._dir, part)], sch)
+        bcol = _F.col(self._meta["bucket_col"])
+        cond = None
+        if lo is not None:
+            cond = bcol >= _F.lit(lo)
+        if hi is not None:
+            c = bcol < _F.lit(hi)
+            cond = c if cond is None else (cond & c)
+        return df if cond is None else df.filter(cond)
+
     def _layered_state(self, spark: SparkSession) -> DataFrame:
         """Layered bucket-partitioned state (``bparts``): layer *i* serves
         buckets in ``[lo_i, lo_{i+1})`` (first layer unbounded below, last
@@ -711,22 +733,54 @@ class _ParquetEntry(CacheEntry):
         an incremental refresh writes only the changed-bucket tail
         (:meth:`put_bucket_tail`) and this read reconstructs the full
         state with every range filter landing in PartitionFilters."""
-        from pyspark.sql import functions as _F
         from pyspark.sql.types import StructType
 
         sch = StructType.fromJson(json.loads(self._meta["schema"]))
-        bcol = self._meta["bucket_col"]
         parts = self._meta["bparts"]
         los = [self._bucket_lo_value(x) for x in self._meta["bparts_lo"]]
         out = None
         for i, p in enumerate(parts):
-            df = self._read_paths(spark, [os.path.join(self._dir, p)], sch)
-            lo = los[i]
             hi = los[i + 1] if i + 1 < len(los) else None
-            if lo is not None:
-                df = df.filter(_F.col(bcol) >= _F.lit(lo))
-            if hi is not None:
-                df = df.filter(_F.col(bcol) < _F.lit(hi))
+            df = self._ranged_read(spark, p, los[i], hi, sch)
+            out = df if out is None else out.unionByName(df)
+        return out
+
+    def tail_state_df(self, spark: SparkSession, lo_value) -> Optional[DataFrame]:
+        """The stored state's buckets ``>= lo_value`` only: a ranged read of
+        just the layers whose range reaches ``lo`` (in practice the last
+        one), one filter each. A big-state warm refresh merges its fresh
+        rows into this tail instead of the whole layered state: every fresh
+        row's bucket is ``>= lo`` and the merge groups on the bucket, so the
+        result is exactly the full merge's rows ``>= lo`` — all that
+        :meth:`put_bucket_tail` keeps. None when the entry has no
+        bucket-ranged layout (vacant, no bucket column, row-set parts, a
+        non-temporal bucket).
+
+        Wins perfbench ``big_state`` ``refresh_vs_plain``: the refresh's
+        program is built over one small layer instead of a union over every
+        layer (see ``CachedSparkSession._warm_merge``)."""
+        from pyspark.sql.types import StructType
+
+        meta = self._meta
+        if meta is None or not meta.get("bucket_col"):
+            return None
+        lo = self._norm_bucket_value(lo_value)
+        if lo is None:
+            return None
+        parts, los = meta.get("bparts"), meta.get("bparts_lo")
+        if parts is None:
+            if "state" not in meta or meta.get("parts"):
+                return None  # row-set parts layout: not bucket-ranged
+            parts, los = [meta["state"]], [None]
+        los = [self._bucket_lo_value(x) for x in los]
+        sch = StructType.fromJson(json.loads(meta["schema"]))
+        out = None
+        for i, p in enumerate(parts):
+            hi = los[i + 1] if i + 1 < len(los) else None
+            if hi is not None and hi <= lo:
+                continue  # the layer's whole range lies below the tail
+            layer_lo = lo if los[i] is None else max(los[i], lo)
+            df = self._ranged_read(spark, p, layer_lo, hi, sch)
             out = df if out is None else out.unionByName(df)
         return out
 
@@ -1125,6 +1179,31 @@ class _ParquetEntry(CacheEntry):
             return None
         return (m["watermark_ns"], tuple(m["bparts"]))
 
+    def _norm_bucket_value(self, value):
+        """``value`` (a date or datetime bucket start) as the stored bucket
+        column's type — a ``date`` for a DATE bucket, a ``datetime`` for a
+        TIMESTAMP one — or None when the bucket is neither or the value is
+        not a date."""
+        import datetime as _dt
+
+        from pyspark.sql.types import DateType, StructType, TimestampType
+
+        if not isinstance(value, (_dt.datetime, _dt.date)):
+            return None
+        try:
+            sch = StructType.fromJson(json.loads(self._meta["schema"]))
+            bcol = self.bucket_col or self._meta.get("bucket_col")
+            bt = next(f.dataType for f in sch.fields if f.name == bcol)
+        except Exception:
+            return None
+        if isinstance(bt, DateType):
+            return value.date() if isinstance(value, _dt.datetime) else value
+        if isinstance(bt, TimestampType):
+            if isinstance(value, _dt.datetime):
+                return value
+            return _dt.datetime(value.year, value.month, value.day)
+        return None
+
     def put_bucket_tail(
         self,
         watermark_ns: int,
@@ -1161,8 +1240,6 @@ class _ParquetEntry(CacheEntry):
         bcol = self.bucket_col or (self._meta or {}).get("bucket_col")
         if not bcol or bcol not in merged.columns:
             return None
-        if lo_value is None or not isinstance(lo_value, (_dt.datetime, _dt.date)):
-            return None
         meta = self._meta
         prev_rows = (meta or {}).get("rows")
         if (
@@ -1179,29 +1256,9 @@ class _ParquetEntry(CacheEntry):
             if "state" not in meta or meta.get("parts"):
                 return None  # row-set parts layout: not bucket-ranged
             old_parts, old_los = [meta["state"]], [None]
-        # normalize the bound to the state column's type (date vs ts)
-        try:
-            from pyspark.sql.types import DateType, StructType, TimestampType
-
-            sch = StructType.fromJson(json.loads(meta["schema"]))
-            bt = next(f.dataType for f in sch.fields if f.name == bcol)
-            if isinstance(bt, DateType):
-                lo_value = (
-                    lo_value.date()
-                    if isinstance(lo_value, _dt.datetime)
-                    else lo_value
-                )
-            elif isinstance(bt, TimestampType):
-                if not isinstance(lo_value, _dt.datetime):
-                    lo_value = _dt.datetime(
-                        lo_value.year, lo_value.month, lo_value.day
-                    )
-            else:
-                return None  # non-temporal bucket type: stay on full put
-        except StopIteration:
-            return None
-        except Exception:
-            return None
+        lo_value = self._norm_bucket_value(lo_value)
+        if lo_value is None:
+            return None  # non-temporal bucket type: stay on full put
         lo_iso = (
             lo_value.isoformat(sep=" ")
             if isinstance(lo_value, _dt.datetime)
@@ -1433,16 +1490,13 @@ class _ParquetEntry(CacheEntry):
         sch = StructType.fromJson(json.loads(self._meta["schema"]))
 
         def ranged(i: int) -> DataFrame:
-            df = self._read_paths(
-                spark, [os.path.join(self._dir, parts[i])], sch
+            return self._ranged_read(
+                spark,
+                parts[i],
+                self._bucket_lo_value(los[i]),
+                self._bucket_lo_value(his[i]),
+                sch,
             )
-            lo = self._bucket_lo_value(los[i])
-            hi = self._bucket_lo_value(his[i])
-            if lo is not None:
-                df = df.filter(_F.col(bcol) >= _F.lit(lo))
-            if hi is not None:
-                df = df.filter(_F.col(bcol) < _F.lit(hi))
-            return df
 
         os.makedirs(self._dir, exist_ok=True)
         mtx = f"bpart-{uuid.uuid4().hex[:12]}"

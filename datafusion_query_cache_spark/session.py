@@ -34,7 +34,7 @@ import decimal as _dec
 import os
 import time
 from collections import OrderedDict
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -56,7 +56,6 @@ from .tiers import (  # noqa: F401  (Decision re-exported)
     Decision,
     RefreshTiers,
     _order_col,
-    _partition_date_bounds,
     _push_time_bounds,
 )
 
@@ -313,11 +312,12 @@ class CachedSparkSession(RefreshTiers):
         state = state.select(
             *[c for c in state.columns if not c.startswith("__qc")]
         )
-        base = self.spark.table(info["tables"][0])
-        if spec.predicate is not None:
-            base = base.filter(to_column(spec.predicate))
         ts_col = info["ts_col"]
-        base = _push_time_bounds(base, ts_col, f"{ts_col}_ns", None, wm_ns)
+        base = _push_time_bounds(
+            self.spark.table(info["tables"][0]), ts_col, f"{ts_col}_ns",
+            None, wm_ns,
+            to_column(spec.predicate) if spec.predicate is not None else None,
+        )
         if spec.items is not None:
             base = base.select(
                 *[to_column(i.expr).alias(i.name) for i in spec.items]
@@ -486,10 +486,10 @@ class CachedSparkSession(RefreshTiers):
                 base = base.join(frames[step.table], to_column(step.on), step.how)
             else:
                 base = base.crossJoin(frames[step.table])
-        if info["pred"] is not None:
-            base = base.filter(info["pred"])
         ts_col = info["ts_col"]
-        base = _push_time_bounds(base, ts_col, f"{ts_col}_ns", None, wm_ns)
+        base = _push_time_bounds(
+            base, ts_col, f"{ts_col}_ns", None, wm_ns, info["pred"]
+        )
         gexprs = [to_column(g.expr) for g in info["state_group"]]
         if group_names:
             key_cond = None
@@ -913,6 +913,25 @@ class CachedSparkSession(RefreshTiers):
             return None
         return v, b, nano._us_of(v), nano._us_of(b), be_us, wb
 
+    def _wm_bucket_value(self, wm_ns: int, granularity: str):
+        """The state watermark's bucket, the lower bound of a layered
+        refresh's tail. Under a UTC session and driver, nano's calendar
+        mirror (``trunc_dt``) computes it with no job, as
+        :meth:`_py_bound_and_bucket` does; other zones and granularities
+        run the one-row JVM job (:meth:`_wm_bucket_col`)."""
+        from . import nano
+
+        if self._utc_session_and_driver():
+            try:
+                return nano.trunc_dt(nano._dt_of_us(wm_ns // 1000), granularity)
+            except nano.NanoUnsupported:
+                pass
+        return (
+            self.spark.range(0, 1, 1, 1)
+            .select(self._wm_bucket_col(wm_ns, granularity))
+            .collect()[0]["wb"]
+        )
+
     def _plan_filter(self, spec, query: str):
         """Simple filter (non-aggregate) query caching — the reference's
         second unchecked roadmap box (``README.md:130``).
@@ -1029,7 +1048,8 @@ class CachedSparkSession(RefreshTiers):
             )
 
         def bounds(df, lo_ns=None, hi_ns=None):
-            return _push_time_bounds(df, ts_col, shadow, lo_ns, hi_ns)
+            # the predicate joins the bounds' one filter
+            return _push_time_bounds(df, ts_col, shadow, lo_ns, hi_ns, pred)
 
         decision = Decision(
             sql=query, cached=True, fingerprint=fingerprint, now_ns=now_ns
@@ -1083,7 +1103,6 @@ class CachedSparkSession(RefreshTiers):
                 return memo, decision
 
         pred = to_column(spec.predicate) if spec.predicate is not None else None
-        src = base if pred is None else base.filter(pred)
 
         def store_wm(lo_ns: Optional[int]) -> int:
             """Watermark to store (config.watermark_mode): query time, or
@@ -1098,7 +1117,7 @@ class CachedSparkSession(RefreshTiers):
             on the next refresh (ADVICE r3, medium)."""
             if cfg.watermark_mode != "data":
                 return now_ns
-            mdf = bounds(src, lo_ns=lo_ns, hi_ns=now_ns)
+            mdf = bounds(base, lo_ns=lo_ns, hi_ns=now_ns)
             if shadow in base.columns:
                 mxc = F.max(F.col(shadow))
             else:
@@ -1216,7 +1235,7 @@ class CachedSparkSession(RefreshTiers):
             if stored is not None:
                 decision.refresh_tier = "nano"
             else:
-                fresh = project_store(bounds(src, lo_ns=wm_ns, hi_ns=swm))
+                fresh = project_store(bounds(base, lo_ns=wm_ns, hi_ns=swm))
                 if topk:
                     if state is None:
                         state = entry.get(self.spark)
@@ -1264,7 +1283,7 @@ class CachedSparkSession(RefreshTiers):
                         )
                     start = start0.filter(pred) if pred is not None else start0
                     swm = store_wm(d_wm)
-                    fresh = project_store(bounds(src, lo_ns=d_wm, hi_ns=swm))
+                    fresh = project_store(bounds(base, lo_ns=d_wm, hi_ns=swm))
                     rows = start.unionByName(fresh)
                     if topk:
                         rows = rows.orderBy(*sort_cols()).limit(spec.limit)
@@ -1292,7 +1311,7 @@ class CachedSparkSession(RefreshTiers):
                     stored = None
             if stored is None:
                 swm = store_wm(None)
-                rows = project_store(bounds(src, hi_ns=swm))
+                rows = project_store(bounds(base, hi_ns=swm))
                 if topk:
                     if (
                         spec.table in LOCAL_PARQUET_SOURCES
@@ -4142,11 +4161,18 @@ class CachedSparkSession(RefreshTiers):
             )
 
         shadow = f"{ts_col}_ns"
+        pc_col = cfg.temporal_partition_columns.get(ts_col)
+        pc_arg = pc_col if (pc_col and pc_col in base_cols) else None
 
         def time_bounds(
-            df: DataFrame, lo_ns: Optional[int] = None, hi_ns: Optional[int] = None
+            df: DataFrame,
+            lo_ns: Optional[int] = None,
+            hi_ns: Optional[int] = None,
+            pred: Optional[Column] = None,
+            extra: Sequence[Column] = (),
         ) -> DataFrame:
-            """[lo, hi) scan bounds on the temporal column.
+            """[lo, hi) scan bounds on the temporal column, with ``pred``
+            and ``extra`` in the same ONE filter.
 
             Every state scan is upper-bounded by `ts < now` — an improvement
             over the reference (SURVEY §4.4.2: its state has no upper bound,
@@ -4158,27 +4184,20 @@ class CachedSparkSession(RefreshTiers):
             Bounds via ``_push_time_bounds``: exact on the epoch-ns shadow,
             plus a redundant µs bound on the timestamp column itself so the
             filter reaches the parquet scan's ``PushedFilters`` even when
-            the shadow is a derived column (µs/NTZ sources).
+            the shadow is a derived column (µs/NTZ sources), plus the
+            date-partition bounds (config.temporal_partition_columns).
+            The bounds, the caller's predicate and ``extra`` form one
+            conjunction, so each scan pays one eagerly analyzed ``.filter``
+            instead of up to seven (perfbench ``big_state``
+            ``refresh_vs_plain``, see :meth:`_warm_merge`).
             """
-            df = _push_time_bounds(df, ts_col, shadow, lo_ns, hi_ns)
-            # partition-level bounds: redundant with the row bounds above
-            # (a date-partition column is a coarsening of ts), but they are
-            # plain comparisons on the PARTITION column → whole partitions
-            # prune before any file is opened (config.temporal_partition_columns)
-            pc = cfg.temporal_partition_columns.get(ts_col)
-            if pc and pc in base_cols:
-                lo_d, hi_d = _partition_date_bounds(lo_ns, hi_ns)
-                if lo_d is not None:
-                    df = df.filter(F.col(pc) >= F.lit(lo_d))
-                if hi_d is not None:
-                    df = df.filter(F.col(pc) <= F.lit(hi_d))
-            return df
+            return _push_time_bounds(
+                df, ts_col, shadow, lo_ns, hi_ns, pred, extra, pc_arg
+            )
 
         hit = entry.occupied
         state_is_local = False
         cached_state = None
-        pc_col = cfg.temporal_partition_columns.get(ts_col)
-        pc_arg = pc_col if (pc_col and pc_col in base_cols) else None
         # the gates the nano/lite programs share, warm or cold
         driver_tiers_ok = (
             not spec.grouping_sets
@@ -4224,8 +4243,7 @@ class CachedSparkSession(RefreshTiers):
             time and no extra job runs."""
             if cfg.watermark_mode != "data":
                 return now_ns, now_ns
-            mxdf = get_base() if pred is None else get_base().filter(pred)
-            mxdf = time_bounds(mxdf, lo_ns=lo_ns, hi_ns=now_ns)
+            mxdf = time_bounds(get_base(), lo_ns, now_ns, pred)
             if shadow in base_cols:
                 mxc = F.max(F.col(shadow))
             else:
@@ -4281,6 +4299,11 @@ class CachedSparkSession(RefreshTiers):
 
         store_wm_ns = now_ns  # overridden per-branch by data_scan_wm
         cold_res = None  # a miss served by run_nano
+        # the old watermark's bucket, once computed; tail_only: the warm
+        # merge was built over the state's buckets >= tail_lo only, so its
+        # rows are NOT the whole merged state
+        tail_lo = tail_tag = None
+        tail_only = False
         wm0 = entry.watermark_ns if hit else None
         if hit and wm0 is not None and (
             now_ns <= wm0
@@ -4323,6 +4346,32 @@ class CachedSparkSession(RefreshTiers):
         elif hit:
             wm_ns = entry.watermark_ns
             if cached_state is None:
+                rows = entry.state_rows()
+                cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
+                if rows is not None and rows > cap and entry.bucket_col:
+                    # big bucketed state, which no driver tier admits: merge
+                    # the fresh rows into the tail its store keeps, read
+                    # from the layers reaching the old watermark's bucket
+                    if dyn_bound is not None:
+                        dyn_eval = self._eval_bound_and_bucket(
+                            dyn_bound.rhs, now_ns, bucket_gran, wm_ns
+                        )
+                    try:
+                        tail_lo = (
+                            dyn_eval[5]
+                            if dyn_eval is not None
+                            else self._wm_bucket_value(wm_ns, bucket_gran)
+                        )
+                        tail_tag = entry.state_tag()
+                        cached_state = entry.tail_state_df(self.spark, tail_lo)
+                    except Exception as e:
+                        if self._strict_errors():
+                            raise
+                        cfg.log.warn(
+                            fingerprint, f"tail state read failed ({e}); full read"
+                        )
+                    tail_only = cached_state is not None
+            if cached_state is None:
                 # warm refresh: prefer the FILE-BACKED state form — the
                 # refresh job's executors read the tiny state parquet
                 # directly instead of the driver re-uploading it through
@@ -4330,8 +4379,6 @@ class CachedSparkSession(RefreshTiers):
                 sdf = entry.state_df(self.spark)
                 if sdf is not None:
                     cached_state = sdf
-                    rows = entry.state_rows()
-                    cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
                     # driver-tier gate: same small-state contract get_arrow had
                     state_is_local = rows is not None and rows <= cap
                 else:
@@ -4415,9 +4462,9 @@ class CachedSparkSession(RefreshTiers):
                 )
             else:
                 scan_hi, store_wm_ns = data_scan_wm(None)
-                df = get_base() if pred is None else get_base().filter(pred)
-                df = time_bounds(df, hi_ns=scan_hi)
-                merged = partial_agg(df)
+                merged = partial_agg(
+                    time_bounds(get_base(), hi_ns=scan_hi, pred=pred)
+                )
                 if (
                     # pure-Python gates: a plain temp view pays no py4j
                     # call and no program build
@@ -4483,7 +4530,13 @@ class CachedSparkSession(RefreshTiers):
         # table (no second scan) and the result is finished driver-side —
         # including the ORDER BY, which as a Spark global sort on a local
         # relation would cost a range-partitioner sampling pass + shuffle.
-        if not spec.grouping_sets and dyn_bound is None and spec.offset is None:
+        if (
+            not spec.grouping_sets
+            and dyn_bound is None
+            and spec.offset is None
+            # over-cap state: put_split would decline the driver collect
+            and not tail_only
+        ):
             fused = self._finalize_fused(
                 entry,
                 merged,
@@ -4522,7 +4575,7 @@ class CachedSparkSession(RefreshTiers):
             and entry.bucket_col
             else None
         )
-        if dyn_bound is not None:
+        if dyn_bound is not None and dyn_eval is None:
             # evaluate the bound once at plan time (reference captures "now"
             # the same way, ``src/aggregate.rs:375-382``) — in the same
             # one-row job as the old watermark's bucket the tail store needs
@@ -4540,20 +4593,17 @@ class CachedSparkSession(RefreshTiers):
             the (window - 1 bucket) tail the non-pushable date_trunc
             equality would otherwise read and discard."""
             lower, boundary, lower_us, _, be_us, _ = dyn_eval
-            braw = get_base() if pred is None else get_base().filter(pred)
             cmp_op = (
                 (F.col(ts_col) > F.lit(lower))
                 if dyn_bound.op == ">"
                 else (F.col(ts_col) >= F.lit(lower))
             )
             hi_eff = now_ns if be_us is None else min(now_ns, be_us * 1000)
-            braw = time_bounds(braw, lo_ns=lower_us * 1000, hi_ns=hi_eff)
-            return braw.filter(
-                cmp_op
-                & (
-                    F.date_trunc(bucket_gran, F.col(ts_col)).cast(bucket_dtype)
-                    == F.lit(boundary).cast(bucket_dtype)
-                )
+            in_bucket = F.date_trunc(bucket_gran, F.col(ts_col)).cast(
+                bucket_dtype
+            ) == F.lit(boundary).cast(bucket_dtype)
+            return time_bounds(
+                get_base(), lower_us * 1000, hi_eff, pred, [cmp_op & in_bucket]
             )
 
         def boundary_partial(bucket_dtype: str) -> DataFrame:
@@ -4572,15 +4622,12 @@ class CachedSparkSession(RefreshTiers):
                 rows0 = entry.state_rows()
                 cap0 = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
                 if rows0 is not None and rows0 > cap0:
-                    # the OLD watermark truncated to the bucket JVM-side
-                    # (session-timezone calendar semantics, matching how
-                    # the state buckets themselves were computed)
+                    # the OLD watermark truncated to its bucket (computed
+                    # before the merge unless that attempt failed)
                     lo_val = (
-                        dyn_eval[5]
-                        if dyn_eval is not None
-                        else self.spark.range(0, 1, 1, 1)
-                        .select(self._wm_bucket_col(tail_wm, bucket_gran))
-                        .collect()[0]["wb"]
+                        tail_lo
+                        if tail_lo is not None
+                        else self._wm_bucket_value(tail_wm, bucket_gran)
                     )
                     if dyn_bound is not None:
                         topk_lay = self._bucket_topk_layout(
@@ -4634,6 +4681,19 @@ class CachedSparkSession(RefreshTiers):
                 return res, decision
             if not isinstance(stored, DataFrame):
                 stored = entry.get(self.spark)  # the tail collect's table
+        if stored is None and tail_only:
+            # the tail store declined (the full put compacts) or failed,
+            # and `merged` holds only the tail: never store it as the
+            # whole state
+            if entry.state_tag() != tail_tag:
+                stored = entry.get(self.spark)  # the tail write committed
+            else:
+                merged, decision.observation = self._warm_merge(
+                    entry.state_df(self.spark), wm_ns, scan_hi, get_base(),
+                    pred, time_bounds, plans, state_group, group_names,
+                    merge_aggs, partial_agg,
+                )
+                self.last_refresh_df = merged
         if stored is None:
             stored = (
                 hot_state
@@ -5241,11 +5301,17 @@ class CachedSparkSession(RefreshTiers):
         as singleton states (map-side combine = partial aggregation, ONE
         shuffle; explicit partial agg for sketch states), unioned with
         ``cached_state`` and merged. Shared by real hits and semantic
-        (coarsened-donor) hits. Returns (merged DataFrame, Observation)."""
-        fresh = base
-        if pred is not None:
-            fresh = fresh.filter(pred)
-        fresh = time_bounds(fresh, lo_ns=wm_lo, hi_ns=now_ns)
+        (coarsened-donor) hits. Returns (merged DataFrame, Observation).
+
+        For a big bucketed state ``cached_state`` is only its tail, the
+        buckets ``>= lo`` (:meth:`CacheEntry.tail_state_df`), and the merge
+        is exactly the tail the layered store keeps; a store that declines
+        or fails rebuilds this merge over the whole state. With the scans'
+        one-filter bounds (``time_bounds``) this wins perfbench
+        ``big_state`` ``refresh_vs_plain``: py4j calls per refresh
+        ~1,300 → ~830 and ``.filter`` calls 16 → 4 (a cProfile of 5
+        refreshes, 4-core VM; interleaved medians in ``CHANGES.md``)."""
+        fresh = time_bounds(base, wm_lo, now_ns, pred)
         self._obs_counter += 1
         obs = Observation(f"qc_fresh_{self._obs_counter}")
         fresh = fresh.observe(obs, F.count(F.lit(1)).alias("rows"))

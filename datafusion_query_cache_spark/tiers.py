@@ -32,9 +32,11 @@ Reference provenance: the tier ladder realizes the reference's single
 
 from __future__ import annotations
 
+import functools
+import operator
 import time
 from dataclasses import dataclass
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -60,6 +62,9 @@ def _push_time_bounds(
     shadow: str,
     lo_ns: Optional[int] = None,
     hi_ns: Optional[int] = None,
+    pred: Optional[Column] = None,
+    extra: Sequence[Column] = (),
+    part_col: Optional[str] = None,
 ) -> DataFrame:
     """Exact ``[lo, hi)`` bounds on the temporal axis, shaped for pushdown.
 
@@ -72,7 +77,19 @@ def _push_time_bounds(
     100 TB warm refresh reads only the fresh tail). Floor the lower / ceil
     the upper µs bound so it never excludes a row the ns bound admits; the
     conjunction is therefore exactly the ns range. Without a shadow the µs
-    bound ceils BOTH ends so consecutive runs tile exactly.
+    bound ceils BOTH ends so consecutive runs tile exactly. With
+    ``part_col`` (a date-partition column) the dates covering the range
+    (:func:`_partition_date_bounds`) join as plain comparisons on it, so
+    whole partitions prune before any file opens.
+
+    One scan, one ``.filter``: the caller's predicate ``pred`` (first), the
+    bounds and any ``extra`` conditions (last) form a single conjunction,
+    and the bounds are rendered as ONE SQL expression, like lite's
+    ``_time_conds``. PySpark Classic analyzes the plan on every DataFrame
+    op (~5 ms each on a layered refresh) and pays several py4j calls per
+    Column op; Catalyst's ``CombineFilters`` gives the same physical plan
+    as a chain of filters. Part of perfbench ``big_state``
+    ``refresh_vs_plain`` (see ``CachedSparkSession._warm_merge``).
 
     Reference converts Arrow time units at the same boundary
     (``src/aggregate.rs:431-439``).
@@ -84,26 +101,40 @@ def _push_time_bounds(
     ts_is_time = isinstance(
         types.get(ts_col), (TimestampType, TimestampNTZType)
     )
+
+    def q(n: str) -> str:
+        return "`" + n.replace("`", "``") + "`"
+
+    ts, sh = q(ts_col), q(shadow)
+    bounds: List[str] = []
     if lo_ns is not None:
         if has_shadow:
-            df = df.filter(F.col(shadow) >= F.lit(lo_ns))
+            bounds.append(f"{sh} >= {lo_ns}")
             if ts_is_time:
-                df = df.filter(
-                    F.col(ts_col) >= F.timestamp_micros(F.lit(lo_ns // 1000))
-                )
+                bounds.append(f"{ts} >= timestamp_micros({lo_ns // 1000})")
         else:
-            df = df.filter(
-                F.col(ts_col) >= F.timestamp_micros(F.lit(-(-lo_ns // 1000)))
-            )
+            bounds.append(f"{ts} >= timestamp_micros({-(-lo_ns // 1000)})")
     if hi_ns is not None:
         hi_us = -(-hi_ns // 1000)
         if has_shadow:
-            df = df.filter(F.col(shadow) < F.lit(hi_ns))
+            bounds.append(f"{sh} < {hi_ns}")
             if ts_is_time:
-                df = df.filter(F.col(ts_col) < F.timestamp_micros(F.lit(hi_us)))
+                bounds.append(f"{ts} < timestamp_micros({hi_us})")
         else:
-            df = df.filter(F.col(ts_col) < F.timestamp_micros(F.lit(hi_us)))
-    return df
+            bounds.append(f"{ts} < timestamp_micros({hi_us})")
+    if part_col is not None:
+        lo_d, hi_d = _partition_date_bounds(lo_ns, hi_ns)
+        if lo_d is not None:
+            bounds.append(f"{q(part_col)} >= DATE'{lo_d.isoformat()}'")
+        if hi_d is not None:
+            bounds.append(f"{q(part_col)} <= DATE'{hi_d.isoformat()}'")
+    conds = [] if pred is None else [pred]
+    if bounds:
+        conds.append(F.expr(" AND ".join(bounds)))
+    conds.extend(extra)
+    if not conds:
+        return df
+    return df.filter(functools.reduce(operator.and_, conds))
 
 
 #: Java zone offsets lie within ±18 h (``ZoneOffset.MAX_SECONDS``)
@@ -249,21 +280,26 @@ class RefreshTiers:
         def q(n: str) -> str:
             return "`" + n.replace("`", "``") + "`"
 
+        def qt(n: str) -> str:
+            # a table name is a multi-part identifier: quote each dotted
+            # part (`default`.`t`), since `default.t` names no table
+            return ".".join(q(part) for part in n.split("."))
+
         g_sql = {g.name: sql_of(to_column(g.expr)) for g in state_group}
 
         # FROM: fact table, then the left-deep join steps (same static-dims
         # refresh contract as the DataFrame path)
-        from_sql = q(tables[0])
+        from_sql = qt(tables[0])
         for step in spec.join_steps:
             if step.using:
                 kw = "LEFT JOIN" if step.how == "left" else "JOIN"
                 cols = ", ".join(q(u) for u in step.using)
-                from_sql += f" {kw} {q(step.table)} USING ({cols})"
+                from_sql += f" {kw} {qt(step.table)} USING ({cols})"
             elif step.on is None:
-                from_sql += f" CROSS JOIN {q(step.table)}"
+                from_sql += f" CROSS JOIN {qt(step.table)}"
             else:
                 kw = "LEFT JOIN" if step.how == "left" else "JOIN"
-                from_sql += f" {kw} {q(step.table)} ON {sql_of(to_column(step.on))}"
+                from_sql += f" {kw} {qt(step.table)} ON {sql_of(to_column(step.on))}"
 
         ts_is_ts = False
         try:

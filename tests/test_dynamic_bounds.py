@@ -288,6 +288,23 @@ def test_python_bound_eval_matches_jvm(spark, qc, monkeypatch, gran):
             assert py == (v,) + tuple(jvm[1:]), (rhs_sql, at, py, jvm)
     assert len(jvm_only) == len(rhss) * len(instants)
 
+    # a static layered refresh's tail bound: the watermark's bucket from
+    # the driver mirror (no job: `_wm_bucket_col`, the JVM column, is unset)
+    # equals the one-row JVM job's, at each instant itself
+    def jvm_wb(wm_ns):
+        return (
+            spark.range(0, 1, 1, 1)
+            .select(qc._wm_bucket_col(wm_ns, gran))
+            .collect()[0]["wb"]
+        )
+
+    for at in instants:
+        wm_ns = (at - epoch) // dt.timedelta(microseconds=1) * 1000 + 789
+        want = jvm_wb(wm_ns)
+        with monkeypatch.context() as m:
+            m.setattr(qc, "_wm_bucket_col", None)
+            assert qc._wm_bucket_value(wm_ns, gran) == want, (at, want)
+
 
 def test_python_bound_eval_declines_non_utc(spark, qc):
     """Outside a UTC session the driver-side mirror declines, so the JVM
@@ -303,5 +320,15 @@ def test_python_bound_eval_declines_non_utc(spark, qc):
     spark.conf.set("spark.sql.session.timeZone", "America/Chicago")
     try:
         assert qc._py_bound_and_bucket(rhs, 1_706_659_165_261_702_001, "day") is None
+        # the static tail bound runs the JVM job too: 05:00 UTC is still
+        # the previous day in Chicago, so the UTC mirror would be wrong
+        wm_ns = 1_706_677_200_000_000_000  # 2024-01-31 05:00 UTC
+        want = (
+            spark.range(0, 1, 1, 1)
+            .select(qc._wm_bucket_col(wm_ns, "day"))
+            .collect()[0]["wb"]
+        )
+        assert want < dt.datetime(2024, 1, 31)
+        assert qc._wm_bucket_value(wm_ns, "day") == want
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)

@@ -61,6 +61,19 @@ def test_backtick_spelling_shares_entry(spark, qc, cat_table):
     assert qc.last_decision.fingerprint == fp
 
 
+@pytest.mark.parametrize(
+    "spelling", ["default.events_cat", "spark_catalog.default.events_cat"]
+)
+def test_qualified_source_refreshes_on_lite(spark, qc, cat_table, spelling):
+    """The lite tier's one SQL job quotes each part of a qualified source
+    (`default`.`events_cat`), so the refresh is served by lite, exact, and
+    no table-not-found analysis error is logged on the way."""
+    _two_run(spark, qc, cat_table, spelling)
+    assert qc.last_decision.refresh_tier == "lite"
+    bad = [m for m in qc.config.log.messages() if "TABLE_OR_VIEW_NOT_FOUND" in m]
+    assert not bad, bad
+
+
 def test_spellings_get_separate_entries(spark, qc, cat_table):
     """db-qualified vs catalog-qualified: separate fingerprints (never
     share state across names whose equivalence the AST cannot prove)."""

@@ -24,7 +24,9 @@ One shape family (``gen_nano_sql``) keeps to what the nano tier admits, so
 its literal fold and its cold-load path are fuzzed too. Another
 (``gen_bucket_topk_sql``) runs a day-bucketed, high-cardinality dynamic
 top-k under a lowered collect cap, so the layered store's bucketed top-k
-finalize and its refusals are fuzzed.
+finalize and its refusals are fuzzed. Half the trials with a lowered
+collect cap also lower the layer cap (``BPARTS_COMPACT_AT`` 2 or 3), so
+tail-only warm merges run through layer-pair folds and compacting puts.
 
 Usage: python tools/fuzz_tiers.py [trials] [seed] [sf_dir]
 Exit 0 = every comparison on every refresh of every trial matched.
@@ -842,6 +844,7 @@ def main() -> int:
     from datafusion_query_cache_spark.cache import _ParquetEntry
 
     _cap0 = _ParquetEntry.DRIVER_COLLECT_MAX_ROWS  # restored per trial
+    _fold0 = _ParquetEntry.BPARTS_COMPACT_AT  # restored per trial
     mx_ns = int(spark.table("events").agg(F.max("ts_ns")).collect()[0][0])
     day = 24 * 3600 * 1_000_000_000
 
@@ -850,6 +853,7 @@ def main() -> int:
     miss_tiers: dict = {}
     corruptions = 0
     hot_reloads = memo_hits = 0
+    layer_cap_trials = 0  # big-state trials run with a lowered layer cap
     for trial in range(TRIALS):
         mode_p = rng.random()
         filter_mode = mode_p < 0.22
@@ -1112,6 +1116,18 @@ def main() -> int:
             if isinstance(cache, ParquetQueryCache) and rng.random() < 0.15
             else _cap0
         )
+        # half the big-state trials lower the layer cap, so tail-only
+        # refreshes also run through a layer-pair fold (3) or the full
+        # put that compacts the layers (2). A side RNG draws it: the main
+        # stream, and so every other trial's draws, stay as they were.
+        fold_rng = random.Random(f"{SEED}:{trial}:fold")
+        _ParquetEntry.BPARTS_COMPACT_AT = (
+            fold_rng.choice([2, 3])
+            if _ParquetEntry.DRIVER_COLLECT_MAX_ROWS != _cap0
+            and fold_rng.random() < 0.5
+            else _fold0
+        )
+        layer_cap_trials += _ParquetEntry.BPARTS_COMPACT_AT != _fold0
         qc = CachedSparkSession(
             spark,
             QueryCacheConfig(
@@ -1265,6 +1281,7 @@ def main() -> int:
     print(f"\ntiers exercised: {tiers_seen} corruptions={corruptions}")
     print(f"miss tiers: {miss_tiers}")
     print(f"hot reloads: {hot_reloads} memo hits={memo_hits}")
+    print(f"big-state trials with a lowered layer cap: {layer_cap_trials}")
     if failures:
         print(f"{len(failures)} FAILURES:")
         for t, i, sql, msg in failures[:20]:
