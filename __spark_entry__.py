@@ -835,7 +835,7 @@ FROM d ORDER BY doc_id
 
 def _qc_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER aggregate on the cached path (r15 composite plan):
-    cached state-spelled LEFT half + cached monotone matched-dim-set +
+    cached LEFT half + cached monotone matched-dim-set +
     an O(dim) anti side recomputed per query — the retraction the
     union-merge seam cannot express lives entirely in the anti side.
     Two-run incremental; the oracle is the identical SQL in DuckDB."""

@@ -2391,7 +2391,7 @@ def _lower_select_from(node: Dict[str, Any]):
                 # cannot maintain FULL directly (dim-side NULL-extended
                 # rows RETRACT on fresh matches — the r14 argument
                 # stands), so the session plans a COMPOSITE: cached
-                # state-spelled LEFT half over the spine + cached
+                # LEFT half over the spine + cached
                 # monotone matched-dim-set + an O(dim) anti side
                 # recomputed per query.
                 left = ft.get("left") or {}

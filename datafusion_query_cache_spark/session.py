@@ -798,14 +798,26 @@ class CachedSparkSession(RefreshTiers):
             raise Unsupported("dynamic bound evaluated to NULL")
         return v
 
-    def _eval_bucket(self, granularity: str, lower):
-        """date_trunc the evaluated bound — via Spark so week/month/calendar
-        semantics match the engine exactly."""
-        return (
-            self.spark.range(0, 1, 1, 1)
-            .select(F.date_trunc(granularity, F.lit(lower)).alias("b"))
-            .collect()[0]["b"]
-        )
+    @staticmethod
+    def _data_watermark(
+        window: DataFrame, ts_col: str, shadow: str, lo_ns: Optional[int]
+    ) -> int:
+        """``watermark_mode='data'``: the watermark to store after a refresh
+        whose bounded scan window is ``window`` ([lo, now) with the
+        predicate): max event time + 1 in epoch ns (the ns shadow when the
+        source has one), else ``lo_ns`` (an empty window leaves the
+        watermark unchanged), else 0 (an empty source: everything is still
+        fresh)."""
+        if shadow in window.columns:
+            mxc = F.max(F.col(shadow))
+        else:
+            mxc = F.max(
+                F.unix_micros(F.col(ts_col).cast("timestamp")) * F.lit(1000)
+            )
+        mx = window.agg(mxc.alias("mx")).collect()[0]["mx"]
+        if mx is not None:
+            return int(mx) + 1
+        return lo_ns if lo_ns is not None else 0
 
     _BUCKET_INTERVAL = {
         "minute": "INTERVAL '1' MINUTE",
@@ -1117,17 +1129,9 @@ class CachedSparkSession(RefreshTiers):
             on the next refresh (ADVICE r3, medium)."""
             if cfg.watermark_mode != "data":
                 return now_ns
-            mdf = bounds(base, lo_ns=lo_ns, hi_ns=now_ns)
-            if shadow in base.columns:
-                mxc = F.max(F.col(shadow))
-            else:
-                mxc = F.max(
-                    F.unix_micros(F.col(ts_col).cast("timestamp")) * F.lit(1000)
-                )
-            mx = mdf.agg(mxc.alias("mx")).collect()[0]["mx"]
-            if mx is not None:
-                return int(mx) + 1
-            return lo_ns if lo_ns is not None else 0
+            return self._data_watermark(
+                bounds(base, lo_ns=lo_ns, hi_ns=now_ns), ts_col, shadow, lo_ns
+            )
 
         def topk_nano_stored(wm_ns: Optional[int], swm: int, cold_schema=None):
             """Driver tier for the maintained top-k (zero Spark jobs):
@@ -2275,22 +2279,6 @@ class CachedSparkSession(RefreshTiers):
             df = df.limit(spec.limit)
         return df
 
-    #: aggregate functions whose finalized value IS a mergeable state
-    #: (count/sum/min/max), or decomposes into such (avg → sum+count) —
-    #: the FULL-OUTER composite's supported vocabulary
-    #: FULL-composite aggregates whose output state merges with ONE
-    #: aggregate over the union frame (finalize ≡ state). product and the
-    #: bool/bit family (r17) are self-merging: each half's state is the
-    #: fold of its own rows, and the same fold over the two states IS the
-    #: fold over the union (associative + commutative; NULL states — an
-    #: all-NULL half — are skipped, matching SQL's null-ignoring rule).
-    _FULL_MERGE = {
-        "count": "sum", "sum": "sum", "min": "min", "max": "max",
-        "product": "product",
-        "bool_and": "bool_and", "bool_or": "bool_or",
-        "bit_and": "bit_and", "bit_or": "bit_or", "bit_xor": "bit_xor",
-    }
-
     def _fold_static_scalars(self, query: str, spec):
         """Resolve STATIC nested scalar subqueries in a CACHED spec's
         WHERE/HAVING to plan-time literals (r16 static-inner fold).
@@ -2427,55 +2415,50 @@ class CachedSparkSession(RefreshTiers):
             self._now_pin = prev_pin
 
     def _plan_full_outer_pinned(self, query: str, spec: AggSpec):
-        """FULL OUTER aggregate as a composite of maintainable pieces.
+        """FULL OUTER aggregate: merge(state(A), partial(anti)), then the
+        finalize :meth:`_plan_cached` runs.
 
-        The union-merge seam cannot maintain FULL OUTER directly: the
-        dim-preserved half NULL-extends dim rows with no fact match, and
-        those rows RETRACT when a fresh fact row matches (the r14 refusal).
-        But the answer decomposes into pieces that ARE maintainable under
-        the star contract (fact append-only, dim static):
+        The union-merge seam cannot maintain FULL OUTER directly: the join
+        NULL-extends dim rows with no fact match, and those rows RETRACT
+        when a fresh fact row matches. The answer is instead composed from
+        pieces that are maintainable when the fact only appends and the
+        dims are static:
 
-        * ``A``   — the fact-preserved LEFT half, cached as a STATE-SPELLED
-          aggregate (count/sum/min/max — finalize ≡ state for these; avg is
-          decomposed into sum+count): the normal O(new) warm path.
-        * ``M``   — the matched-dim-row set, cached as ``GROUP BY dim.*``
-          over the INNER join: MONOTONE (matches never unmatch when facts
-          only append), so it too is a plain O(new) incremental aggregate.
-        * ``anti`` — dim rows with NO fact match = ``dim LEFT ANTI M``
-          (null-safe on every dim column; equal dim rows share match
-          status, and left_anti preserves multiplicity). O(dim) per query,
-          recomputed fresh — this is the piece that retracts, so it is
-          never stored.
+        * ``A``: the fact-preserving LEFT join over the same spine, cached
+          with the query's own aggregates and HAVING (no ORDER BY or
+          LIMIT). It refreshes on whatever tier the normal path takes.
+        * ``M``: the matched dim rows, cached as ``GROUP BY dim.*`` over
+          the INNER join. Matches never unmatch while facts only append,
+          so M is a plain incremental aggregate too. It carries no WHERE:
+          matched-ness is decided by the join, before the WHERE.
+        * ``anti``: ``dim LEFT ANTI M``, null-safe on every dim column
+          (equal dim rows share match status, and left_anti keeps their
+          multiplicity), NULL-extended over the spine, with the WHERE
+          applied. It is the piece that retracts, so it is recomputed per
+          query (O(dim)) and never stored.
 
-        answer = finalize(merge(A, partial-states(anti with NULL fact
-        columns))). The WHERE applies inside A (post-join, the engine's
-        normal placement) and over the NULL-extended anti rows here —
-        matched-ness itself is join-level, BEFORE the WHERE, so ``M``
-        carries no predicate (a dim row whose every joined row the WHERE
-        kills contributes nothing from either side, exactly like SQL).
+        After A's refresh the anti rows are grouped by the group keys with
+        A's own partial columns, unioned with A's stored state and merged
+        with A's merge columns; the merged state then takes the finalize
+        every aggregate shares (:meth:`_finalize_state`). A dynamic bound
+        is a conjunct on the fact's temporal column, which is NULL on
+        every anti row: the anti side is empty and the answer is A's own
+        result, with neither M nor the anti join planned.
 
-        Unsupported shapes raise (→ passthrough): a FULL edge anywhere
-        but closing the spine, multi-arg DISTINCT aggregates,
-        approx_percentile (partial-time quantization), skew/kurt, and
-        non-decomposable aggregate functions. count/sum/avg(DISTINCT)
-        ride set states; median/percentile ride the RLE histogram
-        state (r17).
+        Refusals come from the spine rules here, or from the normal path
+        (an aggregate ``decompose_agg`` refuses, a volatile HAVING, ...).
         """
+        import dataclasses
         from functools import reduce as _reduce
 
-        from .functions.compile import to_column
-        from .plans.ir import AggCall, BinOp, Cast, Col, JoinStep, Lit
-        from .plans.ir import AggSpec as _AggSpec
-        from .plans.ir import Func as _Func
-        from .plans.ir import SelectItem, Star, transform
+        from .plans.ir import AggCall, JoinStep, SelectItem, Star
 
         cfg = self.config
-        # r16 star generalization: ONE FULL edge CLOSING the spine, any
-        # number of inner/left dim edges before it. The inner/left spine
-        # (append-only fact x static dims) is itself append-only, so the
-        # A and M decomposition arguments carry over verbatim; a FULL
-        # edge anywhere but last would have later joins consume the
-        # NULL-extended rows (different semantics) — refused.
+        # ONE FULL edge CLOSING the spine, any number of inner/left dim
+        # edges before it. The inner/left spine (append-only fact x static
+        # dims) is itself append-only, so the A and M arguments carry
+        # over; a FULL edge anywhere but last would have later joins
+        # consume the NULL-extended rows (different semantics): refused.
         if not spec.join_steps or any(
             js.how == "full" for js in spec.join_steps[:-1]
         ):
@@ -2489,29 +2472,8 @@ class CachedSparkSession(RefreshTiers):
                     "FULL star admits only inner/left dim edges"
                 )
         full_step = spec.join_steps[-1]
-        if spec.grouping_fn_items and not spec.grouping_sets:
-            raise Unsupported("grouping() without grouping sets")
-        if spec.having is not None and spec.grouping_fn_items:
-            from .plans.ir import Func as _GFunc
-
-            if any(
-                isinstance(n, _GFunc)
-                and n.name.lower() in ("grouping", "grouping_id")
-                for n in spec.having.walk()
-            ):
-                raise Unsupported("grouping() in HAVING over a FULL join")
-        if spec.having is not None:
-            # HAVING filters the MERGED frame (post-merge, pre-select);
-            # its aggregates rewrite onto the same state columns. Only
-            # volatile scalars make it uncacheable (normal-path rule).
-            from .plans.classify import VOLATILE_FNS, VOLATILE_TIME_FNS
-            from .plans.ir import Func as _Func
-
-            for n in spec.having.walk():
-                if isinstance(n, _Func) and n.name.lower() in (
-                    VOLATILE_FNS | VOLATILE_TIME_FNS
-                ):
-                    raise Unsupported("volatile function in HAVING")
+        for o in spec.order_by:  # refuse before any state is built
+            self._resolve_order_name(o.expr, spec)
 
         ts_col = cfg.default_temporal_column
         if len(spec.tables or ()) != 1 + len(spec.join_steps):
@@ -2523,10 +2485,10 @@ class CachedSparkSession(RefreshTiers):
             if ts_col in cols0 and ts_col in cols1:
                 raise Unsupported("temporal column on both FULL sides")
             if ts_col in cols0:
-                fact, dim = t0, t1
+                fact, dim, fact_cols = t0, t1, cols0
             elif ts_col in cols1:
                 # FULL commutes: re-anchor on the temporal side
-                fact, dim = t1, t0
+                fact, dim, fact_cols = t1, t0, cols1
             else:
                 raise Unsupported(
                     f"temporal column {ts_col} on neither FULL side"
@@ -2536,12 +2498,14 @@ class CachedSparkSession(RefreshTiers):
             # dim must not carry the temporal column (no commute across
             # a multi-join spine)
             fact, dim = spec.table, full_step.table
-            if ts_col not in set(self.spark.table(fact).columns):
+            fact_cols = set(self.spark.table(fact).columns)
+            if ts_col not in fact_cols:
                 raise Unsupported(
                     "temporal column must anchor the FULL star's head"
                 )
             if ts_col in set(self.spark.table(dim).columns):
                 raise Unsupported("temporal column on the FULL dim side")
+        dim_cols = self.spark.table(dim).columns
         cond = full_step.on
         using = full_step.using
         # USING spelling: the output key is the MERGED column; on anti
@@ -2551,526 +2515,74 @@ class CachedSparkSession(RefreshTiers):
         if using and cond is not None:
             raise Unsupported("FULL join with both ON and USING")
 
-        # first(x)/last(x) — the time-series definition (value at the
-        # extreme temporal timestamp, _plan_cached's _fl rewrite): now
-        # that the composite carries argmin pair states, desugar them
-        # onto min_by/max_by here too (the fact anchors ts_col)
-        def _fo_fl(e):
-            if (
-                isinstance(e, AggCall)
-                and e.fn.lower() in ("first", "last")
-                and not e.distinct
-                and 1 <= len(e.args) <= 2
-            ):
-                fn2 = "min_by" if e.fn.lower() == "first" else "max_by"
-                order = e.args[1] if len(e.args) == 2 else Col(ts_col)
-                return AggCall(fn2, (e.args[0], order))
-            return e
-
-        import dataclasses as _dc
-
-        spec = _dc.replace(
-            spec,
-            aggregates=tuple(
-                SelectItem(it.name, transform(it.expr, _fo_fl))
-                for it in spec.aggregates
-            ),
-            having=(
-                transform(spec.having, _fo_fl)
-                if spec.having is not None
-                else None
-            ),
-        )
-
-        # rewrite output aggregates onto state columns
-        state_items: List[SelectItem] = []
-        state_of: Dict[object, object] = {}
-        #: min_by/max_by val-state name -> its paired key-state name
-        #: (the pair merges together: extreme value AT the extreme key)
-        argpair: Dict[str, str] = {}
-        #: combined (n, s, m2) struct column name -> its (count, sum,
-        #: var_samp) state-column triple — the var family's pairwise
-        #: central-moment merge (the union holds <= 2 state rows per
-        #: group, so ONE exact Chan combine suffices; collect_list is
-        #: array_sort-pinned for fp determinism)
-        var_pairs: Dict[str, tuple] = {}
-        #: combined (n, s, m2, m3, m4) struct column name -> its
-        #: (count, sum, var_pop, skewness, kurtosis) state-column tuple —
-        #: skew/kurt (r17) extend the same pairwise Pébay merge to third
-        #: and fourth central moments; per-half M2..M4 are recovered from
-        #: Spark's OWN builtins exactly like partial.py's normal-path
-        #: decomposition (M2 = vp·n, M3 = skew·vp^1.5·n,
-        #: M4 = (kurt+3)·vp²·n — no raw power sums, no cancellation)
-        mom_pairs: Dict[str, tuple] = {}
-        #: combined (n, sx, sy, c2, m2x, m2y) struct column name -> its
-        #: (count, sum_x, sum_y, covar_pop, var_pop_x, var_pop_y)
-        #: state-column tuple — corr/covar/regr_* (r17) on the two-column
-        #: central co-moment family; pair-validity gating rides the
-        #: x+0·y / y+0·x null-propagation trick so every state input
-        #: counts only both-non-null rows (SQL pair semantics)
-        co_pairs: Dict[str, tuple] = {}
-
-        def _add_state(call: AggCall) -> str:
-            # dedup: count(DISTINCT x) and sum(DISTINCT x) share one set
-            # state; two percentiles of one column share one histogram
-            for si in state_items:
-                if si.expr == call:
-                    return si.name
-            nm = f"__qcfo{len(state_items)}"
-            state_items.append(SelectItem(nm, call))
-            return nm
-
-        def _numeric_out_t(arg) -> str:
-            """The normal path's sum(DISTINCT) output typing (integral →
-            long, float → double), resolved across the star's tables;
-            anything else (decimal, expression args) refuses →
-            passthrough, mirroring partial.py's plain-typed-column rule."""
-            from pyspark.sql.types import (
-                ByteType,
-                DoubleType,
-                FloatType,
-                IntegerType,
-                LongType,
-                ShortType,
-            )
-
-            if not isinstance(arg, Col):
-                raise Unsupported(
-                    "FULL join DISTINCT aggregate needs a plain column"
-                )
-            cname = arg.name.split(".")[-1].lower()
-            for t in (fact, *(js.table for js in inner_steps), dim):
-                for f in self.spark.table(t).schema.fields:
-                    if f.name.lower() == cname:
-                        if isinstance(
-                            f.dataType,
-                            (ByteType, ShortType, IntegerType, LongType),
-                        ):
-                            return "long"
-                        if isinstance(f.dataType, (FloatType, DoubleType)):
-                            return "double"
-                        raise Unsupported(
-                            "FULL join sum/avg(DISTINCT) over "
-                            "non-float/integral input"
-                        )
-            raise Unsupported(
-                "FULL join DISTINCT aggregate column not in star schema"
-            )
-
-        def _repl(node):
-            if not isinstance(node, AggCall):
-                return node
-            if node in state_of:
-                return state_of[node]
-            fn = node.fn.lower()
-            if node.distinct:
-                if fn == "count" and len(node.args) == 1 and not isinstance(
-                    node.args[0], Star
-                ):
-                    # r16: EXACT count(DISTINCT x) — set state on both
-                    # halves, union merge, cardinality after (plain
-                    # counts never add across halves: the same value can
-                    # appear on matched and anti dim rows)
-                    nm = _add_state(AggCall("collect_set", node.args))
-                    out = Cast(
-                        _Func(
-                            "coalesce",
-                            (
-                                _Func("array_size", (Col(nm),)),
-                                Lit(0),
-                            ),
-                        ),
-                        "BIGINT",
-                    )
-                    state_of[node] = out
-                    return out
-                if (
-                    fn == "count"
-                    and len(node.args) > 1
-                    and not any(isinstance(a, Star) for a in node.args)
-                ):
-                    # r17: count(DISTINCT a, b, ...) — distinct TUPLES.
-                    # Set state over __qc_struct tuples (deterministic
-                    # f{i} field names, same as the normal path's tuple
-                    # state); rows with ANY NULL component are excluded
-                    # (SQL semantics) via an AND-gated CASE. Union merge
-                    # + cardinality after, exactly the single-arg shape.
-                    from .plans.ir import Case as _Case
-                    from .plans.ir import IsNull as _IsNull
-                    from .plans.ir import Not as _Not
-
-                    valid: object = _Not(_IsNull(node.args[0]))
-                    for a in node.args[1:]:
-                        valid = BinOp("and", valid, _Not(_IsNull(a)))
-                    gated = _Case(
-                        ((valid, _Func("__qc_struct", node.args)),), None
-                    )
-                    nm = _add_state(AggCall("collect_set", (gated,)))
-                    out = Cast(
-                        _Func(
-                            "coalesce",
-                            (
-                                _Func("array_size", (Col(nm),)),
-                                Lit(0),
-                            ),
-                        ),
-                        "BIGINT",
-                    )
-                    state_of[node] = out
-                    return out
-                if fn in ("sum", "avg", "mean") and len(node.args) == 1:
-                    # r17: sum/avg(DISTINCT x) — the same set state as
-                    # count(DISTINCT) (union merge; plain sums never add
-                    # across halves: a value can appear on matched AND
-                    # anti dim rows), folded to sum/avg in the OUTPUT
-                    # position by the scalar compiler's __qc_set_* HOFs
-                    out_t = _numeric_out_t(node.args[0])
-                    nm = _add_state(AggCall("collect_set", node.args))
-                    out = _Func(
-                        "__qc_set_sum" if fn == "sum" else "__qc_set_avg",
-                        (Col(nm), Lit(out_t)),
-                    )
-                    state_of[node] = out
-                    return out
-                raise Unsupported("FULL join with DISTINCT aggregate")
-            if fn in self._FULL_MERGE:
-                out = Col(_add_state(node))
-            elif fn == "avg":
-                s = Col(_add_state(AggCall("sum", node.args)))
-                c = Col(_add_state(AggCall("count", node.args)))
-                out = BinOp("/", s, c)
-            elif fn in ("min_by", "max_by") and len(node.args) == 2:
-                # r16: argmin/argmax pair states — the sub-plan outputs
-                # the extreme value AND its key; the composite re-takes
-                # the extreme across halves via min_by/max_by over the
-                # pair (NULL keys — e.g. all-NULL anti rows — are
-                # skipped by min_by exactly like SQL)
-                vnm = _add_state(node)
-                kfn = "min" if fn == "min_by" else "max"
-                knm = _add_state(AggCall(kfn, (node.args[1],)))
-                argpair[vnm] = knm
-                out = Col(vnm)
-            elif fn in (
-                "var_samp", "variance", "var_pop",
-                "stddev", "stddev_samp", "stddev_pop",
-            ) and len(node.args) == 1:
-                # r16: var family via pairwise central-moment (Chan)
-                # merge of the two halves' (count, sum, M2) states —
-                # M2 recovered from the sub-plan's var_samp output
-                cn = _add_state(AggCall("count", node.args))
-                sn = _add_state(AggCall("sum", node.args))
-                vn = _add_state(AggCall("var_samp", node.args))
-                vm = f"__qcfovm{len(var_pairs)}"
-                var_pairs[vm] = (cn, sn, vn)
-                n_f = Col(f"{vm}.n")
-                m2_f = Col(f"{vm}.m2")
-                from .plans.ir import Case as _Case
-
-                if fn in ("var_samp", "variance", "stddev", "stddev_samp"):
-                    core: object = _Case(
-                        (
-                            (
-                                BinOp(">=", n_f, Lit(2)),
-                                BinOp(
-                                    "/", m2_f, BinOp("-", n_f, Lit(1))
-                                ),
-                            ),
-                        ),
-                        None,
-                    )
-                else:  # var_pop / stddev_pop
-                    core = _Case(
-                        (
-                            (
-                                BinOp(">=", n_f, Lit(1)),
-                                BinOp("/", m2_f, n_f),
-                            ),
-                        ),
-                        None,
-                    )
-                if fn in ("stddev", "stddev_samp", "stddev_pop"):
-                    core = _Func("sqrt", (core,))
-                state_of[node] = core
-                return core
-            elif fn in ("skewness", "kurtosis") and len(node.args) == 1:
-                # r17: third/fourth central moments. Both fns share ONE
-                # (n, s, m2, m3, m4) struct per column (state dedup), so
-                # skew+kurt of one column cost one moment family.
-                cn = _add_state(AggCall("count", node.args))
-                sn = _add_state(AggCall("sum", node.args))
-                pn = _add_state(AggCall("var_pop", node.args))
-                kn = _add_state(AggCall("skewness", node.args))
-                qn = _add_state(AggCall("kurtosis", node.args))
-                key = (cn, sn, pn, kn, qn)
-                vm = next(
-                    (m for m, t in mom_pairs.items() if t == key), None
-                )
-                if vm is None:
-                    vm = f"__qcfomo{len(mom_pairs)}"
-                    mom_pairs[vm] = key
-                n_f = Col(f"{vm}.n")
-                m2_f = Col(f"{vm}.m2")
-                from .plans.ir import Case as _Case
-
-                if fn == "skewness":
-                    # sqrt(n)·M3/M2^1.5; m2 > 0 implies n >= 2, and the
-                    # guard keeps ANSI mode off DIVIDE_BY_ZERO
-                    core = _Case(
-                        (
-                            (
-                                BinOp(">", m2_f, Lit(0)),
-                                BinOp(
-                                    "/",
-                                    BinOp(
-                                        "*",
-                                        _Func("sqrt", (n_f,)),
-                                        Col(f"{vm}.m3"),
-                                    ),
-                                    _Func("power", (m2_f, Lit(1.5))),
-                                ),
-                            ),
-                        ),
-                        None,
-                    )
-                else:
-                    # n·M4/M2² − 3 (excess kurtosis)
-                    core = _Case(
-                        (
-                            (
-                                BinOp(">", m2_f, Lit(0)),
-                                BinOp(
-                                    "-",
-                                    BinOp(
-                                        "/",
-                                        BinOp(
-                                            "*", n_f, Col(f"{vm}.m4")
-                                        ),
-                                        BinOp("*", m2_f, m2_f),
-                                    ),
-                                    Lit(3.0),
-                                ),
-                            ),
-                        ),
-                        None,
-                    )
-                state_of[node] = core
-                return core
-            elif fn == "approx_count_distinct" and len(node.args) == 1:
-                # r16: HLL sketch state — both halves produce sketches,
-                # the composite unions them register-wise and estimates
-                # AFTER the merge (estimates themselves never add: the
-                # same value can appear on matched and anti dim rows)
-                nm = _add_state(AggCall("hll_sketch_agg", node.args))
-                out = _Func("hll_sketch_estimate", (Col(nm),))
-            elif fn in (
-                "median", "percentile", "percentile_cont",
-                "approx_percentile", "percentile_approx",
-            ):
-                # r17: exact percentile — both halves emit the RLE
-                # histogram state (__qc_hist: "finalize ≡ state"), the
-                # union merge sorted-flattens the two multisets, and the
-                # interpolation walk runs in the OUTPUT position
-                # (partial.histogram_percentile via __qc_pctl_fin).
-                # approx forms ride the SAME state over a __qc_ddq
-                # pre-quantized argument (shared ddsketch_quantize
-                # binning); eps travels as a literal, so the entry's
-                # fingerprint embeds the bin layout — a config eps
-                # change is a new cold entry, never a mixed histogram.
-                approx = fn in ("approx_percentile", "percentile_approx")
-                if approx:
-                    if not getattr(
-                        cfg, "approx_percentile_sketch", False
-                    ):
-                        raise Unsupported(
-                            "approx percentile sketch disabled"
-                        )
-                    eps = float(
-                        getattr(cfg, "approx_percentile_eps", 0.01)
-                    )
-                    if not (0.0 < eps < 0.5):
-                        raise Unsupported(
-                            "approx_percentile_eps out of (0, 0.5)"
-                        )
-                if fn == "median":
-                    if len(node.args) != 1:
-                        raise Unsupported("median takes one argument")
-                    pv = 0.5
-                else:
-                    nargs = (2, 3) if approx else (2,)
-                    if len(node.args) not in nargs or not isinstance(
-                        node.args[1], Lit
-                    ):
-                        raise Unsupported(
-                            f"FULL join {fn} fraction must be a literal"
-                        )
-                    import decimal as _decimal
-
-                    fv = node.args[1].value
-                    if isinstance(fv, bool) or not isinstance(
-                        fv, (int, float, _decimal.Decimal)
-                    ):
-                        raise Unsupported(
-                            f"FULL join {fn} fraction must be numeric"
-                        )
-                    pv = float(fv)
-                    if not (0.0 <= pv <= 1.0):
-                        raise Unsupported(
-                            f"FULL join {fn} fraction out of [0,1]"
-                        )
-                    if len(node.args) == 3 and not isinstance(
-                        node.args[2], Lit
-                    ):
-                        raise Unsupported(
-                            f"FULL join {fn} accuracy must be a literal"
-                        )
-                argx = node.args[0]
-                if approx:
-                    argx = _Func("__qc_ddq", (argx, Lit(eps)))
-                nm = _add_state(AggCall("__qc_hist", (argx,)))
-                out = _Func("__qc_pctl_fin", (Col(nm), Lit(pv)))
-            elif fn in (
-                "corr", "covar_samp", "covar_pop",
-                "regr_slope", "regr_intercept", "regr_r2", "regr_count",
-                "regr_avgx", "regr_avgy",
-                "regr_sxx", "regr_syy", "regr_sxy",
-            ) and len(node.args) == 2:
-                # r17: two-column co-moment family. regr_F(y, x) puts the
-                # DEPENDENT first (Spark ≡ DuckDB), so its x is args[1];
-                # corr/covar keep (x, y) order. corr(a,b) and
-                # regr_*(b,a) share one struct via state dedup.
-                if fn.startswith("regr_"):
-                    ya, xa = node.args
-                else:
-                    xa, ya = node.args
-                # pair-validity gating: NULL propagates through x+0·y,
-                # so count/sum/var_pop see only both-non-null rows
-                xp = BinOp("+", xa, BinOp("*", Lit(0), ya))
-                yp = BinOp("+", ya, BinOp("*", Lit(0), xa))
-                cn = _add_state(AggCall("count", (xp,)))
-                sxn = _add_state(AggCall("sum", (xp,)))
-                syn = _add_state(AggCall("sum", (yp,)))
-                cvn = _add_state(AggCall("covar_pop", (xa, ya)))
-                vxn = _add_state(AggCall("var_pop", (xp,)))
-                vyn = _add_state(AggCall("var_pop", (yp,)))
-                key = (cn, sxn, syn, cvn, vxn, vyn)
-                vm = next(
-                    (m for m, t in co_pairs.items() if t == key), None
-                )
-                if vm is None:
-                    vm = f"__qcfoco{len(co_pairs)}"
-                    co_pairs[vm] = key
-                n_f = Col(f"{vm}.n")
-                c2_f = Col(f"{vm}.c2")
-                m2x_f = Col(f"{vm}.m2x")
-                m2y_f = Col(f"{vm}.m2y")
-                mx_f = BinOp("/", Col(f"{vm}.sx"), n_f)
-                my_f = BinOp("/", Col(f"{vm}.sy"), n_f)
-                from .plans.ir import Case as _Case
-
-                def _c(cond, val):
-                    return _Case(((cond, val),), None)
-
-                gt1 = BinOp(">", n_f, Lit(1))
-                gt0 = BinOp(">", n_f, Lit(0))
-                # n = 0 ⇒ m2x = 0 (fold init), so m2x != 0 alone guards
-                # the slope family — mirrors the normal path's cM2X != 0
-                nz_x = BinOp("!=", m2x_f, Lit(0.0))
-                if fn == "corr":
-                    # IEEE NaN/Inf on constant columns for n > 1 flows
-                    # from the double division, matching Spark
-                    core: object = _c(
-                        gt1,
-                        BinOp(
-                            "/",
-                            c2_f,
-                            BinOp(
-                                "*",
-                                _Func("sqrt", (m2x_f,)),
-                                _Func("sqrt", (m2y_f,)),
-                            ),
-                        ),
-                    )
-                elif fn == "covar_samp":
-                    core = _c(gt1, BinOp("/", c2_f, BinOp("-", n_f, Lit(1))))
-                elif fn == "covar_pop":
-                    core = _c(gt0, BinOp("/", c2_f, n_f))
-                elif fn == "regr_count":
-                    core = Cast(n_f, "BIGINT")
-                elif fn == "regr_avgx":
-                    core = _c(gt0, mx_f)
-                elif fn == "regr_avgy":
-                    core = _c(gt0, my_f)
-                elif fn == "regr_sxx":
-                    core = _c(gt0, m2x_f)
-                elif fn == "regr_syy":
-                    core = _c(gt0, m2y_f)
-                elif fn == "regr_sxy":
-                    core = _c(gt0, c2_f)
-                elif fn == "regr_slope":
-                    core = _c(nz_x, BinOp("/", c2_f, m2x_f))
-                elif fn == "regr_intercept":
-                    core = _c(
-                        nz_x,
-                        BinOp(
-                            "-",
-                            my_f,
-                            BinOp(
-                                "*", BinOp("/", c2_f, m2x_f), mx_f
-                            ),
-                        ),
-                    )
-                else:  # regr_r2 — SQL standard: NULL when M2x=0,
-                    # 1 when M2y=0, else C2²/(M2x·M2y)
-                    core = _c(
-                        nz_x,
-                        _Case(
-                            (
-                                (
-                                    BinOp("=", m2y_f, Lit(0.0)),
-                                    Lit(1.0),
-                                ),
-                            ),
-                            BinOp(
-                                "/",
-                                BinOp("*", c2_f, c2_f),
-                                BinOp("*", m2x_f, m2y_f),
-                            ),
-                        ),
-                    )
-                state_of[node] = core
-                return core
-            else:
-                raise Unsupported(f"FULL join with aggregate {fn}")
-            state_of[node] = out
-            return out
-
-        out_aggs = [
-            SelectItem(it.name, transform(it.expr, _repl))
-            for it in spec.aggregates
-        ]
-        having_expr = (
-            transform(spec.having, _repl)
-            if spec.having is not None
-            else None
-        )  # before left_spec freezes state_items
-
-        g_names = [it.name for it in spec.group_by]
-        s_names = [s.name for s in state_items]
         sub_tables = (
             (fact,) + tuple(js.table for js in inner_steps) + (dim,)
         )
-        left_spec = _AggSpec(
+        a_spec = dataclasses.replace(
+            spec,
             table=fact,
-            predicate=spec.predicate,
-            group_by=spec.group_by,
-            aggregates=tuple(state_items),
-            select_order=tuple(g_names) + tuple(s_names),
             tables=sub_tables,
             join_steps=inner_steps
             + (JoinStep(dim, cond, "left", using=using),),
+            order_by=(),
+            limit=None,
+            offset=None,
         )
-        dim_cols = self.spark.table(dim).columns
-        matched_spec = _AggSpec(
+
+        def composite(decA, decM):
+            return Decision(
+                sql=query,
+                cached=bool(decA.cached and decM.cached),
+                cache_hit=bool(decA.cache_hit and decM.cache_hit),
+                fingerprint=decA.fingerprint,
+                watermark_ns=decA.watermark_ns,
+                now_ns=decA.now_ns,
+                dynamic_lower=decA.dynamic_lower,
+                refresh_tier="full_outer",
+            )
+
+        dyn = None
+        if classify(spec.predicate, cfg.temporal_columns).verdict is (
+            Verdict.FOUND
+        ):
+            split = split_dynamic_bound(spec.predicate, cfg.temporal_columns)
+            dyn = split[1] if split is not None else None
+        if dyn is not None:
+            if dyn.column not in fact_cols or dyn.column.lower() in {
+                c.lower() for c in dim_cols
+            }:
+                # a USING-merged bound column carries the dim's value on
+                # the anti rows, which the bound would then keep
+                raise Unsupported("FULL join dynamic bound off the fact table")
+            df, decA = self._plan_cached(
+                f"{query} /*qc:full-left*/",
+                dataclasses.replace(
+                    a_spec,
+                    order_by=spec.order_by,
+                    limit=spec.limit,
+                    offset=spec.offset,
+                ),
+            )
+            cfg.log.info(
+                decA.fingerprint or "-",
+                f"full-outer composite: dynamic bound, A alone "
+                f"({decA.refresh_tier}), no anti side",
+            )
+            return df, composite(decA, decA)
+
+        pa: dict = {}
+        _dfA, decA = self._plan_cached(f"{query} /*qc:full-left*/", a_spec, pa)
+        # A's stored state after its refresh, read before M's put can
+        # evict it from a bounded memory cache: a small state enters the
+        # merge as a local relation, a larger one as a file scan
+        state_tbl = pa["entry"].get_arrow()
+        state = (
+            arrow_to_spark(self.spark, state_tbl)
+            if state_tbl is not None
+            else pa["entry"].get(self.spark)
+        )
+
+        matched_spec = AggSpec(
             table=fact,
             predicate=None,  # matched-ness is join-level, pre-WHERE
             group_by=tuple(SelectItem(c, Col(c)) for c in dim_cols),
@@ -3080,16 +2592,11 @@ class CachedSparkSession(RefreshTiers):
             join_steps=inner_steps
             + (JoinStep(dim, cond, "inner", using=using),),
         )
-
-        dfA, decA = self._plan_cached(f"{query} /*qc:full-left*/", left_spec)
         dfM, decM = self._plan_cached(
             f"{query} /*qc:full-matched*/", matched_spec
         )
 
-        # anti side: dim rows never matched (null-safe on EVERY dim column
-        # — equal rows share match status; left_anti keeps multiplicity)
-        dim_df = self.spark.table(dim)
-        a = dim_df.alias("__qc_d")
+        a = self.spark.table(dim).alias("__qc_d")
         b = dfM.select(*dim_cols).alias("__qc_m")
         anti_cond = _reduce(
             lambda x, y: x & y,
@@ -3133,538 +2640,30 @@ class CachedSparkSession(RefreshTiers):
             pred = self._pin_now(spec.predicate, self._now_ns())
             anti_base = anti_base.filter(to_column(pred))
 
-        def _agg_col(call: AggCall):
-            fn = call.fn.lower()
-            if fn == "count" and (
-                not call.args or isinstance(call.args[0], Star)
-            ):
-                return F.count(F.lit(1))
-            if fn in ("min_by", "max_by"):
-                f_by = F.min_by if fn == "min_by" else F.max_by
-                return f_by(
-                    to_column(call.args[0]), to_column(call.args[1])
-                )
-            if fn == "covar_pop":
-                return F.covar_pop(
-                    to_column(call.args[0]), to_column(call.args[1])
-                )
-            if fn == "__qc_hist":
-                # same entry shape as partial.py's histogram partial
-                a = to_column(call.args[0]).cast("double")
-                he = F.when(
-                    a.isNotNull(),
-                    F.struct(
-                        a.alias("v"), F.lit(1).cast("long").alias("c")
-                    ),
-                )
-                return F.sort_array(F.collect_list(he))
-            arg = to_column(call.args[0])
-            return {
-                "count": F.count,
-                "sum": F.sum,
-                "min": F.min,
-                "max": F.max,
-                "product": F.product,
-                "bool_and": F.bool_and,
-                "bool_or": F.bool_or,
-                "bit_and": F.bit_and,
-                "bit_or": F.bit_or,
-                "bit_xor": F.bit_xor,
-                "hll_sketch_agg": F.hll_sketch_agg,
-                "collect_set": F.collect_set,
-                "var_samp": F.var_samp,
-                "var_pop": F.var_pop,
-                "skewness": F.skewness,
-                "kurtosis": F.kurtosis,
-            }[fn](arg)
-
-        anti_states = anti_base.groupBy(
-            *[to_column(it.expr).alias(it.name) for it in spec.group_by]
-        ).agg(*[_agg_col(si.expr).alias(si.name) for si in state_items])
-
-        var_inputs = {nm for tpl in var_pairs.values() for nm in tpl}
-        mom_inputs = {nm for tpl in mom_pairs.values() for nm in tpl}
-
-        def _chan(acc, x):
-            n = acc["n"] + x["n"]
-            srm = acc["s"] + x["s"]
-            m2 = (
-                F.when(acc["n"] == 0, x["m2"])
-                .when(x["n"] == 0, acc["m2"])
-                .otherwise(
-                    acc["m2"]
-                    + x["m2"]
-                    + F.pow(
-                        x["s"] / x["n"].cast("double")
-                        - acc["s"] / acc["n"].cast("double"),
-                        F.lit(2.0),
-                    )
-                    * acc["n"].cast("double")
-                    * x["n"].cast("double")
-                    / n.cast("double")
-                )
-            )
-            return F.struct(n.alias("n"), srm.alias("s"), m2.alias("m2"))
-
-        def _var_fold(elem, vm):
-            return F.aggregate(
-                F.array_sort(F.collect_list(elem)),
-                F.struct(
-                    F.lit(0).cast("long").alias("n"),
-                    F.lit(0.0).alias("s"),
-                    F.lit(0.0).alias("m2"),
-                ),
-                _chan,
-            ).alias(vm)
-
-        def _chan4(acc, x):
-            """Pairwise Pébay combine of (n, s, m2, m3, m4) — the same
-            update Spark's CentralMomentAgg.merge performs, written with
-            sum-based means. CASE evaluates lazily, so the empty-half
-            branches shield the divisions."""
-            n1, n2 = acc["n"], x["n"]
-            n1d, n2d = n1.cast("double"), n2.cast("double")
-            n = n1 + n2
-            nd = n.cast("double")
-            delta = x["s"] / n2d - acc["s"] / n1d
-            dn = delta / nd
-            a2, b2 = acc["m2"], x["m2"]
-            a3, b3 = acc["m3"], x["m3"]
-            m2 = a2 + b2 + delta * dn * n1d * n2d
-            m3 = (
-                a3
-                + b3
-                + dn * dn * delta * n1d * n2d * (n1d - n2d)
-                + F.lit(3.0) * dn * (n1d * b2 - n2d * a2)
-            )
-            m4 = (
-                acc["m4"]
-                + x["m4"]
-                + dn
-                * dn
-                * dn
-                * delta
-                * n1d
-                * n2d
-                * (n1d * n1d - n1d * n2d + n2d * n2d)
-                + F.lit(6.0) * dn * dn * (n1d * n1d * b2 + n2d * n2d * a2)
-                + F.lit(4.0) * dn * (n1d * b3 - n2d * a3)
-            )
-            return (
-                F.when(n1 == 0, x)
-                .when(n2 == 0, acc)
-                .otherwise(
-                    F.struct(
-                        n.alias("n"),
-                        (acc["s"] + x["s"]).alias("s"),
-                        m2.alias("m2"),
-                        m3.alias("m3"),
-                        m4.alias("m4"),
-                    )
-                )
-            )
-
-        def _mom_fold(elem, vm):
-            return F.aggregate(
-                F.array_sort(F.collect_list(elem)),
-                F.struct(
-                    F.lit(0).cast("long").alias("n"),
-                    F.lit(0.0).alias("s"),
-                    F.lit(0.0).alias("m2"),
-                    F.lit(0.0).alias("m3"),
-                    F.lit(0.0).alias("m4"),
-                ),
-                _chan4,
-            ).alias(vm)
-
-        def _chan2c(acc, x):
-            """Pairwise co-moment combine of (n, sx, sy, c2, m2x, m2y) —
-            Spark's Covariance.merge update with sum-based means."""
-            n1, n2 = acc["n"], x["n"]
-            n1d, n2d = n1.cast("double"), n2.cast("double")
-            n = n1 + n2
-            nd = n.cast("double")
-            dx = x["sx"] / n2d - acc["sx"] / n1d
-            dy = x["sy"] / n2d - acc["sy"] / n1d
-            dxn = dx / nd
-            dyn_ = dy / nd
-            return (
-                F.when(n1 == 0, x)
-                .when(n2 == 0, acc)
-                .otherwise(
-                    F.struct(
-                        n.alias("n"),
-                        (acc["sx"] + x["sx"]).alias("sx"),
-                        (acc["sy"] + x["sy"]).alias("sy"),
-                        (acc["c2"] + x["c2"] + dx * dyn_ * n1d * n2d).alias(
-                            "c2"
-                        ),
-                        (
-                            acc["m2x"] + x["m2x"] + dx * dxn * n1d * n2d
-                        ).alias("m2x"),
-                        (
-                            acc["m2y"] + x["m2y"] + dy * dyn_ * n1d * n2d
-                        ).alias("m2y"),
-                    )
-                )
-            )
-
-        def _co_fold(elem, vm):
-            return F.aggregate(
-                F.array_sort(F.collect_list(elem)),
-                F.struct(
-                    F.lit(0).cast("long").alias("n"),
-                    F.lit(0.0).alias("sx"),
-                    F.lit(0.0).alias("sy"),
-                    F.lit(0.0).alias("c2"),
-                    F.lit(0.0).alias("m2x"),
-                    F.lit(0.0).alias("m2y"),
-                ),
-                _chan2c,
-            ).alias(vm)
-
-        def _merge_cols(first: bool):
-            """Merge-aggregate expressions over a frame carrying the
-            state columns. ``first=True``: the union frame (raw state
-            items; var/moment pairs build their (n, s, m2[, m3, m4])
-            struct from their state tuples). ``first=False``: a
-            re-aggregation over the already-merged frame (pairs re-fold
-            their existing structs — Chan/Pébay is associative, the
-            order-pinned fold handles any row count).
-
-            A state is OMITTED from per-column merging only when its fn
-            has no independent merge (var_samp/var_pop/skewness/
-            kurtosis — consumed exclusively through pair structs).
-            count/sum states always merge per-column even when a pair
-            also consumes them: _add_state dedups, so a plain count(x)
-            output may share the state a var/moment struct reads."""
-            out = []
-            for si in state_items:
-                if si.expr.fn.lower() in (
-                    "var_samp", "var_pop", "skewness", "kurtosis",
-                    "covar_pop",
-                ):
-                    continue
-                fn = si.expr.fn.lower()
-                if si.name in argpair:
-                    f_by = F.min_by if fn == "min_by" else F.max_by
-                    out.append(
-                        f_by(
-                            F.col(si.name), F.col(argpair[si.name])
-                        ).alias(si.name)
-                    )
-                    continue
-                m = {
-                    "count": F.sum,
-                    "sum": F.sum,
-                    "min": F.min,
-                    "max": F.max,
-                    "product": F.product,
-                    "bool_and": F.bool_and,
-                    "bool_or": F.bool_or,
-                    "bit_and": F.bit_and,
-                    "bit_or": F.bit_or,
-                    "bit_xor": F.bit_xor,
-                    "hll_sketch_agg": F.hll_union_agg,
-                    "collect_set": (
-                        lambda c: F.array_distinct(
-                            F.flatten(F.collect_list(c))
-                        )
-                    ),
-                    # histogram multisets: sorted flatten (associative,
-                    # the same merge the normal path's state uses)
-                    "__qc_hist": (
-                        lambda c: F.sort_array(
-                            F.flatten(F.collect_list(c))
-                        )
-                    ),
-                }[fn](F.col(si.name))
-                if fn == "count":
-                    m = F.coalesce(m, F.lit(0)).cast("long")
-                out.append(m.alias(si.name))
-            for vm, (cn, sn, vn) in var_pairs.items():
-                if first:
-                    elem = F.struct(
-                        F.coalesce(F.col(cn), F.lit(0))
-                        .cast("long")
-                        .alias("n"),
-                        F.coalesce(F.col(sn), F.lit(0.0))
-                        .cast("double")
-                        .alias("s"),
-                        F.when(
-                            F.col(cn) >= 2,
-                            F.col(vn)
-                            * (F.col(cn) - F.lit(1)).cast("double"),
-                        )
-                        .otherwise(F.lit(0.0))
-                        .alias("m2"),
-                    )
-                else:
-                    elem = F.struct(
-                        F.col(f"{vm}.n").alias("n"),
-                        F.col(f"{vm}.s").alias("s"),
-                        F.col(f"{vm}.m2").alias("m2"),
-                    )
-                out.append(_var_fold(elem, vm))
-            for vm, (cn, sn, pn, kn, qn) in mom_pairs.items():
-                if first:
-                    cd = F.col(cn).cast("double")
-                    # M2..M4 from the half's own builtins — the exact
-                    # inversions partial.py's normal-path states use
-                    # (vp NULL on empty halves -> coalesce 0)
-                    m2e = F.coalesce(F.col(pn) * cd, F.lit(0.0))
-                    m3e = F.coalesce(
-                        F.col(kn)
-                        * F.pow(F.col(pn), F.lit(1.5))
-                        * cd,
-                        F.lit(0.0),
-                    )
-                    m4e = F.coalesce(
-                        (F.col(qn) + F.lit(3.0))
-                        * F.col(pn)
-                        * F.col(pn)
-                        * cd,
-                        F.lit(0.0),
-                    )
-                    elem = F.struct(
-                        F.coalesce(F.col(cn), F.lit(0))
-                        .cast("long")
-                        .alias("n"),
-                        F.coalesce(F.col(sn), F.lit(0.0))
-                        .cast("double")
-                        .alias("s"),
-                        m2e.alias("m2"),
-                        m3e.alias("m3"),
-                        m4e.alias("m4"),
-                    )
-                else:
-                    elem = F.struct(
-                        F.col(f"{vm}.n").alias("n"),
-                        F.col(f"{vm}.s").alias("s"),
-                        F.col(f"{vm}.m2").alias("m2"),
-                        F.col(f"{vm}.m3").alias("m3"),
-                        F.col(f"{vm}.m4").alias("m4"),
-                    )
-                out.append(_mom_fold(elem, vm))
-            for vm, (cn, sxn, syn, cvn, vxn, vyn) in co_pairs.items():
-                if first:
-                    cd = F.col(cn).cast("double")
-                    elem = F.struct(
-                        F.coalesce(F.col(cn), F.lit(0))
-                        .cast("long")
-                        .alias("n"),
-                        F.coalesce(F.col(sxn), F.lit(0.0))
-                        .cast("double")
-                        .alias("sx"),
-                        F.coalesce(F.col(syn), F.lit(0.0))
-                        .cast("double")
-                        .alias("sy"),
-                        F.coalesce(F.col(cvn) * cd, F.lit(0.0)).alias(
-                            "c2"
-                        ),
-                        F.coalesce(F.col(vxn) * cd, F.lit(0.0)).alias(
-                            "m2x"
-                        ),
-                        F.coalesce(F.col(vyn) * cd, F.lit(0.0)).alias(
-                            "m2y"
-                        ),
-                    )
-                else:
-                    elem = F.struct(
-                        F.col(f"{vm}.n").alias("n"),
-                        F.col(f"{vm}.sx").alias("sx"),
-                        F.col(f"{vm}.sy").alias("sy"),
-                        F.col(f"{vm}.c2").alias("c2"),
-                        F.col(f"{vm}.m2x").alias("m2x"),
-                        F.col(f"{vm}.m2y").alias("m2y"),
-                    )
-                out.append(_co_fold(elem, vm))
-            return out
-
-        merge_exprs = _merge_cols(first=True)
-        unioned = dfA.select(*g_names, *s_names).unionByName(
-            anti_states.select(*g_names, *s_names)
-        )
-        merged = unioned.groupBy(*[F.col(n) for n in g_names]).agg(
-            *merge_exprs
-        )
-
-        if spec.grouping_sets:
-            # ROLLUP/CUBE/GROUPING SETS over the FULL composite (r16):
-            # the merged frame IS the finest-granularity state, and its
-            # merge vocabulary (sum/min/max/set-union/HLL-union/argmin
-            # pairs) re-aggregates each coarser set — the same
-            # associativity law the normal path's expansion uses. Anti
-            # groups' natural-NULL keys group like values (grouping()=0),
-            # subtotal NULLs are typed literals per part, and the
-            # grouping()/grouping_id() flags are pure functions of WHICH
-            # set a row came from.
-            def fo_flag_cols(st_idx):
-                cols = []
-                for item in spec.grouping_fn_items:
-                    args = item.expr.args or tuple(
-                        g.expr for g in spec.group_by
-                    )
-
-                    def flag(arg) -> int:
-                        for i, g in enumerate(spec.group_by):
-                            if g.expr == arg or (
-                                isinstance(arg, Col) and arg.name == g.name
-                            ):
-                                return 0 if i in st_idx else 1
-                        raise Unsupported(
-                            "grouping() argument not a group key"
-                        )
-
-                    if item.expr.name.lower() == "grouping":
-                        cols.append(
-                            F.lit(flag(args[0]))
-                            .cast("tinyint")
-                            .alias(item.name)
-                        )
-                    else:
-                        gid = 0
-                        for arg in args:
-                            gid = gid * 2 + flag(arg)
-                        cols.append(
-                            F.lit(gid).cast("bigint").alias(item.name)
-                        )
-                return cols
-
-            # re-aggregation over the MERGED frame: per-item merges
-            # re-apply by name; var pairs re-fold their structs
-            reagg_exprs = _merge_cols(first=False)
-            kept_names = [
-                si.name
-                for si in state_items
-                if si.expr.fn.lower()
-                not in (
-                    "var_samp", "var_pop", "skewness", "kurtosis",
-                    "covar_pop",
-                )
-            ] + list(var_pairs) + list(mom_pairs) + list(co_pairs)
-            dt_map = dict(merged.dtypes)
-            parts = []
-            for st_idx in spec.grouping_sets:
-                keys = [g_names[i] for i in st_idx]
-                gagg = merged.groupBy(*[F.col(k) for k in keys]).agg(
-                    *reagg_exprs
-                )
-                sel = (
-                    [F.col(k) for k in keys]
-                    + [
-                        F.lit(None).cast(dt_map[n]).alias(n)
-                        for n in g_names
-                        if n not in keys
-                    ]
-                    + [F.col(n) for n in kept_names]
-                    + fo_flag_cols(st_idx)
-                )
-                parts.append(gagg.select(*sel))
-            acc = parts[0]
-            for p2 in parts[1:]:
-                acc = acc.unionByName(p2)
-            merged = acc
-
-        if having_expr is not None:
-            merged = merged.filter(to_column(having_expr))
-
-        agg_by_name = {it.name: it for it in out_aggs}
-        out_cols = []
-        for name in spec.select_order:
-            if name in agg_by_name:
-                out_cols.append(
-                    to_column(agg_by_name[name].expr).alias(name)
-                )
-            else:
-                out_cols.append(F.col(name))
-        df = merged.select(*out_cols)
-
-        sort_cols: List[Column] = []
-        if spec.order_by:
-            by_expr = {it.expr: it.name for it in spec.group_by}
-            by_expr.update({it.expr: it.name for it in spec.aggregates})
-            for o in spec.order_by:
-                e = o.expr
-                if isinstance(e, Lit) and isinstance(e.value, int):
-                    if not 1 <= e.value <= len(spec.select_order):
-                        # mirror the sibling planners: out-of-range
-                        # ordinals pass through so Spark's
-                        # ORDER_BY_POS_OUT_OF_RANGE stays authoritative
-                        raise Unsupported("order-by position out of range")
-                    nm = spec.select_order[e.value - 1]
-                elif isinstance(e, Col) and e.name in spec.select_order:
-                    nm = e.name
-                elif e in by_expr:
-                    nm = by_expr[e]
-                else:
-                    raise Unsupported("FULL join ORDER BY expression")
-                c = F.col(nm)
-                if o.desc:
-                    c = (
-                        c.desc_nulls_first()
-                        if o.nulls_first
-                        else c.desc_nulls_last()
-                        if o.nulls_first is not None
-                        else c.desc()
-                    )
-                else:
-                    c = (
-                        c.asc_nulls_first()
-                        if o.nulls_first
-                        else c.asc_nulls_last()
-                        if o.nulls_first is not None
-                        else c.asc()
-                    )
-                sort_cols.append(c)
-
-        # r18 (guide §1.2 job shape): when the merge is provably SMALL,
-        # evaluate it EAGERLY — single-partition sort (no range-sampling
-        # pass), one Arrow collect on the AQE-off clone session — and
-        # hand back a LocalRelation, exactly what the normal warm path's
-        # fused finalize returns. Lazily executing the same merge at the
-        # user's action materialized ~6 AQE stage-jobs (~0.15 s
-        # scheduling each) over frames of a few hundred rows. Big states
-        # or a big dim fall through to the lazy plan below, where AQE
-        # earns its stages.
-        eager = self._fo_eager_merge(df, sort_cols, spec)
-        if eager is not None:
-            df = eager
-        else:
-            if sort_cols:
-                df = df.orderBy(*sort_cols)
-            if spec.offset is not None:
-                df = df.offset(spec.offset)
-            if spec.limit is not None:
-                df = df.limit(spec.limit)
-
-        decision = Decision(
-            sql=query,
-            cached=bool(decA.cached and decM.cached),
-            cache_hit=bool(decA.cache_hit and decM.cache_hit),
-            fingerprint=decA.fingerprint,
-            watermark_ns=decA.watermark_ns,
-            now_ns=decA.now_ns,
-            refresh_tier="full_outer",
+        merged = state.unionByName(pa["partial_agg"](anti_base)).groupBy(
+            *[F.col(n) for n in pa["group_names"]]
+        ).agg(*[c.alias(n) for n, c in pa["merge_aggs"].items()])
+        out = self._finalize_state(
+            merged, spec, pa["plans"], pa["group_names"], pa["merge_aggs"]
         )
         cfg.log.info(
             decA.fingerprint or "-",
-            "full-outer composite: cached LEFT states + cached matched-dim "
-            "set + O(dim) anti side",
+            f"full-outer composite: A state ({decA.refresh_tier}) merged "
+            "with the anti rows' partial state",
         )
-        return df, decision
+        return self._fo_eager_merge(out, spec), composite(decA, decM)
 
-    def _fo_eager_merge(
-        self, df: DataFrame, sort_cols, spec: AggSpec
-    ) -> Optional[DataFrame]:
-        """Collect a small FULL-composite merge once via Arrow (on the
-        AQE-off execution clone when available) and re-enter it as a
-        LocalRelation with the lazy plan's exact schema. The ORDER BY is
-        applied as a single-partition sort — the frame is provably small,
-        so a global range sort would only add its sampling pass — and
-        OFFSET/LIMIT apply to the sorted single partition, preserving the
-        lazy plan's semantics exactly. Returns None when the merge is not
-        provably small or anything fails (caller keeps the lazy plan).
+    def _fo_eager_merge(self, df: DataFrame, spec: AggSpec) -> DataFrame:
+        """The FULL composite's finalized frame with its ORDER BY, OFFSET
+        and LIMIT. When the frame is provably small it is collected once
+        via Arrow (on the AQE-off execution clone when available) and
+        re-enters Spark as a LocalRelation with the lazy plan's exact
+        schema; the ORDER BY runs as a single-partition sort (a global
+        range sort would only add its sampling pass) and OFFSET/LIMIT
+        apply to that sorted partition. Lazily executing the same merge
+        at the caller's action ran ~6 AQE stage-jobs over a few hundred
+        rows. A frame not provably small, or any failure, keeps the lazy
+        plan (:meth:`_apply_order_limit`).
 
         Row it serves: ``qc_fo_x1000_warm`` (the FULL-composite warm
         refresh over the x1000 fact table)."""
@@ -3676,11 +2675,16 @@ class CachedSparkSession(RefreshTiers):
             )
 
             if not is_small_input(df):
-                return None
+                return self._apply_order_limit(df, spec)
             schema = df.schema
             ldf = df
-            if sort_cols:
-                ldf = ldf.coalesce(1).sortWithinPartitions(*sort_cols)
+            if spec.order_by:
+                ldf = ldf.coalesce(1).sortWithinPartitions(
+                    *[
+                        _order_col(self._resolve_order_name(o.expr, spec), o)
+                        for o in spec.order_by
+                    ]
+                )
             if spec.offset is not None:
                 ldf = ldf.offset(spec.offset)
             if spec.limit is not None:
@@ -3690,9 +2694,19 @@ class CachedSparkSession(RefreshTiers):
             tbl = rdf.toArrow()
             return arrow_to_spark(self.spark, tbl, schema=schema)
         except Exception:
-            return None
+            return self._apply_order_limit(df, spec)
 
-    def _plan_cached(self, query: str, spec: Optional[AggSpec] = None):
+    def _plan_cached(
+        self,
+        query: str,
+        spec: Optional[AggSpec] = None,
+        pieces: Optional[dict] = None,
+    ):
+        """Plan and refresh one cacheable aggregate; returns (result,
+        Decision). ``pieces``, when given, receives the plan's entry and
+        its state algebra (plans, group columns, partial and merge
+        columns), for a composite that merges more rows into this state
+        (:meth:`_plan_full_outer_pinned`)."""
         cfg = self.config
         if spec is None:
             spec = parse_agg_query(query)
@@ -4160,6 +3174,15 @@ class CachedSparkSession(RefreshTiers):
                 *p2_aggs
             )
 
+        if pieces is not None:
+            pieces.update(
+                entry=entry,
+                plans=plans,
+                group_names=group_names,
+                merge_aggs=merge_aggs,
+                partial_agg=partial_agg,
+            )
+
         shadow = f"{ts_col}_ns"
         pc_col = cfg.temporal_partition_columns.get(ts_col)
         pc_arg = pc_col if (pc_col and pc_col in base_cols) else None
@@ -4243,20 +3266,10 @@ class CachedSparkSession(RefreshTiers):
             time and no extra job runs."""
             if cfg.watermark_mode != "data":
                 return now_ns, now_ns
-            mxdf = time_bounds(get_base(), lo_ns, now_ns, pred)
-            if shadow in base_cols:
-                mxc = F.max(F.col(shadow))
-            else:
-                mxc = F.max(
-                    F.unix_micros(F.col(ts_col).cast("timestamp")) * F.lit(1000)
-                )
-            mx = mxdf.agg(mxc.alias("mx")).collect()[0]["mx"]
-            if mx is not None:
-                wm = int(mx) + 1
-            elif lo_ns is not None:
-                wm = lo_ns  # empty window: watermark unchanged
-            else:
-                wm = 0  # empty source: everything is still fresh
+            wm = self._data_watermark(
+                time_bounds(get_base(), lo_ns, now_ns, pred), ts_col, shadow,
+                lo_ns,
+            )
             return wm, wm
 
         def _local_state():
@@ -4701,68 +3714,9 @@ class CachedSparkSession(RefreshTiers):
                 else entry.put(store_wm_ns, merged, self.spark)
             )
 
-        if spec.grouping_sets:
-            # ROLLUP/CUBE/GROUPING SETS: state is kept at the FINEST
-            # granularity (all group keys); each grouping set is a
-            # re-aggregation of that state (merge associativity — the same
-            # law the refresh relies on), with the absent keys as typed
-            # NULLs. The union reproduces Spark's rollup output exactly,
-            # including the natural-NULL-vs-subtotal row pair.
-            if dyn_bound is not None:
-                raise Unsupported("grouping sets with a dynamic bound")
-            def grouping_flag_cols(st_idx):
-                """grouping()/grouping_id() are pure functions of WHICH set a
-                row came from — emit them as typed literals per part
-                (tinyint / bigint, matching Spark's native output types)."""
-                cols = []
-                for item in spec.grouping_fn_items:
-                    args = item.expr.args or tuple(
-                        g.expr for g in spec.group_by
-                    )  # grouping_id() with no args = all keys
-
-                    def flag(arg) -> int:
-                        for i, g in enumerate(spec.group_by):
-                            if g.expr == arg or (
-                                isinstance(arg, Col) and arg.name == g.name
-                            ):
-                                return 0 if i in st_idx else 1
-                        raise Unsupported("grouping() argument not a group key")
-
-                    if item.expr.name.lower() == "grouping":
-                        cols.append(
-                            F.lit(flag(args[0])).cast("tinyint").alias(item.name)
-                        )
-                    else:
-                        gid = 0
-                        for arg in args:
-                            gid = gid * 2 + flag(arg)
-                        cols.append(F.lit(gid).cast("bigint").alias(item.name))
-                return cols
-
-            dt_map = dict(stored.dtypes)
-            parts = []
-            for st_idx in spec.grouping_sets:
-                keys = [group_names[i] for i in st_idx]
-                gagg = stored.groupBy(*[F.col(k) for k in keys]).agg(
-                    *[c.alias(n) for n, c in merge_aggs.items()]
-                )
-                sel = (
-                    [F.col(k) for k in keys]
-                    + [
-                        F.lit(None).cast(dt_map[n]).alias(n)
-                        for n in group_names
-                        if n not in keys
-                    ]
-                    + [F.col(n) for n in merge_aggs]
-                    + grouping_flag_cols(st_idx)
-                )
-                parts.append(gagg.select(*sel))
-            acc = parts[0]
-            for p in parts[1:]:
-                acc = acc.unionByName(p)
-            stored = acc
-
         if dyn_bound is not None:
+            if spec.grouping_sets:
+                raise Unsupported("grouping sets with a dynamic bound")
             lower, boundary = dyn_eval[0], dyn_eval[1]
             decision.dynamic_lower = lower
             bucket_dtype = dict(stored.dtypes)[bucket_name]
@@ -4836,22 +3790,7 @@ class CachedSparkSession(RefreshTiers):
                     f"bucket recomputed from raw rows >= {lower}",
                 )
 
-        final_select: List[Column] = []
-        fin_by_name = {p.name: p.finalize for p in plans}
-        for name in spec.select_order:
-            if name in fin_by_name:
-                final_select.append(fin_by_name[name])
-            else:
-                final_select.append(F.col(name))
-        if spec.having is not None:
-            out = (
-                stored.select(*final_select, fin_by_name["__qc_having"])
-                .filter(F.col("__qc_having"))
-                .drop("__qc_having")
-            )
-        else:
-            out = stored.select(*final_select)
-
+        out = self._finalize_state(stored, spec, plans, group_names, merge_aggs)
         out = self._apply_order_limit(out, spec)
         if (
             spec.limit is not None
@@ -4865,6 +3804,92 @@ class CachedSparkSession(RefreshTiers):
             wm = store_wm_ns if merged is not None else decision.watermark_ns
             out = self._memo_collect(fingerprint, memo_wm(wm), out, post_key)
         return out, decision
+
+    def _finalize_state(
+        self,
+        stored: DataFrame,
+        spec: AggSpec,
+        plans,
+        group_names: List[str],
+        merge_aggs: Dict[str, Column],
+    ) -> DataFrame:
+        """The finalize over merged state shared by every aggregate plan
+        (:meth:`_plan_cached` and the FULL composite): grouping sets,
+        HAVING and the select finalize. ORDER BY, OFFSET and LIMIT are
+        the caller's (:meth:`_apply_order_limit`)."""
+        if spec.grouping_sets:
+            # ROLLUP/CUBE/GROUPING SETS: state is kept at the FINEST
+            # granularity (all group keys); each grouping set is a
+            # re-aggregation of that state (merge associativity — the same
+            # law the refresh relies on), with the absent keys as typed
+            # NULLs. The union reproduces Spark's rollup output exactly,
+            # including the natural-NULL-vs-subtotal row pair.
+            def grouping_flag_cols(st_idx):
+                """grouping()/grouping_id() are pure functions of WHICH set a
+                row came from — emit them as typed literals per part
+                (tinyint / bigint, matching Spark's native output types)."""
+                cols = []
+                for item in spec.grouping_fn_items:
+                    args = item.expr.args or tuple(
+                        g.expr for g in spec.group_by
+                    )  # grouping_id() with no args = all keys
+
+                    def flag(arg) -> int:
+                        for i, g in enumerate(spec.group_by):
+                            if g.expr == arg or (
+                                isinstance(arg, Col) and arg.name == g.name
+                            ):
+                                return 0 if i in st_idx else 1
+                        raise Unsupported("grouping() argument not a group key")
+
+                    if item.expr.name.lower() == "grouping":
+                        cols.append(
+                            F.lit(flag(args[0])).cast("tinyint").alias(item.name)
+                        )
+                    else:
+                        gid = 0
+                        for arg in args:
+                            gid = gid * 2 + flag(arg)
+                        cols.append(F.lit(gid).cast("bigint").alias(item.name))
+                return cols
+
+            dt_map = dict(stored.dtypes)
+            parts = []
+            for st_idx in spec.grouping_sets:
+                keys = [group_names[i] for i in st_idx]
+                gagg = stored.groupBy(*[F.col(k) for k in keys]).agg(
+                    *[c.alias(n) for n, c in merge_aggs.items()]
+                )
+                sel = (
+                    [F.col(k) for k in keys]
+                    + [
+                        F.lit(None).cast(dt_map[n]).alias(n)
+                        for n in group_names
+                        if n not in keys
+                    ]
+                    + [F.col(n) for n in merge_aggs]
+                    + grouping_flag_cols(st_idx)
+                )
+                parts.append(gagg.select(*sel))
+            acc = parts[0]
+            for p in parts[1:]:
+                acc = acc.unionByName(p)
+            stored = acc
+
+        final_select: List[Column] = []
+        fin_by_name = {p.name: p.finalize for p in plans}
+        for name in spec.select_order:
+            if name in fin_by_name:
+                final_select.append(fin_by_name[name])
+            else:
+                final_select.append(F.col(name))
+        if spec.having is None:
+            return stored.select(*final_select)
+        return (
+            stored.select(*final_select, fin_by_name["__qc_having"])
+            .filter(F.col("__qc_having"))
+            .drop("__qc_having")
+        )
 
     def _finalize_fused(
         self,

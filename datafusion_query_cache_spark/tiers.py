@@ -166,6 +166,17 @@ def _partition_date_bounds(
     )
 
 
+def _sql_utc_date(us_sql: str, sign: int) -> str:
+    """SQL twin of one side of :func:`_partition_date_bounds`: the UTC date
+    of the epoch-µs expression ``us_sql`` shifted by ``sign`` × 18 h
+    (-1 for a lower bound, +1 for an upper one)."""
+    shift = sign * _MAX_TZ_OFFSET_NS // 1000
+    return (
+        f"date_from_unix_date(CAST(floor(({us_sql} + ({shift})) "
+        f"/ {86400 * 10**6}) AS INT))"
+    )
+
+
 def _merge_states(merges, a: Optional[dict], b: dict) -> dict:
     """Merge partial state ``b`` into ``a`` (None: nothing yet) with the
     driver tiers' Python merge mirrors."""
@@ -584,18 +595,16 @@ class RefreshTiers:
         inner_conds.append(f"({push_f} OR {push_b})")
         if part_col:
             # partition-pruning disjunct: each range's date bounds, OR'd —
-            # all leaves are plain comparisons, so the OR stays prunable
-            # boundary-leg dates: session-tz CASTs, still widened ±1 day —
-            # the partition column's dates may have been materialized under
-            # a DIFFERENT session timezone than this query's (found live:
-            # a Chicago session over a UTC-built layout dropped a
-            # boundary-bucket row, r12 vanilla fuzz); the exact ts bounds
-            # still filter rows, so widening only costs ≤2 extra partitions
+            # all leaves are plain comparisons, so the OR stays prunable.
+            # The boundary leg's dates follow _partition_date_bounds (UTC
+            # dates of lo - 18 h and hi + 18 h), rendered in SQL over the
+            # pinned-now bound, which Catalyst constant-folds
+            b_lo_d = _sql_utc_date(f"unix_micros({low_ts})", -1)
+            b_hi_d = _sql_utc_date(bhi_us, 1)
             inner_conds.append(
                 f"(({q(part_col)} >= DATE'__QC_FLO_D__' AND "
                 f"{q(part_col)} <= DATE'__QC_FHI_D__') OR "
-                f"({q(part_col)} >= date_sub(CAST({low_ts} AS DATE), 1) AND "
-                f"{q(part_col)} <= date_add(CAST(timestamp_micros({bhi_us}) AS DATE), 1)))"
+                f"({q(part_col)} >= {b_lo_d} AND {q(part_col)} <= {b_hi_d}))"
             )
         qif, qib = q("__qc_if"), q("__qc_ib")
         inner_sql = (

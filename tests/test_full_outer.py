@@ -2,7 +2,7 @@
 
 The union-merge seam cannot maintain FULL OUTER directly (dim-side
 NULL-extended rows retract on fresh matches — the r14 refusal), so the
-session composes maintainable pieces: cached state-spelled LEFT half +
+session composes maintainable pieces: cached LEFT half +
 cached monotone matched-dim-set + an O(dim) anti side recomputed per
 query. These tests pin exactness vs plain Spark — including the
 retraction case the seam itself cannot express."""
@@ -967,3 +967,100 @@ def test_full_outer_var_adversarial_mean(spark, qc):
     finally:
         spark.catalog.dropTempView("adv_fact")
         spark.catalog.dropTempView("adv_dim")
+
+
+@pytest.mark.parametrize(
+    "nano_bytes, tiers",
+    [(None, {"nano"}), (0, {"lite", "classic"})],
+    ids=["nano", "lite"],
+)
+def test_full_outer_a_state_on_every_tier(spark, qc, nano_bytes, tiers):
+    """The composite reads the LEFT half's stored state after whatever
+    tier refreshed it: over the registered ``events`` and ``customer``
+    sources A refreshes on nano (UTC session); with the nano byte gate
+    closed it refreshes on lite (or classic where lite refuses). Every
+    refresh is exact vs plain Spark over the bounded fact."""
+    if nano_bytes is not None:
+        qc.config.nano_refresh_max_bytes = nano_bytes
+    sql = (
+        "SELECT c_mktsegment, count(ts) AS nf, count(*) AS n, "
+        "sum(value) AS sv, min(value) AS mn, avg(value) AS av FROM events "
+        "FULL JOIN customer ON user_id = c_custkey GROUP BY 1"
+    )
+    day = 24 * 3600 * 10**9
+    t0 = int(dt.datetime(2024, 1, 20, tzinfo=dt.timezone.utc).timestamp()) * 10**9
+    for i in range(3):
+        now_ns = t0 + i * 3 * day
+        qc.config.override_now_ns = now_ns
+        got = qc.sql(sql)
+        assert qc.last_decision.refresh_tier == "full_outer"
+        lit = f"timestamp_micros({now_ns // 1000})"
+        plain = sql.replace(
+            "FROM events ", f"FROM (SELECT * FROM events WHERE ts < {lit}) e "
+        )
+        assert rows_set(got) == rows_set(spark.sql(plain)), f"refresh {i}"
+        if i > 0:
+            assert qc.last_decision.cache_hit
+            a_tier = [
+                m
+                for m in qc.config.log.messages()
+                if m.startswith("full-outer composite: A state")
+            ][-1].split("(")[1].split(")")[0]
+            assert a_tier in tiers, a_tier
+
+
+def test_full_outer_collect_set_caches(spark, qc, split, fo_dim):
+    """An aggregate the normal path decomposes caches over a FULL join
+    without a composite-specific spelling: collect_set's set state merges
+    the anti rows' NULL-skipping partial into A's state."""
+    run1, run2, cut_ns, _cut = split
+    sql = (
+        "SELECT segment, collect_set(value) AS cs, count(*) AS n "
+        "FROM events_fo FULL JOIN fo_dim ON user_id = uid GROUP BY 1"
+    )
+
+    def rows(df):
+        return sorted(
+            (r["segment"] or "", tuple(sorted(r["cs"])), r["n"])
+            for r in df.collect()
+        )
+
+    run1()
+    qc.config.override_now_ns = cut_ns
+    qc.sql(sql).collect()
+    assert qc.last_decision.cached, qc.last_decision.reason
+    assert qc.last_decision.refresh_tier == "full_outer"
+    run2()
+    qc.config.override_now_ns = cut_ns + 10**17
+    got = qc.sql(sql)
+    assert qc.last_decision.cache_hit, qc.last_decision.reason
+    assert qc.last_decision.refresh_tier == "full_outer"
+    assert rows(got) == rows(spark.sql(sql))
+
+
+def test_full_outer_dynamic_bound_plans_no_anti(spark, qc, split, fo_dim):
+    """A dynamic bound is a conjunct on the fact's temporal column, NULL on
+    every anti row, so the answer is the LEFT half's own result: neither
+    the matched-set sub-plan nor the anti join is planned."""
+    run1, run2, cut_ns, _cut = split
+    sql = (
+        "SELECT segment, count(ts) AS nf, count(*) AS n FROM events_fo "
+        "FULL JOIN fo_dim ON user_id = uid "
+        "WHERE ts > now() - INTERVAL 100000 DAYS GROUP BY 1 ORDER BY 1 "
+        "LIMIT 4"
+    )
+    run1()
+    qc.config.override_now_ns = cut_ns
+    qc.sql(sql).collect()
+    run2()
+    qc.config.override_now_ns = cut_ns + 10**17
+    got = qc.sql(sql)
+    assert qc.last_decision.cache_hit, qc.last_decision.reason
+    assert qc.last_decision.refresh_tier == "full_outer"
+    assert got.collect() == spark.sql(sql).collect()
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert "LeftAnti" not in plan, plan
+    # the matched set M is the only sub-plan aggregating __qcm
+    assert not any(
+        "__qcm" in r.fingerprint for r in qc.config.log.history()
+    ), [r.message for r in qc.config.log.history()]

@@ -131,10 +131,9 @@ def test_dyn_lite_pushes_or_of_ranges(spark, tmp_path):
     assert any("Or(And(" in s and "ts" in s for s in ors), ors
 
 
-def test_template_date_bounds_survive_tz_skew(spark, tmp_path):
-    """r12 vanilla-fuzz find: the lite program's SQL-template partition-
-    date pruning bounds derived dates in naive UTC (tokens) / the current
-    session tz (boundary-leg CASTs), but a partition layout may have been
+def test_lite_token_date_bounds_survive_tz_skew(spark, tmp_path):
+    """r12 vanilla-fuzz find: the lite program's partition-date pruning
+    tokens derived dates in naive UTC, but a partition layout may have been
     materialized under a DIFFERENT session timezone — a Chicago-tz
     session over this repo's UTC-built date partitions dropped a
     boundary-bucket row (silent undercount). The date bounds are now the
@@ -225,3 +224,76 @@ def test_classic_date_bounds_survive_tz_skew(
             " GROUP BY", f"{' AND' if 'WHERE' in sql else ' WHERE'} ts < {lit} GROUP BY", 1
         )
         assert rows_set(got) == rows_set(spark.sql(plain)), f"refresh {i}"
+
+
+@pytest.fixture(scope="module")
+def gmt_minus12_events(spark, tmp_path_factory):
+    """events written partitionBy(d = to_date(ts)) under an Etc/GMT+12
+    (UTC-12) session: a row's partition date is its UTC date 12 h ago."""
+    path = str(tmp_path_factory.mktemp("pe_m12") / "events_m12")
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Etc/GMT+12")
+    try:
+        spark.table("events").withColumn("d", F.to_date("ts")).write.partitionBy(
+            "d"
+        ).parquet(path)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    spark.read.parquet(path).createOrReplaceTempView("events_m12")
+    return path
+
+
+def test_lite_boundary_dates_survive_26h_tz_skew(spark, tmp_path, gmt_minus12_events):
+    """A Pacific/Kiritimati (UTC+14) session over a UTC-12 layout: the two
+    zones differ by 26 h. The bound sits just after the session's midnight
+    (10:00 UTC), so a boundary row before 12:00 UTC is in the partition
+    two days before the bound's session date. The lite boundary leg once
+    bounded its dates by session-zone CASTs widened by one day, pruned
+    that partition and undercounted the boundary bucket; its dates now
+    follow the same +-18 h UTC rule as the fresh leg."""
+    from datafusion_query_cache_spark import (
+        CachedSparkSession,
+        ParquetQueryCache,
+        QueryCacheConfig,
+    )
+
+    sql = (
+        "SELECT CAST(date_trunc('day', ts) AS DATE) AS dd, count(*) AS n "
+        "FROM events_m12 WHERE ts > now() - INTERVAL 3 DAY GROUP BY 1"
+    )
+    day = 24 * 3600 * 10**9
+    t0 = int(dt.datetime(2024, 1, 20, 10, tzinfo=dt.timezone.utc).timestamp())
+    t0 = t0 * 10**9 + 10**6
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Pacific/Kiritimati")
+    try:
+        qc = CachedSparkSession(
+            spark,
+            QueryCacheConfig(
+                cache=ParquetQueryCache(str(tmp_path / "m12")),
+                temporal_partition_columns={"ts": "d"},
+            ),
+        )
+        skewed = 0
+        for i in range(4):
+            now_ns = t0 + i * day
+            qc.config.override_now_ns = now_ns
+            got = qc.sql(sql)
+            lit = f"timestamp_micros({now_ns // 1000})"
+            plain = sql.replace("now()", lit).replace(
+                " GROUP BY", f" AND ts < {lit} GROUP BY", 1
+            )
+            if i > 0:
+                assert qc.last_decision.cache_hit
+                assert qc.last_decision.refresh_tier == "lite"
+                # boundary rows in the two-days-back partition
+                bound_us = (now_ns - 3 * day) // 1000
+                skewed += spark.sql(
+                    f"SELECT count(*) FROM events_m12 WHERE "
+                    f"ts > timestamp_micros({bound_us}) AND "
+                    f"ts < timestamp_micros({bound_us + 2 * 3600 * 10**6})"
+                ).collect()[0][0]
+            assert rows_set(got) == rows_set(spark.sql(plain)), f"refresh {i}"
+        assert skewed > 0, "no boundary row in the skewed partition"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)

@@ -27,6 +27,10 @@ top-k under a lowered collect cap, so the layered store's bucketed top-k
 finalize and its refusals are fuzzed. Half the trials with a lowered
 collect cap also lower the layer cap (``BPARTS_COMPACT_AT`` 2 or 3), so
 tail-only warm merges run through layer-pair folds and compacting puts.
+A quarter of the FULL OUTER trials also group on a day bucket (NULL on the
+anti rows). A refresh where the engine raises the same Spark error class
+as its plain twin (ANSI ``DIVIDE_BY_ZERO`` from ``corr`` over a group with
+a constant column) counts as parity, and the summary prints how many.
 
 Usage: python tools/fuzz_tiers.py [trials] [seed] [sf_dir]
 Exit 0 = every comparison on every refresh of every trial matched.
@@ -175,10 +179,11 @@ def gen_join_sql(rng: random.Random) -> str:
     )
 
 
-#: FULL-composite aggregate vocabulary (r16): the state-spelled family
-#: plus avg decomposition, exact count(DISTINCT) set states, and the
-#: HLL sketch path (register-wise union is deterministic, so estimates
-#: are twin-exact)
+#: FULL-composite aggregate sample: the composite merges the anti rows'
+#: partial state into the LEFT half's stored state with the normal path's
+#: own partial/merge columns, so any family the normal path decomposes
+#: belongs here (the HLL sketch's register-wise union is deterministic,
+#: so its estimates are twin-exact)
 FULL_AGGS = [
     "count(*) AS n",
     "count(ts) AS nf",
@@ -215,11 +220,13 @@ FULL_AGGS = [
 ]
 
 
-def gen_full_sql(rng: random.Random) -> str:
+def gen_full_sql(rng: random.Random, temporal: bool = False) -> str:
     """FULL OUTER composite (r16): two-table ON, USING-merged key, and
     the star shape (one inner/left edge then the FULL edge). The twin
     bounds the FACT SOURCE (a WHERE above a FULL join would kill the
-    NULL-extended dim rows), see the fullj surgery in main()."""
+    NULL-extended dim rows), see the fullj surgery in main().
+    ``temporal`` adds a day-bucket group key (NULL on the anti rows), so
+    the finalize runs over a bucketed LEFT-half state."""
     ags = rng.sample(FULL_AGGS, rng.randint(1, 3))
     pred = rng.choice([None, None, "value > 5", "value <= 80"])
     where = f" WHERE {pred}" if pred else ""
@@ -247,9 +254,11 @@ def gen_full_sql(rng: random.Random) -> str:
         if rng.random() < 0.2
         else ""
     )
+    td = "CAST(date_trunc('day', ts) AS DATE) AS td, " if temporal else ""
+    gb = "1, 2" if temporal else "1"
     return (
-        f"SELECT {g} AS g, {', '.join(ags)} {frm}{where} "
-        f"GROUP BY 1{hv} ORDER BY 1"
+        f"SELECT {g} AS g, {td}{', '.join(ags)} {frm}{where} "
+        f"GROUP BY {gb}{hv} ORDER BY {gb}"
     )
 
 
@@ -730,6 +739,15 @@ def _norm_row(r):
     )
 
 
+def _error_class(e: BaseException):
+    """The bracketed Spark error class of ``e`` (``DIVIDE_BY_ZERO``), or
+    None."""
+    import re
+
+    m = re.search(r"\[([A-Z][A-Z0-9_.]*)\]", str(e))
+    return m.group(1) if m else None
+
+
 def main() -> int:
     from pyspark.sql import functions as F
 
@@ -854,6 +872,8 @@ def main() -> int:
     corruptions = 0
     hot_reloads = memo_hits = 0
     layer_cap_trials = 0  # big-state trials run with a lowered layer cap
+    full_ts_trials = 0  # FULL trials with a temporal group key
+    both_raised = 0  # refreshes where the engine and its twin raised alike
     for trial in range(TRIALS):
         mode_p = rng.random()
         filter_mode = mode_p < 0.22
@@ -885,7 +905,11 @@ def main() -> int:
         elif dimjoin_mode:
             sql = gen_dimjoin_sql(rng)
         elif fullj_mode:
-            sql = gen_full_sql(rng)
+            # a quarter also group on a temporal key; a side RNG draws it,
+            # as for the layer cap below
+            full_ts = random.Random(f"{SEED}:{trial}:fullts").random() < 0.25
+            full_ts_trials += full_ts
+            sql = gen_full_sql(rng, temporal=full_ts)
         elif nano_mode:
             sql = gen_nano_sql(rng)
         elif bucketk_mode:
@@ -1175,13 +1199,6 @@ def main() -> int:
                     with open(victim, "wb") as fh:
                         fh.write(b"\x00CORRUPT")
                     corruptions += 1
-            qc.config.override_now_ns = now_ns
-            try:
-                got = qc.sql(sql)
-                g_rows = sorted((_norm_row(r) for r in got.collect()), key=repr)
-            except Exception as e:  # noqa: BLE001 — report, keep fuzzing
-                failures.append((trial, i, sql, f"ENGINE ERROR {e}"))
-                break
             # render the pinned instant as a literal in the SESSION
             # timezone (a naive epoch+µs repr is only correct in UTC)
             from zoneinfo import ZoneInfo
@@ -1192,50 +1209,73 @@ def main() -> int:
                 + dt.timedelta(microseconds=now_ns // 1000)
             ).astimezone(ZoneInfo(tz)).replace(tzinfo=None)
             lit = f"TIMESTAMP '{lit_dt.isoformat(sep=' ')}'"
-            if qc.last_decision.cached:
-                s = sql.replace("now()", lit)
-                # the twin surgeries below target the TABLE's WHERE by
-                # string position — mask aggregate FILTER (WHERE …)
-                # clauses so the as-of bound never lands inside one
-                # (which would leave the table scan unbounded)
-                s = s.replace("FILTER (WHERE ", "FILTER (\x00")
-                if fullj_mode:
-                    # bound the FACT SOURCE, not the joined result — a
-                    # WHERE above a FULL join would kill the
-                    # NULL-extended dim rows (ts IS NULL there)
-                    s = s.replace(
-                        "FROM events ",
-                        f"FROM (SELECT * FROM events WHERE ts < {lit}) "
-                        "__fz_ev ",
-                        1,
-                    )
-                elif scalar_mode or insubq_mode:
-                    # only the INNER scalar aggregate is watermark-bounded;
-                    # the plain outer scans the live table unbounded (the
-                    # reference bounds only the rewritten Aggregate's
-                    # input). Generated shape: outer WHERE first, inner
-                    # WHERE second — bound the second alone.
-                    parts = s.split(" WHERE ")
-                    assert len(parts) == 3, s
-                    s = (
-                        parts[0]
-                        + " WHERE "
-                        + parts[1]
-                        + f" WHERE ts < {lit} AND "
-                        + parts[2]
-                    )
-                elif " WHERE " in s:
-                    # union branches each need the as-of bound (every
-                    # union_mode branch is generated WITH a WHERE); in
-                    # selscalar mode BOTH aggregates are cached, so both
-                    # scans get the bound
-                    cnt = -1 if (union_mode or selscalar_mode) else 1
-                    s = s.replace("WHERE ", f"WHERE ts < {lit} AND ", cnt)
+
+            def twin_of(cached: bool) -> str:
+                """The plain-Spark twin of ``sql`` as of ``lit``."""
+                if cached:
+                    s = sql.replace("now()", lit)
+                    # the twin surgeries below target the TABLE's WHERE by
+                    # string position — mask aggregate FILTER (WHERE …)
+                    # clauses so the as-of bound never lands inside one
+                    # (which would leave the table scan unbounded)
+                    s = s.replace("FILTER (WHERE ", "FILTER (\x00")
+                    if fullj_mode:
+                        # bound the FACT SOURCE, not the joined result — a
+                        # WHERE above a FULL join would kill the
+                        # NULL-extended dim rows (ts IS NULL there)
+                        s = s.replace(
+                            "FROM events ",
+                            f"FROM (SELECT * FROM events WHERE ts < {lit}) "
+                            "__fz_ev ",
+                            1,
+                        )
+                    elif scalar_mode or insubq_mode:
+                        # only the INNER scalar aggregate is watermark-bounded;
+                        # the plain outer scans the live table unbounded (the
+                        # reference bounds only the rewritten Aggregate's
+                        # input). Generated shape: outer WHERE first, inner
+                        # WHERE second — bound the second alone.
+                        parts = s.split(" WHERE ")
+                        assert len(parts) == 3, s
+                        s = (
+                            parts[0]
+                            + " WHERE "
+                            + parts[1]
+                            + f" WHERE ts < {lit} AND "
+                            + parts[2]
+                        )
+                    elif " WHERE " in s:
+                        # union branches each need the as-of bound (every
+                        # union_mode branch is generated WITH a WHERE); in
+                        # selscalar mode BOTH aggregates are cached, so both
+                        # scans get the bound
+                        cnt = -1 if (union_mode or selscalar_mode) else 1
+                        s = s.replace("WHERE ", f"WHERE ts < {lit} AND ", cnt)
+                    else:
+                        s = s.replace(" GROUP BY", f" WHERE ts < {lit} GROUP BY", 1)
                 else:
-                    s = s.replace(" GROUP BY", f" WHERE ts < {lit} GROUP BY", 1)
-            else:
-                s = sql
-            s = s.replace("FILTER (\x00", "FILTER (WHERE ")  # unmask
+                    s = sql
+                s = s.replace("FILTER (\x00", "FILTER (WHERE ")  # unmask
+                return s
+
+            qc.config.override_now_ns = now_ns
+            try:
+                got = qc.sql(sql)
+                g_rows = sorted((_norm_row(r) for r in got.collect()), key=repr)
+            except Exception as e:  # noqa: BLE001 — report, keep fuzzing
+                # Spark itself raises on some inputs (ANSI: corr over a
+                # group with a constant column divides 0 by 0); raising
+                # the error class the plain twin raises is parity
+                err = _error_class(e)
+                try:
+                    spark.sql(twin_of(True)).collect()
+                except Exception as te:  # noqa: BLE001
+                    if err is not None and err == _error_class(te):
+                        both_raised += 1
+                        break
+                failures.append((trial, i, sql, f"ENGINE ERROR {e}"))
+                break
+            s = twin_of(qc.last_decision.cached)
             p_rows = sorted(
                 (_norm_row(r) for r in spark.sql(s).collect()), key=repr
             )
@@ -1282,6 +1322,8 @@ def main() -> int:
     print(f"miss tiers: {miss_tiers}")
     print(f"hot reloads: {hot_reloads} memo hits={memo_hits}")
     print(f"big-state trials with a lowered layer cap: {layer_cap_trials}")
+    print(f"FULL trials with a temporal group key: {full_ts_trials}")
+    print(f"refreshes where the engine and its twin raised alike: {both_raised}")
     if failures:
         print(f"{len(failures)} FAILURES:")
         for t, i, sql, msg in failures[:20]:
